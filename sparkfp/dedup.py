@@ -895,6 +895,9 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     float64 casts and products are IEEE-identical to the JVM's), so
     swapping it into a query cannot change any rounded result. Pinned
     by tests/test_dataops.py::test_cosine_arrow_bit_identical.
+
+    A null, empty or unequal-length vector pair yields null for that
+    row (as the HOF form does for null input), never a task failure.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -902,16 +905,21 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
         import numpy as np
 
-        n = len(va)
-        if not n:
-            return pd.Series([], dtype="float64")
         va_l = va.tolist()
         vb_l = vb.tolist()
-        lens = np.fromiter((len(v) for v in va_l), dtype=np.int64, count=n)
-        out = np.empty(n, dtype=np.float64)
-        # batches may mix dims (callers guarantee len(a) == len(b) per
-        # row, as every in-repo use does): vectorize per distinct dim
-        for length in np.unique(lens):
+        # 0 marks a bad row: null side, empty, or unequal lengths
+        lens = np.fromiter(
+            (
+                len(x) if x is not None and y is not None and len(x) == len(y) else 0
+                for x, y in zip(va_l, vb_l)
+            ),
+            dtype=np.int64,
+            count=len(va_l),
+        )
+        # NaN crosses the Arrow boundary as null
+        out = np.full(len(va_l), np.nan)
+        # batches may mix dims: vectorize per distinct dim
+        for length in np.unique(lens[lens > 0]):
             idx = np.nonzero(lens == length)[0]
             A = np.array([va_l[i] for i in idx], dtype=np.float64)
             B = np.array([vb_l[i] for i in idx], dtype=np.float64)

@@ -7,6 +7,12 @@ boundary is `mapInPandas`, so the JVM<->Python transfer is columnar
 Arrow, never per-row pickling (the reference's per-record Beam
 round-trip is the throughput ceiling we remove).
 
+Every clip consumer — `landmarks`, `quarantine_clips`, and in
+sparkfp/matching.py the fused matcher and `clip_signatures` — goes
+through one batch kernel, `clip_landmarks_batch`: one per-row loop,
+one error contract (a per-row ``reason``), CSR output the consumers
+slice.
+
 The landmark scheme follows the published Shazam constellation
 approach (Wang 2003, "An Industrial-Strength Audio Search Algorithm"):
 spectrogram -> per-band spectral peaks -> anchor/target pairs ->
@@ -173,24 +179,42 @@ def extract_clip_landmarks(
     return landmark_hashes(peaks, SR_REF)
 
 
-def extract_clip_landmarks_safe(
-    raw: bytes, codec_name: str, sr_hz: int
-) -> tuple[np.ndarray, np.ndarray, bool]:
-    """(hashes, t_ms, ok). The per-row error contract at corpus scale:
-    one corrupt blob or unknown codec among 10^12 clips must surface
-    as ok=False for THAT row, never as a task failure that kills the
-    batch (same contract the media path pins in
-    multimodal.frame_sample_features; decoders are fuzz-tested to
-    raise exactly ValueError/UnsupportedCodec)."""
-    try:
-        h, t = extract_clip_landmarks(raw, codec_name, sr_hz)
-        return h, t, True
-    except (ValueError, codec.UnsupportedCodec):
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int32),
-            False,
-        )
+def clip_landmarks_batch(
+    pdf: pd.DataFrame,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[str | None]]:
+    """One Arrow batch's ``bytes``/``codec``/``sr_hz`` columns -> CSR
+    landmarks ``(row_offsets, hashes, t_ms, reason)``: row i's hashes
+    and anchor offsets are ``hashes[row_offsets[i]:row_offsets[i+1]]``.
+
+    The one per-row loop and the one error contract of every clip
+    consumer. One corrupt blob or unknown codec among 10^12 clips must
+    surface for THAT row, never as a task failure that kills the
+    batch: a row the chain cannot decode gets no landmarks and
+    ``reason[i] = "<ExceptionType>: <message>"`` (``None`` when it
+    decoded). Decoders are fuzz-tested to raise exactly
+    ValueError/UnsupportedCodec, the same contract the media path pins
+    in multimodal.frame_sample_features. Arrays are typed even for an
+    empty batch (int64 offsets and hashes, int32 t_ms)."""
+    hs, ts, reason = [], [], []
+    for raw, cname, sr in zip(
+        pdf["bytes"].tolist(), pdf["codec"].tolist(), pdf["sr_hz"].tolist()
+    ):
+        try:
+            h, t = extract_clip_landmarks(bytes(raw), cname, int(sr))
+            reason.append(None)
+        except (ValueError, codec.UnsupportedCodec) as e:
+            h, t = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
+            reason.append(f"{type(e).__name__}: {e}")
+        hs.append(h)
+        ts.append(t)
+    offsets = np.zeros(len(hs) + 1, dtype=np.int64)
+    np.cumsum([len(h) for h in hs], out=offsets[1:])
+    return (
+        offsets,
+        np.concatenate([np.empty(0, dtype=np.int64), *hs]),
+        np.concatenate([np.empty(0, dtype=np.int32), *ts]),
+        reason,
+    )
 
 
 def quarantine_clips(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
@@ -202,15 +226,9 @@ def quarantine_clips(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for cid, raw, sr, cname in zip(
-                pdf[id_col], pdf["bytes"], pdf["sr_hz"], pdf["codec"]
-            ):
-                try:
-                    extract_clip_landmarks(bytes(raw), cname, int(sr))
-                except (ValueError, codec.UnsupportedCodec) as e:
-                    rows.append((cid, f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=["clip_id", "reason"])
+            reason = clip_landmarks_batch(pdf)[3]
+            out = pd.DataFrame({"clip_id": pdf[id_col].to_numpy(), "reason": reason})
+            yield out.dropna(subset=["reason"])
 
     return clips.select(*cols).mapInPandas(scan, out_schema)
 
@@ -223,41 +241,21 @@ def landmarks(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
 
     Arrow-batched mapInPandas: the stage is stateless and embarrassingly
     parallel, so it scales linearly with cores/executors — the property
-    the N-vs-4N scaling criterion leans on.
+    the N-vs-4N scaling criterion leans on. Corrupt rows emit no
+    landmarks (skip-with-accounting: quarantine_clips lists them).
     """
     cols = [id_col, "bytes", "sr_hz", "codec", "event_ms"]
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, hs, ts, evs = [], [], [], []
-            for cid, raw, sr, cname, ev in zip(
-                pdf[id_col], pdf["bytes"], pdf["sr_hz"], pdf["codec"], pdf["event_ms"]
-            ):
-                # skip-with-accounting: corrupt rows emit no landmarks
-                # (quarantine_clips lists them) instead of failing the task
-                h, t, _ok = extract_clip_landmarks_safe(raw, cname, int(sr))
-                if len(h) == 0:
-                    continue
-                ids.append(np.full(len(h), cid, dtype=object))
-                hs.append(h)
-                ts.append(t)
-                evs.append(np.full(len(h), int(ev), dtype=np.int64))
-            if not ids:
-                yield pd.DataFrame(
-                    {
-                        "clip_id": pd.Series([], dtype=object),
-                        "hash": pd.Series([], dtype=np.int64),
-                        "t_ms": pd.Series([], dtype=np.int32),
-                        "event_ms": pd.Series([], dtype=np.int64),
-                    }
-                )
-                continue
+            offsets, h, t, _ = clip_landmarks_batch(pdf)
+            n = np.diff(offsets)
             yield pd.DataFrame(
                 {
-                    "clip_id": np.concatenate(ids),
-                    "hash": np.concatenate(hs),
-                    "t_ms": np.concatenate(ts),
-                    "event_ms": np.concatenate(evs),
+                    "clip_id": np.repeat(pdf[id_col].to_numpy(object), n),
+                    "hash": h,
+                    "t_ms": t,
+                    "event_ms": np.repeat(pdf["event_ms"].to_numpy(np.int64), n),
                 }
             )
 

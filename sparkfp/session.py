@@ -95,11 +95,6 @@ def get_spark(
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
-        # let the planner pick shuffled-hash over sort-merge when the
-        # per-partition build side fits (guide §3.1/§9): skips both
-        # sorts of the big equi-joins — measured interval_join
-        # 1.51 -> 1.34 s at sf1.0; AQE still rewrites/skew-splits
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

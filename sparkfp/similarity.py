@@ -123,6 +123,12 @@ def lsh_candidates(
     condition, which Spark can only plan as a nested-loop comparing
     every corpus row to every query and defeats the bucketing. A
     pair matching in several tables is deduped by the groupBy.
+
+    Requires unique ids on each side (``id_col`` in ``corpus``,
+    ``query_id_col`` in ``queries``): vectors are re-attached to the
+    deduped id pairs by an id join, so a duplicated id yields one row
+    per vector under that id, including vectors that never shared a
+    signature with the other side.
     """
     from .session import fan_out
 

@@ -394,20 +394,6 @@ def rate_limit_stream_tws(
     )
 
 
-def rate_limit_stream_auto(
-    values: DataFrame,
-    key_col: str,
-    ts_col: str,
-    min_interval_s: int,
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Runtime dispatch (SURVEY.md §7.5.7): transformWithStateInPandas
-    when the session's PySpark has it, applyInPandasWithState
-    otherwise. Both produce the same emit set."""
-    impl = rate_limit_stream_tws if tws_available() else rate_limit_stream
-    return impl(values, key_col, ts_col, min_interval_s, watermark)
-
-
 # --------------------------------------------------------------- streaming
 
 
@@ -528,25 +514,6 @@ def run_state_stream_tws(
             ),
             out_schema, "append", "none",
         )
-    )
-
-
-def run_state_stream_auto(
-    values: DataFrame,
-    key_col: str,
-    ts_col: str,
-    running_col: str,
-    shutdown_window_s: int,
-    transition_window_s: int,
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Runtime dispatch (SURVEY.md §7.5.7): transformWithStateInPandas
-    when the session's PySpark can run it, applyInPandasWithState
-    otherwise. Both twins produce identical labeled rows."""
-    impl = run_state_stream_tws if tws_available() else run_state_stream
-    return impl(
-        values, key_col, ts_col, running_col,
-        shutdown_window_s, transition_window_s, watermark,
     )
 
 

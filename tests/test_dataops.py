@@ -197,6 +197,27 @@ def test_cosine_arrow_bit_identical(spark):
         assert list(got.hof) == list(got.arrow), typ  # exact, no approx
 
 
+def test_cosine_arrow_bad_rows_null(spark):
+    """A null, empty or unequal-length vector pair gives null for THAT
+    row (as the HOF cosine does for null input) instead of failing the
+    task; good rows in the same batch are unaffected."""
+    rows = [
+        (0, None, [1.0, 2.0]),
+        (1, [1.0, 2.0], None),
+        (2, [], []),
+        (3, [1.0, 2.0, 3.0], [1.0, 2.0]),
+        (4, [3.0, 4.0], [3.0, 4.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
+    got = {
+        r.id: r.cos
+        for r in df.select(
+            "id", dedup.cosine_arrow(F.col("a"), F.col("b")).alias("cos")
+        ).collect()
+    }
+    assert got == {0: None, 1: None, 2: None, 3: None, 4: 1.0}
+
+
 def test_brute_force_topk_matches_numpy(spark):
     rng = np.random.Generator(np.random.Philox(key=[1, 0]))
     V = rng.standard_normal((30, 8)).astype(np.float64)

@@ -519,6 +519,99 @@ def test_corrupt_rows_quarantined_not_fatal(spark, index):
     assert "UnsupportedCodec" in q["bad_codec"]
 
 
+def test_clip_landmarks_batch_csr_and_reasons():
+    """The one clip kernel (Spark-free): row i's CSR slice equals the
+    per-clip chain's landmarks, undecodable rows get an empty slice and
+    the quarantine reason text, and an empty batch is typed, not a
+    special case."""
+    import pandas as pd
+
+    tid = synth.default_track_ids(1)[0]
+    pcm = synth.track_pcm(tid, dur_ms=3000)
+    rows = [
+        (codec.encode(pcm, "pcm_s16le"), "pcm_s16le", 8000),
+        (codec.encode(pcm, "adpcm")[:40], "adpcm", 8000),
+        (codec.encode(pcm, "pcm_s16le"), "opus", 8000),
+        (codec.encode(pcm, "ulaw"), "ulaw", 16000),
+    ]
+    pdf = pd.DataFrame(rows, columns=["bytes", "codec", "sr_hz"])
+    offsets, h, t, reason = dsp.clip_landmarks_batch(pdf)
+    assert offsets.dtype == np.int64 and len(offsets) == len(rows) + 1
+    assert h.dtype == np.int64 and t.dtype == np.int32
+    assert offsets[-1] == len(h) == len(t)
+    for i, (raw, cname, sr) in enumerate(rows):
+        a, b = offsets[i], offsets[i + 1]
+        try:
+            want_h, want_t = dsp.extract_clip_landmarks(raw, cname, sr)
+        except (ValueError, codec.UnsupportedCodec) as e:
+            assert reason[i] == f"{type(e).__name__}: {e}"
+            assert a == b
+            continue
+        assert reason[i] is None and b > a
+        np.testing.assert_array_equal(h[a:b], want_h)
+        np.testing.assert_array_equal(t[a:b], want_t)
+    assert reason[1].startswith("ValueError: ")
+    assert reason[2].startswith("UnsupportedCodec: ")
+
+    offsets, h, t, reason = dsp.clip_landmarks_batch(pdf.iloc[:0])
+    assert offsets.tolist() == [0] and reason == []
+    assert (h.dtype, len(h), t.dtype, len(t)) == (np.int64, 0, np.int32, 0)
+
+
+def _vote_reference(codes, offset_bin):
+    """Counter form of the vote: max count, ties to the smallest
+    (track, offset) — the relational matcher's row_number order."""
+    from collections import Counter
+
+    counts = Counter(zip(codes.tolist(), offset_bin.tolist()))
+    (c, o), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+    return c, o, n
+
+
+def test_vote_equals_counter_reference():
+    """matching.vote == the Counter vote over narrow and wide code and
+    offset ranges, with negative offsets and ties."""
+    rng = np.random.default_rng(7)
+    for trial in range(200):
+        n = int(rng.integers(1, 60))
+        code_hi = [3, 5000][trial % 2]
+        off_lo, off_hi = [(-4, 4), (-10**6, 10**6)][(trial // 2) % 2]
+        codes = rng.integers(0, code_hi, n).astype(np.int32)
+        offset_bin = rng.integers(off_lo, off_hi, n).astype(np.int64)
+        assert matching.vote(codes, offset_bin) == _vote_reference(
+            codes, offset_bin
+        )
+
+
+def test_vote_allocation_bounded_by_hits():
+    """A few hundred index hits spread over a huge (track, offset) box
+    — two far-apart track codes (a many-track catalogue), or one far
+    t_track_ms offset — must not allocate a counter per box cell (the
+    old bincount over code * span + offset did: >= 10^7 cells here,
+    80+ MB for 300 hits). Peak allocation stays O(hits)."""
+    import tracemalloc
+
+    rng = np.random.default_rng(3)
+    n = 300
+    wide_codes = (
+        np.where(rng.random(n) < 0.5, 0, 99_999).astype(np.int32),
+        rng.integers(-100, 100, n).astype(np.int64),
+    )  # 10^5 codes x 200 offsets = 2 * 10^7 cells
+    far_offset = (
+        np.full(n, 4, dtype=np.int32),
+        np.r_[rng.integers(0, 50, n - 1), 10**8].astype(np.int64),
+    )  # 1 code x 10^8 offsets
+    for codes, offset_bin in (wide_codes, far_offset):
+        tracemalloc.start()
+        try:
+            got = matching.vote(codes, offset_bin)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak < 256 * 1024, peak
+        assert got == _vote_reference(codes, offset_bin)
+
+
 def test_near_dup_pairs_plan_shape(spark):
     """Scale guards for the landmark-Jaccard self-join: no cartesian /
     broadcast-nested-loop anywhere (the join must stay a hash-keyed
