@@ -7,10 +7,10 @@ Prints ONE JSON line:
 
 The audio graft throughput (clips fingerprinted+matched per second —
 the BASELINE.json north metric) is measured over a deterministic
-synthesized clip corpus through the full streaming pipeline
-(decode -> landmarks -> index join -> session vote -> exactly-once
+synthesized clip corpus through the fused streaming matcher
+(decode -> landmarks -> index probe -> per-clip vote -> exactly-once
 sink). The N-vs-4N scaling evidence lives in bench/run_scaling.py
-(writes BENCH/BASELINE.md).
+(appends to BENCH/scaling_runs.jsonl).
 """
 
 from __future__ import annotations
@@ -58,9 +58,9 @@ HEADLINE = [
 # 8192 clips over two 4096-clip triggers: at 1024 clips the per-trigger
 # fixed cost (stream init + per-batch Python worker spin-up + broadcast
 # index deserialization, ~2 s) dominates and the bench measures trigger
-# overhead, not engine throughput. 8192 matches the scaling harness's
-# corpus (bench/run_scaling.py), so clips_per_sec is comparable to the
-# BENCH/BASELINE.md legs.
+# overhead, not engine throughput. 8192 matches the scaling runner's
+# corpus (bench/run_scaling.py), so clips_per_sec is comparable to its
+# legs.
 N_BENCH_CLIPS = int(os.environ.get("SPARKFP_BENCH_CLIPS", "8192"))
 N_BENCH_FILES = int(os.environ.get("SPARKFP_BENCH_FILES", "16"))
 N_FILES_PER_TRIGGER = int(os.environ.get("SPARKFP_BENCH_FPT", "8"))
@@ -115,31 +115,15 @@ def _audio_throughput(spark) -> tuple[float, float]:
 
 
 def main() -> None:
-    # this sandbox's hypervisor throttles parallel compute above ~8-12
-    # effective cores (measured in BENCH/BASELINE.md): clamp the bench
-    # session to the effective ceiling rather than silently inside
-    # get_spark — the clamp is a bench policy, stated here, not a
-    # session-factory contract violation. SPARKFP_MAX_LOCAL_CORES
-    # overrides (set it high on real hardware).
-    from sparkfp.session import default_parallelism, effective_core_cap
-
-    requested = default_parallelism()
-    cores = min(requested, effective_core_cap())
-    if cores != requested:
-        sys.stderr.write(
-            f"bench: clamping local[{requested}] -> local[{cores}] "
-            "(hypervisor ceiling, see BENCH/BASELINE.md; override with "
-            "SPARKFP_MAX_LOCAL_CORES)\n"
-        )
-    # Spark-free ambient probe BEFORE the session: this VM's hypervisor
-    # throttle varies by the hour (measured 1-proc burn 0.9-1.7 s for
-    # identical work), so cross-round BENCH comparisons need the window
-    # quality recorded next to the numbers (see bench/run_scaling.py).
+    # Spark-free ambient probe BEFORE the session: CPU contention on a
+    # shared host varies over time, so cross-round BENCH comparisons
+    # need the window quality recorded next to the numbers (see
+    # bench/run_scaling.py).
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench"))
     from run_scaling import ambient_probe
 
     probe = ambient_probe()
-    spark = get_spark("sparkfp-bench", cores=cores)
+    spark = get_spark("sparkfp-bench")
     queries = entrymod.queries()
     # untimed warmup: the first query otherwise pays ~5 s of one-time
     # JVM/codegen/scan-footer setup (measured 5.5 s cold vs 0.65 s warm
@@ -152,11 +136,10 @@ def main() -> None:
     for t in ("events", "lineitem", "documents", "orders", "part", "embeddings"):
         spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
     queries["fingerprint_stats"](spark, SF_DIR).count()
-    # min-of-N per query: single-shot timings on this VM swing 2-3x
-    # with the hypervisor throttle (round 4's audio number read 11.1 s
-    # in the driver window vs 6.7 s re-run — same code). The MIN over
-    # N back-to-back runs is the least-throttled observation and the
-    # right cross-round comparator; the spread records window dirt.
+    # min-of-N per query: single-shot timings on a shared host swing
+    # with CPU contention. The MIN over N back-to-back runs is the
+    # least-disturbed observation and the right cross-round comparator;
+    # the spread records window dirt.
     n_reps = int(os.environ.get("SPARKFP_BENCH_REPS", "3"))
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
@@ -169,7 +152,7 @@ def main() -> None:
             sys.stderr.write(f"bench {name} failed: {e}\n")
             timings[name] = -1.0
     # the streaming pipeline is the headline metric AND the most
-    # throttle-exposed (longest wall-clock): min of 2 full drains
+    # contention-exposed (longest wall-clock): best of 2 full drains
     audio_runs = [_audio_throughput(spark) for _ in range(2)]
     clips_per_sec, audio_sec = max(audio_runs, key=lambda r: r[0])
     timings["audio_match_stream"] = round(audio_sec, 3)

@@ -1,48 +1,42 @@
-"""N-vs-4N scaling harness (BASELINE.json criterion: throughput
-scaling efficiency >= 0.8 from N to 4N executors).
+"""N-vs-4N scaling runner: the identical streaming match job and input
+at two parallelism levels, each in its own JVM launched with
+``spark-submit --py-files sparkfp.zip`` (the north rule's launch mode)
+and pinned with ``taskset`` to exactly its core count.
 
-This sandbox has no multi-node cluster, so — per the driver's
-instruction — the two cluster sizes are evidenced as two parallelism
-levels of the *identical* job + input: local[8] (N) vs local[32] (4N),
-each in its own JVM via `spark-submit --py-files sparkfp.zip`
-(the north rule's launch mode). Results land in BENCH/BASELINE.md.
+N = nproc // 4 and 4N = 4 * N, so the 4N leg fits the machine; below 4
+CPUs a 4N leg cannot be pinned and the runner exits with an error.
+Each leg drains ``CLIPS`` clips (bench.py's corpus) through
+``streaming.match_stream_fused``, N leg first. The result is one JSON
+line, printed and appended to BENCH/scaling_runs.jsonl.
 
-Usage: python bench/run_scaling.py [--clips 384]
+Usage: python bench/run_scaling.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
+import resource
 import subprocess
 import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CLIPS = 8192
 
 # A pinned 8-proc burn at <= this multiple of the 1-proc time marks a
-# wide-parallelism-clean window (measured: ~1.2x when idle, >> 2x
-# throttled). The ratio alone is not sufficient: the hypervisor also
-# has uniformly-slow windows where even the 1-proc burn runs ~1.5-1.8x
-# its nominal time and wide Spark legs degrade disproportionately
-# (measured r4 pair 1: probe ratio 1.02 yet pair efficiency 0.50, with
-# probe_1p_s 1.41 vs the 0.90-0.99 nominal). So clean also requires
-# the absolute 1-proc time near nominal.
+# wide-parallelism-clean window. The ratio alone is not sufficient:
+# uniformly slow windows also exist, where even the 1-proc burn runs
+# well over its nominal time, so clean also requires the absolute
+# 1-proc time near nominal.
 CLEAN_PROBE_RATIO = 1.6
-NOMINAL_1P_S = 0.95  # calibrated idle-window 1-proc burn on this VM
+NOMINAL_1P_S = 0.95  # calibrated idle-window 1-proc burn
 CLEAN_1P_SLOWDOWN = 1.25
-# Max relative disagreement between the two narrow legs of an
-# N -> 4N -> N sandwich for the pair to count as clean. Healthy-window
-# sandwiches measure 0.026-0.162 (r5 pairs, r6 hunt B); a throttle or
-# a concurrent-run collision inside one narrow leg reads far higher
-# (r6 hunt C3: 1.225).
-DRIFT_CLEAN_MAX = 0.25
 
 
 def _fft_burn(n_iter: int = 1000) -> None:
-    # ~1 s at 1 proc on this VM: long enough that the ~0.1 s
-    # process-spawn cost doesn't distort the 8-proc ratio
+    # ~1 s at 1 proc: long enough that the ~0.1 s process-spawn cost
+    # doesn't distort the 8-proc ratio
     import numpy as np
 
     rng = np.random.default_rng(0)
@@ -52,21 +46,19 @@ def _fft_burn(n_iter: int = 1000) -> None:
 
 
 def ambient_probe() -> dict:
-    """Spark-free hypervisor-steal probe, run immediately before each
+    """Spark-free CPU-contention probe, run immediately before each
     leg: identical FFT work at 1 proc and 8 procs. On dedicated
-    hardware the 8-proc wall time ~= the 1-proc time; in this VM's
-    throttled windows wide parallelism runs many times slower (see
-    BENCH/BASELINE.md). Recording it in the leg JSON lets the merge
-    step identify degraded-window pairs mechanically instead of
-    narratively."""
+    hardware with >= 8 cores the 8-proc wall time ~= the 1-proc time;
+    under contention wide parallelism runs many times slower.
+    Recording it next to the leg lets a reader flag degraded-window
+    pairs mechanically instead of narratively."""
     import multiprocessing as mp
     import time
 
     _fft_burn(100)  # numpy/page-cache warmup, untimed
     # min-of-3: a single 1p burn is noisy (core placement / frequency
-    # scaling swung one-shot readings 0.9-1.6 s while Spark legs in the
-    # same minutes were demonstrably healthy — r4 pair 7). The MINIMUM
-    # is the right statistic for a speed-limit probe.
+    # scaling); the MINIMUM is the right statistic for a speed-limit
+    # probe.
     one = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
@@ -88,12 +80,9 @@ def ambient_probe() -> dict:
         "probe_ratio": round(eight / one, 2),
         "probe_8p_spread": round(max(eights) / eight, 2),
         "slowdown_1p": round(one / NOMINAL_1P_S, 2),
-        # A heuristic CORRELATE of window quality, not a classifier:
+        # a heuristic correlate of window quality, not a classifier:
         # efficiency is a ratio, so uniformly slow windows can still
-        # yield valid pairs (r4 p7: slowdown ~1.5, efficiency 0.935),
-        # while a wide-throttle can bite a sustained Spark leg that a
-        # short probe missed (r4 p1: ratio 1.02, efficiency 0.50).
-        # BENCH/BASELINE.md reports the full distribution either way.
+        # yield valid pairs
         "clean_window": (
             eight / one <= CLEAN_PROBE_RATIO
             and one <= CLEAN_1P_SLOWDOWN * NOMINAL_1P_S
@@ -111,64 +100,6 @@ def zip_engine(out_path: str) -> None:
                     z.write(full, os.path.relpath(full, REPO))
 
 
-def spark_submit(cores: int, clips: int, zip_path: str, pin: bool = True) -> dict:
-    import pyspark
-
-    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
-    cmd = []
-    if pin:
-        # pin the whole process tree (JVM + python workers) to exactly
-        # `cores` CPUs: local[N] limits task slots but not JVM/GC/IO
-        # threads, so an unpinned small-N run leaks extra parallelism
-        # and an unpinned large-N run oversubscribes the hypervisor —
-        # both distort the N-vs-4N comparison. Pinning makes each run a
-        # faithful stand-in for an N-core cluster allocation.
-        cmd = ["taskset", "-c", f"0-{cores - 1}"]
-    cmd += [
-        submit,
-        "--master", f"local[{cores}]",
-        "--py-files", zip_path,
-        "--driver-memory", "24g",  # local mode: the only JVM heap knob
-        "--conf", "spark.ui.enabled=false",
-        os.path.join(REPO, "bench", "throughput_job.py"),
-        "--cores", str(cores),
-        "--clips", str(clips),
-    ]
-    env = dict(os.environ)
-    env.pop("PYSPARK_GATEWAY_PORT", None)
-    # throttle-independent instrumentation around the leg:
-    # - CPU-seconds of the whole reaped spark-submit tree (JVM + python
-    #   workers): work conservation — cpu_s/clip flat across
-    #   allocations proves the engine adds no parallel overhead, so any
-    #   walltime inflation is external to the plan;
-    # - /proc/stat steal jiffies: the hypervisor's own admission of how
-    #   many cycles it withheld DURING the leg (the instant probes can
-    #   only sample the window's edges).
-    import resource
-
-    ru0 = resource.getrusage(resource.RUSAGE_CHILDREN)
-    st0 = _proc_stat_snapshot()
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, timeout=1800, env=env, cwd=REPO
-    )
-    ru1 = resource.getrusage(resource.RUSAGE_CHILDREN)
-    st1 = _proc_stat_snapshot()
-    cpu_s = (ru1.ru_utime - ru0.ru_utime) + (ru1.ru_stime - ru0.ru_stime)
-    for line in out.stdout.splitlines():
-        line = line.strip()
-        if line.startswith("{") and "clips_per_sec" in line:
-            r = json.loads(line)
-            r["cpu_s"] = round(cpu_s, 1)
-            r["cpu_s_per_clip"] = round(cpu_s / clips, 4)
-            if st0 and st1:
-                dsteal = st1[0] - st0[0]
-                dtotal = st1[1] - st0[1]
-                r["steal_pct"] = round(100.0 * dsteal / max(dtotal, 1), 2)
-            return r
-    sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:] + "\n")
-    raise RuntimeError(f"no result line from spark-submit at local[{cores}]")
-
-
 def _proc_stat_snapshot() -> tuple[int, int] | None:
     """(steal jiffies, total jiffies) from the aggregate cpu line."""
     try:
@@ -182,216 +113,81 @@ def _proc_stat_snapshot() -> tuple[int, int] | None:
     return vals[7], sum(vals)
 
 
-LEG_PATHS = {
-    "n": os.path.join(REPO, "bench", "leg_n.json"),
-    "4n": os.path.join(REPO, "bench", "leg_4n.json"),
-    "n2": os.path.join(REPO, "bench", "leg_n2.json"),
-}
-# coordination with interactive work in the same sandbox: test/bench
-# runs touch BUSY_LOCK so the hunt won't burn a pair against a machine
-# it knows is loaded; the hunt holds PAIR_LOCK while its legs run so
-# interactive work can avoid corrupting a measurement in flight
-BUSY_LOCK = os.path.join(REPO, "bench", ".engine_busy")
-PAIR_LOCK = os.path.join(REPO, "bench", ".hunt_pair_running")
+def run_leg(cpus: list[int], zip_path: str) -> dict:
+    """One leg at local[len(cpus)], its whole process tree (JVM +
+    Python workers) pinned to ``cpus``: local[N] limits task slots but
+    not JVM/GC/IO threads, so an unpinned leg would leak or
+    oversubscribe parallelism."""
+    import pyspark
 
-
-def run_one_leg(leg: str, args, zip_path: str) -> dict:
+    cores = len(cpus)
     probe = ambient_probe()
-    cores = args.n * 4 if leg == "4n" else args.n
-    r = spark_submit(cores, args.clips, zip_path)
-    r["ambient_probe"] = probe
-    with open(LEG_PATHS[leg], "w") as f:
-        json.dump(r, f)
-    return r
-
-
-def hunt(args, zip_path: str) -> None:
-    """Opportunistic clean-pair hunt: probe the hypervisor window first
-    and only burn an N -> 4N -> N sandwich when it reads clean, backing
-    off while it doesn't. Each attempt's legs are archived to
-    bench/<prefix><k>_{n,4n,n2}.json and its merged row appended to
-    BENCH/scaling_runs.jsonl (mode=hunt); the hunt stops at the first
-    pair that is BOTH probe-clean on every leg and >= --target
-    efficiency, or when --hunt-minutes expire — either outcome is
-    evidence (VERDICT r5 task #3)."""
-    import shutil
-    import time
-
-    deadline = time.time() + args.hunt_minutes * 60
-    backoff, attempt = 30.0, 0
-    while time.time() < deadline:
-        if os.path.exists(BUSY_LOCK):
-            print(json.dumps({"hunt": "engine busy, waiting"}), flush=True)
-            time.sleep(30)
-            continue
-        probe = ambient_probe()
-        print(json.dumps({"hunt_gate_probe": probe}), flush=True)
-        if not probe["clean_window"]:
-            time.sleep(min(backoff, max(1.0, deadline - time.time())))
-            backoff = min(backoff * 1.5, 480)
-            continue
-        backoff = 30.0
-        attempt += 1
-        with open(PAIR_LOCK, "w") as f:
-            f.write(str(os.getpid()))
-        try:
-            for leg in ("n", "4n", "n2"):
-                run_one_leg(leg, args, zip_path)
-        finally:
-            os.unlink(PAIR_LOCK)
-        result = merge_legs(
-            args, extra={"mode": "hunt", "attempt": attempt}
-        )
-        for leg in ("n", "4n", "n2"):
-            shutil.copy(
-                LEG_PATHS[leg],
-                os.path.join(
-                    REPO, "bench", f"{args.archive_prefix}{attempt}_{leg}.json"
-                ),
-            )
-        print(json.dumps(result), flush=True)
-        if result["clean_pair"] and result["scaling_efficiency"] >= args.target:
-            print(
-                json.dumps({"hunt": "clean pair found", "attempt": attempt}),
-                flush=True,
-            )
-            return
-    print(
-        json.dumps({"hunt": "deadline reached", "attempts": attempt}),
-        flush=True,
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    cmd = [
+        "taskset", "-c", ",".join(map(str, cpus)),
+        submit,
+        "--master", f"local[{cores}]",
+        "--py-files", zip_path,
+        "--driver-memory", "8g",  # local mode: the only JVM heap knob
+        "--conf", "spark.ui.enabled=false",
+        os.path.join(REPO, "bench", "throughput_job.py"),
+        "--cores", str(cores),
+        "--clips", str(CLIPS),
+    ]
+    env = dict(os.environ)
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    # CPU-seconds of the reaped spark-submit tree (work conservation:
+    # flat cpu_s/clip across legs means the engine adds no parallel
+    # overhead) and /proc/stat steal over the leg
+    ru0 = resource.getrusage(resource.RUSAGE_CHILDREN)
+    st0 = _proc_stat_snapshot()
+    out = subprocess.run(
+        cmd, capture_output=True, text=True, timeout=1800, env=env, cwd=REPO
     )
+    ru1 = resource.getrusage(resource.RUSAGE_CHILDREN)
+    st1 = _proc_stat_snapshot()
+    cpu_s = (ru1.ru_utime - ru0.ru_utime) + (ru1.ru_stime - ru0.ru_stime)
+    for line in out.stdout.splitlines():
+        line = line.strip()
+        if line.startswith("{") and "clips_per_sec" in line:
+            r = json.loads(line)
+            steal = None
+            if st0 and st1:
+                steal = round(100.0 * (st1[0] - st0[0]) / max(st1[1] - st0[1], 1), 2)
+            return {
+                "clips_per_s": r["clips_per_sec"],
+                "steady_clips_per_s": r["steady_clips_per_sec"],
+                "cpu_s_per_clip": round(cpu_s / CLIPS, 4),
+                "steal_pct": steal,
+                "ambient_probe": probe,
+            }
+    sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:] + "\n")
+    raise RuntimeError(f"no result line from spark-submit at local[{cores}]")
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--clips", type=int, default=3072)
-    ap.add_argument("--n", type=int, default=8)
-    ap.add_argument(
-        "--leg", choices=["n", "4n", "n2", "both", "merge", "hunt"],
-        default="both",
-        help="run one leg (result cached to bench/leg_*.json), or merge cached legs; "
-        "n2 = a SECOND narrow leg run after 4n (N -> 4N -> N sandwich): the two "
-        "narrow legs' agreement is the drift detector for the window, measured "
-        "by the same instrument as the pair itself; hunt = probe-gated retry "
-        "loop that burns sandwiches only in clean windows",
-    )
-    ap.add_argument("--hunt-minutes", type=float, default=180.0)
-    ap.add_argument("--target", type=float, default=0.8)
-    ap.add_argument("--archive-prefix", default="r6_hunt")
-    args = ap.parse_args()
-
+    cpus = sorted(os.sched_getaffinity(0))
+    n = len(cpus) // 4
+    if n < 1:
+        sys.exit(f"run_scaling: need >= 4 CPUs for a pinned 4N leg, have {len(cpus)}")
     zip_path = os.path.join(REPO, "bench", "sparkfp.zip")
-    leg_n2_path = LEG_PATHS["n2"]
-
-    if args.leg in ("n", "4n", "n2", "both", "hunt"):
-        zip_engine(zip_path)
-    if args.leg == "hunt":
-        hunt(args, zip_path)
-        return
-    if args.leg in ("n", "both"):
-        # a fresh pair run invalidates any stale second narrow leg
-        if os.path.exists(leg_n2_path):
-            os.remove(leg_n2_path)
-        run_one_leg("n", args, zip_path)
-    if args.leg in ("4n", "both"):
-        run_one_leg("4n", args, zip_path)
-    if args.leg == "n2":
-        run_one_leg("n2", args, zip_path)
-    if args.leg in ("n", "4n", "n2"):
-        return
-    result = merge_legs(args)
-    print(json.dumps(result))
-
-
-def merge_legs(args, extra: dict | None = None) -> dict:
-    leg_n_path = LEG_PATHS["n"]
-    leg_4n_path = LEG_PATHS["4n"]
-    leg_n2_path = LEG_PATHS["n2"]
-    with open(leg_n_path) as f:
-        r_n = json.load(f)
-    with open(leg_4n_path) as f:
-        r_4n = json.load(f)
-    r_n2 = None
-    if os.path.exists(leg_n2_path):
-        with open(leg_n2_path) as f:
-            r_n2 = json.load(f)
-    if r_n2 is not None:
-        # N -> 4N -> N sandwich: efficiency against the MEAN of the two
-        # narrow legs; their relative disagreement is the window-drift
-        # metric (the probes sample instants — this samples the legs).
-        n_mean = (r_n["clips_per_sec"] + r_n2["clips_per_sec"]) / 2
-        drift = abs(r_n["clips_per_sec"] - r_n2["clips_per_sec"]) / n_mean
-        sn_a, sn_b = (
-            r_n.get("steady_clips_per_sec"), r_n2.get("steady_clips_per_sec")
-        )
-        steady_n_mean = (sn_a + sn_b) / 2 if sn_a and sn_b else None
-    else:
-        n_mean, drift, steady_n_mean = (
-            r_n["clips_per_sec"], None, r_n.get("steady_clips_per_sec")
-        )
-    eff = r_4n["clips_per_sec"] / (4 * n_mean)
-    speedup = r_4n["clips_per_sec"] / n_mean
+    zip_engine(zip_path)
+    leg_n = run_leg(cpus[:n], zip_path)
+    leg_4n = run_leg(cpus[: 4 * n], zip_path)
+    speedup = leg_4n["clips_per_s"] / leg_n["clips_per_s"]
     result = {
-        "n_cores": args.n,
-        "4n_cores": args.n * 4,
-        "clips": args.clips,
-        "throughput_n": round(n_mean, 3),
-        "throughput_n_legs": (
-            [r_n["clips_per_sec"], r_n2["clips_per_sec"]] if r_n2 else None
-        ),
-        "narrow_leg_drift": round(drift, 3) if drift is not None else None,
-        "throughput_4n": r_4n["clips_per_sec"],
-        "steady_n": steady_n_mean,
-        "steady_4n": r_4n.get("steady_clips_per_sec"),
+        "n_cores": n,
+        "4n_cores": 4 * n,
+        "clips": CLIPS,
+        "legs": {"n": leg_n, "4n": leg_4n},
         "speedup": round(speedup, 3),
-        "scaling_efficiency": round(eff, 3),
-        "steady_efficiency": (
-            round(r_4n["steady_clips_per_sec"] / (4 * steady_n_mean), 3)
-            if steady_n_mean and r_4n.get("steady_clips_per_sec")
-            else None
-        ),
-        "probe_n": r_n.get("ambient_probe"),
-        "probe_4n": r_4n.get("ambient_probe"),
-        # work conservation + hypervisor self-report (see spark_submit)
-        "cpu_s_per_clip_n": r_n.get("cpu_s_per_clip"),
-        "cpu_s_per_clip_4n": r_4n.get("cpu_s_per_clip"),
-        "cpu_ratio_4n_vs_n": (
-            round(r_4n["cpu_s_per_clip"] / r_n["cpu_s_per_clip"], 3)
-            if r_n.get("cpu_s_per_clip") and r_4n.get("cpu_s_per_clip")
-            else None
-        ),
-        "steal_pct_n": r_n.get("steal_pct"),
-        "steal_pct_4n": r_4n.get("steal_pct"),
-        # pair is clean iff BOTH legs ran in a clean hypervisor window
-        # AND (for sandwich pairs) the two narrow legs agree: the drift
-        # detector measures the window with the pair's own instrument,
-        # catching contamination the instant probes miss — r6 hunt C3's
-        # narrow legs read [97, 404] (drift 1.22, a concurrent-JVM
-        # collision) under clean probes, which would otherwise have
-        # passed as a 1.05-efficiency "clean" pair. A leg recorded
-        # before the ambient probe existed is UNKNOWN (None), matching
-        # summarize_pairs.leg_clean — not dirty.
-        "clean_pair": (
-            None
-            if r_n.get("ambient_probe") is None
-            or r_4n.get("ambient_probe") is None
-            else bool(
-                r_n["ambient_probe"].get("clean_window")
-                and r_4n["ambient_probe"].get("clean_window")
-                and (drift is None or drift <= DRIFT_CLEAN_MAX)
-            )
-        ),
+        "scaling_efficiency": round(speedup / 4, 3),
     }
-    if extra:
-        result.update(extra)
-    # BENCH/BASELINE.md is hand-maintained (measurement history +
-    # interpretation); merges append machine results to a JSON log
-    # instead of clobbering it.
+    line = json.dumps(result)
+    print(line)
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    log_path = os.path.join(REPO, "BENCH", "scaling_runs.jsonl")
-    with open(log_path, "a") as f:
-        f.write(json.dumps(result) + "\n")
-    return result
+    with open(os.path.join(REPO, "BENCH", "scaling_runs.jsonl"), "a") as f:
+        f.write(line + "\n")
 
 
 if __name__ == "__main__":

@@ -1,12 +1,12 @@
-"""Scaling-harness worker: the full audio match streaming job at a
+"""Scaling-runner worker: the fused audio match streaming job at a
 given parallelism, launched via spark-submit --py-files sparkfp.zip
-(the north rule's launch mode).
+(the north rule's launch mode) by bench/run_scaling.py.
 
     spark-submit --master local[N] --py-files sparkfp.zip \
-        bench/throughput_job.py --cores N --clips 384
+        bench/throughput_job.py --cores N --clips 8192
 
 Prints one JSON line: {"cores": N, "clips": M, "elapsed_s": T,
-"clips_per_sec": M/T, "lineage_batches": B}.
+"clips_per_sec": M/T, "steady_clips_per_sec": ..., ...}.
 """
 
 from __future__ import annotations
@@ -18,23 +18,18 @@ import shutil
 import tempfile
 import time
 
+TRACKS = 8
+FILES = 64
+FILES_PER_TRIGGER = 32
+# shuffle partition count is FIXED across parallelism levels: it is a
+# property of the query, not the cluster, so the legs vary only compute
+SHUFFLE_PARTITIONS = 32
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument("--clips", type=int, default=2048)
-    ap.add_argument("--tracks", type=int, default=8)
-    ap.add_argument("--files", type=int, default=64)
-    ap.add_argument("--files-per-trigger", type=int, default=32)
-    # state-store/shuffle partition count is FIXED across cluster sizes:
-    # streaming state partitioning is a property of the query, not the
-    # cluster; scaling runs must only vary compute (otherwise the 4N run
-    # pays 4x the per-batch state-store open/commit overhead and the
-    # comparison measures RocksDB instance count, not throughput).
-    ap.add_argument("--shuffle-partitions", type=int, default=32)
-    # fused: per-clip-local matcher, zero shuffles (the 10^12-scale path);
-    # session: stateful session-window vote aggregation (chunked-clip path)
-    ap.add_argument("--mode", choices=["fused", "session"], default="fused")
     args = ap.parse_args()
 
     from sparkfp import matching, metrics, streaming, synth
@@ -44,7 +39,7 @@ def main() -> None:
     spark = get_spark(
         f"sparkfp-scale-{args.cores}",
         cores=args.cores,
-        shuffle_partitions=args.shuffle_partitions,
+        shuffle_partitions=SHUFFLE_PARTITIONS,
     )
     tmp = tempfile.mkdtemp(prefix=f"sparkfp_scale_{args.cores}_")
     try:
@@ -52,16 +47,16 @@ def main() -> None:
         sink_dir = os.path.join(tmp, "sink")
         ckpt = os.path.join(tmp, "ckpt")
 
-        index = matching.build_index(synth.tracks(spark, n_tracks=args.tracks)).cache()
+        index = matching.build_index(synth.tracks(spark, n_tracks=TRACKS)).cache()
         index.count()
         clips = synth.clips(
-            spark, n_clips=args.clips, n_tracks=args.tracks,
+            spark, n_clips=args.clips, n_tracks=TRACKS,
             partitions=max(args.cores * 2, 8),
         )
-        streaming.write_stream_source(clips, src, n_files=args.files)
+        streaming.write_stream_source(clips, src, n_files=FILES)
 
         stream = streaming.read_clip_stream(
-            spark, src, max_files_per_trigger=args.files_per_trigger
+            spark, src, max_files_per_trigger=FILES_PER_TRIGGER
         )
         sink = ExactlyOnceParquetSink(sink_dir)
         # pre-warm OUTSIDE the timed window, identically at every
@@ -75,15 +70,12 @@ def main() -> None:
         # distortion of the narrow-vs-wide comparison (the wide leg's
         # run is shorter, so the same fixed cost costs it more).
         warm = synth.clips(
-            spark, n_clips=max(args.cores * 8, 32), n_tracks=args.tracks,
+            spark, n_clips=max(args.cores * 8, 32), n_tracks=TRACKS,
             partitions=args.cores,
         )
         matching.match_clips_fused(warm, index).count()
         t0 = time.time()
-        if args.mode == "fused":
-            q = streaming.match_stream_fused(stream, index, sink, ckpt)
-        else:
-            q = streaming.match_stream(stream, index, sink, ckpt)
+        q = streaming.match_stream_fused(stream, index, sink, ckpt)
         terminated = q.awaitTermination(900)
         elapsed = time.time() - t0
         # a timed-out availableNow run would yield clips/elapsed over a
@@ -91,8 +83,6 @@ def main() -> None:
         if not terminated:
             raise RuntimeError("scaling leg timed out before draining the stream")
         lineage = metrics.collect_lineage(q)
-        import sys
-
         fed = sum(
             int(json.loads(p.json).get("numInputRows") or 0)
             for p in q.recentProgress
@@ -100,13 +90,6 @@ def main() -> None:
         if fed != args.clips:
             raise RuntimeError(f"scaling leg drained {fed} of {args.clips} clips")
 
-        for p in q.recentProgress:
-            d = json.loads(p.json)
-            dur = d.get("durationMs", {})
-            sys.stderr.write(
-                f"BATCHDIAG b={d.get('batchId')} rows={d.get('numInputRows')} "
-                f"trig={dur.get('triggerExecution')} addBatch={dur.get('addBatch')}\n"
-            )
         # steady-state rate: rows/triggerExecution of the LAST data
         # batch. End-to-end clips/s carries ~2-4 s of per-run serial
         # cost (query start, worker spin-up, final commit) that a

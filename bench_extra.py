@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from sparkfp.session import default_parallelism, effective_core_cap, get_spark  # noqa: E402
+from sparkfp.session import default_parallelism, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -29,7 +29,7 @@ def main() -> None:
     names = sys.argv[1:]
     reps = int(os.environ.get("SPARKFP_BENCH_REPS", "3"))
     do_noop = os.environ.get("SPARKFP_NOOP", "1") != "0"
-    cores = min(default_parallelism(), effective_core_cap())
+    cores = default_parallelism()
     spark = get_spark("sparkfp-bench-extra", cores=cores)
     qs = entrymod.queries()
     if not names:

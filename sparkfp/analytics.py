@@ -121,7 +121,7 @@ def lowess(
     the same x = arange(len) the reference passes).
 
     Semantics (mirrored exactly by the SQL oracle in __spark_entry__):
-      x_i = row position after sorting by order_cols;
+      x_i = row position after sorting by order_cols, nulls last;
       k   = max(3, min(n, int(frac * n))) nearest neighbors;
       h_i = k-th smallest |x_j - x_i| (ties counted);
       w_j = tricube(|x_j - x_i| / h_i), 0 outside the bandwidth;
@@ -265,8 +265,9 @@ def lowess(
         if buf is not None and len(buf):
             yield _process(buf)
 
+    # null order keys sort last, as in DuckDB and a pandas sort_values
     sorted_df = df.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
-        *key_cols, *order
+        *key_cols, *[F.asc_nulls_last(c) for c in order]
     )
     return sorted_df.mapInPandas(run, schema)
 
@@ -280,29 +281,6 @@ def format_sensor_value(col: Column, decimals: int = 3) -> Column:
     return F.when(bad, F.lit("null")).otherwise(
         F.round(col.cast("double"), decimals).cast("string")
     )
-
-
-def adaptive_window_points(df: DataFrame, key_cols: list[str], ts_col: str,
-                           window_minutes: float) -> DataFrame:
-    """Points-per-window from the median sampling interval
-    (reference process_odr.py:879-922): window_pts =
-    window_minutes / median(dt_minutes), per key."""
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
-    dt = F.unix_timestamp(ts_col) - F.lag(F.unix_timestamp(ts_col)).over(w)
-    per_key = (
-        df.withColumn("_dt", dt)
-        .groupBy(*key_cols)
-        .agg(F.median("_dt").alias("_med_dt"))
-        .withColumn(
-            "window_pts",
-            F.greatest(
-                F.lit(3),
-                F.round(F.lit(window_minutes * 60) / F.col("_med_dt")).cast("int"),
-            ),
-        )
-        .drop("_med_dt")
-    )
-    return df.join(F.broadcast(per_key), key_cols, "left")
 
 
 def pivot_wide(

@@ -59,15 +59,6 @@ def build_index(tracks: DataFrame) -> DataFrame:
     )
 
 
-def write_index(index: DataFrame, path: str, buckets: int = 32) -> None:
-    """Persist the index laid out by hash for join locality.
-
-    (Iceberg `bucket(N, hash)` on a real cluster; parquet repartitioned
-    by hash here — same co-location property for the shuffle join.)
-    """
-    index.repartition(buckets, "hash").write.mode("overwrite").parquet(path)
-
-
 def match(
     landmarks: DataFrame,
     index: DataFrame,

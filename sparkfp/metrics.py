@@ -49,13 +49,6 @@ def collect_lineage(query: StreamingQuery) -> list[dict[str, Any]]:
     return lineage_from_progress([json.loads(p.json) for p in query.recentProgress])
 
 
-def write_lineage(lineage: list[dict], path: str) -> None:
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        for row in lineage:
-            f.write(json.dumps(row) + "\n")
-
-
 def checkpoint_offsets(checkpoint_dir: str) -> dict[int, Any]:
     """Read the offset log Spark wrote to the checkpoint — the durable
     per-partition lineage that makes the job resumable."""

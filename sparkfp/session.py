@@ -20,28 +20,13 @@ import os
 from pyspark.sql import SparkSession
 
 
-def effective_core_cap() -> int:
-    """Max local-mode cores that actually speed this sandbox up.
-
-    The VM advertises 32 vCPUs but the hypervisor throttles parallel
-    compute above ~8-12 effective cores (identical-work numpy burn:
-    0.9 s at 1 proc, 1.1 s at 8, 2.6 s at 32 — BENCH/BASELINE.md);
-    unpinned local[32] Spark REGRESSES vs local[8]. Default cap 8,
-    override with SPARKFP_MAX_LOCAL_CORES (set it to a huge value on
-    real hardware). The cap applies only to INFERRED core counts: an
-    explicit ``cores=`` arg or an explicit SPARK_GRAFT_CPUS env value
-    is honored verbatim (callers that opt in to the sandbox ceiling,
-    like bench.py, clamp themselves and say so).
-    """
-    return int(os.environ.get("SPARKFP_MAX_LOCAL_CORES", "8"))
-
-
 def default_parallelism() -> int:
+    """$SPARK_GRAFT_CPUS when set, exactly, else every CPU of the host
+    (``get_spark(cores=None)`` masters ``local[default_parallelism()]``)."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env is not None:
-        # driver contract: cores=None -> local[$SPARK_GRAFT_CPUS], exactly
         return max(1, int(env))
-    return max(1, min(os.cpu_count() or 8, effective_core_cap()))
+    return max(1, os.cpu_count() or 1)
 
 
 def fan_out(df, min_partitions: int | None = None, key: str | None = None):
@@ -85,9 +70,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    ``cores=None`` -> ``local[$SPARK_GRAFT_CPUS]`` (driver contract).
-    The scaling harness passes explicit ``cores`` (8 vs 32) to evidence
-    the N-vs-4N throughput criterion from BASELINE.json.
+    ``cores=None`` -> ``local[default_parallelism()]``. The scaling
+    runner (bench/run_scaling.py) passes explicit ``cores`` for its N
+    and 4N legs.
     """
     n = cores or default_parallelism()
     sp = shuffle_partitions or max(2 * n, 8)

@@ -98,12 +98,6 @@ def _table_sigs(vec: Column, tables: list[np.ndarray]) -> Column:
     return sigs(vec)
 
 
-def lsh_signature(vec_col: Column, planes: np.ndarray) -> Column:
-    """Sign-bit signature for a single hash table: bit p set where
-    dot(vec, plane_p) > 0."""
-    return F.element_at(_table_sigs(vec_col, [planes]), 1)
-
-
 def lsh_candidates(
     corpus: DataFrame,
     queries: DataFrame,

@@ -202,6 +202,9 @@ def rate_limit_per_key(
     return df.groupBy(*key_cols).applyInPandas(limit, schema)
 
 
+# --------------------------------------------------------------- streaming
+
+
 def rate_limit_stream(
     values: DataFrame,
     key_col: str,
@@ -273,138 +276,13 @@ def rate_limit_stream(
     )
 
 
-def tws_available() -> bool:
-    """SURVEY.md §7.5.7 version probe: True iff this PySpark can RUN
-    the Spark-4 transformWithStateInPandas API. That needs both the
-    API surface (StatefulProcessor + typed state + timers, Spark 4.0+)
-    and the protobuf runtime its Python state-server protocol is built
-    on (pyspark/sql/streaming/proto imports google.protobuf at worker
-    startup; without it the driver worker crashes at plan time with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — measured in this
-    sandbox, which ships the 4.1 API but no protobuf). Callers pick
-    the TWS implementation when this returns True and fall back to
-    applyInPandasWithState otherwise."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError:
-        return False
-    return hasattr(PandasGroupedOpsMixin, "transformWithStateInPandas")
-
-
-def make_rate_limit_processor(key_col: str, ts_col: str, min_interval_s: int):
-    """Build the StatefulProcessor behind rate_limit_stream_tws.
-
-    Factored out so the greedy-release logic is drivable with stub
-    state/timer objects in tests even on runtimes where the TWS state
-    server can't start (tws_available() False) — the class only touches
-    the documented ValueState/ListState/handle surface."""
-    import bisect
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    interval_ms = min_interval_s * 1000
-
-    class _RateLimiter(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.handle = handle
-            self.last = handle.getValueState("last_emit", "last_emit_ms long")
-            self.buf = handle.getListState("buf", "ts long")
-
-        def _release(self, k: str, wm: int):
-            buf = sorted(int(r[0]) for r in self.buf.get()) if self.buf.exists() else []
-            # STRICT t < wm: same release rule as the
-            # applyInPandasWithState twin (see its docstring)
-            cut = bisect.bisect_left(buf, wm)
-            ready, rest = buf[:cut], buf[cut:]
-            got = self.last.get() if self.last.exists() else None
-            last = got[0] if got is not None else None
-            out = []
-            for ts in ready:
-                if last is None or ts - last >= interval_ms:
-                    out.append((k, ts))
-                    last = ts
-            if last is not None:
-                self.last.update((last,))
-            # materialize before deleting: listTimers streams from the
-            # state server and deleting mid-iteration is undefined
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-            if rest:
-                self.buf.put([(t,) for t in rest])
-                self.handle.registerTimer(max(rest[0], wm + 1))
-            else:
-                self.buf.clear()
-            return out
-
-        def handleInputRows(self, key, rows, timerValues):
-            (k,) = key
-            new = []
-            for pdf in rows:
-                new.extend(int(t) for t in pdf[ts_col])
-            if new:
-                self.buf.appendList([(t,) for t in new])
-            out = self._release(k, timerValues.getCurrentWatermarkInMs())
-            if out:
-                yield pd.DataFrame(out, columns=[key_col, "ts_ms"])
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (k,) = key
-            out = self._release(k, timerValues.getCurrentWatermarkInMs())
-            if out:
-                yield pd.DataFrame(out, columns=[key_col, "ts_ms"])
-
-        def close(self) -> None:
-            pass
-
-    return _RateLimiter()
-
-
-def rate_limit_stream_tws(
-    values: DataFrame,
-    key_col: str,
-    ts_col: str,
-    min_interval_s: int,
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Streaming T8 on the Spark-4 transformWithStateInPandas API: the
-    exact semantics of rate_limit_stream (buffer until the watermark
-    passes a row, then release through the event-time greedy chain;
-    strict t < wm release) re-expressed as a StatefulProcessor with
-    typed state — a ValueState for the last emitted event-time, a
-    ListState for the pending buffer — and an event-time timer armed at
-    the earliest buffered row so tails flush in no-data micro-batches.
-    Same reference anchor as the applyInPandasWithState twin
-    (llm_job.py:40-70); batch==stream==oracle equality is asserted for
-    BOTH implementations by the same test (probe-gated), and the
-    processor logic itself by a stub-state harness test.
-    """
-    out_schema = f"{key_col} string, ts_ms long"
-    with_time = values.withColumn("event_time", F.timestamp_millis(F.col(ts_col)))
-    return (
-        with_time.withWatermark("event_time", watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            make_rate_limit_processor(key_col, ts_col, min_interval_s),
-            out_schema, "append", "eventTime",
-        )
-    )
-
-
-# --------------------------------------------------------------- streaming
-
-
 def _run_state_step(
     st, down_since, start_since, ts, running, shutdown_ms, transition_ms
 ):
-    """One run-state-machine transition (T6), shared by the
-    applyInPandasWithState and transformWithStateInPandas twins so the
-    two streaming implementations cannot drift. Reference semantics:
-    process_odr.py:1028-1084 — a full shutdown is the only thing that
-    clears the STARTING clock (brief dips survive)."""
+    """One run-state-machine transition (T6) of ``run_state_stream``.
+    Reference semantics: process_odr.py:1028-1084 — a full shutdown is
+    the only thing that clears the STARTING clock (brief dips
+    survive)."""
     if not running:
         if down_since is None:
             down_since = ts
@@ -425,96 +303,6 @@ def _run_state_step(
                 start_since = None
         label = st
     return st, down_since, start_since, label
-
-
-def make_run_state_processor(
-    key_col: str,
-    ts_col: str,
-    running_col: str,
-    shutdown_window_s: int,
-    transition_window_s: int,
-):
-    """Build the StatefulProcessor behind run_state_stream_tws.
-
-    Factored out (like make_rate_limit_processor) so the transition
-    logic is drivable with stub state objects in tests even on
-    runtimes where the TWS state server can't start. One ValueState
-    holds the whole machine (state, down_since_ms, start_since_ms);
-    no timers — the machine emits one labeled row per input row."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    sh_ms = shutdown_window_s * 1000
-    tr_ms = transition_window_s * 1000
-
-    class _RunState(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.machine = handle.getValueState(
-                "machine",
-                "state string, down_since_ms long, start_since_ms long",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (k,) = key
-            got = self.machine.get() if self.machine.exists() else None
-            st, down_since, start_since = (
-                got if got is not None else (RUNNING, None, None)
-            )
-            out = []
-            for pdf in rows:
-                pdf = pdf.sort_values(ts_col)
-                for ts, running in zip(pdf[ts_col], pdf[running_col]):
-                    ts, running = int(ts), bool(running)
-                    st, down_since, start_since, label = _run_state_step(
-                        st, down_since, start_since, ts, running,
-                        sh_ms, tr_ms,
-                    )
-                    out.append((k, ts, running, label))
-            self.machine.update((st, down_since, start_since))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=[key_col, "ts_ms", "running", "run_state"]
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return _RunState()
-
-
-def run_state_stream_tws(
-    values: DataFrame,
-    key_col: str,
-    ts_col: str,
-    running_col: str,
-    shutdown_window_s: int,
-    transition_window_s: int,
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Streaming T6 on the Spark-4 transformWithStateInPandas API —
-    the second TWS twin (SURVEY.md §7.5.7), exact same semantics as
-    run_state_stream re-expressed with typed ValueState. timeMode
-    'none': the machine registers no timers (emission is row-driven),
-    so only the watermark's late-row drop involves event time."""
-    out_schema = (
-        f"{key_col} string, ts_ms long, running boolean, run_state string"
-    )
-    with_time = values.withColumn(
-        "event_time", F.timestamp_millis(F.col(ts_col))
-    )
-    return (
-        with_time.withWatermark("event_time", watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            make_run_state_processor(
-                key_col, ts_col, running_col,
-                shutdown_window_s, transition_window_s,
-            ),
-            out_schema, "append", "none",
-        )
-    )
 
 
 def run_state_stream(

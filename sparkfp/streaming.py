@@ -117,9 +117,7 @@ def match_stream(
     watermark: str = "10 seconds",
     session_gap: str = "30 seconds",
     min_votes: int = matching.MIN_VOTES,
-    min_score: float = matching.MIN_SCORE,
     available_now: bool = True,
-    decode_partitions: int | None = None,
 ) -> StreamingQuery:
     """The graft streaming job: clip stream -> landmarks -> stream-static
     hash join against the index -> per-session offset voting -> match rows.
@@ -129,15 +127,8 @@ def match_stream(
     — the streaming analog of the reference's "emit once per streak"
     rising-edge state (process_odr.py:1131-1145): one final match row
     per clip session, emitted on window close (append mode).
-
-    ``decode_partitions``: pass a partition count to repartition the
-    clip stream before decoding when the source layout under-splits
-    (micro-batches of few/large files). Default None: rely on the
-    source layout (Iceberg bucket(clip_id) / enough files) — shuffling
-    raw clip bytes costs more than it buys on shared storage.
     """
-    src = clips.repartition(decode_partitions) if decode_partitions else clips
-    lm = dsp.landmarks(src).withColumn(
+    lm = dsp.landmarks(clips).withColumn(
         "event_time", F.timestamp_millis(F.col("event_ms"))
     )
     joined = lm.withWatermark("event_time", watermark).join(
@@ -206,10 +197,3 @@ def match_stream_fused(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def run_to_completion(query: StreamingQuery, timeout_s: int = 600) -> list[dict]:
-    """Drain an availableNow query; return its per-batch progress dicts
-    (per-partition lineage lives in progress['sources'][i]['startOffset'])."""
-    query.awaitTermination(timeout_s)
-    return [p.asDict() if hasattr(p, "asDict") else p for p in query.recentProgress]

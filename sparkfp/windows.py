@@ -70,18 +70,3 @@ def salted_windowed_count(
     return partial.groupBy("win", key_col).agg(
         F.sum("_partial").cast("long").alias(count_col)
     )
-
-
-def windowed_topk_keys(
-    counts: DataFrame, k: int, key_col: str, count_col: str = "n"
-) -> DataFrame:
-    """Top-k keys per window from a salted_windowed_count result
-    (hot-hash detection: feeds the static hot-key list used to decide
-    broadcast vs salted join strategies at the next run)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("win").orderBy(F.desc(count_col), F.asc(key_col))
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )

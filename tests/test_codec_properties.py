@@ -389,11 +389,12 @@ def test_mp2_roundtrip_snr_envelope(n, rate, amp, seed, kbps):
 
     The floor is amplitude-aware at the low corner: Layer II's
     quantization noise at a fixed bitrate is (nearly) signal-level
-    independent, so SNR scales with signal power — a hypothesis draw
-    at the minimum amp=0.2 measured 29.995 dB (the regression test
-    below pins it), which is the envelope's knife edge, not a codec
-    defect. Nominal-level content (amp >= 0.25) keeps the full 30 dB
-    contract; the quiet corner gets the same contract minus 1 dB."""
+    independent, so SNR scales with signal power. Quiet draws at the
+    minimum amp=0.2 land under 30 dB without any codec defect; the
+    worst found in 3,000 draws of this strategy's quiet corner is
+    29.136 dB (the regression test below pins it). Nominal-level
+    content (amp >= 0.25) keeps the full 30 dB contract; the quiet
+    corner gets the same contract minus 1 dB."""
     from sparkfp import mpeg_audio as m
 
     rng = np.random.default_rng(seed)
@@ -408,19 +409,24 @@ def test_mp2_roundtrip_snr_envelope(n, rate, amp, seed, kbps):
 
 
 def test_mp2_low_amp_knife_edge_regression():
-    """Falsifying example from this round's fresh-seed run: amp=0.2
-    (the strategy minimum) lands at 29.995 dB — a hair under the old
-    blanket 30.0 floor while the codec behaves exactly as designed."""
+    """Quiet-corner draws at amp=0.2 (the strategy minimum), 96 kbps:
+    the first falsifying example of the old blanket 30.0 floor
+    (29.995 dB), and the worst of 3,000 draws from the envelope
+    strategy's quiet corner (amp 0.2-0.25), 29.136 dB. The codec
+    behaves as designed in both; the 29.0 dB floor holds."""
     from sparkfp import mpeg_audio as m
 
-    rng = np.random.default_rng(13)
-    n, rate, amp = 749, 0.09375, 0.2
-    pcm = np.clip(
-        amp * np.sin(rate * np.arange(n)) + 0.01 * rng.standard_normal(n),
-        -1, 1,
-    ).astype(np.float32)
-    out, _ = m.decode_mp2(m.encode_mp2(pcm, 32000, 96))
-    assert codec.snr_db(pcm, out[:n]) >= 29.0
+    for n, rate, amp, seed in [
+        (749, 0.09375, 0.2, 13),
+        (841, 0.18873444766208358, 0.2, 219678254),
+    ]:
+        rng = np.random.default_rng(seed)
+        pcm = np.clip(
+            amp * np.sin(rate * np.arange(n)) + 0.01 * rng.standard_normal(n),
+            -1, 1,
+        ).astype(np.float32)
+        out, _ = m.decode_mp2(m.encode_mp2(pcm, 32000, 96))
+        assert codec.snr_db(pcm, out[:n]) >= 29.0, seed
 
 
 @settings(max_examples=60, deadline=None)

@@ -406,6 +406,27 @@ def test_lowess_batched_path_matches_per_group_reference(spark):
         assert g == pytest.approx(exp, abs=1e-9), key
 
 
+def test_lowess_null_order_key_sorts_last(spark):
+    """A null order key takes the LAST row position of its group (NaN
+    last, as DuckDB and a pandas sort_values place it), not the first."""
+    rng = np.random.Generator(np.random.Philox(key=[8, 0]))
+    n = 16
+    y = (np.sin(np.linspace(0, 6, n)) * 10 + rng.standard_normal(n)).tolist()
+    ts = [float(i) for i in range(n)]
+    ts[4] = None  # row 4 has no timestamp
+    y[4] = 50.0
+    rows = [("A", i, ts[i], float(y[i])) for i in range(n)]
+    rows += [("B", 100 + i, float(i), float(v)) for i, v in enumerate(y)]
+    df = spark.createDataFrame(rows, "k string, id long, ts double, value double")
+    got = analytics.lowess(df, "value", ["k"], "ts", frac=0.5, it=0).toPandas()
+    order_a = sorted(range(n), key=lambda i: (ts[i] is None, ts[i] or 0.0))
+    exp = dict(zip(order_a, _lowess_oracle([y[i] for i in order_a], frac=0.5)))
+    exp.update({100 + i: v for i, v in enumerate(_lowess_oracle(y, frac=0.5))})
+    assert len(got) == 2 * n
+    for row_id, smooth in zip(got.id, got.smooth):
+        assert smooth == pytest.approx(exp[int(row_id)], abs=1e-9), row_id
+
+
 def test_lowess_smooths_outlier_with_robust_iterations(spark):
     # small noise keeps the median absolute residual > 0 so the robust
     # reweighting actually runs (on exactly-fit data s = 0 and the

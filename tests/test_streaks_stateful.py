@@ -6,7 +6,6 @@ Oracles are verbatim ports of the reference's per-row loops:
 - run-state machine: process_odr.py:1028-1084
 """
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -128,19 +127,7 @@ def test_run_state_batch_matches_oracle(spark, run_frame):
     assert not mismatches, mismatches[:10]
 
 
-def _run_state_impl(name):
-    """'state' = applyInPandasWithState, 'tws' = the Spark-4
-    transformWithStateInPandas twin (skipped where the TWS state
-    server can't start)."""
-    if name == "tws":
-        if not stateful.tws_available():
-            pytest.skip("transformWithStateInPandas not runnable here")
-        return stateful.run_state_stream_tws
-    return stateful.run_state_stream
-
-
-@pytest.mark.parametrize("impl_name", ["state", "tws"])
-def test_run_state_stream_matches_batch(spark, run_frame, tmp_path, impl_name):
+def test_run_state_stream_matches_batch(spark, run_frame, tmp_path):
     df, pdf = run_frame
     from sparkfp import streaming
     from sparkfp.sink import ExactlyOnceParquetSink
@@ -156,7 +143,7 @@ def test_run_state_stream_matches_batch(spark, run_frame, tmp_path, impl_name):
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    labeled = _run_state_impl(impl_name)(
+    labeled = stateful.run_state_stream(
         src, "k", "ts_ms", "running",
         shutdown_window_s=600, transition_window_s=900,
     )
@@ -204,20 +191,7 @@ def test_run_state_batch_is_single_shuffle(spark, run_frame):
     assert plan.count("Exchange") == 1, plan
 
 
-def _rate_limit_impl(name):
-    """Both streaming T8 implementations must pass the same equality:
-    'state' = applyInPandasWithState, 'tws' = the Spark-4
-    transformWithStateInPandas StatefulProcessor twin (probe-gated:
-    skipped on runtimes without the API, SURVEY.md §7.5.7)."""
-    if name == "tws":
-        if not stateful.tws_available():
-            pytest.skip("transformWithStateInPandas not in this PySpark")
-        return stateful.rate_limit_stream_tws
-    return stateful.rate_limit_stream
-
-
-@pytest.mark.parametrize("impl_name", ["state", "tws"])
-def test_rate_limit_batch_equals_stream_equals_oracle(spark, tmp_path, impl_name):
+def test_rate_limit_batch_equals_stream_equals_oracle(spark, tmp_path):
     """T8 per-key rate limiter: batch (applyInPandas chain) == streaming
     (keyed state) == the reference greedy chain (llm_job.py:57-70 in
     event time): emit iff >= min_interval since the last EMITTED row."""
@@ -268,7 +242,7 @@ def test_rate_limit_batch_equals_stream_equals_oracle(spark, tmp_path, impl_name
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    limited = _rate_limit_impl(impl_name)(
+    limited = stateful.rate_limit_stream(
         stream, "k", "ts_ms", min_interval_s=1800
     )
     sink = ExactlyOnceParquetSink(sink_dir)
@@ -288,8 +262,7 @@ def test_rate_limit_batch_equals_stream_equals_oracle(spark, tmp_path, impl_name
     assert got_stream == exp
 
 
-@pytest.mark.parametrize("impl_name", ["state", "tws"])
-def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path, impl_name):
+def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path):
     """Disorder within the watermark across micro-batches must not
     change the emit set: rows are buffered in keyed state and released
     in event-time order once the watermark passes them. Arrival order
@@ -298,7 +271,6 @@ def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path, impl_nam
     event-time greedy emits {0, 45}."""
     import time as _time
 
-    from sparkfp import stateful
     from sparkfp.sink import ExactlyOnceParquetSink
 
     base = int(pd.Timestamp("2026-02-01").timestamp() * 1000)
@@ -321,7 +293,7 @@ def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path, impl_nam
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    limited = _rate_limit_impl(impl_name)(
+    limited = stateful.rate_limit_stream(
         stream, "k", "ts_ms", min_interval_s=1800, watermark="3 hours"
     )
     sink = ExactlyOnceParquetSink(sink_dir)
@@ -335,175 +307,3 @@ def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path, impl_nam
     assert q.awaitTermination(300)
     got = {r.ts_ms for r in sink.read(spark).collect() if r.k == "K"}
     assert got == {base + 0 * m, base + 45 * m}
-
-
-# ------------------------------------------- TWS processor (stub harness)
-
-
-class _StubValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = tuple(v)
-
-    def clear(self):
-        self.v = None
-
-
-class _StubListState:
-    def __init__(self):
-        self.rows = []
-
-    def exists(self):
-        return bool(self.rows)
-
-    def get(self):
-        return iter(self.rows)
-
-    def put(self, rows):
-        self.rows = [tuple(r) for r in rows]
-
-    def appendList(self, rows):
-        self.rows.extend(tuple(r) for r in rows)
-
-    def appendValue(self, r):
-        self.rows.append(tuple(r))
-
-    def clear(self):
-        self.rows = []
-
-
-class _StubHandle:
-    """Implements the StatefulProcessorHandle surface the rate-limit
-    processor touches (typed state + event-time timers)."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _StubValueState())
-
-    def getListState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _StubListState())
-
-    def registerTimer(self, ts):
-        self.timers.append(int(ts))
-
-    def deleteTimer(self, ts):
-        self.timers.remove(int(ts))
-
-    def listTimers(self):
-        return iter(list(self.timers))
-
-
-class _StubTimerValues:
-    def __init__(self, wm):
-        self.wm = wm
-
-    def getCurrentWatermarkInMs(self):
-        return self.wm
-
-    def getCurrentProcessingTimeInMs(self):
-        return 0
-
-
-def test_tws_rate_limit_processor_logic_with_stub_state():
-    """Drives the transformWithStateInPandas rate limiter's
-    StatefulProcessor directly through stubbed typed-state/timer
-    objects, so its greedy-release logic is covered even on runtimes
-    where the TWS state server can't start (this sandbox ships the
-    Spark-4 API but not its protobuf runtime — see
-    stateful.tws_available). Micro-batches arrive out of order within
-    the watermark; the emit set must equal the event-time greedy chain,
-    and a no-data timer fire must flush the tail."""
-    proc = stateful.make_rate_limit_processor("k", "ts_ms", min_interval_s=1800)
-    handle = _StubHandle()
-    proc.init(handle)
-    m = 60_000
-    base = 1_700_000_000_000
-
-    emitted = []
-
-    def feed(rows_ms, wm_ms):
-        pdf = pd.DataFrame({"k": ["K"] * len(rows_ms),
-                            "ts_ms": [base + t for t in rows_ms]})
-        for out in proc.handleInputRows(("K",), iter([pdf]), _StubTimerValues(wm_ms)):
-            emitted.extend(int(t) - base for t in out.ts_ms)
-
-    # arrival order 20min, then 0/45min (the arrival-order trap: a
-    # chain applied in arrival order would emit {20}); wm lags behind
-    feed([20 * m], 0)
-    feed([0 * m, 45 * m], base + 10 * m)   # releases only t=0
-    assert emitted == [0 * m]
-    # buffered rows remain, timer armed at earliest pending (>= wm+1)
-    assert handle.states["buf"].rows and handle.timers
-    # more rows: 50min (inside interval of 45) and 90min
-    feed([50 * m, 90 * m], base + 46 * m)  # releases 20 (suppressed), 45
-    assert emitted == [0 * m, 45 * m]
-    # no-data batch: timer fires once the watermark passes the tail
-    for out in proc.handleExpiredTimer(
-        ("K",), _StubTimerValues(base + 100 * m), None
-    ):
-        emitted.extend(int(t) - base for t in out.ts_ms)
-    assert emitted == [0 * m, 45 * m, 90 * m]  # 50 suppressed by 45
-    # oracle: greedy chain over the sorted event times
-    chain, last = [], None
-    for t in sorted([20 * m, 0 * m, 45 * m, 50 * m, 90 * m]):
-        if last is None or t - last >= 1800 * 1000:
-            chain.append(t)
-            last = t
-    assert emitted == chain
-    # state fully drained: empty buffer, no timers, last_emit persisted
-    assert not handle.states["buf"].rows
-    assert not handle.timers
-    assert handle.states["last_emit"].v == (base + 90 * m,)
-    proc.close()
-
-
-def test_tws_run_state_processor_logic_with_stub_state():
-    """Drives the transformWithStateInPandas run-state machine's
-    StatefulProcessor through stubbed typed state (runnable even where
-    the TWS state server can't start). Rows arrive shuffled WITHIN each
-    micro-batch (the processor must sort); labels across batches must
-    equal the independent per-row oracle, and the persisted ValueState
-    must carry the machine across batches."""
-    proc = stateful.make_run_state_processor(
-        "k", "ts_ms", "running", shutdown_window_s=600,
-        transition_window_s=900,
-    )
-    handle = _StubHandle()
-    proc.init(handle)
-
-    ts = pd.date_range("2026-01-01", periods=120, freq="1min")
-    running = (
-        [True] * 20 + [False] * 30 + [True] * 5 + [False] * 2
-        + [True] * 33 + [False] * 5 + [True] * 25
-    )
-    ts_ms = [int(t.timestamp() * 1000) for t in ts]
-    exp = _run_state_oracle(list(ts), running, 600, 900)
-
-    got = {}
-    rng = np.random.default_rng(4)
-    for lo in range(0, 120, 30):  # 4 micro-batches, shuffled internally
-        rows = list(range(lo, min(lo + 30, 120)))
-        rng.shuffle(rows)
-        pdf = pd.DataFrame({
-            "k": ["E1"] * len(rows),
-            "ts_ms": [ts_ms[i] for i in rows],
-            "running": [running[i] for i in rows],
-        })
-        for out in proc.handleInputRows(("E1",), iter([pdf]), _StubTimerValues(0)):
-            for t, lab in zip(out.ts_ms, out.run_state):
-                got[int(t)] = lab
-    assert [got[t] for t in ts_ms] == exp
-    # machine state persisted after the final batch (RUNNING steady)
-    assert handle.states["machine"].v[0] == "RUNNING"
-    proc.close()
