@@ -86,25 +86,6 @@ def hampel(
     ).drop("__med", "__dev", "__thr")
 
 
-def hampel_df(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    value_cols: list[str] | None = None,
-    window_size: int = 7,
-    n_sigmas: float = 3.0,
-) -> DataFrame:
-    """Hampel across selected columns of a wide frame (reference
-    hampel_filter_df, helpers.py:125-138)."""
-    value_cols = value_cols or [
-        c for c, t in df.dtypes
-        if c not in key_cols and c != ts_col and t in ("double", "float", "int", "bigint")
-    ]
-    for c in value_cols:
-        df = hampel(df, c, key_cols, ts_col, window_size, n_sigmas)
-    return df
-
-
 def lowess(
     df: DataFrame,
     value_col: str,
@@ -270,17 +251,6 @@ def lowess(
         *key_cols, *[F.asc_nulls_last(c) for c in order]
     )
     return sorted_df.mapInPandas(run, schema)
-
-
-def format_sensor_value(col: Column, decimals: int = 3) -> Column:
-    """E13: float -> string with fixed decimals, NaN/null -> the literal
-    "null" (reference kiln_data_producer.py:320-327, helpers.py:504-517)."""
-    bad = col.isNull() | F.isnan(col.cast("double"))
-    # round().cast(string) rather than format_number: the latter adds
-    # thousands separators the reference's str(round(v, 3)) doesn't
-    return F.when(bad, F.lit("null")).otherwise(
-        F.round(col.cast("double"), decimals).cast("string")
-    )
 
 
 def pivot_wide(

@@ -519,7 +519,8 @@ class NearDupEpochs:
     Filesystem layout under ``root_dir`` (any Hadoop-compatible path —
     object storage at scale): ``claims/`` (append-only parquet of
     (band_idx, band, epoch) snapshots), ``verdicts/<epoch>/`` (each
-    epoch's verdict sink), ``ckpt/<epoch>/`` (each epoch's streaming
+    epoch's exactly-once verdict sink, ``batch_id=N/`` directories plus
+    its ledger), ``ckpt/<epoch>/`` (each epoch's streaming
     checkpoint — fresh per epoch BY DESIGN: cross-epoch memory travels
     through the claims table, not the state store, which is exactly the
     compaction). Restart-safe the same way the exactly-once sink is:
@@ -559,6 +560,11 @@ class NearDupEpochs:
         self.bander = bander  # see near_dup_band_verdicts_stream
         self.last_state_rows: list[int] | None = None
 
+    def _verdicts_sink(self, name: str):
+        from .sink import ExactlyOnceParquetSink
+
+        return ExactlyOnceParquetSink(f"{self.root}/verdicts/{name}")
+
     def _claims_dir(self) -> str:
         return f"{self.root}/claims"
 
@@ -575,29 +581,23 @@ class NearDupEpochs:
 
     def run_epoch(self, stream: DataFrame, name: str, timeout_s: int = 300) -> DataFrame:
         """Run one epoch: stream -> band verdicts (with all prior
-        claims pre-marked) -> parquet sink; then snapshot this epoch's
+        claims pre-marked) -> exactly-once sink; then snapshot this epoch's
         newly claimed bands into the claims ledger. Returns the epoch's
         verdict DataFrame. ``last_state_rows`` records the state-store
         row counts per micro-batch (observability: the bound that
         compaction promises)."""
         import json
 
-        sink = f"{self.root}/verdicts/{name}"
-        ckpt = f"{self.root}/ckpt/{name}"
+        from .streaming import start_exactly_once
+
         verdicts = near_dup_band_verdicts_stream(
             stream, self.id_col, self.text_col, self.ts_col,
             watermark=self.watermark, n_hashes=self.n_hashes,
             n_bands=self.n_bands, k=self.k, claims=self.claims(),
             bander=self.bander,
         )
-        q = (
-            verdicts.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        sink = self._verdicts_sink(name)
+        q = start_exactly_once(verdicts, sink, f"{self.root}/ckpt/{name}")
         if not q.awaitTermination(timeout_s):
             q.stop()
             raise TimeoutError(f"near-dup epoch {name!r} did not finish")
@@ -606,7 +606,7 @@ class NearDupEpochs:
             for p in (json.loads(pp.json) for pp in q.recentProgress)
             if p.get("stateOperators")
         ]
-        out = self.spark.read.parquet(sink)
+        out = sink.read(self.spark)
         (
             claims_from_verdicts(out)
             .withColumn("epoch", F.lit(name))
@@ -617,7 +617,7 @@ class NearDupEpochs:
 
     def survivors(self, name: str) -> DataFrame:
         """Per-doc survival for one finished epoch."""
-        verdicts = self.spark.read.parquet(f"{self.root}/verdicts/{name}")
+        verdicts = self._verdicts_sink(name).read(self.spark)
         return collapse_band_verdicts(verdicts, self.id_col, self.n_bands)
 
 

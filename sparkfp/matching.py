@@ -87,21 +87,7 @@ def match(
     votes = joined.groupBy("clip_id", "track_id", "offset_bin").agg(
         F.count("*").alias("vote_count")
     )
-    w = Window.partitionBy("clip_id").orderBy(
-        F.desc("vote_count"), F.asc("track_id"), F.asc("offset_bin")
-    )
-    best = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .filter(F.col("vote_count") >= min_votes)
-        .select(
-            "clip_id",
-            F.col("track_id").alias("matched_track"),
-            (F.col("offset_bin") * bin_ms).alias("offset_ms"),
-            "vote_count",
-        )
-    )
+    best = _best_per_clip(votes, bin_ms, min_votes)
     if clip_meta is None:
         return best
     meta = clip_meta.select("clip_id", "dur_ms")
@@ -110,6 +96,26 @@ def match(
         .withColumn("score", F.col("vote_count") / (F.col("dur_ms") / 1000.0))
         .drop("dur_ms")
         .filter(F.col("score") >= min_score)
+    )
+
+
+def _best_per_clip(votes: DataFrame, bin_ms: int, min_votes: int) -> DataFrame:
+    """(clip_id, track_id, offset_bin, vote_count) -> one row per clip:
+    the most-voted (track, offset bin), ties to the lower track then
+    the lower bin, kept when it has ``min_votes``. Output is
+    (clip_id, matched_track, offset_ms, vote_count)."""
+    w = Window.partitionBy("clip_id").orderBy(
+        F.desc("vote_count"), F.asc("track_id"), F.asc("offset_bin")
+    )
+    return (
+        votes.withColumn("rn", F.row_number().over(w))
+        .filter((F.col("rn") == 1) & (F.col("vote_count") >= min_votes))
+        .select(
+            "clip_id",
+            F.col("track_id").alias("matched_track"),
+            (F.col("offset_bin") * bin_ms).alias("offset_ms"),
+            "vote_count",
+        )
     )
 
 

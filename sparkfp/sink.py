@@ -27,6 +27,14 @@ import os
 from pyspark.sql import DataFrame
 
 
+def _run_replayed(batch_df: DataFrame) -> None:
+    """A replayed batch is already in the table, but its plan must still
+    run: Spark rejects a batch whose stateful operators did not commit
+    their state stores (STATE_STORE_COMMIT_VALIDATION_FAILED), and only
+    running the plan commits them. The noop sink runs it, writes nothing."""
+    batch_df.write.format("noop").mode("overwrite").save()
+
+
 class ExactlyOnceParquetSink:
     """foreachBatch target: parquet table + committed-batch ledger."""
 
@@ -44,6 +52,7 @@ class ExactlyOnceParquetSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
             # replay after restart — batch already fully committed
+            _run_replayed(batch_df)
             return
         out = os.path.join(self.table_path, f"batch_id={batch_id}")
         # overwrite: a partially-written batch dir from a crash is
@@ -133,7 +142,9 @@ class ExactlyOnceIcebergSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
-            return  # replay after restart — snapshot already carries it
+            # replay after restart — snapshot already carries it
+            _run_replayed(batch_df)
+            return
         (
             batch_df.writeTo(self.table)
             .option(f"snapshot-property.{self.PROP}", str(batch_id))

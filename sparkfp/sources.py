@@ -54,49 +54,6 @@ def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return r.json(path)
 
 
-def kafka_clip_source(
-    spark: SparkSession,
-    bootstrap: str,
-    topic: str,
-    starting_offsets: str = "latest",
-):
-    """S1: Kafka clip stream (value = JSON clip row). Requires the
-    spark-sql-kafka connector jar on the classpath (not bundled in this
-    sandbox — the parquet-dir stream in sparkfp.streaming carries the
-    same micro-batch semantics). Reference starts at latest offsets
-    (src/flink_job/kafka_config.py:29)."""
-    from pyspark.sql import functions as F
-
-    from . import schema
-
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return raw.select(
-        F.from_json(F.col("value").cast("string"), schema.CLIP).alias("c")
-    ).select("c.*")
-
-
-def kafka_json_sink(df: DataFrame, bootstrap: str, topic: str, checkpoint: str):
-    """S2: JSON rows -> Kafka (connector jar required; the exactly-once
-    parquet/Iceberg sink in sparkfp.sink is the default here)."""
-    from pyspark.sql import functions as F
-
-    payload = df.select(
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value")
-    )
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
-
-
 def load_metadata_dim(spark: SparkSession, path: str, sheet: str | None = None) -> DataFrame:
     """Small metadata mapping -> broadcast-ready dim DataFrame.
 

@@ -18,10 +18,12 @@ ExactlyOnceParquetSink` (idempotent by batch_id).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from . import dsp, fingerprint, matching, schema
 from .sink import ExactlyOnceParquetSink
@@ -64,24 +66,52 @@ def write_stream_source(
         lo = hi
 
 
-def read_clip_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+def read_parquet_stream(
+    spark: SparkSession,
+    path: str,
+    schema: StructType | str,
+    max_files_per_trigger: int = 1,
 ) -> DataFrame:
+    """The one stream source: a parquet directory replayed oldest file
+    first, ``max_files_per_trigger`` files per micro-batch."""
     return (
-        spark.readStream.schema(schema.CLIP)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
     )
+
+
+def read_clip_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    return read_parquet_stream(spark, path, schema.CLIP, max_files_per_trigger)
 
 
 def read_sensor_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.schema(schema.SENSOR_EVENT)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
+    return read_parquet_stream(spark, path, schema.SENSOR_EVENT, max_files_per_trigger)
+
+
+def start_exactly_once(
+    df: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """The one stream start: append-mode ``foreachBatch(sink)`` with
+    checkpointed source offsets. Exactly-once needs both halves: Spark
+    replays an uncommitted batch under the same ``batch_id``, and the
+    sink (an :class:`ExactlyOnceParquetSink`, or a callable that ends in
+    one) skips ids already in its ledger. ``available_now`` drains what
+    is there and stops; False keeps Spark's default trigger (a new batch
+    as soon as the previous one finishes)."""
+    writer = df.writeStream.foreachBatch(sink).outputMode("append").option(
+        "checkpointLocation", checkpoint_dir
     )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 # ------------------------------------------------------------- jobs
@@ -101,12 +131,7 @@ def fingerprint_stream(
     on-watermark firing for the same input + watermark (SURVEY §7.5.5).
     """
     fps = fingerprint.pipeline(events, watermark=watermark)
-    writer = fps.writeStream.foreachBatch(sink).outputMode("append").option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_exactly_once(fps, sink, checkpoint_dir, available_now)
 
 
 def match_stream(
@@ -127,6 +152,12 @@ def match_stream(
     — the streaming analog of the reference's "emit once per streak"
     rising-edge state (process_odr.py:1131-1145): one final match row
     per clip session, emitted on window close (append mode).
+
+    The vote runs over every row that shares a ``clip_id`` within the
+    gap. Each row's landmark times come from that row's own bytes and
+    no chunk start offset is applied, so rows that are chunks of one
+    longer clip vote at offset bins shifted by each chunk's start: the
+    session vote is not the whole-clip vote for chunked input.
     """
     lm = dsp.landmarks(clips).withColumn(
         "event_time", F.timestamp_millis(F.col("event_ms"))
@@ -144,30 +175,10 @@ def match_stream(
     ).agg(F.count("*").alias("vote_count"))
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("clip_id").orderBy(
-            F.desc("vote_count"), F.asc("track_id"), F.asc("offset_bin")
-        )
-        best = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .filter(F.col("vote_count") >= min_votes)
-            .select(
-                "clip_id",
-                F.col("track_id").alias("matched_track"),
-                (F.col("offset_bin") * matching.OFFSET_BIN_MS).alias("offset_ms"),
-                "vote_count",
-            )
-        )
+        best = matching._best_per_clip(batch_df, matching.OFFSET_BIN_MS, min_votes)
         sink(best, batch_id)
 
-    writer = votes.writeStream.foreachBatch(emit).outputMode("append").option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_exactly_once(votes, emit, checkpoint_dir, available_now)
 
 
 def match_stream_fused(
@@ -185,15 +196,11 @@ def match_stream_fused(
     A clip is one input row, so its landmarks never span micro-batches
     — per-clip matching is complete within the batch and needs no
     cross-batch state. Exactly-once still holds (checkpointed offsets
-    + idempotent sink). Use `match_stream` (session windows + stateful
-    vote aggregation) when clip audio arrives in multiple chunks.
+    + idempotent sink). `match_stream` instead pools the votes of all
+    rows sharing a ``clip_id`` within its session gap; neither matcher
+    applies chunk start offsets.
     """
     matches = matching.match_clips_fused(
         clips, index, min_votes=min_votes, min_score=min_score
     )
-    writer = matches.writeStream.foreachBatch(sink).outputMode("append").option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_exactly_once(matches, sink, checkpoint_dir, available_now)

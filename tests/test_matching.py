@@ -9,7 +9,8 @@ seed instead of wall-clock capture.
 import numpy as np
 import pytest
 
-from sparkfp import codec, dsp, matching, synth
+from sparkfp import codec, dsp, matching, streaming, synth
+from sparkfp.sink import ExactlyOnceParquetSink
 
 N_TRACKS = 5
 N_CLIPS = 30
@@ -88,9 +89,6 @@ def test_fused_matcher_equals_relational(spark, clips, index):
 
 
 def test_fused_stream_equals_batch(spark, clips, index, tmp_path):
-    from sparkfp import streaming
-    from sparkfp.sink import ExactlyOnceParquetSink
-
     src = str(tmp_path / "src")
     streaming.write_stream_source(clips, src, n_files=4)
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
@@ -337,7 +335,6 @@ def test_near_dup_clips_batch_and_stream_agree(spark, tmp_path):
     import time
 
     from sparkfp import dedup, schema
-    from sparkfp.sink import ExactlyOnceParquetSink
 
     h = 3600 * 1000
     base = 1_700_000_000_000
@@ -392,24 +389,14 @@ def test_near_dup_clips_batch_and_stream_agree(spark, tmp_path):
             [rows_by_id[c] for c in group], schema.CLIP
         ).coalesce(1).write.mode("append").parquet(src)
         time.sleep(0.05)
-    stream = (
-        spark.readStream.schema(schema.CLIP)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = streaming.read_clip_stream(spark, src)
     verdicts = matching.near_dup_clips_stream(stream, watermark="20 hours")
     sink = ExactlyOnceParquetSink(sink_dir)
 
     def emit(batch_df, batch_id):
         sink(dedup.collapse_band_verdicts(batch_df, "clip_id"), batch_id)
 
-    q = (
-        verdicts.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(verdicts, emit, ckpt)
     assert q.awaitTermination(300)
     got_stream = {
         r.clip_id for r in sink.read(spark).collect() if r.clip_id != flush_id
@@ -453,11 +440,7 @@ def test_near_dup_clips_epochs_cross_epoch_claims(spark, tmp_path):
             spark.createDataFrame([row], schema.CLIP).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
-        return (
-            spark.readStream.schema(schema.CLIP)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        return streaming.read_clip_stream(spark, src)
 
     v1 = epochs.run_epoch(
         feed("e1", [

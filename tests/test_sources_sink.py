@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sparkfp import joins, sources
+from sparkfp import joins, sources, streaming
 from sparkfp.sink import ExactlyOnceParquetSink
 
 
@@ -58,8 +58,6 @@ def test_exactly_once_sink_skips_committed_batch(spark, tmp_path):
 def test_stream_stream_interval_join(spark, tmp_path):
     """J1 streaming: readings joined to fingerprint windows with
     watermark-bounded state (save_fingerprints.py:66-153 analog)."""
-    from sparkfp import streaming
-
     base = 1_700_000_000_000
     readings = [("E", base + i * 10_000) for i in range(60)]  # 10 min of data
     windows = [
@@ -71,16 +69,13 @@ def test_stream_stream_interval_join(spark, tmp_path):
     streaming.write_stream_source(rdf, rdir, n_files=3, order_col="ts_ms")
     streaming.write_stream_source(wdf, wdir, n_files=2, order_col="end_ms")
 
-    r = (
-        spark.readStream.schema("equip string, ts_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(rdir)
-        .withColumn("ts", F.timestamp_millis("ts_ms"))
-    )
+    r = streaming.read_parquet_stream(
+        spark, rdir, "equip string, ts_ms long"
+    ).withColumn("ts", F.timestamp_millis("ts_ms"))
     w = (
-        spark.readStream.schema("equip string, start_ms long, end_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(wdir)
+        streaming.read_parquet_stream(
+            spark, wdir, "equip string, start_ms long, end_ms long"
+        )
         .withColumn("start_ts", F.timestamp_millis("start_ms"))
         .withColumn("end_ts", F.timestamp_millis("end_ms"))
     )
@@ -88,17 +83,10 @@ def test_stream_stream_interval_join(spark, tmp_path):
         r, w, "equip", "ts", "start_ts", "end_ts",
         facts_watermark="2 minutes", intervals_watermark="2 minutes",
     ).select(F.col("f.ts_ms").alias("ts_ms"), F.col("iv.start_ms").alias("start_ms"))
-    out_dir = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = ExactlyOnceParquetSink(str(tmp_path / "out"))
+    q = streaming.start_exactly_once(joined, sink, str(tmp_path / "ck"))
     q.awaitTermination(300)
-    got = {(r.ts_ms, r.start_ms) for r in spark.read.parquet(out_dir).collect()}
+    got = {(r.ts_ms, r.start_ms) for r in sink.read(spark).collect()}
     exp = {
         (ts, s)
         for _, ts in readings
@@ -266,11 +254,13 @@ def test_iceberg_sink_connector_gate(spark):
 def test_iceberg_sink_replay_protocol_with_stub_session():
     """Drive ExactlyOnceIcebergSink's replay protocol without the
     runtime jars (the connector gate above proves they're absent here):
-    stub the two session surfaces the sink touches — ``spark.sql``
-    over ``<table>.snapshots`` for the ledger lookup, and
-    ``batch_df.writeTo(...).option(...).append()`` for the commit — and
+    stub the three session surfaces the sink touches — ``spark.sql``
+    over ``<table>.snapshots`` for the ledger lookup,
+    ``batch_df.writeTo(...).option(...).append()`` for the commit, and
+    ``batch_df.write.format("noop")...save()`` for a replay — and
     assert batch-id idempotence end-to-end: a replayed batch_id appends
-    nothing, a new batch_id appends exactly once and stamps the
+    nothing but still runs its plan (so a stateful query's state
+    stores commit), a new batch_id appends exactly once and stamps the
     ``sparkfp.batch_id`` snapshot property the lookup keys on. The
     real-runtime twin below runs the same contract wherever the jars
     exist."""
@@ -316,12 +306,31 @@ def test_iceberg_sink_replay_protocol_with_stub_session():
             # Iceberg semantics: data + summary props in ONE snapshot
             self._snaps.rows.append(dict(self._props, rows=self._payload))
 
+    class _NoopWriter:
+        def __init__(self, ran):
+            self._ran = ran
+
+        def format(self, source):
+            assert source == "noop"
+            return self
+
+        def mode(self, _):
+            return self
+
+        def save(self):
+            self._ran.append(True)
+
     class _StubBatchDF:
         def __init__(self, snaps, payload):
             self._snaps, self._payload = snaps, payload
+            self.plan_runs = []
 
         def writeTo(self, table):
             return _Writer(self._snaps, self._payload, table)
+
+        @property
+        def write(self):
+            return _NoopWriter(self.plan_runs)
 
     snaps = _Snapshots()
     sink = object.__new__(ExactlyOnceIcebergSink)  # bypass the jar gate only
@@ -330,8 +339,10 @@ def test_iceberg_sink_replay_protocol_with_stub_session():
 
     sink(_StubBatchDF(snaps, [1]), 0)
     assert sink.is_committed(0) and not sink.is_committed(1)
-    sink(_StubBatchDF(snaps, [999]), 0)  # restart replay: must be a no-op
+    replay = _StubBatchDF(snaps, [999])
+    sink(replay, 0)  # restart replay: appends nothing, still runs the plan
     assert [s["rows"] for s in snaps.rows] == [[1]]
+    assert replay.plan_runs == [True]
     assert snaps.rows[0][ExactlyOnceIcebergSink.PROP] == "0"
     sink(_StubBatchDF(snaps, [2]), 1)
     assert [s["rows"] for s in snaps.rows] == [[1], [2]]

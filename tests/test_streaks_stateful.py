@@ -10,7 +10,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sparkfp import stateful, streaks
+from sparkfp import stateful, streaks, streaming
+from sparkfp.sink import ExactlyOnceParquetSink
 
 
 def _streak_oracle(ts_list, flags, duration_s, step_s=60.0):
@@ -129,8 +130,6 @@ def test_run_state_batch_matches_oracle(spark, run_frame):
 
 def test_run_state_stream_matches_batch(spark, run_frame, tmp_path):
     df, pdf = run_frame
-    from sparkfp import streaming
-    from sparkfp.sink import ExactlyOnceParquetSink
 
     src_dir, sink_dir, ckpt = (
         str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
@@ -138,23 +137,15 @@ def test_run_state_stream_matches_batch(spark, run_frame, tmp_path):
     streaming.write_stream_source(
         df.select("k", "ts_ms", "running"), src_dir, n_files=4, order_col="ts_ms"
     )
-    src = (
-        spark.readStream.schema("k string, ts_ms long, running boolean")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    src = streaming.read_parquet_stream(
+        spark, src_dir, "k string, ts_ms long, running boolean"
     )
     labeled = stateful.run_state_stream(
         src, "k", "ts_ms", "running",
         shutdown_window_s=600, transition_window_s=900,
     )
     sink = ExactlyOnceParquetSink(sink_dir)
-    q = (
-        labeled.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(labeled, sink, ckpt)
     q.awaitTermination(300)
     got = sink.read(spark).orderBy("ts_ms").toPandas()
     exp = _run_state_oracle(list(pdf.timestamp), list(pdf.running), 600, 900)
@@ -195,9 +186,6 @@ def test_rate_limit_batch_equals_stream_equals_oracle(spark, tmp_path):
     """T8 per-key rate limiter: batch (applyInPandas chain) == streaming
     (keyed state) == the reference greedy chain (llm_job.py:57-70 in
     event time): emit iff >= min_interval since the last EMITTED row."""
-    from sparkfp import streaming
-    from sparkfp.sink import ExactlyOnceParquetSink
-
     ts = pd.date_range("2026-01-01", periods=50, freq="7min")
     pdf = pd.DataFrame({"k": ["E1"] * 30 + ["E2"] * 20, "timestamp": list(ts[:30]) + list(ts[:20])})
     pdf["ts_ms"] = pdf.timestamp.astype("int64") // 10**6
@@ -237,22 +225,12 @@ def test_rate_limit_batch_equals_stream_equals_oracle(spark, tmp_path):
         spark.createDataFrame([("ZZ_flush", flush_ms)], "k string, ts_ms long")
     )
     streaming.write_stream_source(with_sentinel, src, n_files=3, order_col="ts_ms")
-    stream = (
-        spark.readStream.schema("k string, ts_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = streaming.read_parquet_stream(spark, src, "k string, ts_ms long")
     limited = stateful.rate_limit_stream(
         stream, "k", "ts_ms", min_interval_s=1800
     )
     sink = ExactlyOnceParquetSink(sink_dir)
-    q = (
-        limited.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(limited, sink, ckpt)
     assert q.awaitTermination(300)
     got_stream = {
         (r.k, pd.Timestamp(r.ts_ms, unit="ms"))
@@ -271,8 +249,6 @@ def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path):
     event-time greedy emits {0, 45}."""
     import time as _time
 
-    from sparkfp.sink import ExactlyOnceParquetSink
-
     base = int(pd.Timestamp("2026-02-01").timestamp() * 1000)
     m = 60_000
     src, sink_dir, ckpt = (
@@ -288,22 +264,12 @@ def test_rate_limit_stream_out_of_order_across_batches(spark, tmp_path):
             "append"
         ).parquet(src)
         _time.sleep(0.05)  # distinct mtimes -> deterministic replay order
-    stream = (
-        spark.readStream.schema("k string, ts_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = streaming.read_parquet_stream(spark, src, "k string, ts_ms long")
     limited = stateful.rate_limit_stream(
         stream, "k", "ts_ms", min_interval_s=1800, watermark="3 hours"
     )
     sink = ExactlyOnceParquetSink(sink_dir)
-    q = (
-        limited.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(limited, sink, ckpt)
     assert q.awaitTermination(300)
     got = {r.ts_ms for r in sink.read(spark).collect() if r.k == "K"}
     assert got == {base + 0 * m, base + 45 * m}

@@ -11,9 +11,11 @@ are therefore two-sided:
   2. every window the final watermark closed is present.
 """
 
+import os
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from sparkfp import fingerprint, matching, metrics, streaming, synth
 from sparkfp.sink import ExactlyOnceParquetSink
@@ -81,8 +83,6 @@ def test_streaming_lineage_captured(spark, tmpdirs):
 def test_late_rows_dropped_by_watermark(spark, tmpdirs, tmp_path):
     """A row older than the watermark, arriving in a later micro-batch,
     must not alter an already-emitted window (Flink drop-late parity)."""
-    import os
-
     from sparkfp import schema
 
     base = START_MS - START_MS % 60_000  # window-aligned
@@ -92,13 +92,7 @@ def test_late_rows_dropped_by_watermark(spark, tmpdirs, tmp_path):
     sink = ExactlyOnceParquetSink(tmpdirs["sink"])
     src = streaming.read_sensor_stream(spark, tmpdirs["src"], max_files_per_trigger=2)
     fps = fingerprint.pipeline(src, watermark=fingerprint.WATERMARK)
-    q = (
-        fps.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", tmpdirs["ckpt"])
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+    q = streaming.start_exactly_once(fps, sink, tmpdirs["ckpt"], available_now=False)
     try:
         spark.createDataFrame(on_time, schema.SENSOR_EVENT).coalesce(1).write.mode(
             "append"
@@ -128,13 +122,7 @@ def test_exactly_once_resume_from_checkpoint(spark, tmpdirs):
 
     src = streaming.read_sensor_stream(spark, tmpdirs["src"])
     fps = fingerprint.pipeline(src, watermark=fingerprint.WATERMARK)
-    q1 = (
-        fps.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", tmpdirs["ckpt"])
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+    q1 = streaming.start_exactly_once(fps, sink, tmpdirs["ckpt"], available_now=False)
     while len(q1.recentProgress) < 2:
         time.sleep(0.2)
     q1.stop()  # kill mid-stream
@@ -203,7 +191,6 @@ def test_exact_dedup_stream_emits_one_row_per_content(spark, tmp_path):
 
     from pyspark.sql import functions as F
     from sparkfp import dedup
-    from sparkfp.sink import ExactlyOnceParquetSink
 
     rows = []
     for i in range(40):
@@ -214,21 +201,12 @@ def test_exact_dedup_stream_emits_one_row_per_content(spark, tmp_path):
         str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     )
     streaming.write_stream_source(df, src, n_files=4, order_col="ts_ms")
-    stream = (
-        spark.readStream.schema("doc_id long, ts_ms long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("event_time", F.timestamp_millis(F.col("ts_ms")))
-    )
+    stream = streaming.read_parquet_stream(
+        spark, src, "doc_id long, ts_ms long, text string"
+    ).withColumn("event_time", F.timestamp_millis(F.col("ts_ms")))
     deduped = dedup.exact_dedup_stream(stream, "event_time", "10 seconds", "text")
     sink = ExactlyOnceParquetSink(sink_dir)
-    q = (
-        deduped.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(deduped, sink, ckpt)
     assert q.awaitTermination(300)
     got = sink.read(spark).toPandas()
     assert sorted(got.text) == sorted(f"doc-{i}" for i in range(10))
@@ -323,10 +301,8 @@ def test_near_dup_suppress_stream_equals_batch_equals_oracle(spark, tmp_path):
             [rows_by_id[d] for d in group], "doc_id string, ts_ms long, text string"
         ).coalesce(1).write.mode("append").parquet(src)
         time.sleep(0.05)
-    stream = (
-        spark.readStream.schema("doc_id string, ts_ms long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = streaming.read_parquet_stream(
+        spark, src, "doc_id string, ts_ms long, text string"
     )
     verdicts = dedup.near_dup_band_verdicts_stream(
         stream, "doc_id", "text", "ts_ms", watermark="2 hours"
@@ -336,13 +312,7 @@ def test_near_dup_suppress_stream_equals_batch_equals_oracle(spark, tmp_path):
     def emit(batch_df, batch_id):
         sink(dedup.collapse_band_verdicts(batch_df, "doc_id"), batch_id)
 
-    q = (
-        verdicts.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(verdicts, emit, ckpt)
     assert q.awaitTermination(300)
     got_stream = {
         r.doc_id for r in sink.read(spark).collect() if r.doc_id != "zz_flush"
@@ -358,7 +328,6 @@ def test_hash_sample_stream_equals_batch(spark, tmp_path):
     import pandas as pd
 
     from sparkfp import sampling
-    from sparkfp.sink import ExactlyOnceParquetSink
 
     pdf = pd.DataFrame(
         {"doc_id": range(400), "ts_ms": [1_700_000_000_000 + i for i in range(400)]}
@@ -371,20 +340,10 @@ def test_hash_sample_stream_equals_batch(spark, tmp_path):
         str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     )
     streaming.write_stream_source(df, src, n_files=4, order_col="ts_ms")
-    stream = (
-        spark.readStream.schema("doc_id long, ts_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = streaming.read_parquet_stream(spark, src, "doc_id long, ts_ms long")
     sampled = sampling.hash_sample(stream, "doc_id", 0.25, seed=11)
     sink = ExactlyOnceParquetSink(sink_dir)
-    q = (
-        sampled.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(sampled, sink, ckpt)
     assert q.awaitTermination(300)
     got = sink.read(spark).toPandas()
     assert set(got.doc_id) == batch_ids and len(got) == len(batch_ids)
@@ -401,7 +360,6 @@ def test_hash_sample_rechunk_and_restart(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkfp import sampling
-    from sparkfp.sink import ExactlyOnceParquetSink
 
     pdf = pd.DataFrame(
         {"doc_id": range(400), "ts_ms": [1_700_000_000_000 + i for i in range(400)]}
@@ -412,19 +370,12 @@ def test_hash_sample_rechunk_and_restart(spark, tmp_path):
     }
 
     def drain(src, sink_dir, ckpt, fpt):
-        stream = (
-            spark.readStream.schema("doc_id long, ts_ms long")
-            .option("maxFilesPerTrigger", fpt)
-            .parquet(src)
+        stream = streaming.read_parquet_stream(
+            spark, src, "doc_id long, ts_ms long", fpt
         )
         sink = ExactlyOnceParquetSink(sink_dir)
-        q = (
-            sampling.hash_sample(stream, "doc_id", 0.25, seed=11)
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        q = streaming.start_exactly_once(
+            sampling.hash_sample(stream, "doc_id", 0.25, seed=11), sink, ckpt
         )
         assert q.awaitTermination(300)
         return sink
@@ -484,30 +435,22 @@ def test_near_dup_claims_compaction_bounds_state(spark, tmp_path):
             spark.createDataFrame(
                 [row], "doc_id string, ts_ms long, text string"
             ).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema("doc_id string, ts_ms long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        stream = streaming.read_parquet_stream(
+            spark, src, "doc_id string, ts_ms long, text string"
         )
         verdicts = dedup.near_dup_band_verdicts_stream(
             stream, "doc_id", "text", "ts_ms", watermark="2 hours",
             claims=claims,
         )
-        q = (
-            verdicts.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        sink = ExactlyOnceParquetSink(out)
+        q = streaming.start_exactly_once(verdicts, sink, ckpt)
         assert q.awaitTermination(300)
         state_rows = [
             p["stateOperators"][0]["numRowsTotal"]
             for p in (json.loads(pp.json) for pp in q.recentProgress)
             if p.get("stateOperators")
         ]
-        return spark.read.parquet(out), state_rows
+        return sink.read(spark), state_rows
 
     hour = 3_600_000
     flush1 = ("zz_flush1", base + 24 * hour, "flush sentinel epoch one xyz")
@@ -598,11 +541,7 @@ def test_near_dup_epochs_three_epoch_lifecycle(spark, tmp_path):
             spark.createDataFrame([row], schema).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = streaming.read_parquet_stream(spark, src, schema)
         prior_claims = ep.claims()
         ep.run_epoch(stream, name)
         surv[name] = {
@@ -636,3 +575,127 @@ def test_near_dup_epochs_three_epoch_lifecycle(spark, tmp_path):
         r.doc_id for r in batch.collect() if not r.doc_id.startswith("zf")
     }
     assert got_batch == surv["e1"] | surv["e2"] | surv["e3"]
+
+
+# ------------------------------------------ exactly-once under injected crashes
+
+CRASH_POINTS = ["inside_foreach_batch", "before_commit_log"]
+
+
+class _CrashBeforeMark:
+    """Sink wrapper: batch ``k``'s rows land in ``batch_id=k/`` but its
+    ledger mark is never written, then the call raises, once."""
+
+    def __init__(self, sink, k):
+        self.sink, self.k, self.fired = sink, k, False
+
+    def __call__(self, batch_df, batch_id):
+        if batch_id == self.k and not self.fired:
+            self.fired = True
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(self.sink.table_path, f"batch_id={batch_id}")
+            )
+            raise RuntimeError("injected crash before the ledger mark")
+        self.sink(batch_df, batch_id)
+
+
+def _batch_ids(path, suffix=""):
+    """Batch ids named by the files in ``path`` (``<n><suffix>``)."""
+    names = [f[: len(f) - len(suffix)] for f in os.listdir(path) if f.endswith(suffix)]
+    return sorted(int(n) for n in names if n.isdigit())
+
+
+def _mtimes(path):
+    return {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in os.listdir(path)}
+
+
+def _drain_through_crash(start, sink, ckpt, crash, k=2):
+    """Run ``start(sink_fn) -> StreamingQuery`` to the end through one
+    injected crash, restarting from the same checkpoint.
+
+    inside_foreach_batch: batch k's data is written but not marked when
+    the query dies; the restart re-runs batch k under the same id and
+    the sink overwrites the orphan. before_commit_log: after a clean
+    drain the last ``commits/<n>`` entry is deleted, as if the process
+    died between the ledger mark and Spark's commit; the restart re-runs
+    batch n and the sink must skip it without touching its files."""
+    commits = os.path.join(ckpt, "commits")
+    if crash == "inside_foreach_batch":
+        q = start(_CrashBeforeMark(sink, k))
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination(300)
+        assert not sink.is_committed(k)
+        assert os.path.isdir(os.path.join(sink.table_path, f"batch_id={k}"))
+        assert k not in _batch_ids(commits)
+        assert start(sink).awaitTermination(300)
+    else:
+        assert start(sink).awaitTermination(300)
+        n = _batch_ids(commits)[-1]
+        for f in (str(n), f".{n}.crc"):
+            if os.path.exists(os.path.join(commits, f)):
+                os.remove(os.path.join(commits, f))
+        out = os.path.join(sink.table_path, f"batch_id={n}")
+        before = _mtimes(out)
+        assert start(sink).awaitTermination(300)
+        assert n in _batch_ids(commits), "the restart did not re-run the batch"
+        assert _mtimes(out) == before, "the sink rewrote a committed batch"
+    # one ledger mark per batch Spark committed, no orphan batch dirs
+    ledger = _batch_ids(sink.ledger_dir, ".done")
+    assert ledger == _batch_ids(commits)
+    assert sorted(os.listdir(sink.ledger_dir)) == sorted(f"{b}.done" for b in ledger)
+    tables = [
+        int(f.split("=")[1])
+        for f in os.listdir(sink.table_path)
+        if f.startswith("batch_id=")
+    ]
+    assert sorted(tables) == ledger
+
+
+@pytest.mark.parametrize("crash", CRASH_POINTS)
+def test_fingerprint_stream_exactly_once_under_crash(spark, tmpdirs, crash):
+    """fingerprint_stream into the exactly-once sink survives a crash at
+    either side of the ledger mark: after the restart the sink holds
+    each closed window of the batch pipeline exactly once."""
+    n_seconds = 240
+    events = synth.sensor_events(spark, n_seconds=n_seconds, start_ms=START_MS)
+    streaming.write_stream_source(events, tmpdirs["src"], n_files=6)
+    sink = ExactlyOnceParquetSink(tmpdirs["sink"])
+
+    def start(sink_fn):
+        src = streaming.read_sensor_stream(spark, tmpdirs["src"])
+        return streaming.fingerprint_stream(src, sink_fn, tmpdirs["ckpt"])
+
+    _drain_through_crash(start, sink, tmpdirs["ckpt"], crash)
+    got = sink.read(spark).collect()
+    exp = {
+        (r.equip_id, r.start_ms): r.data
+        for r in fingerprint.pipeline(spark.read.parquet(tmpdirs["src"])).collect()
+    }
+    final_watermark = START_MS + (n_seconds - 1) * 1000 - 10_000
+    _assert_stream_vs_batch(got, exp, final_watermark)
+
+
+@pytest.mark.parametrize("crash", CRASH_POINTS)
+def test_match_stream_fused_exactly_once_under_crash(spark, tmpdirs, crash):
+    """match_stream_fused into the exactly-once sink survives a crash at
+    either side of the ledger mark: after the restart the sink holds
+    the batch matcher's rows, one per clip."""
+    index = matching.build_index(synth.tracks(spark, n_tracks=4)).cache()
+    clips = synth.clips(spark, n_clips=16, n_tracks=4).cache()
+    streaming.write_stream_source(clips, tmpdirs["src"], n_files=4)
+    sink = ExactlyOnceParquetSink(tmpdirs["sink"])
+
+    def start(sink_fn):
+        src = streaming.read_clip_stream(spark, tmpdirs["src"])
+        return streaming.match_stream_fused(src, index, sink_fn, tmpdirs["ckpt"])
+
+    _drain_through_crash(start, sink, tmpdirs["ckpt"], crash)
+    rows = sink.read(spark).collect()
+    ids = [r.clip_id for r in rows]
+    assert len(ids) == len(set(ids)), "a clip was emitted twice"
+    got = {r.clip_id: (r.matched_track, r.offset_ms, r.vote_count) for r in rows}
+    exp = {
+        r.clip_id: (r.matched_track, r.offset_ms, r.vote_count)
+        for r in matching.match_pipeline(clips, index).collect()
+    }
+    assert got == exp and got

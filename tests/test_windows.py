@@ -7,7 +7,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sparkfp import windows
+from sparkfp import streaming, windows
+from sparkfp.sink import ExactlyOnceParquetSink
 
 
 @pytest.fixture(scope="module")
@@ -51,29 +52,18 @@ def test_salted_count_partials_are_split(spark, skewed):
 
 
 def test_salted_count_streaming_equals_batch(spark, skewed, tmp_path):
-    from sparkfp import streaming
-    from sparkfp.sink import ExactlyOnceParquetSink
-
     src = str(tmp_path / "src")
     df = skewed.withColumn("ts_ms", F.unix_millis("ts"))
     streaming.write_stream_source(df, src, n_files=4, order_col="ts_ms")
-    stream = (
-        spark.readStream.schema("id long, k string, ts timestamp, ts_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = streaming.read_parquet_stream(
+        spark, src, "id long, k string, ts timestamp, ts_ms long"
     )
     out = windows.salted_windowed_count(
         stream, "k", "ts", "10 minutes",
         salt_buckets=8, salt_source="id", watermark="30 seconds",
     ).select(F.col("win.start").alias("ws"), "k", "n")
     sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = streaming.start_exactly_once(out, sink, str(tmp_path / "ck"))
     q.awaitTermination(300)
     got = {(r.ws, r.k): r.n for r in sink.read(spark).collect()}
     exp = {
