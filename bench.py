@@ -25,6 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from perfbench.instrument import noise_probe  # noqa: E402
 from sparkfp.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -61,9 +62,14 @@ HEADLINE = [
 # overhead, not engine throughput. 8192 matches the scaling runner's
 # corpus (bench/run_scaling.py), so clips_per_sec is comparable to its
 # legs.
-N_BENCH_CLIPS = int(os.environ.get("SPARKFP_BENCH_CLIPS", "8192"))
-N_BENCH_FILES = int(os.environ.get("SPARKFP_BENCH_FILES", "16"))
-N_FILES_PER_TRIGGER = int(os.environ.get("SPARKFP_BENCH_FPT", "8"))
+N_BENCH_CLIPS = 8192
+N_BENCH_FILES = 16
+N_FILES_PER_TRIGGER = 8
+# min-of-N per query: single-shot timings on a shared host swing with
+# CPU contention. The MIN over N back-to-back runs is the
+# least-disturbed observation and the right cross-round comparator;
+# the spread records window dirt.
+BENCH_REPS = 3
 
 
 def _run_query(spark, fn) -> float:
@@ -115,14 +121,10 @@ def _audio_throughput(spark) -> tuple[float, float]:
 
 
 def main() -> None:
-    # Spark-free ambient probe BEFORE the session: CPU contention on a
+    # Spark-free noise probe BEFORE the session: CPU contention on a
     # shared host varies over time, so cross-round BENCH comparisons
-    # need the window quality recorded next to the numbers (see
-    # bench/run_scaling.py).
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench"))
-    from run_scaling import ambient_probe
-
-    probe = ambient_probe()
+    # need the window quality recorded next to the numbers
+    probe = noise_probe()
     spark = get_spark("sparkfp-bench")
     queries = entrymod.queries()
     # untimed warmup: the first query otherwise pays ~5 s of one-time
@@ -136,16 +138,11 @@ def main() -> None:
     for t in ("events", "lineitem", "documents", "orders", "part", "embeddings"):
         spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
     queries["fingerprint_stats"](spark, SF_DIR).count()
-    # min-of-N per query: single-shot timings on a shared host swing
-    # with CPU contention. The MIN over N back-to-back runs is the
-    # least-disturbed observation and the right cross-round comparator;
-    # the spread records window dirt.
-    n_reps = int(os.environ.get("SPARKFP_BENCH_REPS", "3"))
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for name in HEADLINE:
         try:
-            reps = [_run_query(spark, queries[name]) for _ in range(n_reps)]
+            reps = [_run_query(spark, queries[name]) for _ in range(BENCH_REPS)]
             timings[name] = round(min(reps), 3)
             spreads[name] = round(max(reps) - min(reps), 3)
         except Exception as e:  # a failed query shows as -1, not a crash
@@ -168,7 +165,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "queries_spread": spreads,
-                "bench_reps": n_reps,
+                "bench_reps": BENCH_REPS,
                 "sf": SF_DIR,
                 "clips_per_sec": round(clips_per_sec, 2),
                 "n_bench_clips": N_BENCH_CLIPS,

@@ -6,8 +6,11 @@ and pinned with ``taskset`` to exactly its core count.
 N = nproc // 4 and 4N = 4 * N, so the 4N leg fits the machine; below 4
 CPUs a 4N leg cannot be pinned and the runner exits with an error.
 Each leg drains ``CLIPS`` clips (bench.py's corpus) through
-``streaming.match_stream_fused``, N leg first. The result is one JSON
-line, printed and appended to BENCH/scaling_runs.jsonl.
+``streaming.match_stream_fused``, N leg first. Each leg records
+perfbench's noise probe (sized to nproc) taken just before it as
+``ambient_probe`` and the host's steal over the leg as ``steal_pct``.
+The result is one JSON line, printed and appended to
+BENCH/scaling_runs.jsonl.
 
 Usage: python bench/run_scaling.py
 """
@@ -24,70 +27,8 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CLIPS = 8192
 
-# A pinned 8-proc burn at <= this multiple of the 1-proc time marks a
-# wide-parallelism-clean window. The ratio alone is not sufficient:
-# uniformly slow windows also exist, where even the 1-proc burn runs
-# well over its nominal time, so clean also requires the absolute
-# 1-proc time near nominal.
-CLEAN_PROBE_RATIO = 1.6
-NOMINAL_1P_S = 0.95  # calibrated idle-window 1-proc burn
-CLEAN_1P_SLOWDOWN = 1.25
-
-
-def _fft_burn(n_iter: int = 1000) -> None:
-    # ~1 s at 1 proc: long enough that the ~0.1 s process-spawn cost
-    # doesn't distort the 8-proc ratio
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    x = rng.standard_normal(1 << 16)
-    for _ in range(n_iter):
-        np.fft.rfft(x)
-
-
-def ambient_probe() -> dict:
-    """Spark-free CPU-contention probe, run immediately before each
-    leg: identical FFT work at 1 proc and 8 procs. On dedicated
-    hardware with >= 8 cores the 8-proc wall time ~= the 1-proc time;
-    under contention wide parallelism runs many times slower.
-    Recording it next to the leg lets a reader flag degraded-window
-    pairs mechanically instead of narratively."""
-    import multiprocessing as mp
-    import time
-
-    _fft_burn(100)  # numpy/page-cache warmup, untimed
-    # min-of-3: a single 1p burn is noisy (core placement / frequency
-    # scaling); the MINIMUM is the right statistic for a speed-limit
-    # probe.
-    one = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _fft_burn()
-        one = min(one, time.perf_counter() - t0)
-    eights = []
-    for _ in range(2):
-        procs = [mp.Process(target=_fft_burn) for _ in range(8)]
-        t2 = time.perf_counter()
-        for p in procs:
-            p.start()
-        for p in procs:
-            p.join()
-        eights.append(time.perf_counter() - t2)
-    eight = min(eights)
-    return {
-        "probe_1p_s": round(one, 3),
-        "probe_8p_s": round(eight, 3),
-        "probe_ratio": round(eight / one, 2),
-        "probe_8p_spread": round(max(eights) / eight, 2),
-        "slowdown_1p": round(one / NOMINAL_1P_S, 2),
-        # a heuristic correlate of window quality, not a classifier:
-        # efficiency is a ratio, so uniformly slow windows can still
-        # yield valid pairs
-        "clean_window": (
-            eight / one <= CLEAN_PROBE_RATIO
-            and one <= CLEAN_1P_SLOWDOWN * NOMINAL_1P_S
-        ),
-    }
+sys.path.insert(0, REPO)
+from perfbench.instrument import noise_probe, steal_jiffies, steal_share  # noqa: E402
 
 
 def zip_engine(out_path: str) -> None:
@@ -100,19 +41,6 @@ def zip_engine(out_path: str) -> None:
                     z.write(full, os.path.relpath(full, REPO))
 
 
-def _proc_stat_snapshot() -> tuple[int, int] | None:
-    """(steal jiffies, total jiffies) from the aggregate cpu line."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-    except OSError:
-        return None
-    if parts[:1] != ["cpu"] or len(parts) < 9:
-        return None
-    vals = [int(v) for v in parts[1:]]
-    return vals[7], sum(vals)
-
-
 def run_leg(cpus: list[int], zip_path: str) -> dict:
     """One leg at local[len(cpus)], its whole process tree (JVM +
     Python workers) pinned to ``cpus``: local[N] limits task slots but
@@ -121,7 +49,7 @@ def run_leg(cpus: list[int], zip_path: str) -> dict:
     import pyspark
 
     cores = len(cpus)
-    probe = ambient_probe()
+    probe = noise_probe()
     submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
     cmd = [
         "taskset", "-c", ",".join(map(str, cpus)),
@@ -138,27 +66,24 @@ def run_leg(cpus: list[int], zip_path: str) -> dict:
     env.pop("PYSPARK_GATEWAY_PORT", None)
     # CPU-seconds of the reaped spark-submit tree (work conservation:
     # flat cpu_s/clip across legs means the engine adds no parallel
-    # overhead) and /proc/stat steal over the leg
+    # overhead) and the host's steal over the leg
     ru0 = resource.getrusage(resource.RUSAGE_CHILDREN)
-    st0 = _proc_stat_snapshot()
+    st0 = steal_jiffies()
     out = subprocess.run(
         cmd, capture_output=True, text=True, timeout=1800, env=env, cwd=REPO
     )
     ru1 = resource.getrusage(resource.RUSAGE_CHILDREN)
-    st1 = _proc_stat_snapshot()
+    st1 = steal_jiffies()
     cpu_s = (ru1.ru_utime - ru0.ru_utime) + (ru1.ru_stime - ru0.ru_stime)
     for line in out.stdout.splitlines():
         line = line.strip()
         if line.startswith("{") and "clips_per_sec" in line:
             r = json.loads(line)
-            steal = None
-            if st0 and st1:
-                steal = round(100.0 * (st1[0] - st0[0]) / max(st1[1] - st0[1], 1), 2)
             return {
                 "clips_per_s": r["clips_per_sec"],
                 "steady_clips_per_s": r["steady_clips_per_sec"],
                 "cpu_s_per_clip": round(cpu_s / CLIPS, 4),
-                "steal_pct": steal,
+                "steal_pct": round(100.0 * steal_share(st0, st1), 2),
                 "ambient_probe": probe,
             }
     sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:] + "\n")

@@ -6,8 +6,6 @@ NOT part of the frozen bench.py contract — measurement tooling only.
 
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [q ...]
-  SPARKFP_BENCH_REPS=3  reps per query (default 3)
-  SPARKFP_NOOP=0        skip the noop pass (count only)
 """
 
 from __future__ import annotations
@@ -23,12 +21,11 @@ import __spark_entry__ as entrymod  # noqa: E402
 from sparkfp.session import default_parallelism, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+REPS = 3  # per query and pass
 
 
 def main() -> None:
     names = sys.argv[1:]
-    reps = int(os.environ.get("SPARKFP_BENCH_REPS", "3"))
-    do_noop = os.environ.get("SPARKFP_NOOP", "1") != "0"
     cores = default_parallelism()
     spark = get_spark("sparkfp-bench-extra", cores=cores)
     qs = entrymod.queries()
@@ -43,22 +40,21 @@ def main() -> None:
         fn = qs[name]
         row: dict = {}
         counts = []
-        for _ in range(reps):
+        for _ in range(REPS):
             t0 = time.time()
             fn(spark, SF_DIR).count()
             counts.append(time.time() - t0)
         row["count_min"] = round(min(counts), 3)
         row["count_all"] = [round(c, 3) for c in counts]
-        if do_noop:
-            noops = []
-            for _ in range(reps):
-                spark.sparkContext.setJobDescription(f"noop:{name}")
-                t0 = time.time()
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                noops.append(time.time() - t0)
-                spark.sparkContext.setJobDescription(None)
-            row["noop_min"] = round(min(noops), 3)
-            row["noop_all"] = [round(c, 3) for c in noops]
+        noops = []
+        for _ in range(REPS):
+            spark.sparkContext.setJobDescription(f"noop:{name}")
+            t0 = time.time()
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            noops.append(time.time() - t0)
+            spark.sparkContext.setJobDescription(None)
+        row["noop_min"] = round(min(noops), 3)
+        row["noop_all"] = [round(c, 3) for c in noops]
         out[name] = row
         print(name, json.dumps(row), flush=True)
     print(json.dumps({"sf": SF_DIR, "cores": cores, "results": out}))

@@ -148,13 +148,8 @@ def minhash_signature_udf(text: str | Column, n_hashes: int = 16, k: int = 3) ->
       barrier Catalyst cannot inline through, so everything above it
       stays codegen'd.
     - **shingle dedup**: repeated shingles (template-heavy corpora)
-      hash once per TASK via a cache. The iterator form (guide §4.5)
-      keeps the cache alive across Arrow batches — a per-batch cache
-      re-hashes every template shingle each batch and collapses under
-      small Arrow batches (measured 34.2 s -> 5.7 s single-threaded at
-      sf1.0 for per-batch vs per-task caching at 256-row batches).
+      hash once per TASK through :func:`minhash_signer`'s cache.
     """
-    import hashlib
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -167,17 +162,10 @@ def minhash_signature_udf(text: str | Column, n_hashes: int = 16, k: int = 3) ->
     # diverges from the Column form on tab/newline-edged or NBSP text
     # (verified divergence before this pin — see the property test).
     _java_ws = re.compile("[ \t\n\x0b\f\r]+")
-    # md5(f"{i}:{s}".encode()) byte-for-byte: ASCII prefix + utf-8 body
-    prefixes = [f"{i}:".encode() for i in range(n_hashes)]
-    # raw 16-byte digests compare lexicographically identically to
-    # their lowercase-hex form (hex encoding is order-preserving), so
-    # the min runs on digests and only the n_hashes winners per row
-    # pay for hex conversion — not all ~n_shingles*n_hashes digests
-    cache_cap = 1 << 18  # ~250 MB worst case; template corpora fit easily
 
     @pandas_udf("array<string>")
     def sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        cache: dict[str, list[bytes]] = {}
+        sign = minhash_signer(n_hashes)
         for texts in batches:
             out = []
             for t in texts:
@@ -188,25 +176,51 @@ def minhash_signature_udf(text: str | Column, n_hashes: int = 16, k: int = 3) ->
                 # tokens (limit -1)
                 toks = _java_ws.split(("" if t is None else t).strip(" "))
                 n = len(toks)
-                shingles = {
-                    " ".join(toks[i : i + k]) for i in range(max(n - k + 1, 1))
-                }
-                mins: list[bytes | None] = [None] * n_hashes
-                for s in shingles:
-                    hs = cache.get(s)
-                    if hs is None:
-                        if len(cache) >= cache_cap:
-                            cache.clear()
-                        sb = s.encode()
-                        hs = [hashlib.md5(p + sb).digest() for p in prefixes]
-                        cache[s] = hs
-                    for i in range(n_hashes):
-                        if mins[i] is None or hs[i] < mins[i]:
-                            mins[i] = hs[i]
-                out.append([m.hex() for m in mins])
+                out.append(
+                    sign({" ".join(toks[i : i + k]) for i in range(max(n - k + 1, 1))})
+                )
             yield pd.Series(out)
 
     return sig(c)
+
+
+def minhash_signer(n_hashes: int):
+    """The one MinHash kernel (text and audio signatures): returns
+    ``sign(values) -> list[str]``, minhash_i = md5 hex of
+    ``"{i}:{value}"``, lexicographic min over a non-empty set of
+    strings — the contract :func:`minhash_signature` states in SQL.
+
+    Raw 16-byte digests compare lexicographically identically to their
+    lowercase-hex form (hex encoding is order-preserving), so the min
+    runs on digests and only the n_hashes winners pay for hex
+    conversion. Each value's digests are cached for the life of the
+    signer: make one per task (the iterator-UDF form keeps it alive
+    across Arrow batches), so repeated values hash once per TASK — a
+    per-batch cache collapses under small Arrow batches (measured
+    34.2 s -> 5.7 s single-threaded at sf1.0 for per-batch vs per-task
+    caching at 256-row batches).
+    """
+    import hashlib
+
+    # md5(f"{i}:{s}".encode()) byte-for-byte: ASCII prefix + utf-8 body
+    prefixes = [f"{i}:".encode() for i in range(n_hashes)]
+    cache_cap = 1 << 18  # ~250 MB worst case; template corpora fit easily
+    cache: dict[str, list[bytes]] = {}
+
+    def sign(values) -> list[str]:
+        mins = None
+        for s in values:
+            hs = cache.get(s)
+            if hs is None:
+                if len(cache) >= cache_cap:
+                    cache.clear()
+                sb = s.encode()
+                hs = [hashlib.md5(p + sb).digest() for p in prefixes]
+                cache[s] = hs
+            mins = hs if mins is None else list(map(min, mins, hs))
+        return [m.hex() for m in mins]
+
+    return sign
 
 
 def minhash_lsh_candidates(
@@ -668,11 +682,21 @@ def jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "shared", "jaccard")
         )
-    exploded = sets.select("id", F.explode("toks").alias("tok"))
-    sizes = sets.select("id", F.size("toks").alias("n"))
-    a, b = exploded.alias("a"), exploded.alias("b")
+    items = sets.select("id", F.explode("toks").alias("item"))
+    return set_jaccard_pairs(items, threshold)
+
+
+def set_jaccard_pairs(items: DataFrame, threshold: float) -> DataFrame:
+    """The one set-Jaccard self-join (text shingles and audio landmark
+    hashes): distinct ``(id, item)`` rows -> ``(id_a, id_b, shared,
+    jaccard)`` for id_a < id_b sharing at least one item and jaccard
+    >= threshold. Joins on the item, counts shared items per pair, then
+    joins both set sizes. The join key's document frequency makes the
+    pair count quadratic in it: cap hub items before calling."""
+    sizes = items.groupBy("id").agg(F.count("*").alias("n"))
+    a, b = items.alias("a"), items.alias("b")
     shared = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id")))
+        a.join(b, (F.col("a.item") == F.col("b.item")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("shared"))
     )

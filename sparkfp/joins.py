@@ -68,13 +68,6 @@ def interval_join_stream(
     return f.join(iv, cond, "inner")
 
 
-def broadcast_lookup(
-    facts: DataFrame, dim: DataFrame, on: str | list[str], how: str = "left"
-) -> DataFrame:
-    """Small-dimension enrichment without a shuffle (J2/J5)."""
-    return facts.join(F.broadcast(dim), on, how)
-
-
 def anti_join_dedup(df: DataFrame, seen: DataFrame, on: str | list[str]) -> DataFrame:
     """Drop rows whose key exists in `seen` (J4 alert dedup)."""
     return df.join(seen, on, "left_anti")

@@ -23,7 +23,6 @@ Scale design:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -33,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from . import dsp
+from . import dedup, dsp
 
 OFFSET_BIN_MS = 100
 # Measured separation on the synthetic corpus (768 clips, 8 tracks):
@@ -297,9 +296,9 @@ def near_dup_audio_pairs(
            but would quadratically inflate the self-join — the
            standard posting-list cap; at 10^12 clips this cap is what
            keeps the join linear in corpus size)
-        -> self-join on hash (co-partitioned by the join key)
-        -> per-pair shared-hash count
-        -> Jaccard vs each clip's distinct-hash count, threshold.
+        -> dedup.set_jaccard_pairs, the self-join the text Jaccard
+           runs: self-join on hash, per-pair shared-hash count,
+           Jaccard vs each clip's distinct-hash count, threshold.
 
     Returns (clip_a, clip_b, shared, jaccard), clip_a < clip_b.
     Reference parity anchor: the same landmark chain the reference
@@ -307,42 +306,15 @@ def near_dup_audio_pairs(
     is the index join turned on the corpus itself.
     """
     lm = dsp.landmarks(clips, id_col=id_col)
-    h = lm.select(F.col(id_col).alias("cid"), "hash").distinct()
-    rare = h.groupBy("hash").agg(F.count("*").alias("df")).where(
+    h = lm.select(F.col(id_col).alias("id"), F.col("hash").alias("item")).distinct()
+    rare = h.groupBy("item").agg(F.count("*").alias("df")).where(
         F.col("df") <= max_hash_df
     )
-    h = h.join(rare.select("hash"), "hash")
-    sizes = h.groupBy("cid").agg(F.count("*").alias("n_hashes"))
-    a, b = h.alias("a"), h.alias("b")
-    pairs = (
-        a.join(b, "hash")
-        .where(F.col("a.cid") < F.col("b.cid"))
-        .groupBy(
-            F.col("a.cid").alias("clip_a"), F.col("b.cid").alias("clip_b")
-        )
-        .agg(F.count("*").alias("shared"))
+    pairs = dedup.set_jaccard_pairs(h.join(rare.select("item"), "item"), min_jaccard)
+    return pairs.select(
+        F.col("id_a").alias("clip_a"), F.col("id_b").alias("clip_b"), "shared",
+        F.round("jaccard", 6).alias("jaccard"),
     )
-    out = (
-        pairs.join(
-            sizes.select(
-                F.col("cid").alias("clip_a"), F.col("n_hashes").alias("n_a")
-            ),
-            "clip_a",
-        )
-        .join(
-            sizes.select(
-                F.col("cid").alias("clip_b"), F.col("n_hashes").alias("n_b")
-            ),
-            "clip_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("shared")
-            / (F.col("n_a") + F.col("n_b") - F.col("shared")),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-    )
-    return out.select("clip_a", "clip_b", "shared", F.round("jaccard", 6).alias("jaccard"))
 
 
 def clip_signatures(
@@ -355,12 +327,11 @@ def clip_signatures(
     stage is streaming-safe and embarrassingly parallel — the property
     the banded suppressor needs upstream of its keyed state.
 
-    Hash scheme is the same contract as the text MinHash
-    (sparkfp/dedup.py minhash_signature_udf): md5 hex of
-    ``"{i}:{value}"``, lexicographic min, with the landmark hash's
-    decimal string as the value — so dedup.lsh_bands consumes the
-    signature unchanged. Clips with zero landmarks are dropped (an
-    empty fingerprint cannot claim a band).
+    The signature comes from the text MinHash's kernel
+    (dedup.minhash_signer: md5 hex of ``"{i}:{value}"``, lexicographic
+    min), with the landmark hash's decimal string as the value — so
+    dedup.lsh_bands consumes the signature unchanged. Clips with zero
+    landmarks are dropped (an empty fingerprint cannot claim a band).
     """
     out_schema = T.StructType(
         [
@@ -371,19 +342,14 @@ def clip_signatures(
     )
     cols = [id_col, "bytes", "sr_hz", "codec", "event_ms"]
 
-    def minhash(h: np.ndarray) -> list[str]:
-        values = set(h.tolist())
-        return [
-            min(hashlib.md5(f"{i}:{v}".encode()).hexdigest() for v in values)
-            for i in range(n_hashes)
-        ]
-
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        sign = dedup.minhash_signer(n_hashes)
         for pdf in batches:
             offsets, h, _, _ = dsp.clip_landmarks_batch(pdf)
             keep = np.diff(offsets) > 0
             sigs = [
-                minhash(h[a:b]) for a, b in zip(offsets[:-1], offsets[1:]) if b > a
+                sign({str(v) for v in h[a:b].tolist()})
+                for a, b in zip(offsets[:-1], offsets[1:]) if b > a
             ]
             yield pd.DataFrame(
                 {
@@ -408,8 +374,6 @@ def banded_clips(
     ALREADY-materialized signature column (the Python eval node is a
     plan barrier), the same plan shape the text path uses to stay in
     whole-stage codegen through the posexplode."""
-    from . import dedup
-
     sig = clip_signatures(clips, id_col, n_hashes)
     return sig.select(
         F.col("clip_id").alias(id_col),
@@ -431,8 +395,6 @@ def near_dup_clips_batch(
     one of its landmark-minhash LSH bands. Re-encodes and resampled
     copies of a recording land on the same bands (their landmark sets
     nearly coincide), so only the first-seen copy survives."""
-    from . import dedup
-
     banded = banded_clips(clips, id_col, n_hashes, n_bands)
     return dedup.suppress_from_banded(clips, banded, id_col, "event_ms")
 
@@ -450,8 +412,6 @@ def near_dup_clips_stream(
     release, strict t < wm, epoch claims compaction — see
     dedup.near_dup_band_verdicts_stream). Collapse per-clip with
     dedup.collapse_band_verdicts(..., n_bands)."""
-    from . import dedup
-
     return dedup.near_dup_band_verdicts_stream(
         stream, id_col, None, "event_ms",
         watermark=watermark, n_hashes=n_hashes, n_bands=n_bands,

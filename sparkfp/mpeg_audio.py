@@ -54,6 +54,8 @@ table classes) raise UnsupportedCodec. Never struct.error/IndexError
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from .codec import UnsupportedCodec
@@ -61,13 +63,33 @@ from .codec import UnsupportedCodec
 _M = 32          # subbands
 _TAPS = 512      # prototype length
 _GRANULES = 12   # Layer I: 12 granules x 32 subbands = 384 samples/frame
-_SAMPLES_PER_FRAME = _M * _GRANULES
 _DELAY = 481     # analysis+synthesis delay, samples (ISO filterbank value)
 
-# MPEG-1 Layer I bitrate table (kbps); index 0 = free format, 15 forbidden
+# MPEG-1 Layer I / II bitrate tables (kbps); index 0 = free format, 15 forbidden
 _BITRATES = (0, 32, 64, 96, 128, 160, 192, 224, 256,
              288, 320, 352, 384, 416, 448)
+_BITRATES_L2 = (0, 32, 48, 56, 64, 80, 96, 112, 128, 160,
+                192, 224, 256, 320, 384)
 _SAMPLE_RATES = (44100, 48000, 32000)  # index 3 reserved
+
+
+class _Layer(NamedTuple):
+    """What the header parser, frame walker and encoder prologue need
+    to know about a layer; everything else about the frame is shared."""
+
+    code: tuple[int, int]  # header layer bits
+    bitrates: tuple
+    numeral: str           # "I" / "II" in error texts
+    slot_mult: int         # slots = slot_mult * bitrate / sample_rate
+    slot_bytes: int
+    granules: int          # 32-sample subband granules per frame
+    other_layer: str       # UnsupportedCodec text for another layer's stream
+
+
+_LAYERS = {
+    "mp1": _Layer((1, 1), _BITRATES, "I", 12, 4, 12, "MPEG-1 Layer II/III audio"),
+    "mp2": _Layer((1, 0), _BITRATES_L2, "II", 144, 1, 36, "not a Layer II stream"),
+}
 
 # scalefactor table: sf[idx] = 2.0 * 2^(-idx/3), idx 0..62 (63 invalid)
 _SCALEFACTORS = 2.0 * 2.0 ** (-np.arange(63) / 3.0)
@@ -171,45 +193,51 @@ def _allocate_bits(energy: np.ndarray, budget: int) -> np.ndarray:
     return np.asarray(nb, dtype=np.int64)
 
 
-def encode_mp1(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 320) -> bytes:
-    """float32/float64 PCM in [-1, 1] -> MPEG-1 Layer I mono frames.
+def _encode_prologue(
+    pcm: np.ndarray, sr_hz: int, bitrate_kbps: int, layer: str
+) -> tuple[np.ndarray, np.ndarray, int]:
+    """Argument checks, the 32-bit frame header and the padded analysis
+    both encoders share -> (header bits, (n_frames, granules, 32)
+    subband samples, frame_bits).
 
     The input is zero-padded so that, after the decoder drops the
     481-sample filterbank delay, the decoded stream covers every input
-    sample (decode length = n_frames*384 - 481 >= len(pcm); trailing
-    samples beyond len(pcm) are near-silent pad).
+    sample (decode length = n_frames*samples_per_frame - 481 >= len(pcm);
+    trailing samples beyond len(pcm) are near-silent pad).
     """
+    lay = _LAYERS[layer]
     pcm = np.asarray(pcm, dtype=np.float64)
     if pcm.ndim != 1:
-        raise ValueError(f"encode_mp1 expects mono 1-D PCM, got {pcm.shape}")
+        raise ValueError(f"encode_{layer} expects mono 1-D PCM, got {pcm.shape}")
     if sr_hz not in _SAMPLE_RATES:
         raise UnsupportedCodec(
-            f"mp1 sample rate {sr_hz} (MPEG-1 allows 32000/44100/48000)"
+            f"{layer} sample rate {sr_hz} (MPEG-1 allows 32000/44100/48000)"
         )
-    if bitrate_kbps not in _BITRATES or bitrate_kbps == 0:
-        raise ValueError(f"mp1 bitrate {bitrate_kbps} not in the Layer I table")
-    if 12 * bitrate_kbps * 1000 % sr_hz:
-        # 44.1 kHz needs padding-bit alternation; this encoder only
-        # emits integral-slot combinations (decoder handles padded
+    if bitrate_kbps not in lay.bitrates or bitrate_kbps == 0:
+        raise ValueError(
+            f"{layer} bitrate {bitrate_kbps} not in the Layer {lay.numeral} table"
+        )
+    if lay.slot_mult * bitrate_kbps * 1000 % sr_hz:
+        # 44.1 kHz needs padding-bit alternation; these encoders only
+        # emit integral-slot combinations (the decoder handles padded
         # foreign frames fine)
         raise UnsupportedCodec(
-            f"mp1 encoder needs integral slots; {bitrate_kbps} kbps at {sr_hz} Hz"
+            f"{layer} encoder needs integral slots; {bitrate_kbps} kbps at {sr_hz} Hz"
         )
-    slots = 12 * bitrate_kbps * 1000 // sr_hz
-    frame_bits = slots * 32
+    frame_bits = (lay.slot_mult * bitrate_kbps * 1000 // sr_hz) * lay.slot_bytes * 8
+    samples_per_frame = _M * lay.granules
     n = len(pcm)
-    n_frames = max(1, -(-(n + _DELAY) // _SAMPLES_PER_FRAME))
-    x = np.zeros(n_frames * _SAMPLES_PER_FRAME)
+    n_frames = max(1, -(-(n + _DELAY) // samples_per_frame))
+    x = np.zeros(n_frames * samples_per_frame)
     x[:n] = np.clip(pcm, -1.0, 1.0)
-    sub = _analyze(x, _ANALYSIS, n_frames * _GRANULES)
-    sub = sub.reshape(n_frames, _GRANULES, _M)
+    sub = _analyze(x, _ANALYSIS, n_frames * lay.granules)
 
     header = np.zeros(32, dtype=np.uint8)
     header[:11] = 1                                   # syncword (11 bits)
     header[11:13] = (1, 1)                            # MPEG-1
-    header[13:15] = (1, 1)                            # Layer I
+    header[13:15] = lay.code                          # layer
     header[15] = 1                                    # protection: no CRC
-    br_idx = _BITRATES.index(bitrate_kbps)
+    br_idx = lay.bitrates.index(bitrate_kbps)
     header[16:20] = _bits_of(np.array([br_idx]), 4)[0]
     header[20:22] = _bits_of(np.array([_SAMPLE_RATES.index(sr_hz)]), 2)[0]
     # padding 0 (bit 22), private 0 (bit 23)
@@ -217,10 +245,16 @@ def encode_mp1(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 320) -> bytes:
     # mode_ext 00 (26-27), copyright 0 (28)
     header[29] = 1                                    # original
     # emphasis 00 (30-31)
+    return header, sub.reshape(n_frames, lay.granules, _M), frame_bits
 
+
+def encode_mp1(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 320) -> bytes:
+    """float32/float64 PCM in [-1, 1] -> MPEG-1 Layer I mono frames
+    (384 samples each; 4-byte slots, slots = 12 * bitrate / sample_rate).
+    Decode length = n_frames*384 - 481 >= len(pcm)."""
+    header, sub, frame_bits = _encode_prologue(pcm, sr_hz, bitrate_kbps, "mp1")
     out = bytearray()
-    for f in range(n_frames):
-        frame_sub = sub[f]                            # (12, 32)
+    for frame_sub in sub:                             # (12, 32)
         maxabs = np.abs(frame_sub).max(axis=0)        # (32,)
         energy = (frame_sub ** 2).sum(axis=0)
         budget = frame_bits - 32 - 4 * _M
@@ -269,9 +303,12 @@ def encode_mp1(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 320) -> bytes:
 # ------------------------------------------------------------ decode
 
 
-def _parse_header(raw: bytes, pos: int) -> dict:
+def _parse_header(raw: bytes, pos: int, layer: str) -> dict:
+    """One frame header of ``layer`` ("mp1"/"mp2"): the checks are
+    shared; the layer bits, bitrate table and slot size are the layer's."""
+    lay = _LAYERS[layer]
     if pos + 4 > len(raw):
-        raise ValueError("truncated mp1 frame header")
+        raise ValueError(f"truncated {layer} frame header")
     b = np.unpackbits(np.frombuffer(raw[pos: pos + 4], dtype=np.uint8))
     if not b[:11].all():
         raise ValueError("lost MPEG audio frame sync")
@@ -280,32 +317,64 @@ def _parse_header(raw: bytes, pos: int) -> dict:
         raise ValueError("reserved MPEG version id")
     if version != (1, 1):
         raise UnsupportedCodec("MPEG-2/2.5 LSF audio")
-    layer = (int(b[13]), int(b[14]))
-    if layer == (0, 0):
+    layer_bits = (int(b[13]), int(b[14]))
+    if layer_bits == (0, 0):
         raise ValueError("reserved MPEG layer id")
-    if layer != (1, 1):
-        raise UnsupportedCodec("MPEG-1 Layer II/III audio")
+    if layer_bits != lay.code:
+        raise UnsupportedCodec(lay.other_layer)
     crc_present = b[15] == 0
     br_idx = int(_uint_from_bits(b[16:20]))
     if br_idx == 15:
-        raise ValueError("forbidden mp1 bitrate index 15")
+        raise ValueError(f"forbidden {layer} bitrate index 15")
     if br_idx == 0:
-        raise UnsupportedCodec("mp1 free-format bitrate")
+        raise UnsupportedCodec(f"{layer} free-format bitrate")
     sr_idx = int(_uint_from_bits(b[20:22]))
     if sr_idx == 3:
-        raise ValueError("reserved mp1 sample rate index")
+        raise ValueError(f"reserved {layer} sample rate index")
     padding = int(b[22])
     mode = (int(b[24]), int(b[25]))
     if mode != (1, 1):
-        raise UnsupportedCodec("mp1 stereo/joint/dual modes (mono only)")
+        raise UnsupportedCodec(f"{layer} stereo/joint/dual modes (mono only)")
     sr = _SAMPLE_RATES[sr_idx]
-    slots = 12 * _BITRATES[br_idx] * 1000 // sr + padding
-    return {"sr": sr, "frame_bytes": slots * 4, "crc": crc_present}
+    kbps = lay.bitrates[br_idx]
+    if layer == "mp2":
+        _l2_table_for(sr, kbps)  # reject low-bitrate table classes early
+    slots = lay.slot_mult * kbps * 1000 // sr + padding
+    return {
+        "sr": sr, "frame_bytes": slots * lay.slot_bytes, "crc": crc_present,
+        "kbps": kbps,
+    }
 
 
-def _decode_frame(bits: np.ndarray, crc_present: bool) -> np.ndarray:
+def _decode_stream(raw: bytes, layer: str, decode_frame) -> tuple[np.ndarray, int]:
+    """The frame walk both decoders share: sync each header, hold the
+    sample rate, unpack each payload into ``decode_frame(bits, hdr)``,
+    synthesize and drop the 481-sample filterbank delay."""
+    if len(raw) < 4:
+        raise ValueError(f"{layer} stream shorter than one frame header")
+    pos, sr = 0, None
+    frames = []
+    while pos < len(raw):
+        hdr = _parse_header(raw, pos, layer)
+        if sr is None:
+            sr = hdr["sr"]
+        elif hdr["sr"] != sr:
+            raise ValueError(f"{layer} sample rate changes mid-stream")
+        if pos + hdr["frame_bytes"] > len(raw):
+            raise ValueError(f"truncated {layer} frame body")
+        payload = np.unpackbits(
+            np.frombuffer(raw[pos + 4: pos + hdr["frame_bytes"]], dtype=np.uint8)
+        )
+        frames.append(decode_frame(payload, hdr))
+        pos += hdr["frame_bytes"]
+    sub = np.concatenate(frames, axis=0)
+    y = _synthesize(sub, _SYNTHESIS)
+    return y[_DELAY:].astype(np.float32), int(sr)
+
+
+def _decode_frame(bits: np.ndarray, hdr: dict) -> np.ndarray:
     """Payload bits (after the 32-bit header) -> (12, 32) subbands."""
-    pos = 16 if crc_present else 0  # CRC-16 skipped, not verified
+    pos = 16 if hdr["crc"] else 0  # CRC-16 skipped, not verified
     if pos + 4 * _M > len(bits):
         raise ValueError("truncated mp1 frame: no room for allocation")
     alloc = _uint_from_bits(bits[pos: pos + 4 * _M].reshape(_M, 4))
@@ -353,26 +422,7 @@ def decode_mp1(raw: bytes) -> tuple[np.ndarray, int]:
     is n_frames*384 - 481 (up to 383 trailing pad samples relative to
     the original signal — real mp1 frames carry no length field).
     """
-    if len(raw) < 4:
-        raise ValueError("mp1 stream shorter than one frame header")
-    pos, sr = 0, None
-    frames = []
-    while pos < len(raw):
-        hdr = _parse_header(raw, pos)
-        if sr is None:
-            sr = hdr["sr"]
-        elif hdr["sr"] != sr:
-            raise ValueError("mp1 sample rate changes mid-stream")
-        if pos + hdr["frame_bytes"] > len(raw):
-            raise ValueError("truncated mp1 frame body")
-        payload = np.unpackbits(
-            np.frombuffer(raw[pos + 4: pos + hdr["frame_bytes"]], dtype=np.uint8)
-        )
-        frames.append(_decode_frame(payload, hdr["crc"]))
-        pos += hdr["frame_bytes"]
-    sub = np.concatenate(frames, axis=0)
-    y = _synthesize(sub, _SYNTHESIS)
-    return y[_DELAY:].astype(np.float32), int(sr)
+    return _decode_stream(raw, "mp1", _decode_frame)
 
 
 # ===================================================== Layer II ("mp2")
@@ -399,11 +449,8 @@ def decode_mp1(raw: bytes) -> tuple[np.ndarray, int]:
 #   C = 2^n/L, D = 1/2, same algebra). The codec quantizes/requantizes
 #   on that closed-form lattice directly — bit-exact with the table.
 
-_BITRATES_L2 = (0, 32, 48, 56, 64, 80, 96, 112, 128, 160,
-                192, 224, 256, 320, 384)
 _GRANULES_L2 = 12          # triplet-granules per frame
 _PARTS = 3                 # scalefactor parts (12 samples each)
-_SAMPLES_PER_FRAME_L2 = _M * _GRANULES_L2 * _PARTS  # 1152
 
 # quantizer menus (ISO B.2a/b band groups); levels per allocation step
 _MENU_LOW = (3, 7, 15, 31, 63, 127, 255, 511, 1023, 2047, 4095,
@@ -500,44 +547,12 @@ def encode_mp2(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 192) -> bytes:
     """float PCM in [-1, 1] -> MPEG-1 Layer II mono frames (1152
     samples each; one-byte slots, slots = 144 * bitrate / sample_rate).
     Same delay/padding contract as encode_mp1."""
-    pcm = np.asarray(pcm, dtype=np.float64)
-    if pcm.ndim != 1:
-        raise ValueError(f"encode_mp2 expects mono 1-D PCM, got {pcm.shape}")
-    if sr_hz not in _SAMPLE_RATES:
-        raise UnsupportedCodec(
-            f"mp2 sample rate {sr_hz} (MPEG-1 allows 32000/44100/48000)"
-        )
-    if bitrate_kbps not in _BITRATES_L2 or bitrate_kbps == 0:
-        raise ValueError(f"mp2 bitrate {bitrate_kbps} not in the Layer II table")
-    if 144 * bitrate_kbps * 1000 % sr_hz:
-        raise UnsupportedCodec(
-            f"mp2 encoder needs integral slots; {bitrate_kbps} kbps at {sr_hz} Hz"
-        )
+    header, sub, frame_bits = _encode_prologue(pcm, sr_hz, bitrate_kbps, "mp2")
     table = _l2_table_for(sr_hz, bitrate_kbps)
     sblimit = len(table)
-    frame_bits = (144 * bitrate_kbps * 1000 // sr_hz) * 8
-    n = len(pcm)
-    n_frames = max(1, -(-(n + _DELAY) // _SAMPLES_PER_FRAME_L2))
-    x = np.zeros(n_frames * _SAMPLES_PER_FRAME_L2)
-    x[:n] = np.clip(pcm, -1.0, 1.0)
-    sub = _analyze(x, _ANALYSIS, n_frames * _GRANULES_L2 * _PARTS)
-    sub = sub.reshape(n_frames, _PARTS * _GRANULES_L2, _M)
-
-    header = np.zeros(32, dtype=np.uint8)
-    header[:11] = 1                                   # syncword
-    header[11:13] = (1, 1)                            # MPEG-1
-    header[13:15] = (1, 0)                            # Layer II
-    header[15] = 1                                    # no CRC
-    header[16:20] = _bits_of(
-        np.array([_BITRATES_L2.index(bitrate_kbps)]), 4)[0]
-    header[20:22] = _bits_of(np.array([_SAMPLE_RATES.index(sr_hz)]), 2)[0]
-    header[24:26] = (1, 1)                            # single channel
-    header[29] = 1                                    # original
-
     nbal = np.asarray([t[0] for t in table])
     out = bytearray()
-    for f in range(n_frames):
-        frame_sub = sub[f]                            # (36, 32)
+    for frame_sub in sub:                             # (36, 32)
         energy = (frame_sub ** 2).sum(axis=0)
         budget = frame_bits - 32 - int(nbal.sum())
         step = _allocate_bits_l2(energy, budget, table)
@@ -605,48 +620,6 @@ def encode_mp2(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 192) -> bytes:
             raise AssertionError("mp2 frame overflow — allocator bug")
         out.extend(np.packbits(bits).tobytes())
     return bytes(out)
-
-
-def _parse_header_l2(raw: bytes, pos: int) -> dict:
-    """Layer II header parse; shares the Layer I checks but accepts
-    layer code (1,0) and the Layer II bitrate table / slot size."""
-    if pos + 4 > len(raw):
-        raise ValueError("truncated mp2 frame header")
-    b = np.unpackbits(np.frombuffer(raw[pos: pos + 4], dtype=np.uint8))
-    if not b[:11].all():
-        raise ValueError("lost MPEG audio frame sync")
-    version = (int(b[11]), int(b[12]))
-    if version == (0, 1):
-        raise ValueError("reserved MPEG version id")
-    if version != (1, 1):
-        raise UnsupportedCodec("MPEG-2/2.5 LSF audio")
-    layer = (int(b[13]), int(b[14]))
-    if layer == (0, 0):
-        raise ValueError("reserved MPEG layer id")
-    if layer != (1, 0):
-        raise UnsupportedCodec("not a Layer II stream")
-    crc_present = b[15] == 0
-    br_idx = int(_uint_from_bits(b[16:20]))
-    if br_idx == 15:
-        raise ValueError("forbidden mp2 bitrate index 15")
-    if br_idx == 0:
-        raise UnsupportedCodec("mp2 free-format bitrate")
-    sr_idx = int(_uint_from_bits(b[20:22]))
-    if sr_idx == 3:
-        raise ValueError("reserved mp2 sample rate index")
-    padding = int(b[22])
-    mode = (int(b[24]), int(b[25]))
-    if mode != (1, 1):
-        raise UnsupportedCodec("mp2 stereo/joint/dual modes (mono only)")
-    sr = _SAMPLE_RATES[sr_idx]
-    kbps = _BITRATES_L2[br_idx]
-    _l2_table_for(sr, kbps)  # reject low-bitrate table classes early
-    return {
-        "sr": sr,
-        "frame_bytes": 144 * kbps * 1000 // sr + padding,
-        "crc": crc_present,
-        "kbps": kbps,
-    }
 
 
 def _decode_frame_l2(bits: np.ndarray, hdr: dict) -> np.ndarray:
@@ -737,23 +710,4 @@ def decode_mp2(raw: bytes) -> tuple[np.ndarray, int]:
     """MPEG-1 Layer II mono frames -> (float32 PCM, sample rate); the
     481-sample filterbank delay is dropped (same contract as
     decode_mp1)."""
-    if len(raw) < 4:
-        raise ValueError("mp2 stream shorter than one frame header")
-    pos, sr = 0, None
-    frames = []
-    while pos < len(raw):
-        hdr = _parse_header_l2(raw, pos)
-        if sr is None:
-            sr = hdr["sr"]
-        elif hdr["sr"] != sr:
-            raise ValueError("mp2 sample rate changes mid-stream")
-        if pos + hdr["frame_bytes"] > len(raw):
-            raise ValueError("truncated mp2 frame body")
-        payload = np.unpackbits(
-            np.frombuffer(raw[pos + 4: pos + hdr["frame_bytes"]], dtype=np.uint8)
-        )
-        frames.append(_decode_frame_l2(payload, hdr))
-        pos += hdr["frame_bytes"]
-    sub = np.concatenate(frames, axis=0)
-    y = _synthesize(sub, _SYNTHESIS)
-    return y[_DELAY:].astype(np.float32), int(sr)
+    return _decode_stream(raw, "mp2", _decode_frame_l2)

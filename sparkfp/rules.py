@@ -228,50 +228,3 @@ def describe_rule(
     parts = [describe_check(c, descriptions, units) for c in rule.get("checks", [])]
     parts += [describe_rule(g, descriptions, units) for g in rule.get("groups", [])]
     return f" {logic} ".join(parts)
-
-
-def evaluate_rules(
-    df: DataFrame, rules: list[dict], ts_col: str = "timestamp"
-) -> DataFrame:
-    """Evaluate every applicable rule as one wide projection.
-
-    Output: one row per input row per applicable rule with the rule's
-    boolean mask — all masks computed in a single Catalyst-compiled
-    select (one pass over the data regardless of rule count).
-    Downstream, sparkfp.streaks.streak_trigger turns masks into
-    duration-gated alarms (reference process_odr.py:269-303).
-    """
-    columns = set(df.columns)
-    compiled: list[tuple[dict, Column]] = []
-    for rule in rules:
-        mask = compile_group(rule, columns)
-        if mask is not None:
-            compiled.append((rule, mask))
-    if not compiled:
-        return df.sparkSession.createDataFrame(
-            [], f"{ts_col} timestamp, rule_id string, active boolean, duration_s long"
-        )
-    masked = df.select(
-        ts_col,
-        *[
-            mask.alias(f"__rule_{i}")
-            for i, (rule, mask) in enumerate(compiled)
-        ],
-    )
-    stacked = masked.selectExpr(
-        ts_col,
-        "stack({n}, {args}) as (rule_id, active)".format(
-            n=len(compiled),
-            args=", ".join(
-                f"'{rule['rule_id']}', __rule_{i}"
-                for i, (rule, _) in enumerate(compiled)
-            ),
-        ),
-    )
-    durations = {
-        str(rule["rule_id"]): int(rule.get("duration_s", 0)) for rule, _ in compiled
-    }
-    dmap = F.create_map(
-        *[x for rid, d in durations.items() for x in (F.lit(rid), F.lit(d))]
-    )
-    return stacked.withColumn("duration_s", dmap[F.col("rule_id")])

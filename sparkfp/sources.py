@@ -58,7 +58,7 @@ def load_metadata_dim(spark: SparkSession, path: str, sheet: str | None = None) 
     """Small metadata mapping -> broadcast-ready dim DataFrame.
 
     xlsx requires openpyxl (absent here) -> import-try; csv/parquet
-    load natively. The result is intended for joins.broadcast_lookup.
+    load natively. The result is meant for a broadcast join (``F.broadcast(dim)``).
     """
     if path.endswith(".xlsx"):
         try:

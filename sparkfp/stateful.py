@@ -22,6 +22,8 @@ Both exist twice, sharing semantics:
 
 from __future__ import annotations
 
+import bisect
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -222,15 +224,9 @@ def rate_limit_stream(
     keyed-state analog of the reference's persisted last_run_by_equip
     dict (llm_job.py:40-70).
 
-    An EventTimeTimeout is armed at the earliest buffered row so tails
-    flush in Spark's no-data micro-batch once the watermark advances —
-    a group doesn't need new input to release ripe rows. Like any
-    watermark-closed operator, rows within the final watermark delay of
-    stream end stay buffered until a later event advances the
-    watermark.
+    Release and the EventTimeTimeout that flushes tails are
+    :func:`_release_ripe`'s, shared with ``run_state_stream``.
     """
-    import bisect
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = f"{key_col} string, ts_ms long"
@@ -245,25 +241,13 @@ def rate_limit_stream(
             last, buf = None, []
         for pdf in pdfs:
             buf.extend(int(t) for t in pdf[ts_col])
-        buf.sort()
-        wm = state.getCurrentWatermarkMs()
-        # STRICT t < wm, matching EventTimeTimeout's firing condition
-        # (timeout fires only when the watermark strictly exceeds the
-        # armed timestamp). With t <= wm here, a watermark landing
-        # exactly on an event time would release it in input-driven
-        # groups but not timeout-only groups — one batch of skew between
-        # the two release paths (and silent doc drops in the near-dup
-        # collapse, which needs all bands in ONE batch).
-        cut = bisect.bisect_left(buf, wm)
-        ready, buf = buf[:cut], buf[cut:]
+        ready, buf = _release_ripe(state, buf)
         out = []
         for ts in ready:
             if last is None or ts - last >= min_interval_s * 1000:
                 out.append((k, ts))
                 last = ts
         state.update((last, buf))
-        if buf:
-            state.setTimeoutTimestamp(max(buf[0], wm + 1))
         yield pd.DataFrame(out, columns=[key_col, "ts_ms"])
 
     with_time = values.withColumn("event_time", F.timestamp_millis(F.col(ts_col)))
@@ -274,6 +258,32 @@ def rate_limit_stream(
             fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
+
+
+def _release_ripe(state, buf: list, ts_of=int) -> tuple[list, list]:
+    """The watermark release of the buffered stream operators: sort the
+    keyed-state buffer by event time (``ts_of`` of an entry), return
+    (rows STRICTLY before the watermark, in event-time order; rows still
+    held) and arm an EventTimeTimeout at the earliest held row, so a
+    group releases ripe rows in Spark's no-data micro-batch once the
+    watermark advances, without new input of its own. Like any
+    watermark-closed operator, rows within the final watermark delay of
+    stream end stay buffered until a later event advances the watermark.
+
+    STRICT t < wm matches EventTimeTimeout's firing condition (timeout
+    fires only when the watermark strictly exceeds the armed timestamp).
+    With t <= wm here, a watermark landing exactly on an event time
+    would release it in input-driven groups but not timeout-only groups
+    — one batch of skew between the two release paths (and silent doc
+    drops in the near-dup collapse, which needs all bands in ONE batch).
+    """
+    buf.sort()
+    wm = state.getCurrentWatermarkMs()
+    cut = bisect.bisect_left(buf, wm, key=ts_of)
+    held = buf[cut:]
+    if held:
+        state.setTimeoutTimestamp(max(ts_of(held[0]), wm + 1))
+    return buf[:cut], held
 
 
 def _run_state_step(
@@ -316,32 +326,44 @@ def run_state_stream(
 ) -> DataFrame:
     """Streaming run-state machine via applyInPandasWithState.
 
-    Per-key state = (state, down_since_ms, start_since_ms); emits one
-    labeled row per input row. Arrow-batched per group — the Flink
-    keyed-state analog (T6).
+    Per-key state = (state, down_since_ms, start_since_ms, buf). Rows
+    are BUFFERED in keyed state until the watermark passes them, then
+    run through ``_run_state_step`` in event-time order
+    (:func:`_release_ripe`, as in ``rate_limit_stream``): out-of-order
+    arrival across micro-batches within the watermark delay yields the
+    batch/oracle labels. Emits one labeled row per released input row.
+    Arrow-batched per group — the Flink keyed-state analog (T6). The
+    ``buf`` field is not in the state schema of earlier versions, whose
+    checkpoints cannot resume here.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = f"{key_col} string, ts_ms long, running boolean, run_state string"
-    state_schema = "state string, down_since_ms long, start_since_ms long"
+    state_schema = (
+        "state string, down_since_ms long, start_since_ms long, "
+        "buf array<struct<ts_ms: long, running: boolean>>"
+    )
 
     def fn(key, pdfs, state: GroupState):
         (k,) = key
         if state.exists:
-            st, down_since, start_since = state.get
+            st, down_since, start_since, buf = state.get
+            buf = [(int(t), bool(r)) for t, r in buf or []]
         else:
-            st, down_since, start_since = RUNNING, None, None
-        rows = []
+            st, down_since, start_since, buf = RUNNING, None, None, []
         for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for ts, running in zip(pdf[ts_col], pdf[running_col]):
-                ts, running = int(ts), bool(running)
-                st, down_since, start_since, label = _run_state_step(
-                    st, down_since, start_since, ts, running,
-                    shutdown_window_s * 1000, transition_window_s * 1000,
-                )
-                rows.append((k, ts, running, label))
-        state.update((st, down_since, start_since))
+            buf.extend(
+                (int(t), bool(r)) for t, r in zip(pdf[ts_col], pdf[running_col])
+            )
+        ready, buf = _release_ripe(state, buf, ts_of=lambda r: r[0])
+        rows = []
+        for ts, running in ready:
+            st, down_since, start_since, label = _run_state_step(
+                st, down_since, start_since, ts, running,
+                shutdown_window_s * 1000, transition_window_s * 1000,
+            )
+            rows.append((k, ts, running, label))
+        state.update((st, down_since, start_since, buf))
         yield pd.DataFrame(rows, columns=[key_col, "ts_ms", "running", "run_state"])
 
     with_time = values.withColumn("event_time", F.timestamp_millis(F.col(ts_col)))
@@ -349,6 +371,6 @@ def run_state_stream(
         with_time.withWatermark("event_time", watermark)
         .groupBy(key_col)
         .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
         )
     )

@@ -251,18 +251,3 @@ def decode_mjpeg(raw: bytes) -> np.ndarray:
     if any(f.shape != shape for f in frames[1:]):
         raise ValueError("MJPEG frame geometry changes mid-stream")
     return np.stack(frames)
-
-
-def sample_frames(frames: np.ndarray, k: int) -> np.ndarray:
-    """Deterministic temporal sampling: k evenly-spaced frames (first
-    and last always included for k >= 2). The scale-path knob for
-    feature extraction over long videos — decode cost is per-frame, so
-    bounding frames bounds the decode work per row."""
-    frames = np.asarray(frames)
-    n = frames.shape[0]
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    if k >= n:
-        return frames
-    idx = np.unique(np.round(np.linspace(0, n - 1, k)).astype(np.int64))
-    return frames[idx]

@@ -563,44 +563,62 @@ def test_mp1_engine_decode_equals_oracle_scalar_loop():
     assert np.abs(eng - ora).max() <= 1e-6
 
 
-def test_mp1_error_paths():
+@pytest.mark.parametrize("layer", ["mp1", "mp2"])
+def test_mpeg_error_paths(layer):
+    """Both layers run the one header parser and frame walker: malformed
+    bytes raise ValueError, valid-but-unsupported streams and encoder
+    arguments raise UnsupportedCodec, each with its layer's message
+    text (the quarantine reason)."""
     from sparkfp import mpeg_audio as m
 
-    good = m.encode_mp1(_signal(n=1000), 32000, 160)
-    with pytest.raises(ValueError):
-        m.decode_mp1(b"")
-    with pytest.raises(ValueError):
-        m.decode_mp1(b"\x00\x00\x00\x00")        # no sync
-    with pytest.raises(ValueError):
-        m.decode_mp1(good[:3])                   # short header
-    with pytest.raises(ValueError):
-        m.decode_mp1(good[:-7])                  # truncated frame body
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp1(_mp1_header(layer=2))       # Layer II
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp1(_mp1_header(version=2))     # MPEG-2 LSF
-    with pytest.raises(ValueError):
-        m.decode_mp1(_mp1_header(version=1))     # reserved version
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp1(_mp1_header(mode=0))        # stereo
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp1(_mp1_header(br_idx=0))      # free format
-    with pytest.raises(ValueError):
-        m.decode_mp1(_mp1_header(br_idx=15))     # forbidden bitrate
-    with pytest.raises(ValueError):
-        m.decode_mp1(_mp1_header(sr_idx=3))      # reserved sample rate
-    # sample rate change mid-stream: 32 kHz frames then a 48 kHz header
-    with pytest.raises(ValueError):
-        m.decode_mp1(good + _mp1_header(sr_idx=1))
+    encode, decode = getattr(m, f"encode_{layer}"), getattr(m, f"decode_{layer}")
+    code, other = (3, 2) if layer == "mp1" else (2, 3)  # header layer codes
+
+    def hdr(layer=code, **kw) -> bytes:
+        return _mp1_header(layer=layer, **kw)
+
+    good = encode(_signal(n=1000), 32000, 160 if layer == "mp1" else 192)
+    bad_streams = [
+        (b"", ValueError, f"{layer} stream shorter than one frame header"),
+        (b"\x00\x00\x00\x00", ValueError, "lost MPEG audio frame sync"),
+        (good[:3], ValueError, f"{layer} stream shorter"),        # short header
+        (good + good[:2], ValueError, f"truncated {layer} frame header"),
+        (good[:-7], ValueError, f"truncated {layer} frame body"),
+        (good[:-5], ValueError, f"truncated {layer} frame body"),
+        (hdr(layer=other), codec.UnsupportedCodec,
+         "MPEG-1 Layer II/III audio" if layer == "mp1" else "not a Layer II stream"),
+        (hdr(layer=0), ValueError, "reserved MPEG layer id"),
+        (hdr(version=2), codec.UnsupportedCodec, "MPEG-2/2.5 LSF audio"),
+        (hdr(version=1), ValueError, "reserved MPEG version id"),
+        (hdr(mode=0), codec.UnsupportedCodec, f"{layer} stereo/joint/dual modes"),
+        (hdr(br_idx=0), codec.UnsupportedCodec, f"{layer} free-format bitrate"),
+        (hdr(br_idx=15), ValueError, f"forbidden {layer} bitrate index 15"),
+        (hdr(sr_idx=3), ValueError, f"reserved {layer} sample rate index"),
+        # 32 kHz frames then a 48 kHz header
+        (good + hdr(sr_idx=1), ValueError, f"{layer} sample rate changes mid-stream"),
+    ]
+    if layer == "mp2":
+        # 48 kbps mono selects the unimplemented low-bitrate tables
+        bad_streams.append((hdr(br_idx=2), codec.UnsupportedCodec,
+                            "mp2 low-bitrate table class"))
+    for raw, exc, msg in bad_streams:
+        with pytest.raises(exc, match=msg):
+            decode(raw)
     # encoder argument contract
-    with pytest.raises(codec.UnsupportedCodec):
-        m.encode_mp1(np.zeros(100), 8000)        # not an MPEG-1 rate
-    with pytest.raises(codec.UnsupportedCodec):
-        m.encode_mp1(np.zeros(100), 44100, 160)  # needs padding frames
-    with pytest.raises(ValueError):
-        m.encode_mp1(np.zeros(100), 32000, 100)  # not in bitrate table
-    with pytest.raises(ValueError):
-        m.encode_mp1(np.zeros((10, 2)), 32000)   # stereo input
+    bad_args = [
+        ((np.zeros(100), 8000), codec.UnsupportedCodec,  # not an MPEG-1 rate
+         f"{layer} sample rate 8000"),
+        ((np.zeros(100), 44100, 160 if layer == "mp1" else 192),  # needs padding
+         codec.UnsupportedCodec, f"{layer} encoder needs integral slots"),
+        ((np.zeros(100), 32000, 100), ValueError, f"{layer} bitrate 100 not in"),
+        ((np.zeros((10, 2)), 32000), ValueError, f"encode_{layer} expects mono"),
+    ]
+    if layer == "mp2":
+        bad_args.append(((np.zeros(100), 32000, 48), codec.UnsupportedCodec,
+                         "mp2 low-bitrate table class"))
+    for args, exc, msg in bad_args:
+        with pytest.raises(exc, match=msg):
+            encode(*args)
 
 
 def test_mp1_silence_and_empty_frames():
@@ -1071,46 +1089,6 @@ def test_mp2_grouped_quantizer_lattice():
         s = np.array([0, lv // 2, lv - 1])
         c = int(s[0] + lv * s[1] + lv * lv * s[2])
         assert [c % lv, (c // lv) % lv, c // (lv * lv)] == list(s)
-
-
-def test_mp2_error_paths():
-    from sparkfp import mpeg_audio as m
-
-    good = m.encode_mp2(_signal(n=1000), 32000, 192)
-    with pytest.raises(ValueError):
-        m.decode_mp2(b"")
-    with pytest.raises(ValueError):
-        m.decode_mp2(b"\x00\x00\x00\x00")          # no sync
-    with pytest.raises(ValueError):
-        m.decode_mp2(good[:-5])                    # truncated frame body
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp2(_mp1_header(layer=3))         # Layer I stream
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp2(_mp1_header(layer=2, version=2))  # MPEG-2 LSF
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp2(_mp1_header(layer=2, mode=0))     # stereo
-    with pytest.raises(codec.UnsupportedCodec):
-        m.decode_mp2(_mp1_header(layer=2, br_idx=0))   # free format
-    with pytest.raises(ValueError):
-        m.decode_mp2(_mp1_header(layer=2, br_idx=15))  # forbidden
-    with pytest.raises(ValueError):
-        m.decode_mp2(_mp1_header(layer=2, sr_idx=3))   # reserved rate
-    with pytest.raises(codec.UnsupportedCodec):
-        # 48 kbps mono selects the unimplemented low-bitrate tables
-        m.decode_mp2(_mp1_header(layer=2, br_idx=2))
-    with pytest.raises(ValueError):
-        m.decode_mp2(good + _mp1_header(layer=2, sr_idx=1))  # sr change
-    # encoder argument contract
-    with pytest.raises(codec.UnsupportedCodec):
-        m.encode_mp2(np.zeros(100), 8000)          # not an MPEG-1 rate
-    with pytest.raises(codec.UnsupportedCodec):
-        m.encode_mp2(np.zeros(100), 44100, 192)    # needs padding frames
-    with pytest.raises(codec.UnsupportedCodec):
-        m.encode_mp2(np.zeros(100), 32000, 48)     # low-bitrate class
-    with pytest.raises(ValueError):
-        m.encode_mp2(np.zeros(100), 32000, 100)    # not in bitrate table
-    with pytest.raises(ValueError):
-        m.encode_mp2(np.zeros((10, 2)), 32000)     # stereo input
 
 
 def test_mp2_silence_and_empty_frames():

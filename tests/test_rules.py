@@ -124,24 +124,6 @@ def test_missing_param_skips_rule(spark, frame):
     assert rules.compile_group(tree2, set(df.columns)) is None
 
 
-def test_evaluate_rules_stacked(spark, frame):
-    df, pdf = frame
-    rs = [
-        {"rule_id": "r1", "duration_s": 120,
-         "checks": [{"param": "TAG_A", "op": ">", "value": 0}]},
-        {"rule_id": "r2", "duration_s": 0,
-         "checks": [{"param": "TAG_B", "op": ">", "value": 10}]},
-        {"rule_id": "r3",  # skipped: missing param
-         "checks": [{"param": "GONE", "op": ">", "value": 0}]},
-    ]
-    out = rules.evaluate_rules(df, rs).toPandas()
-    assert set(out.rule_id.unique()) == {"r1", "r2"}
-    assert len(out) == 2 * len(pdf)
-    r1 = out[out.rule_id == "r1"].sort_values("timestamp")
-    assert np.array_equal(r1.active.values, (_clean(pdf.TAG_A) > 0).values)
-    assert (r1.duration_s == 120).all()
-
-
 def test_derived_parameters_expr(spark, frame):
     df, pdf = frame
     out = rules.derived_parameters(

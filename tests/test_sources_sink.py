@@ -130,7 +130,7 @@ def test_load_metadata_dim_csv_and_xlsx_gate(spark, tmp_path):
     from a spreadsheet)."""
     import pytest as _pytest
 
-    from sparkfp import joins, sources
+    from sparkfp import sources
 
     csv = tmp_path / "dim.csv"
     csv.write_text("tag,unit,scale\nt1,degC,1.5\nt2,bar,2.0\n")
@@ -139,7 +139,7 @@ def test_load_metadata_dim_csv_and_xlsx_gate(spark, tmp_path):
         "t1": ("degC", 1.5), "t2": ("bar", 2.0)
     }
     facts = spark.createDataFrame([("t1", 10.0), ("t3", 1.0)], "tag string, v double")
-    out = joins.broadcast_lookup(facts, dim, "tag").collect()
+    out = facts.join(F.broadcast(dim), "tag", "left").collect()
     assert {(r.tag, r.unit) for r in out} == {("t1", "degC"), ("t3", None)}
     try:
         import openpyxl  # noqa: F401

@@ -134,9 +134,15 @@ def test_run_state_stream_matches_batch(spark, run_frame, tmp_path):
     src_dir, sink_dir, ckpt = (
         str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     )
-    streaming.write_stream_source(
-        df.select("k", "ts_ms", "running"), src_dir, n_files=4, order_col="ts_ms"
+    # sentinel on a throwaway key: the buffered machine releases a row
+    # only once the watermark passes it (as the rate limiter below)
+    flush_ms = int(pdf.ts_ms.max()) + 3_600_000
+    with_sentinel = df.select("k", "ts_ms", "running").unionByName(
+        spark.createDataFrame(
+            [("ZZ_flush", flush_ms, True)], "k string, ts_ms long, running boolean"
+        )
     )
+    streaming.write_stream_source(with_sentinel, src_dir, n_files=4, order_col="ts_ms")
     src = streaming.read_parquet_stream(
         spark, src_dir, "k string, ts_ms long, running boolean"
     )
@@ -147,10 +153,59 @@ def test_run_state_stream_matches_batch(spark, run_frame, tmp_path):
     sink = ExactlyOnceParquetSink(sink_dir)
     q = streaming.start_exactly_once(labeled, sink, ckpt)
     q.awaitTermination(300)
-    got = sink.read(spark).orderBy("ts_ms").toPandas()
+    got = sink.read(spark).filter(F.col("k") != "ZZ_flush").orderBy("ts_ms").toPandas()
     exp = _run_state_oracle(list(pdf.timestamp), list(pdf.running), 600, 900)
     assert len(got) == len(exp)
     assert list(got.run_state) == exp
+
+
+def test_run_state_stream_out_of_order_across_batches(spark, tmp_path):
+    """Disorder within the watermark across micro-batches must not
+    change the labels: key K is down at 10 min, then one batch later
+    down at 0 and 11 min. In event time the outage starts at 0, so with
+    a 600 s shutdown window the rows at 10 and 11 min are SHUTDOWN (as
+    run_state_batch and the oracle say); a machine run in arrival order
+    starts the outage at 10 min and labels both RUNNING."""
+    import time as _time
+
+    base = int(pd.Timestamp("2026-02-01").timestamp() * 1000)
+    m = 60_000
+    src, sink_dir, ckpt = (
+        str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    )
+    schema = "k string, ts_ms long, running boolean"
+    batches = [
+        [("K", base + 10 * m, False)],
+        [("K", base + 0 * m, False), ("K", base + 11 * m, False)],
+        [("ZZ_flush", base + 24 * 60 * 60 * 1000, True)],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        _time.sleep(0.05)  # distinct mtimes -> deterministic replay order
+    stream = streaming.read_parquet_stream(spark, src, schema)
+    labeled = stateful.run_state_stream(
+        stream, "k", "ts_ms", "running",
+        shutdown_window_s=600, transition_window_s=900, watermark="3 hours",
+    )
+    sink = ExactlyOnceParquetSink(sink_dir)
+    q = streaming.start_exactly_once(labeled, sink, ckpt)
+    assert q.awaitTermination(300)
+    got = {r.ts_ms: r.run_state for r in sink.read(spark).collect() if r.k == "K"}
+
+    ts = [base + i * m for i in (0, 10, 11)]
+    exp = _run_state_oracle(
+        [pd.Timestamp(t, unit="ms") for t in ts], [False] * 3, 600, 900
+    )
+    assert exp == ["RUNNING", "SHUTDOWN", "SHUTDOWN"]
+    batch = stateful.run_state_batch(
+        spark.createDataFrame([("K", t, False) for t in ts], schema).withColumn(
+            "timestamp", F.timestamp_millis("ts_ms")
+        ),
+        ["k"], "timestamp", "running",
+        shutdown_window_s=600, transition_window_s=900,
+    )
+    assert {r.ts_ms: r.run_state for r in batch.collect()} == dict(zip(ts, exp))
+    assert got == dict(zip(ts, exp))
 
 
 def test_rising_edge_dedup(spark):

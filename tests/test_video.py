@@ -60,16 +60,6 @@ def test_avi_frame_count_and_order():
         assert int(np.argmax(col_means)) == (3 * t) % frames.shape[2]
 
 
-def test_sample_frames_even_spacing():
-    frames = _frames(n=10)
-    s = video.sample_frames(frames, 4)
-    assert s.shape[0] == 4
-    assert np.array_equal(s[0], frames[0]) and np.array_equal(s[-1], frames[9])
-    assert np.array_equal(video.sample_frames(frames, 99), frames)
-    with pytest.raises(ValueError):
-        video.sample_frames(frames, 0)
-
-
 def test_raw_stream_split_survives_ffd9_in_segment_payload():
     """A DQT byte pair 0xFF,0xD9 inside a segment must NOT split the
     stream early — the splitter walks marker structure, not bytes."""
