@@ -204,7 +204,10 @@ def minhash_signer(n_hashes: int):
 
     # md5(f"{i}:{s}".encode()) byte-for-byte: ASCII prefix + utf-8 body
     prefixes = [f"{i}:".encode() for i in range(n_hashes)]
-    cache_cap = 1 << 18  # ~250 MB worst case; template corpora fit easily
+    # ~1 KB per cached value: at most ~66 MiB per task (tracemalloc,
+    # 2^16 values); at sf0.1 the whole text vocabulary (27,213
+    # distinct 3-shingles) fits in one task's cache
+    cache_cap = 1 << 16
     cache: dict[str, list[bytes]] = {}
 
     def sign(values) -> list[str]:

@@ -54,9 +54,15 @@ def resample(
     the kernel widened by 1/cutoff to keep the transition band
     proportional), edge-hold padding, per-output-sample DC
     normalization. Output time axis is preserved (t_out = t_in), so
-    match offsets stay in source-track milliseconds. The gather matrix
-    is built in bounded chunks to keep per-clip memory flat inside
-    Arrow workers."""
+    match offsets stay in source-track milliseconds.
+
+    The kernel depends on an output sample only through its phase
+    ``frac = t - floor(t)``, so each chunk evaluates it once per
+    distinct phase (at most a few thousand rows) and gathers rows of
+    that phase table. When ``sr_out`` divides ``sr_in`` there is one
+    phase and the input windows are a strided view of the edge-padded
+    signal, with no gather at all. Output chunks are bounded (65,536
+    samples) to keep per-clip memory flat inside Arrow workers."""
     if sr_in == sr_out:
         return np.asarray(pcm, dtype=np.float32)
     if sr_in <= 0 or sr_out <= 0:
@@ -66,23 +72,36 @@ def resample(
     n_out = int(round(n_in * sr_out / sr_in))
     if n_in == 0 or n_out == 0:
         return np.zeros(0, dtype=np.float32)
+    ratio = sr_in / sr_out
     cutoff = min(1.0, sr_out / sr_in)
     h_taps = int(np.ceil(half_taps / cutoff))
     k = np.arange(-h_taps + 1, h_taps + 1, dtype=np.float64)
+    # row j of `windows` is x[clip(j + k, 0, n_in - 1)]: edge-hold padding
+    last = int(np.floor((n_out - 1) * ratio))
+    xp = np.pad(x, (h_taps - 1, h_taps + max(0, last - n_in + 1)), mode="edge")
+    windows = np.lib.stride_tricks.sliding_window_view(xp, len(k))
+    step = sr_in // sr_out if sr_in % sr_out == 0 else 0
     out = np.empty(n_out, dtype=np.float64)
     for lo in range(0, n_out, 65536):
         hi = min(lo + 65536, n_out)
-        t = np.arange(lo, hi, dtype=np.float64) * (sr_in / sr_out)
+        t = np.arange(lo, hi, dtype=np.float64) * ratio
         i0 = np.floor(t).astype(np.int64)
-        frac = t - i0
-        d = k[None, :] - frac[:, None]
+        phases, which = np.unique(t - i0, return_inverse=True)
+        d = k[None, :] - phases[:, None]
         kern = cutoff * np.sinc(cutoff * d)
         kern *= np.where(
             np.abs(d) < h_taps, 0.5 + 0.5 * np.cos(np.pi * d / h_taps), 0.0
         )
         kern /= kern.sum(axis=1, keepdims=True)
-        idx = np.clip(i0[:, None] + k[None, :].astype(np.int64), 0, n_in - 1)
-        out[lo:hi] = (x[idx] * kern).sum(axis=1)
+        # cache-sized blocks: each row is independent, so the block
+        # size changes the speed, never a bit of the output
+        for b in range(lo, hi, 1024):
+            e = min(b + 1024, hi)
+            if step:
+                rows, kb = windows[b * step:e * step:step], kern
+            else:
+                rows, kb = windows[i0[b - lo:e - lo]], kern[which[b - lo:e - lo]]
+            out[b:e] = (rows * kb).sum(axis=1)
     return out.astype(np.float32)
 
 

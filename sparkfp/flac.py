@@ -45,12 +45,14 @@ Scale shape: decode runs inside the Arrow-batched ``mapInPandas``
 decode boundary (sparkfp/multimodal.py) like every other codec here.
 The Rice bitstream is inherently sequential per frame — each field's
 start depends on the previous field's length — but that recurrence is
-exactly the iterated map f(p) = next_one(p) + 1 + k, so the hot loop
-is vectorized with binary lifting: one reverse cumulative minimum
-builds the next-one table, O(log count) pointer-doubling gathers
-materialize every field start, and quotients/remainders/zigzag are
-plain array ops (~40x the naive per-sample loop; a scalar twin
-remains for short partitions and as the tested reference).
+exactly the iterated map "next terminator = first one at or after this
+terminator + 1 + k", so the hot loop is vectorized with binary
+lifting over the stream's ones: a running count of ones over the
+partition window gives the map, O(log count) pointer-doubling gathers
+materialize every terminator, and quotients/remainders/zigzag are
+plain array ops (a scalar twin remains for short partitions and as the
+tested reference). The CRCs are byte-at-a-time Python-list table
+loops.
 Prediction undo is ``order`` cumulative sums and the encoder's
 residual is one ``np.diff`` call.
 """
@@ -71,34 +73,61 @@ _BLOCKSIZE = 4096
 _MAX_FIXED_ORDER = 4
 
 
-def _make_crc_table(poly: int, width: int) -> np.ndarray:
-    top = 1 << (width - 1)
-    mask = (1 << width) - 1
-    table = np.empty(256, dtype=np.uint32)
+def _make_crc8_table() -> list[int]:
+    """Byte-at-a-time CRC-8 (poly 0x07) table. A Python list, not an
+    ndarray: the CRC loop indexes it once per byte, and a list index
+    with a Python int is several times cheaper than an ndarray index."""
+    table = []
     for byte in range(256):
-        crc = byte << (width - 8)
+        crc = byte
         for _ in range(8):
-            crc = ((crc << 1) ^ poly) if crc & top else (crc << 1)
-        table[byte] = crc & mask
+            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else crc << 1
+        table.append(crc)
     return table
 
 
-_CRC8_TABLE = _make_crc_table(0x07, 8)
-_CRC16_TABLE = _make_crc_table(0x8005, 16)
+_CRC8_TABLE = _make_crc8_table()
+
+# CRC-16 poly 0x8005 = (x + 1)(x^15 + x + 1), and x^15 + x + 1 is
+# primitive, so the powers of x modulo it repeat with this period
+_CRC16_PERIOD = 32767
+
+
+def _crc16_column_powers() -> np.ndarray:
+    """x^((15 - c) mod _CRC16_PERIOD) mod 0x8005 for every column c of
+    a message reshaped to rows of _CRC16_PERIOD bits (see _crc16)."""
+    powers, v = [], 1
+    for _ in range(_CRC16_PERIOD):
+        powers.append(v)
+        v = ((v << 1) ^ 0x8005) & 0xFFFF if v & 0x8000 else v << 1
+    exponent = (15 - np.arange(_CRC16_PERIOD)) % _CRC16_PERIOD
+    return np.array(powers, dtype=np.uint16)[exponent]
+
+
+_CRC16_COLUMN_POWERS = _crc16_column_powers()
 
 
 def _crc8(data: bytes) -> int:
     crc = 0
+    table = _CRC8_TABLE
     for b in data:
-        crc = int(_CRC8_TABLE[crc ^ b])
+        crc = table[crc ^ b]
     return crc
 
 
 def _crc16(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFF) ^ int(_CRC16_TABLE[(crc >> 8) ^ b])
-    return crc
+    """FLAC's CRC-16 (poly 0x8005, init 0, unreflected) in array ops.
+    The CRC is linear over GF(2): it is the XOR, over the message's set
+    bits, of x^(16 + bits after it) mod the poly. Zero bits in front
+    leave a zero-init CRC unchanged, so pad the message to whole rows
+    of _CRC16_PERIOD bits: the bits of one column then share one power.
+    XOR the rows together, then XOR the powers of the odd columns."""
+    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
+    rows = np.concatenate(
+        [np.zeros(-len(bits) % _CRC16_PERIOD, dtype=np.uint8), bits]
+    ).reshape(-1, _CRC16_PERIOD)
+    odd = np.bitwise_xor.reduce(rows, axis=0)  # 0/1 per column
+    return int(np.bitwise_xor.reduce(_CRC16_COLUMN_POWERS * odd))
 
 
 def _utf8_number(value: int) -> bytes:
@@ -341,7 +370,7 @@ class _BitReader:
         self.bits = bits
         self.data = data  # same stream as bytes, for CRC slices
         self.pos = 0
-        self.ones = np.flatnonzero(bits)
+        self.ones = np.flatnonzero(bits.view(np.bool_))
 
     def read(self, width: int) -> int:
         end = self.pos + width
@@ -380,59 +409,59 @@ class _BitReader:
 
 def _rice_decode(rd: _BitReader, count: int, k: int) -> np.ndarray:
     """Vectorized Rice decode via binary lifting. Each field is
-    (unary q zeros, a 1, k remainder bits), so the field-start
-    sequence is the iterated map f(p) = next_one(p) + 1 + k. Build the
-    next-one table for the partition's bit window with one reverse
-    cumulative minimum, square f O(log count) times (pointer
-    doubling), and materialize all `count` starts with O(log count)
-    gathers — exact, no speculation. Quotients, remainders, and the
-    zigzag unmap are then plain array ops."""
+    (unary q zeros, a 1, k remainder bits), so a field's terminator is
+    the first one at or after its start, and the next field starts
+    1 + k bits after that terminator. Over the stream's ones that is
+    the map g(a) = the first one at or after ones[a] + 1 + k, read off
+    a running count of ones for every candidate terminator at once.
+    Square g O(log count) times (pointer doubling) and materialize all
+    `count` terminators with O(log count) gathers — exact, no
+    speculation. Quotients, remainders, and the zigzag unmap are then
+    plain array ops."""
     if count == 0:
         return np.zeros(0, dtype=np.int64)
     if count < 32:
         return _rice_decode_scalar(rd, count, k)
-    bits, ones, p0 = rd.bits, rd.ones, rd.pos
-    base = int(np.searchsorted(ones, p0))
-    # window bound: the partition consumes exactly `count` terminator
-    # ones and at most count*k remainder bits (each possibly a one),
-    # so its last terminator is at most the (base + count*(k+1) - 1)-th
-    # one of the stream
-    hi = base + count * (k + 1)
-    end = len(bits) if hi >= len(ones) else min(
-        int(ones[hi]) + 1 + k, len(bits)
-    )
-    m = end - p0
-    if m <= 0:
+    bits, p0 = rd.bits, rd.pos
+    base = int(np.searchsorted(rd.ones, p0))
+    # the partition consumes exactly `count` terminator ones and at
+    # most count*k remainder bits (each possibly a one), so its
+    # terminators are among the next count*(k+1) ones of the stream
+    cand = rd.ones[base:base + count * (k + 1)]
+    n = len(cand)
+    if n == 0:
         raise ValueError("flac truncated rice partition")
-    j = int(np.searchsorted(ones, end))
-    onesr = ones[base:j] - p0
-    # next-one table over the window (sentinel m = overflow)
-    tmp = np.full(m + 1, m, dtype=np.int64)
-    tmp[onesr] = onesr
-    nxt = np.minimum.accumulate(tmp[::-1])[::-1]
-    f = np.minimum(nxt + 1 + k, m)
-    # pointer doubling: seq_l holds f^0..f^{2^l - 1}(0), J_l = f^{2^l}
+    # g over candidate indices, from a running count of ones over the
+    # window; index n (no further candidate) is absorbing
+    w = min(int(cand[-1]) + 1 + k, len(bits)) - p0
+    ones_before = np.zeros(w + 1, dtype=np.int64)
+    np.cumsum(bits[p0:p0 + w], dtype=np.int64, out=ones_before[1:])
+    jump = np.empty(n + 1, dtype=np.int64)
+    np.minimum(ones_before[np.minimum(cand + (1 + k - p0), w)], n, out=jump[:n])
+    jump[n] = n
+    # pointer doubling: seq_l holds g^0..g^{2^l - 1}(0), jump_l = g^{2^l}
     seq = np.zeros(1, dtype=np.int64)
-    jump = f
     while len(seq) < count:
         seq = np.concatenate([seq, jump[seq]])
         if len(seq) >= count:
             break
         jump = jump[jump]
     seq = seq[:count]
-    if int(seq[-1]) >= m:
+    if int(seq[-1]) >= n:
         raise ValueError("flac truncated rice partition")
-    t = nxt[seq]
-    if int(t[-1]) + 1 + k > m:
+    t = cand[seq]
+    if int(t[-1]) + 1 + k > len(bits):
         raise ValueError("flac truncated rice partition")
-    q = t - seq
-    u = (q.astype(np.uint64) << np.uint64(k))
+    starts = np.empty(count, dtype=np.int64)
+    starts[0] = p0
+    starts[1:] = t[:-1] + (1 + k)
+    u = (t - starts).astype(np.uint64) << np.uint64(k)
     if k:
-        rem = bits[(p0 + t + 1)[:, None] + np.arange(k)].astype(np.int64)
+        rem = bits[(t + 1)[:, None] + np.arange(k)].astype(np.int64)
         u |= (rem @ (1 << np.arange(k - 1, -1, -1, dtype=np.int64))).astype(
             np.uint64
         )
-    rd.pos = p0 + int(t[-1]) + 1 + k
+    rd.pos = int(t[-1]) + 1 + k
     ui = u.astype(np.int64)
     return np.where(ui & 1, -((ui + 1) >> 1), ui >> 1)
 

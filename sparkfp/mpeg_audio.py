@@ -54,6 +54,7 @@ table classes) raise UnsupportedCodec. Never struct.error/IndexError
 
 from __future__ import annotations
 
+import functools
 from typing import NamedTuple
 
 import numpy as np
@@ -153,11 +154,20 @@ def _bits_of(vals: np.ndarray, width: int) -> np.ndarray:
     return ((vals[:, None].astype(np.uint64) >> shifts) & 1).astype(np.uint8)
 
 
-def _uint_from_bits(bits: np.ndarray) -> np.ndarray:
-    """(..., width) MSB-first bit matrix -> uint array."""
-    width = bits.shape[-1]
-    weights = (1 << np.arange(width - 1, -1, -1)).astype(np.int64)
-    return bits.astype(np.int64) @ weights
+def _payload_bytes(bits: np.ndarray) -> np.ndarray:
+    """Unpacked payload bits -> its bytes as int64, zero-padded by three
+    bytes so that ``_fields`` may read a little past the last field."""
+    return np.concatenate([np.packbits(bits), np.zeros(3, np.uint8)]).astype(np.int64)
+
+
+def _fields(data: np.ndarray, starts, widths) -> np.ndarray:
+    """MSB-first unsigned fields of at most 16 bits at any bit offsets
+    (``starts`` and ``widths`` broadcast; width 0 reads 0) from
+    ``_payload_bytes`` output: three byte gathers per field, however
+    many fields a frame has. Callers check the fields fit the payload."""
+    b = starts >> 3
+    word = (data[b] << 16) | (data[b + 1] << 8) | data[b + 2]
+    return (word >> (24 - (starts & 7) - widths)) & ((1 << widths) - 1)
 
 
 # ------------------------------------------------------------ encode
@@ -309,31 +319,30 @@ def _parse_header(raw: bytes, pos: int, layer: str) -> dict:
     lay = _LAYERS[layer]
     if pos + 4 > len(raw):
         raise ValueError(f"truncated {layer} frame header")
-    b = np.unpackbits(np.frombuffer(raw[pos: pos + 4], dtype=np.uint8))
-    if not b[:11].all():
+    word = int.from_bytes(raw[pos: pos + 4], "big")
+    if word >> 21 != 0x7FF:
         raise ValueError("lost MPEG audio frame sync")
-    version = (int(b[11]), int(b[12]))
-    if version == (0, 1):
+    version = (word >> 19) & 3
+    if version == 0b01:
         raise ValueError("reserved MPEG version id")
-    if version != (1, 1):
+    if version != 0b11:
         raise UnsupportedCodec("MPEG-2/2.5 LSF audio")
-    layer_bits = (int(b[13]), int(b[14]))
-    if layer_bits == (0, 0):
+    layer_bits = (word >> 17) & 3
+    if layer_bits == 0:
         raise ValueError("reserved MPEG layer id")
-    if layer_bits != lay.code:
+    if layer_bits != 2 * lay.code[0] + lay.code[1]:
         raise UnsupportedCodec(lay.other_layer)
-    crc_present = b[15] == 0
-    br_idx = int(_uint_from_bits(b[16:20]))
+    crc_present = not (word >> 16) & 1
+    br_idx = (word >> 12) & 15
     if br_idx == 15:
         raise ValueError(f"forbidden {layer} bitrate index 15")
     if br_idx == 0:
         raise UnsupportedCodec(f"{layer} free-format bitrate")
-    sr_idx = int(_uint_from_bits(b[20:22]))
+    sr_idx = (word >> 10) & 3
     if sr_idx == 3:
         raise ValueError(f"reserved {layer} sample rate index")
-    padding = int(b[22])
-    mode = (int(b[24]), int(b[25]))
-    if mode != (1, 1):
+    padding = (word >> 9) & 1
+    if (word >> 6) & 3 != 0b11:
         raise UnsupportedCodec(f"{layer} stereo/joint/dual modes (mono only)")
     sr = _SAMPLE_RATES[sr_idx]
     kbps = lay.bitrates[br_idx]
@@ -372,12 +381,16 @@ def _decode_stream(raw: bytes, layer: str, decode_frame) -> tuple[np.ndarray, in
     return y[_DELAY:].astype(np.float32), int(sr)
 
 
+_ALLOC_OFFSETS_L1 = 4 * np.arange(_M)
+
+
 def _decode_frame(bits: np.ndarray, hdr: dict) -> np.ndarray:
     """Payload bits (after the 32-bit header) -> (12, 32) subbands."""
+    data = _payload_bytes(bits)
     pos = 16 if hdr["crc"] else 0  # CRC-16 skipped, not verified
     if pos + 4 * _M > len(bits):
         raise ValueError("truncated mp1 frame: no room for allocation")
-    alloc = _uint_from_bits(bits[pos: pos + 4 * _M].reshape(_M, 4))
+    alloc = _fields(data, pos + _ALLOC_OFFSETS_L1, 4)
     pos += 4 * _M
     if (alloc == 15).any():
         raise ValueError("forbidden mp1 allocation code 15")
@@ -388,7 +401,7 @@ def _decode_frame(bits: np.ndarray, hdr: dict) -> np.ndarray:
         return sub
     if pos + 6 * active.size > len(bits):
         raise ValueError("truncated mp1 frame: no room for scalefactors")
-    sf_idx = _uint_from_bits(bits[pos: pos + 6 * active.size].reshape(-1, 6))
+    sf_idx = _fields(data, pos + 6 * np.arange(active.size), 6)
     pos += 6 * active.size
     if (sf_idx > 62).any():
         raise ValueError("invalid mp1 scalefactor index 63")
@@ -398,13 +411,9 @@ def _decode_frame(bits: np.ndarray, hdr: dict) -> np.ndarray:
         raise ValueError("truncated mp1 frame: no room for samples")
     # sample-region bit offsets for every (granule, active subband):
     # granule-major layout, widths vary per subband -> cumsum
-    starts_in_granule = np.concatenate([[0], np.cumsum(nba)[:-1]])
     offs = (pos + np.arange(_GRANULES)[:, None] * per_granule
-            + starts_in_granule[None, :])               # (12, n_active)
-    codes = np.zeros((_GRANULES, active.size), dtype=np.int64)
-    for j, w in enumerate(nba):
-        idx = offs[:, j][:, None] + np.arange(int(w))[None, :]
-        codes[:, j] = _uint_from_bits(bits[idx])
+            + (np.cumsum(nba) - nba)[None, :])           # (12, n_active)
+    codes = _fields(data, offs, nba[None, :])
     levels = (1 << nba) - 1
     if (codes == levels[None, :]).any():
         raise ValueError("forbidden all-ones mp1 sample code")
@@ -461,15 +470,16 @@ _MENU_HIGH = (3, 5, 7, 9, 15, 31, 65535)           # sb 11-22, nbal 3
 _MENU_TOP = (3, 5, 65535)                          # sb 23+,  nbal 2
 
 
-def _b2_table(sblimit: int) -> list[tuple]:
+def _b2_table(sblimit: int) -> tuple[tuple, ...]:
     """Per-subband (nbal, menu) rows for ISO Table B.2a (sblimit 27)
     or B.2b (sblimit 30) — same band structure, longer tail."""
     rows = [(4, _MENU_LOW)] * 3 + [(4, _MENU_MID)] * 8 + [(3, _MENU_HIGH)] * 12
     rows += [(2, _MENU_TOP)] * (sblimit - 23)
-    return rows[:sblimit]
+    return tuple(rows[:sblimit])
 
 
-def _l2_table_for(sr_hz: int, bitrate_kbps: int) -> list[tuple]:
+@functools.lru_cache(maxsize=None)
+def _l2_table_for(sr_hz: int, bitrate_kbps: int) -> tuple[tuple, ...]:
     """ISO 2.4.2.2 allocation-table selection for MONO streams:
     48 kHz -> B.2a; 44.1/32 kHz at >= 56 kbps/ch -> B.2b; the
     low-bitrate classes (<= 48 kbps/ch -> B.2c/d) are unsupported."""
@@ -622,87 +632,105 @@ def encode_mp2(pcm: np.ndarray, sr_hz: int, bitrate_kbps: int = 192) -> bytes:
     return bytes(out)
 
 
+class _L2Layout(NamedTuple):
+    """One allocation table as arrays, indexed [subband] or
+    [subband, allocation step] (step 0 = silent, its column unused)."""
+
+    nbal: np.ndarray         # allocation field width
+    alloc_start: np.ndarray  # allocation field offset in the field block
+    n_steps: np.ndarray      # menu length: a larger allocation is invalid
+    levels: np.ndarray       # quantizer levels
+    width: np.ndarray        # bits per triplet (_group_width)
+
+
+@functools.lru_cache(maxsize=None)
+def _l2_layout(sr_hz: int, bitrate_kbps: int) -> _L2Layout:
+    table = _l2_table_for(sr_hz, bitrate_kbps)
+    nbal = np.array([w for w, _ in table])
+    levels = np.zeros((len(table), 1 + len(_MENU_LOW)), dtype=np.int64)
+    width = np.zeros_like(levels)
+    for sb, (_, menu) in enumerate(table):
+        levels[sb, 1:1 + len(menu)] = menu
+        width[sb, 1:1 + len(menu)] = [_group_width(lv) for lv in menu]
+    layout = _L2Layout(nbal, np.cumsum(nbal) - nbal,
+                       np.array([len(m) for _, m in table]), levels, width)
+    for a in layout:  # shared by every caller through the cache
+        a.setflags(write=False)
+    return layout
+
+
+# SCFSI -> which sent scalefactor each of the three parts uses
+_SCFSI_PARTS = np.array([[0, 1, 2], [0, 0, 1], [0, 0, 0], [0, 1, 1]])
+_SCFSI_SENT = np.array([3, 2, 1, 2])
+_PART_OF_SAMPLE = np.arange(_PARTS * _GRANULES_L2) // _GRANULES_L2
+
+
 def _decode_frame_l2(bits: np.ndarray, hdr: dict) -> np.ndarray:
-    """Payload bits (after the header) -> (36, 32) subband samples."""
-    table = _l2_table_for(hdr["sr"], hdr["kbps"])
-    sblimit = len(table)
+    """Payload bits (after the header) -> (36, 32) subband samples.
+
+    Each field kind of the frame (allocation, SCFSI, scalefactors,
+    sample codes) is read in one ``_fields`` call; where a frame has
+    several faults, the one first in bitstream order is raised."""
+    lay = _l2_layout(hdr["sr"], hdr["kbps"])
+    data = _payload_bytes(bits)
     pos = 16 if hdr["crc"] else 0
-    step = np.zeros(sblimit, dtype=np.int64)
-    for sb in range(sblimit):                         # allocation field
-        w = table[sb][0]
-        if pos + w > len(bits):
-            raise ValueError("truncated mp2 frame: no room for allocation")
-        step[sb] = int(_uint_from_bits(bits[pos: pos + w]))
-        if step[sb] >= len(table[sb][1]) + 1:
-            raise ValueError(
-                f"mp2 allocation {step[sb]} exceeds subband {sb} menu"
-            )
-        pos += w
+    ends = pos + lay.alloc_start + lay.nbal
+    n_fit = int(np.searchsorted(ends, len(bits), side="right"))
+    step = _fields(data, pos + lay.alloc_start[:n_fit], lay.nbal[:n_fit])
+    over = np.flatnonzero(step > lay.n_steps[:n_fit])
+    if over.size:  # a menu fault before the cut outranks the cut
+        sb = over[0]
+        raise ValueError(f"mp2 allocation {step[sb]} exceeds subband {sb} menu")
+    if n_fit < len(ends):
+        raise ValueError("truncated mp2 frame: no room for allocation")
+    pos = int(ends[-1])
     active = np.flatnonzero(step)
     sub = np.zeros((_PARTS * _GRANULES_L2, _M))
     if not active.size:
         return sub
     if pos + 2 * active.size > len(bits):
         raise ValueError("truncated mp2 frame: no room for scfsi")
-    scfsi = _uint_from_bits(bits[pos: pos + 2 * active.size].reshape(-1, 2))
+    scfsi = _fields(data, pos + 2 * np.arange(active.size), 2)
     pos += 2 * active.size
-    n_sf = np.where(scfsi == 0, 3, np.where(scfsi == 2, 1, 2))
+    n_sf = _SCFSI_SENT[scfsi]
     if pos + 6 * int(n_sf.sum()) > len(bits):
         raise ValueError("truncated mp2 frame: no room for scalefactors")
-    sf_part = np.zeros((_PARTS, active.size), dtype=np.int64)
-    for j, sb in enumerate(active):
-        sent = _uint_from_bits(
-            bits[pos: pos + 6 * int(n_sf[j])].reshape(-1, 6)
-        )
-        pos += 6 * int(n_sf[j])
-        if (sent > 62).any():
-            raise ValueError("invalid mp2 scalefactor index 63")
-        if scfsi[j] == 0:
-            sf_part[:, j] = sent
-        elif scfsi[j] == 2:
-            sf_part[:, j] = sent[0]
-        elif scfsi[j] == 1:                           # parts {0,1} | {2}
-            sf_part[0, j] = sf_part[1, j] = sent[0]
-            sf_part[2, j] = sent[1]
-        else:                                         # parts {0} | {1,2}
-            sf_part[0, j] = sent[0]
-            sf_part[1, j] = sf_part[2, j] = sent[1]
-    widths = np.asarray(
-        [_group_width(table[sb][1][step[sb] - 1]) for sb in active]
-    )
+    sent = _fields(data, pos + 6 * np.arange(int(n_sf.sum())), 6)
+    pos += 6 * len(sent)
+    if (sent > 62).any():
+        raise ValueError("invalid mp2 scalefactor index 63")
+    sf_part = sent[(np.cumsum(n_sf) - n_sf)[:, None] + _SCFSI_PARTS[scfsi]]
+    st = step[active]
+    lv = lay.levels[active, st]
+    widths = lay.width[active, st]
     stride = int(widths.sum())
     if pos + _GRANULES_L2 * stride > len(bits):
         raise ValueError("truncated mp2 frame: no room for samples")
-    starts = np.concatenate([[0], np.cumsum(widths)[:-1]])
-    for j, sb in enumerate(active):
-        lv = table[sb][1][step[sb] - 1]
-        offs = pos + np.arange(_GRANULES_L2) * stride + starts[j]
-        w = int(widths[j])
-        raw_codes = _uint_from_bits(
-            bits[offs[:, None] + np.arange(w)[None, :]]
-        )
-        if lv in (3, 5, 9):
-            if (raw_codes >= lv ** 3).any():
-                raise ValueError("mp2 grouped code out of range")
-            trip = np.stack(
-                [raw_codes % lv, (raw_codes // lv) % lv, raw_codes // (lv * lv)],
-                axis=1,
-            )
-        else:
-            w1 = w // 3
-            trip = _uint_from_bits(
-                bits[
-                    (offs[:, None] + w1 * np.arange(3)[None, :])[:, :, None]
-                    + np.arange(w1)[None, None, :]
-                ]
-            )
-            if (trip == lv).any():
-                raise ValueError("forbidden all-ones mp2 sample code")
-        samples = trip.reshape(_PARTS * _GRANULES_L2)  # (36,)
-        # closed-form Table B.4 lattice (see section comment)
-        s2 = (2.0 * samples - lv + 1.0) / lv
-        part = np.arange(_PARTS * _GRANULES_L2) // _GRANULES_L2
-        sub[:, sb] = s2 * _SCALEFACTORS[sf_part[part, j]]
+    # three fields per (triplet, subband): a grouped quantizer's one
+    # base-L code (then two empty fields), or three w1-bit codes
+    grouped = (lv == 3) | (lv == 5) | (lv == 9)
+    w1 = np.where(grouped, 0, widths // 3)
+    offs = w1[:, None] * np.arange(3)                       # (n_active, 3)
+    wid = np.where(grouped[:, None], np.stack([widths, w1, w1], axis=1), w1[:, None])
+    starts = (pos + np.arange(_GRANULES_L2)[:, None] * stride
+              + (np.cumsum(widths) - widths)[None, :])      # (12, n_active)
+    vals = _fields(data, starts[:, :, None] + offs, wid)    # (12, n_active, 3)
+    code = vals[:, :, 0]
+    bad = np.flatnonzero(np.where(
+        grouped, (code >= lv ** 3).any(axis=0), (vals == lv[:, None]).any(axis=(0, 2))
+    ))
+    if bad.size:
+        raise ValueError("mp2 grouped code out of range" if grouped[bad[0]]
+                         else "forbidden all-ones mp2 sample code")
+    trip = np.where(
+        grouped[:, None],
+        np.stack([code % lv, (code // lv) % lv, code // (lv * lv)], axis=2),
+        vals,
+    )
+    samples = trip.transpose(0, 2, 1).reshape(_PARTS * _GRANULES_L2, -1)  # (36, n_active)
+    # closed-form Table B.4 lattice (see section comment)
+    s2 = (2.0 * samples - lv + 1.0) / lv
+    sub[:, active] = s2 * _SCALEFACTORS[sf_part[:, _PART_OF_SAMPLE].T]
     return sub
 
 

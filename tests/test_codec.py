@@ -621,6 +621,73 @@ def test_mpeg_error_paths(layer):
             encode(*args)
 
 
+def _bit_field(*fields: tuple[int, int]) -> np.ndarray:
+    """(value, width) pairs -> MSB-first uint8 bit array."""
+    return np.array(
+        [(v >> i) & 1 for v, w in fields for i in range(w - 1, -1, -1)],
+        dtype=np.uint8,
+    )
+
+
+def test_mpeg_first_fault_in_bitstream_order_wins():
+    """A frame with several faults raises the one the bitstream reaches
+    first; the message is the quarantine reason, so the order is part
+    of the contract."""
+    from sparkfp import mpeg_audio as m
+
+    # mp2 at 32 kHz / 192 kbps (Table B.2b): 3 LOW subbands (4-bit
+    # allocation), 8 MID (4-bit, 14 steps), 12 HIGH (3-bit), 7 TOP (2-bit)
+    hdr = _mp1_header(layer=2, br_idx=10, sr_idx=2)
+    hdr_l2 = {"sr": 32000, "kbps": 192, "crc": False}
+    frame_bytes = 144 * 192000 // 32000
+    # step 15 at subband 4 is outside its 14-step menu; every other
+    # subband asks for more sample bits than the frame holds
+    alloc = [(14, 4)] * 3 + [(14, 4), (15, 4)] + [(14, 4)] * 6 + [(7, 3)] * 12
+    alloc += [(3, 2)] * 7
+    payload = np.packbits(_bit_field(*alloc)).tobytes()
+    frame = hdr + payload.ljust(frame_bytes - 4, b"\xff")
+    with pytest.raises(ValueError, match="^mp2 allocation 15 exceeds subband 4 menu$"):
+        m.decode_mp2(frame)
+    # the same fault at subband 9 and subband 5: the earlier one is named
+    alloc2 = [(1, 4)] * 5 + [(15, 4)] + [(1, 4)] * 3 + [(15, 4)] + [(1, 4)]
+    bits = _bit_field(*alloc2)
+    with pytest.raises(ValueError, match="^mp2 allocation 15 exceeds subband 5 menu$"):
+        m._decode_frame_l2(bits, hdr_l2)
+    # out-of-menu subband 4, then the payload ends inside the
+    # allocation field: the menu fault comes first in the bitstream
+    bits = _bit_field(*alloc[:8])
+    with pytest.raises(ValueError, match="^mp2 allocation 15 exceeds subband 4 menu$"):
+        m._decode_frame_l2(bits, hdr_l2)
+    # valid allocations cut short inside the field (and mid-subband)
+    for n_bits in (0, 3, 4 * 11 + 3 * 5 + 1):
+        bits = _bit_field(*([(1, 4)] * 11 + [(1, 3)] * 12 + [(1, 2)] * 7))[:n_bits]
+        with pytest.raises(ValueError, match="^truncated mp2 frame: no room for allocation$"):
+            m._decode_frame_l2(bits, hdr_l2)
+    # ... and with the CRC word in front
+    with pytest.raises(ValueError, match="^truncated mp2 frame: no room for allocation$"):
+        m._decode_frame_l2(np.zeros(16 + 40, np.uint8), dict(hdr_l2, crc=True))
+
+    # mp1 reads its whole 128-bit allocation field before it checks
+    # any code: a cut field raises truncation even if it holds a 15
+    hdr_l1 = {"crc": False}
+    alloc1 = _bit_field(*([(3, 4)] * 5 + [(15, 4)] + [(3, 4)] * 26))
+    with pytest.raises(ValueError, match="^truncated mp1 frame: no room for allocation$"):
+        m._decode_frame(alloc1[:100], hdr_l1)
+    # a whole field with code 15: forbidden, although the scalefactors
+    # and samples after it do not fit either
+    with pytest.raises(ValueError, match="^forbidden mp1 allocation code 15$"):
+        m._decode_frame(alloc1, hdr_l1)
+    frame1 = _mp1_header(br_idx=1, sr_idx=1)  # 32 kbps @ 48 kHz: 32-byte frame
+    frame1 += np.packbits(alloc1).tobytes().ljust(28, b"\x00")
+    with pytest.raises(ValueError, match="^forbidden mp1 allocation code 15$"):
+        m.decode_mp1(frame1)
+    # without the 15 the same frame runs out of room for scalefactors
+    frame1 = _mp1_header(br_idx=1, sr_idx=1)
+    frame1 += np.packbits(_bit_field(*([(3, 4)] * 32))).tobytes().ljust(28, b"\x00")
+    with pytest.raises(ValueError, match="^truncated mp1 frame: no room for scalefactors$"):
+        m.decode_mp1(frame1)
+
+
 def test_mp1_silence_and_empty_frames():
     from sparkfp import mpeg_audio as m
 
@@ -816,6 +883,21 @@ def test_flac_vectorized_rice_equals_scalar():
         sca = flac._rice_decode_scalar(rd_s, len(res), k)
         assert np.array_equal(vec, res) and np.array_equal(sca, res)
         assert rd_v.pos == rd_s.pos
+
+
+def test_flac_crcs_equal_oracle_bitwise_loop():
+    """The table-driven CRC-8/CRC-16 == the oracle's bit-at-a-time
+    loops, plus the published check values over b"123456789"."""
+    import tools.dsp_oracle as orc
+    from sparkfp import flac
+
+    rng = np.random.Generator(np.random.Philox(key=[17, 0]))
+    for n in (0, 1, 4096, 200_000):
+        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+        assert flac._crc8(data) == orc._flac_crc8_scalar(data)
+        assert flac._crc16(data) == orc._flac_crc16_scalar(data)
+    assert flac._crc8(b"123456789") == 0xF4   # CRC-8, poly 0x07
+    assert flac._crc16(b"123456789") == 0xFEE8  # CRC-16/BUYPASS, poly 0x8005
 
 
 def test_png_adam7_interlace_roundtrip_and_oracle_parity():

@@ -143,8 +143,9 @@ def test_no_fixture_contains_negative_zero():
 
 
 def test_resample_engine_equals_oracle_scalar():
-    """Chunked gather-matrix resampler == the oracle's literal
-    per-output-sample sinc loop, across up/down/fractional ratios."""
+    """Phase-table / strided single-phase resampler == the oracle's
+    literal per-output-sample sinc loop, across up/down/fractional
+    ratios."""
     rng = np.random.default_rng(9)
     x = np.clip(
         0.5 * np.sin(0.05 * np.arange(2500))
@@ -159,6 +160,48 @@ def test_resample_engine_equals_oracle_scalar():
         )
         assert eng.shape == ora.shape
         assert np.abs(eng - ora).max() < 1e-6  # float32 output cast
+
+
+def _resample_per_sample_kernel(pcm, sr_in, sr_out, half_taps=dsp.RESAMPLE_HALF_TAPS):
+    """The resampler as first written: one kernel row and one clipped
+    index row per output sample, in 65,536-row chunks."""
+    x, n_in = np.asarray(pcm, dtype=np.float64), len(pcm)
+    n_out = int(round(n_in * sr_out / sr_in))
+    if n_in == 0 or n_out == 0:
+        return np.zeros(0, dtype=np.float32)
+    cutoff = min(1.0, sr_out / sr_in)
+    h_taps = int(np.ceil(half_taps / cutoff))
+    k = np.arange(-h_taps + 1, h_taps + 1, dtype=np.float64)
+    out = np.empty(n_out, dtype=np.float64)
+    for lo in range(0, n_out, 65536):
+        t = np.arange(lo, min(lo + 65536, n_out), dtype=np.float64) * (sr_in / sr_out)
+        i0 = np.floor(t).astype(np.int64)
+        d = k[None, :] - (t - i0)[:, None]
+        kern = cutoff * np.sinc(cutoff * d)
+        kern *= np.where(np.abs(d) < h_taps, 0.5 + 0.5 * np.cos(np.pi * d / h_taps), 0.0)
+        kern /= kern.sum(axis=1, keepdims=True)
+        idx = np.clip(i0[:, None] + k[None, :].astype(np.int64), 0, n_in - 1)
+        out[lo:lo + len(t)] = (x[idx] * kern).sum(axis=1)
+    return out.astype(np.float32)
+
+
+@pytest.mark.parametrize(
+    "sr_in, sr_out, n_in",
+    [(sr, 8000, 4 * sr) for sr in (11025, 16000, 22050, 32000, 44100, 48000)]
+    + [(8000, 16000, 20000),   # upsampling
+       (16000, 8000, 140000),  # n_out > 65,536: crosses the chunk edge
+       (44100, 8000, 400000),
+       (44100, 8000, 1), (16000, 8000, 1), (8000, 16000, 1),
+       (44100, 8000, 0), (16000, 8000, 0)],
+)
+def test_resample_bit_identical_to_per_sample_kernel(sr_in, sr_out, n_in):
+    """The resampler's output is pinned bit for bit, not to a
+    tolerance: landmark hashes at foreign rates depend on every bit."""
+    rng = np.random.default_rng(sr_in + n_in)
+    x = np.clip(0.3 * rng.standard_normal(n_in), -1, 1).astype(np.float32)
+    got = dsp.resample(x, sr_in, sr_out)
+    assert got.dtype == np.float32
+    assert np.array_equal(got, _resample_per_sample_kernel(x, sr_in, sr_out))
 
 
 def test_resample_sine_fidelity():

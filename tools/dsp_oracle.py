@@ -369,7 +369,7 @@ def _resample_scalar(
     """Literal per-output-sample windowed-sinc loop (Hann window,
     cutoff min(1, ratio), kernel widened by 1/cutoff, edge-hold,
     per-sample DC normalization) — the resampling contract restated
-    independently of the engine's chunked gather-matrix form
+    independently of the engine's phase-table form
     (sparkfp/dsp.py resample)."""
     if sr_in == sr_out:
         return list(vals)
