@@ -226,6 +226,58 @@ def minhash_signer(n_hashes: int):
     return sign
 
 
+def explode_bands(
+    sig_df: DataFrame, keep_cols: list, n_hashes: int, n_bands: int
+) -> DataFrame:
+    """The one MinHash band explode (text docs, LSH candidates, audio
+    clips): ``(keep_cols..., band_idx, band)`` rows from a frame whose
+    signature is ALREADY materialized as the ``_sig`` column.
+
+    The signature must come from its own projection: composing
+    ``lsh_bands(minhash_signature(...))`` as one Column expression
+    inlines the full n_hashes-way md5 minhash into every band slot and
+    recomputes it per slot (measured 30x slowdown) — Catalyst does not
+    deduplicate interpreted higher-order-function subtrees inside a
+    single projection. Callers fan out batch inputs themselves."""
+    return sig_df.select(
+        *keep_cols,
+        F.posexplode(lsh_bands(F.col("_sig"), n_bands, n_hashes // n_bands)).alias(
+            "band_idx", "band"
+        ),
+    )
+
+
+def bucket_pairs(rows: DataFrame) -> DataFrame:
+    """The one LSH bucket self-join: ``(id, payload..., key1, key2)``
+    rows -> distinct ``(id_a, id_b, <payload>_a, <payload>_b, ...)``
+    with id_a < id_b, for every two rows sharing a bucket key.
+
+    The join is a hash EQUI-join on (key1, key2) — never an
+    OR-of-equalities condition, which Spark can only plan as a nested
+    loop — so cost is the sum over buckets of |bucket|^2, not N^2. A
+    pair sharing several buckets comes out once.
+
+    Requires unique ids: callers that re-attach rows to the pairs by an
+    id join re-expand a duplicated id into one row per row under it,
+    including rows that never shared a bucket."""
+    id_col, *payload, k1, k2 = rows.columns
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{k1}") == F.col(f"b.{k1}"))
+            & (F.col(f"a.{k2}") == F.col(f"b.{k2}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in "ab"],
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -234,44 +286,18 @@ def minhash_lsh_candidates(
     n_bands: int = 4,
     k: int = 3,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) sharing >= 1 LSH band.
-
-    The signature is materialized as a named column in its own
-    projection before banding: composing ``lsh_bands(
-    minhash_signature(...))`` as one Column expression would inline the
-    full n_hashes-way md5 minhash into every element_at slot and
-    recompute it n_hashes times per row (measured 30x slowdown) —
-    Catalyst does not deduplicate interpreted higher-order-function
-    subtrees inside a single projection.
-    """
+    """Candidate near-dup pairs (id_a < id_b) sharing >= 1 LSH band:
+    :func:`explode_bands` then :func:`bucket_pairs` on (band_idx, band)
+    (unique ids required, see there)."""
     from .session import fan_out
 
-    rows_per_band = n_hashes // n_bands
     # unsplittable single-file inputs otherwise run the whole signature
     # UDF in one task (guide §2.5); no-op when the scan is already
     # parallel
     sig_df = fan_out(df, key=id_col).select(
         F.col(id_col), minhash_signature_udf(text_col, n_hashes, k).alias("_sig")
     )
-    banded = sig_df.select(
-        F.col(id_col),
-        F.posexplode(lsh_bands(F.col("_sig"), n_bands, rows_per_band)).alias(
-            "band_idx", "band"
-        ),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return bucket_pairs(explode_bands(sig_df, [id_col], n_hashes, n_bands))
 
 
 # ------------------------------------------------- streaming near-dup
@@ -286,27 +312,18 @@ def banded_docs(
     n_bands: int = 4,
     k: int = 3,
 ) -> DataFrame:
-    """(id, ts, band_idx, band) rows — the shared explode step of the
-    batch and streaming near-dup suppressors. Signature materialized in
-    its own projection (see minhash_lsh_candidates for why). Batch
-    inputs fan out to session parallelism first (no-op for streams and
-    for already-parallel scans)."""
+    """(id, ts, band_idx, band) rows of text documents — the banded
+    input of the batch and streaming near-dup suppressors. Batch inputs
+    fan out to session parallelism first (no-op for streams and for
+    already-parallel scans)."""
     from .session import fan_out
 
-    df = fan_out(df, key=id_col)
-    rows_per_band = n_hashes // n_bands
-    sig_df = df.select(
+    sig_df = fan_out(df, key=id_col).select(
         F.col(id_col),
         F.col(ts_col),
         minhash_signature_udf(text_col, n_hashes, k).alias("_sig"),
     )
-    return sig_df.select(
-        F.col(id_col),
-        F.col(ts_col),
-        F.posexplode(lsh_bands(F.col("_sig"), n_bands, rows_per_band)).alias(
-            "band_idx", "band"
-        ),
-    )
+    return explode_bands(sig_df, [id_col, ts_col], n_hashes, n_bands)
 
 
 def near_dup_suppress_batch(
@@ -354,7 +371,7 @@ def suppress_from_banded(
     df: DataFrame, banded: DataFrame, id_col: str, ts_col: str
 ) -> DataFrame:
     """Generic half of the batch suppressor: given (id, ts, band_idx,
-    band) rows from ANY bander (text shingles, audio landmark minhash),
+    band) rows of ANY banding (text shingles, audio landmark minhash),
     keep rows that are first on every one of their bands."""
     return df.join(
         survivors_from_banded(banded, id_col, ts_col), id_col, "left_semi"
@@ -362,29 +379,24 @@ def suppress_from_banded(
 
 
 def near_dup_band_verdicts_stream(
-    stream: DataFrame,
+    banded: DataFrame,
     id_col: str,
-    text_col: str,
     ts_col: str,
     watermark: str = "10 seconds",
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    k: int = 3,
     claims: DataFrame | None = None,
-    bander=None,
 ) -> DataFrame:
-    """Streaming half of the near-dup suppressor: per-(band_idx, band)
-    keyed state buffers (ts, id) rows until the watermark passes them,
-    then releases them in event-time order, marking ``is_first`` on the
+    """Streaming half of the near-dup suppressor over banded rows
+    ``(id, ts, band_idx, band)`` — :func:`banded_docs` for text,
+    ``matching.banded_clips`` for audio: per-(band_idx, band) keyed
+    state buffers (ts, id) rows until the watermark passes them, then
+    releases them in event-time order, marking ``is_first`` on the
     band's first-ever released row. ``ts_col`` is epoch millis.
 
-    All bands of a doc release at the SAME trigger (the release
-    condition, ts STRICTLY < watermark, is identical for every band
-    and matches EventTimeTimeout's strict firing condition, so bands
-    released by fresh input and bands released by timeout agree on the
-    batch), so collapsing verdicts to per-doc survival is a plain
-    per-micro-batch groupBy — see collapse_band_verdicts, applied
-    inside foreachBatch.
+    Release is ``stateful._release_ripe``'s (strict ts < watermark plus
+    an EventTimeTimeout at the earliest held row), identical for every
+    band key, so all bands of a doc release at the SAME trigger and
+    collapsing verdicts to per-doc survival is a plain per-micro-batch
+    groupBy — see collapse_band_verdicts, applied inside foreachBatch.
 
     State per band key = the sub-watermark (ts, id) buffer — bounded by
     the watermark like exact_dedup_stream's horizon — PLUS one
@@ -401,18 +413,11 @@ def near_dup_band_verdicts_stream(
     corpus's lifetime band cardinality. The side table is static per
     run (epoch-grain), sidestepping stream-static file-index staleness.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    # ``bander``: optional (stream -> (id, ts, band_idx, band)) stage
-    # replacing the text shingle/minhash default — how the audio
-    # landmark-minhash twin reuses this whole stateful suppressor
-    # (sparkfp/matching.py banded_clips). Everything downstream is
-    # banding-agnostic.
-    banded = (
-        bander(stream) if bander is not None
-        else banded_docs(stream, id_col, text_col, ts_col, n_hashes, n_bands, k)
-    ).withColumn("event_time", F.timestamp_millis(F.col(ts_col)))
+    from .stateful import _release_ripe
+
+    banded = banded.withColumn("event_time", F.timestamp_millis(F.col(ts_col)))
     if claims is not None:
         # prior-epoch claimed bands, broadcast: every row of a claimed
         # band arrives pre-marked, so the stateful op needs no state
@@ -452,18 +457,7 @@ def near_dup_band_verdicts_stream(
                 claimed = True
             buf.extend((int(t), str(d)) for t, d in zip(pdf[ts_col], pdf[id_col]))
         has_first = has_first or claimed
-        buf.sort()
-        wm = state.getCurrentWatermarkMs()
-        # STRICT t < wm so input-driven release and EventTimeTimeout
-        # release (which fires only when wm strictly exceeds the armed
-        # ts) agree on the same micro-batch: if the watermark lands
-        # exactly on a doc's event time and only some of its bands get
-        # fresh input, a <= condition would release those bands' verdicts
-        # one batch before the timeout-only bands — collapse_band_verdicts
-        # needs all n_bands verdicts in ONE batch, so the doc would be
-        # silently dropped. Same contract as rate_limit_stream.
-        ready = [(t, d) for t, d in buf if t < wm]
-        buf = [(t, d) for t, d in buf if t >= wm]
+        ready, buf = _release_ripe(state, buf, ts_of=lambda r: r[0])
         out = []
         for t, d in ready:
             out.append((d, t, band_idx, band, not has_first))
@@ -480,8 +474,6 @@ def near_dup_band_verdicts_stream(
             state.update(
                 (has_first, claimed, [t for t, _ in buf], [d for _, d in buf])
             )
-            if buf:
-                state.setTimeoutTimestamp(max(buf[0][0], wm + 1))
         yield pd.DataFrame(
             out, columns=[id_col, "ts_ms", "band_idx", "band", "is_first"]
         )
@@ -546,35 +538,31 @@ class NearDupEpochs:
 
     Usage::
 
-        ep = NearDupEpochs(spark, root, "doc_id", "text", "ts_ms")
-        ep.run_epoch(stream1, "e1")      # -> verdicts DataFrame
-        ep.run_epoch(stream2, "e2")      # e2 sees e1's claims
+        ep = NearDupEpochs(spark, root, "doc_id", "ts_ms")
+        ep.run_epoch(banded_docs(stream1, "doc_id", "text", "ts_ms"), "e1")
+        ep.run_epoch(banded_docs(stream2, "doc_id", "text", "ts_ms"), "e2")
         ep.survivors("e2")               # per-doc survival for epoch 2
 
-    Reference anchor: the reference persists cross-run dedup state as a
-    side file (alerts_state.json pattern, helpers.py:23-33); this is
-    that idea at corpus scale, with the side table doubling as the
-    state-compaction ledger."""
+    ``n_bands`` must match the banding's (survivors needs every band's
+    verdict). Reference anchor: the reference persists cross-run dedup
+    state as a side file (alerts_state.json pattern, helpers.py:23-33);
+    this is that idea at corpus scale, with the side table doubling as
+    the state-compaction ledger."""
 
     def __init__(
         self,
         spark,
         root_dir: str,
         id_col: str,
-        text_col: str,
         ts_col: str,
         watermark: str = "10 seconds",
-        n_hashes: int = 16,
         n_bands: int = 4,
-        k: int = 3,
-        bander=None,
     ):
         self.spark = spark
         self.root = root_dir.rstrip("/")
-        self.id_col, self.text_col, self.ts_col = id_col, text_col, ts_col
-        self.watermark = watermark
-        self.n_hashes, self.n_bands, self.k = n_hashes, n_bands, k
-        self.bander = bander  # see near_dup_band_verdicts_stream
+        self.id_col, self.ts_col = id_col, ts_col
+        self.watermark, self.n_bands = watermark, n_bands
+        self.claims_dir = f"{self.root}/claims"
         self.last_state_rows: list[int] | None = None
 
     def _verdicts_sink(self, name: str):
@@ -582,36 +570,37 @@ class NearDupEpochs:
 
         return ExactlyOnceParquetSink(f"{self.root}/verdicts/{name}")
 
-    def _claims_dir(self) -> str:
-        return f"{self.root}/claims"
-
     def claims(self) -> DataFrame | None:
         """Union of every prior epoch's claimed-band snapshot (None
-        before the first epoch)."""
+        before the first epoch, when the claims directory does not
+        exist yet). Any other read error raises: an unreadable ledger
+        must not turn into "no prior claims"."""
+        from pyspark.errors import AnalysisException
+
         try:
-            df = self.spark.read.parquet(self._claims_dir())
-        except Exception:
-            return None
+            df = self.spark.read.parquet(self.claims_dir)
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
         return df.select("band_idx", "band").dropDuplicates(
             ["band_idx", "band"]
         )
 
-    def run_epoch(self, stream: DataFrame, name: str, timeout_s: int = 300) -> DataFrame:
-        """Run one epoch: stream -> band verdicts (with all prior
-        claims pre-marked) -> exactly-once sink; then snapshot this epoch's
-        newly claimed bands into the claims ledger. Returns the epoch's
-        verdict DataFrame. ``last_state_rows`` records the state-store
-        row counts per micro-batch (observability: the bound that
-        compaction promises)."""
+    def run_epoch(self, banded: DataFrame, name: str, timeout_s: int = 300) -> DataFrame:
+        """Run one epoch: banded stream (id, ts, band_idx, band) ->
+        band verdicts (with all prior claims pre-marked) -> exactly-once
+        sink; then snapshot this epoch's newly claimed bands into the
+        claims ledger. Returns the epoch's verdict DataFrame.
+        ``last_state_rows`` records the state-store row counts per
+        micro-batch (observability: the bound that compaction
+        promises)."""
         import json
 
         from .streaming import start_exactly_once
 
         verdicts = near_dup_band_verdicts_stream(
-            stream, self.id_col, self.text_col, self.ts_col,
-            watermark=self.watermark, n_hashes=self.n_hashes,
-            n_bands=self.n_bands, k=self.k, claims=self.claims(),
-            bander=self.bander,
+            banded, self.id_col, self.ts_col, self.watermark, self.claims()
         )
         sink = self._verdicts_sink(name)
         q = start_exactly_once(verdicts, sink, f"{self.root}/ckpt/{name}")
@@ -628,7 +617,7 @@ class NearDupEpochs:
             claims_from_verdicts(out)
             .withColumn("epoch", F.lit(name))
             .write.mode("append")
-            .parquet(self._claims_dir())
+            .parquet(self.claims_dir)
         )
         return out
 
@@ -761,45 +750,25 @@ def simhash_near_pairs(
     sims: DataFrame, id_col: str, max_hamming: int = 3, bits: int = 32
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance, chunk-join pruned
-    (hamming <= 3 over 4 chunks -> some chunk equal, pigeonhole)."""
+    (hamming <= 3 over 4 chunks -> some chunk equal, pigeonhole):
+    :func:`bucket_pairs` on (chunk, value) carries ``simhash`` as its
+    payload (unique ids required, see there)."""
     n_chunks = 4
     chunk_bits = bits // n_chunks
+    mask = (1 << chunk_bits) - 1
+    chunk_vals = [
+        F.shiftright(F.col("simhash"), c * chunk_bits).bitwiseAND(mask)
+        for c in range(n_chunks)
+    ]
     chunks = sims.select(
         F.col(id_col).alias("id"),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("c"),
-                        F.shiftright(F.col("simhash"), c * chunk_bits)
-                        .bitwiseAND((1 << chunk_bits) - 1)
-                        .alias("v"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("ch"),
-    ).select("id", "simhash", F.col("ch.c").alias("c"), F.col("ch.v").alias("v"))
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
+        "simhash",
+        F.posexplode(F.array(*chunk_vals)).alias("c", "v"),
     )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        cand.withColumn("hamming", ham)
+        bucket_pairs(chunks)
+        .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -991,42 +960,26 @@ def embedding_near_pairs_lsh(
     """Embedding-cosine near-dup pairs at scale: random-hyperplane LSH
     buckets generate candidates, exact cosine verifies candidates only.
 
-    Plan shape: one posexplode to (table, signature) rows, a hash
-    EQUI-join on (t, sig) (id_a < id_b halves the pair space), distinct
-    pair dedup, then exact-cosine filter — no cross join anywhere, so
-    cost is sum over buckets of |bucket|^2, not N^2. Recall per true
+    Plan shape: :func:`similarity.hyperplane_bands` then
+    :func:`bucket_pairs` on (t, sig) (unique ids required, see there),
+    then exact-cosine filter — no cross join anywhere. Recall per true
     pair at cosine c is 1 - (1 - agree(c)^n_planes)^n_tables with
     agree(c) = 1 - acos(c)/pi; the defaults give > 0.98 recall at
     c = 0.8 and ~1 - 6e-7 at c = 0.99 (raise n_planes for bucket
     selectivity at corpus scale, n_tables for recall). Verification is
     exact, so precision is always 1.
     """
-    from . import similarity
     from .session import fan_out
+    from .similarity import hyperplane_bands
 
-    tables = [
-        similarity.hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)
-    ]
     # the bucket self-join and pair dedup carry ONLY ids (guide §2.3 —
     # the old groupBy(first(va), first(vb)) shuffled two dim-length
     # vectors per candidate row); vectors re-attach by id afterwards.
     # fan_out on the signature branch only (re-attach is a join input)
-    banded = fan_out(df, key=id_col).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(similarity._table_sigs(F.col(vec_col), tables)).alias(
-            "t", "sig"
-        ),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")),
+    cand = bucket_pairs(
+        hyperplane_bands(
+            fan_out(df, key=id_col), id_col, vec_col, dim, n_planes, n_tables, seed
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
     )
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))

@@ -330,7 +330,7 @@ def clip_signatures(
     The signature comes from the text MinHash's kernel
     (dedup.minhash_signer: md5 hex of ``"{i}:{value}"``, lexicographic
     min), with the landmark hash's decimal string as the value — so
-    dedup.lsh_bands consumes the signature unchanged. Clips with zero
+    dedup.explode_bands consumes the signature unchanged. Clips with zero
     landmarks are dropped (an empty fingerprint cannot claim a band).
     """
     out_schema = T.StructType(
@@ -368,20 +368,14 @@ def banded_clips(
     n_hashes: int = 16,
     n_bands: int = 4,
 ) -> DataFrame:
-    """(clip_id, event_ms, band_idx, band): the audio bander for the
-    generic near-dup suppressors (dedup.suppress_from_banded and the
-    streaming band-claim state op). dedup.lsh_bands runs over the
-    ALREADY-materialized signature column (the Python eval node is a
-    plan barrier), the same plan shape the text path uses to stay in
-    whole-stage codegen through the posexplode."""
-    sig = clip_signatures(clips, id_col, n_hashes)
-    return sig.select(
-        F.col("clip_id").alias(id_col),
-        "event_ms",
-        F.posexplode(
-            dedup.lsh_bands(F.col("sig"), n_bands, n_hashes // n_bands)
-        ).alias("band_idx", "band"),
-    )
+    """(clip_id, event_ms, band_idx, band): the audio banding for the
+    generic near-dup suppressors (dedup.suppress_from_banded and, on a
+    stream, dedup.near_dup_band_verdicts_stream). dedup.explode_bands
+    runs over the ALREADY-materialized signature column (the Python
+    eval node is a plan barrier), the same plan shape the text path
+    uses to stay in whole-stage codegen through the posexplode."""
+    sig = clip_signatures(clips, id_col, n_hashes).toDF(id_col, "event_ms", "_sig")
+    return dedup.explode_bands(sig, [id_col, "event_ms"], n_hashes, n_bands)
 
 
 def near_dup_clips_batch(
@@ -398,23 +392,3 @@ def near_dup_clips_batch(
     banded = banded_clips(clips, id_col, n_hashes, n_bands)
     return dedup.suppress_from_banded(clips, banded, id_col, "event_ms")
 
-
-def near_dup_clips_stream(
-    stream: DataFrame,
-    id_col: str = "clip_id",
-    watermark: str = "10 seconds",
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    claims: DataFrame | None = None,
-) -> DataFrame:
-    """Streaming twin of near_dup_clips_batch: the audio bander plugged
-    into the generic band-claim stateful suppressor (watermark-ordered
-    release, strict t < wm, epoch claims compaction — see
-    dedup.near_dup_band_verdicts_stream). Collapse per-clip with
-    dedup.collapse_band_verdicts(..., n_bands)."""
-    return dedup.near_dup_band_verdicts_stream(
-        stream, id_col, None, "event_ms",
-        watermark=watermark, n_hashes=n_hashes, n_bands=n_bands,
-        claims=claims,
-        bander=lambda s: banded_clips(s, id_col, n_hashes, n_bands),
-    )

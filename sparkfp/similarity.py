@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import cosine, cosine_arrow  # noqa: F401 (cosine kept for the HOF twin contract)
+from .dedup import cosine_arrow
 
 
 def brute_force_topk(
@@ -48,12 +48,20 @@ def brute_force_topk(
     c = fan_out(corpus, key=id_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        # cosine_arrow == cosine bit-for-bit (see dedup.cosine_arrow);
-        # the HOF form is interpreted per element and cost 3.7 s for
-        # the 200k-pair ann_topk at sf1.0 vs ~0.4 s Arrow-batched
-        .withColumn("cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6))
+    return _rerank_topk(
+        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")), k
+    )
+
+
+def _rerank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The one exact re-rank of the top-k paths: candidate (query_id,
+    qv, neighbor_id, cv) rows -> (query_id, neighbor_id, cos, rank),
+    the k best per query by cosine rounded to 6 places, ties to the
+    lower neighbor id. cosine_arrow == dedup.cosine bit-for-bit; the
+    HOF form is interpreted per element and cost 3.7 s for the
+    200k-pair ann_topk at sf1.0 vs ~0.4 s Arrow-batched."""
+    scored = cand.withColumn(
+        "cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6)
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -68,12 +76,23 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def _table_sigs(vec: Column, tables: list[np.ndarray]) -> Column:
-    """array<long>: one sign-bit signature per hash table (bit p of
-    sigs[t] set where dot(vec, plane_{t,p}) > 0).
+def hyperplane_bands(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+) -> DataFrame:
+    """The one random-hyperplane banding (LSH top-k and embedding
+    near-dup pairs): (id, t, sig) rows, one per hash table t, where bit
+    p of sig is set iff dot(vec, plane_{t,p}) > 0 (table t's planes are
+    ``hyperplanes(dim, n_planes, seed + t)``). Callers fan out batch
+    inputs themselves.
 
-    Computed as ONE Arrow-batched matmul over all tables' planes: a
-    Column-expression formulation (n_tables * n_planes nested
+    The signatures are ONE Arrow-batched matmul over all tables'
+    planes: a Column-expression formulation (n_tables * n_planes nested
     fold-aggregates) blows past Catalyst's codegen limits and falls
     back to interpreted eval, ~100x slower per row — the matmul is the
     scale path. Sign bits agree with any sequential-sum evaluation
@@ -82,9 +101,9 @@ def _table_sigs(vec: Column, tables: list[np.ndarray]) -> Column:
     """
     from pyspark.sql.functions import pandas_udf
 
-    stacked = np.vstack(tables)  # (n_tables * n_planes, dim)
-    n_tables = len(tables)
-    n_planes = tables[0].shape[0]
+    stacked = np.vstack(
+        [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    )  # (n_tables * n_planes, dim)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @pandas_udf("array<long>")
@@ -95,7 +114,9 @@ def _table_sigs(vec: Column, tables: list[np.ndarray]) -> Column:
         out = per_table @ weights  # (n, n_tables) int64
         return pd.Series(list(out))
 
-    return sigs(vec)
+    return df.select(
+        F.col(id_col), F.posexplode(sigs(F.col(vec_col))).alias("t", "sig")
+    )
 
 
 def lsh_candidates(
@@ -127,7 +148,7 @@ def lsh_candidates(
     from .session import fan_out
 
     query_id_col = query_id_col or id_col
-    tables = [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    lsh = (dim, n_planes, n_tables, seed)
     # candidate generation carries ONLY ids through the dedup shuffle:
     # the old groupBy(first(qv), first(cv)) shuffled two dim-length
     # vectors per candidate row (~64x the bytes of the id pair, guide
@@ -135,13 +156,11 @@ def lsh_candidates(
     # afterwards by id — same rows, same vectors, cheaper exchange.
     # fan_out applies to the signature branch only: the re-attach
     # branches are joined (often broadcast) and need no pre-shuffle.
-    c = fan_out(corpus, key=id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode(_table_sigs(F.col(vec_col), tables)).alias("t", "sig"),
+    c = hyperplane_bands(fan_out(corpus, key=id_col), id_col, vec_col, *lsh).toDF(
+        "neighbor_id", "t", "sig"
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.posexplode(_table_sigs(F.col(vec_col), tables)).alias("t", "sig"),
+    q = hyperplane_bands(queries, query_id_col, vec_col, *lsh).toDF(
+        "query_id", "t", "sig"
     )
     pairs = (
         c.join(F.broadcast(q), ["t", "sig"])
@@ -223,15 +242,7 @@ def ivf_topk(
     cand = c.join(F.broadcast(q), "list_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = cand.withColumn(
-        "cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rerank_topk(cand, k)
 
 
 def lsh_topk(
@@ -255,12 +266,4 @@ def lsh_topk(
         corpus, queries, id_col, vec_col, dim,
         n_planes=n_planes, n_tables=n_tables, seed=seed,
     )
-    scored = cand.withColumn(
-        "cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rerank_topk(cand, k)

@@ -256,9 +256,17 @@ def test_lsh_topk_high_recall(spark):
     assert hits / 15 >= 0.6
 
 
-def test_lsh_plans_have_no_nested_loop_join(spark):
-    """The LSH candidate join must be a hash/sort-merge EQUI-join on
-    (table, signature) — an OR-of-equalities condition degenerates to
+@pytest.mark.parametrize(
+    "path",
+    [
+        "lsh_topk", "embedding_near_pairs_lsh", "minhash_lsh_candidates",
+        "simhash_near_pairs",
+    ],
+)
+def test_lsh_plans_have_no_nested_loop_join(spark, docs, path):
+    """The LSH candidate join must be a hash/sort-merge EQUI-join on its
+    bucket key — (table, signature), (band_idx, band) or (chunk,
+    value); an OR-of-equalities condition degenerates to
     BroadcastNestedLoopJoin (per-pair predicate eval), defeating the
     bucketing entirely."""
     rng = np.random.Generator(np.random.Philox(key=[3, 0]))
@@ -266,15 +274,47 @@ def test_lsh_plans_have_no_nested_loop_join(spark):
     df = spark.createDataFrame(
         [(i, V[i].tolist()) for i in range(50)], "id long, v array<double>"
     )
-    topk_plan = similarity.lsh_topk(
-        df, df.filter("id < 3"), "id", "v", dim=8, k=3
-    )._jdf.queryExecution().executedPlan().toString()
-    pairs_plan = dedup.embedding_near_pairs_lsh(
-        df, "id", "v", dim=8, threshold=0.9
-    )._jdf.queryExecution().executedPlan().toString()
-    for plan in (topk_plan, pairs_plan):
-        assert "BroadcastNestedLoop" not in plan
-        assert "Cartesian" not in plan
+    text_df = docs[0]
+    build = {
+        "lsh_topk": lambda: similarity.lsh_topk(
+            df, df.filter("id < 3"), "id", "v", dim=8, k=3
+        ),
+        "embedding_near_pairs_lsh": lambda: dedup.embedding_near_pairs_lsh(
+            df, "id", "v", dim=8, threshold=0.9
+        ),
+        "minhash_lsh_candidates": lambda: dedup.minhash_lsh_candidates(
+            text_df, "doc_id", "text"
+        ),
+        "simhash_near_pairs": lambda: dedup.simhash_near_pairs(
+            dedup.simhash(text_df, "doc_id", "text"), "doc_id"
+        ),
+    }[path]
+    plan = build()._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoop" not in plan
+    assert "Cartesian" not in plan
+
+
+def test_bucket_pairs_once_per_pair_with_payload(spark):
+    """dedup.bucket_pairs on a hand-built table: a pair sharing two
+    buckets comes out once, payload columns come back as <name>_a /
+    <name>_b, and there are no self pairs and no reversed pairs."""
+    rows = spark.createDataFrame(
+        [
+            ("x", 10, 0, "k1"),
+            ("y", 20, 0, "k1"),  # x, y share bucket (0, k1) ...
+            ("x", 10, 1, "k2"),
+            ("y", 20, 1, "k2"),  # ... and (1, k2)
+            ("z", 30, 1, "k2"),  # z shares (1, k2) with x and y
+            ("z", 30, 0, "k2"),  # key2 seen under another key1: no pair
+            ("w", 40, 1, "k9"),  # alone in its bucket
+        ],
+        "id string, payload long, t int, key string",
+    )
+    got = dedup.bucket_pairs(rows)
+    assert got.columns == ["id_a", "id_b", "payload_a", "payload_b"]
+    assert sorted(map(tuple, got.collect())) == [
+        ("x", "y", 10, 20), ("x", "z", 10, 30), ("y", "z", 20, 30),
+    ]
 
 
 def test_embedding_near_pairs_lsh_equals_brute_on_planted_dups(spark):

@@ -390,7 +390,9 @@ def test_near_dup_clips_batch_and_stream_agree(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(src)
         time.sleep(0.05)
     stream = streaming.read_clip_stream(spark, src)
-    verdicts = matching.near_dup_clips_stream(stream, watermark="20 hours")
+    verdicts = dedup.near_dup_band_verdicts_stream(
+        matching.banded_clips(stream), "clip_id", "event_ms", watermark="20 hours"
+    )
     sink = ExactlyOnceParquetSink(sink_dir)
 
     def emit(batch_df, batch_id):
@@ -429,9 +431,7 @@ def test_near_dup_clips_epochs_cross_epoch_claims(spark, tmp_path):
         )
 
     epochs = dedup.NearDupEpochs(
-        spark, str(tmp_path / "root"), "clip_id", None, "event_ms",
-        watermark="2 hours",
-        bander=lambda s: matching.banded_clips(s, "clip_id"),
+        spark, str(tmp_path / "root"), "clip_id", "event_ms", watermark="2 hours"
     )
 
     def feed(name, rows):
@@ -440,7 +440,7 @@ def test_near_dup_clips_epochs_cross_epoch_claims(spark, tmp_path):
             spark.createDataFrame([row], schema.CLIP).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
-        return streaming.read_clip_stream(spark, src)
+        return matching.banded_clips(streaming.read_clip_stream(spark, src))
 
     v1 = epochs.run_epoch(
         feed("e1", [

@@ -305,7 +305,8 @@ def test_near_dup_suppress_stream_equals_batch_equals_oracle(spark, tmp_path):
         spark, src, "doc_id string, ts_ms long, text string"
     )
     verdicts = dedup.near_dup_band_verdicts_stream(
-        stream, "doc_id", "text", "ts_ms", watermark="2 hours"
+        dedup.banded_docs(stream, "doc_id", "text", "ts_ms"), "doc_id", "ts_ms",
+        watermark="2 hours",
     )
     sink = ExactlyOnceParquetSink(sink_dir)
 
@@ -439,8 +440,8 @@ def test_near_dup_claims_compaction_bounds_state(spark, tmp_path):
             spark, src, "doc_id string, ts_ms long, text string"
         )
         verdicts = dedup.near_dup_band_verdicts_stream(
-            stream, "doc_id", "text", "ts_ms", watermark="2 hours",
-            claims=claims,
+            dedup.banded_docs(stream, "doc_id", "text", "ts_ms"), "doc_id",
+            "ts_ms", watermark="2 hours", claims=claims,
         )
         sink = ExactlyOnceParquetSink(out)
         q = streaming.start_exactly_once(verdicts, sink, ckpt)
@@ -531,8 +532,7 @@ def test_near_dup_epochs_three_epoch_lifecycle(spark, tmp_path):
     }
 
     ep = dedup.NearDupEpochs(
-        spark, str(tmp_path / "root"), "doc_id", "text", "ts_ms",
-        watermark="2 hours",
+        spark, str(tmp_path / "root"), "doc_id", "ts_ms", watermark="2 hours"
     )
     surv = {}
     for name, rows in epochs.items():
@@ -543,7 +543,7 @@ def test_near_dup_epochs_three_epoch_lifecycle(spark, tmp_path):
             ).parquet(src)
         stream = streaming.read_parquet_stream(spark, src, schema)
         prior_claims = ep.claims()
-        ep.run_epoch(stream, name)
+        ep.run_epoch(dedup.banded_docs(stream, "doc_id", "text", "ts_ms"), name)
         surv[name] = {
             r.doc_id
             for r in ep.survivors(name).collect()
@@ -575,6 +575,22 @@ def test_near_dup_epochs_three_epoch_lifecycle(spark, tmp_path):
         r.doc_id for r in batch.collect() if not r.doc_id.startswith("zf")
     }
     assert got_batch == surv["e1"] | surv["e2"] | surv["e3"]
+
+
+def test_near_dup_epochs_claims_read_error_raises(spark, tmp_path):
+    """NearDupEpochs.claims(): no claims directory means no prior
+    claims (None), but an unreadable claims ledger must raise — read
+    as "no claims", the next epoch would let earlier re-encodes
+    survive without any error."""
+    from sparkfp import dedup
+
+    ep = dedup.NearDupEpochs(spark, str(tmp_path / "root"), "doc_id", "ts_ms")
+    assert ep.claims() is None
+    claims_dir = tmp_path / "root" / "claims"
+    claims_dir.mkdir(parents=True)
+    (claims_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER|not a Parquet file"):
+        ep.claims()
 
 
 # ------------------------------------------ exactly-once under injected crashes
