@@ -1936,8 +1936,8 @@ def q_media_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode->feature plumbing over mixed media: audio blobs
     decode for real (pcm/alaw/wav plus IMA ADPCM and MPEG-1 Layer I
-    — sparkfp/mpeg_audio.py, the lossy frame codec —, block-lockstep
-    vectorized); BMP, PNG, GIF (LZW, sequential + interlaced,
+    — sparkfp/mpeg_audio.py, the lossy frame codec —, vectorized
+    across blocks and frames); BMP, PNG, GIF (LZW, sequential + interlaced,
     sparkfp/gif.py), JPEG (baseline 4:4:4 and 4:2:0 plus progressive
     SOF2), and MJPEG *video* (AVI container + raw concatenated stream,
     sparkfp/video.py) all decode for REAL,

@@ -36,6 +36,24 @@ class UnsupportedCodec(NotImplementedError):
     """
 
 
+def be_words(buf: bytes, nbytes: int, pad: int) -> np.ndarray:
+    """The big-endian ``nbytes``-byte word at every byte offset of
+    ``buf`` followed by ``pad`` zero bytes, as int64: one entry per
+    offset whose word is complete. The field of ``w`` bits at bit ``s``
+    is then one gather and two shifts,
+    ``(words[s >> 3] >> (8 * nbytes - (s & 7) - w)) & ((1 << w) - 1)``,
+    for any ``w <= 8 * nbytes - 7``. Bounds rule: ``pad`` must reach one
+    full word past the last byte offset a caller may gather from, so
+    ``pad >= nbytes`` covers every read that starts inside ``buf`` or
+    exactly at its end (the MPEG-1 and FLAC bit readers)."""
+    b = np.frombuffer(buf + bytes(pad), dtype=np.uint8).astype(np.int64)
+    n = len(b) - nbytes + 1
+    words = b[:n]
+    for i in range(1, nbytes):
+        words = (words << 8) | b[i:n + i]
+    return words
+
+
 def encode(pcm: np.ndarray, codec: str, sr_hz: int = 8000) -> bytes:
     """float32 [-1,1] -> bytes under the named codec."""
     if codec == "pcm_s16le":
@@ -350,14 +368,16 @@ def encode_wav_variant(
 #
 # 4-bit adaptive-delta coding, the classic telephony/game format: each
 # 256-byte block is an independent chain (4-byte header = seed
-# predictor + step index, then 504 nibbles), so the engine vectorizes
-# ACROSS blocks — numpy arrays hold every block's predictor/step state
-# and the only Python loop is the 504 in-block positions, exactly the
-# lockstep trick a 10^12-clip cluster run needs (per-clip nibble loops
-# would be the slow path). The quantizer tables below are the spec
-# contract (IMA ADPCM reference algorithm); the oracle restates them
-# independently. Reference parity anchor: the reference treats codecs
-# as an opaque decode boundary (src/flink_job/serialization.py:14-20).
+# predictor + step index, then 504 nibbles). Both state updates of the
+# chain are clamped adds, x -> min(max(x + a, lo), hi), and those
+# compose in closed form, so the decoder runs each one as a prefix
+# scan over every block at once (``_clamp_scan``): no per-nibble or
+# per-position Python loop. The encoder steps across blocks in
+# lockstep (its code choice depends on the running predictor). The
+# quantizer tables below are the spec contract (IMA ADPCM reference
+# algorithm); the oracle restates them independently. Reference parity
+# anchor: the reference treats codecs as an opaque decode boundary
+# (src/flink_job/serialization.py:14-20).
 
 _IMA_STEPS = np.array([
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
@@ -373,17 +393,24 @@ _IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32)
 _ADPCM_BLOCK = 256  # bytes/block: 4 header + 252 data -> 505 samples
 
 
-def _adpcm_reconstruct(pred, idx, code):
-    """One IMA step for a vector of blocks: dequantize `code` against
-    each block's current step, update predictor + step index."""
-    step = _IMA_STEPS[idx]
+def _ima_delta(step, code):
+    """Signed predictor change of IMA `code` at quantizer `step`."""
     diffq = (
         (step >> 3)
         + np.where(code & 4, step, 0)
         + np.where(code & 2, step >> 1, 0)
         + np.where(code & 1, step >> 2, 0)
     )
-    pred = np.clip(pred + np.where(code & 8, -diffq, diffq), -32768, 32767)
+    return np.where(code & 8, -diffq, diffq)
+
+
+_IMA_DELTA_MAX = int(_ima_delta(_IMA_STEPS[88], 7))  # 61,436
+
+
+def _adpcm_reconstruct(pred, idx, code):
+    """One IMA step for a vector of blocks: dequantize `code` against
+    each block's current step, update predictor + step index."""
+    pred = np.clip(pred + _ima_delta(_IMA_STEPS[idx], code), -32768, 32767)
     idx = np.clip(idx + _IMA_INDEX[code & 7], 0, 88)
     return pred, idx
 
@@ -452,6 +479,30 @@ def _encode_adpcm_wav(s16: np.ndarray, sr_hz: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _clamp_scan(a: np.ndarray, lo: int, hi: int):
+    """Prefix compositions, along axis 1, of the steps
+    x -> min(max(x + a[:, t], lo), hi): returns (A, LO, HI) such that
+    step t after ... after step 0 is x -> min(max(x + A, LO), HI) at
+    column t. Two such maps compose in closed form,
+
+        (a2, l2, h2) after (a1, l1, h1)
+            = (a1 + a2, min(max(l1 + a2, l2), h2), max(min(h1 + a2, h2), l2)),
+
+    so log2(n) Hillis-Steele doubling rounds replace the n-step loop.
+    Exact integer arithmetic while the sums of `a` fit its dtype."""
+    acc, low, high = a.copy(), np.full_like(a, lo), np.full_like(a, hi)
+    shift = 1
+    while shift < a.shape[1]:
+        a2, l2, h2 = acc[:, shift:], low[:, shift:], high[:, shift:]
+        new_low = np.minimum(np.maximum(low[:, :-shift] + a2, l2), h2)
+        new_high = np.maximum(np.minimum(high[:, :-shift] + a2, h2), l2)
+        acc[:, shift:] = acc[:, :-shift] + a2
+        low[:, shift:] = new_low
+        high[:, shift:] = new_high
+        shift *= 2
+    return acc, low, high
+
+
 def _decode_adpcm_blocks(
     data: bytes, block_align: int, fact: int | None
 ) -> np.ndarray:
@@ -471,15 +522,25 @@ def _decode_adpcm_blocks(
     idx = blk[:, 2].astype(np.int32)
     if (idx > 88).any():
         raise ValueError("IMA ADPCM step index out of range")
-    nib = blk[:, 4:].astype(np.int32)
-    codes = np.empty((n_blocks, (block_align - 4) * 2), dtype=np.int32)
+    n_codes = (block_align - 4) * 2
+    # the predictor scan's sums reach n_codes * _IMA_DELTA_MAX
+    dtype = np.int32 if n_codes * _IMA_DELTA_MAX + 32768 < 2**31 else np.int64
+    nib = blk[:, 4:].astype(dtype)
+    codes = np.empty((n_blocks, n_codes), dtype=dtype)
     codes[:, 0::2] = nib & 0xF
     codes[:, 1::2] = nib >> 4
-    out = np.empty((n_blocks, codes.shape[1] + 1), dtype=np.int32)
+    # step index before each code: the scan's output one code behind
+    a, lo, hi = _clamp_scan(_IMA_INDEX.astype(dtype)[codes & 7], 0, 88)
+    idx_at = np.empty_like(codes)
+    idx_at[:, 0] = idx
+    np.minimum(np.maximum(idx[:, None] + a[:, :-1], lo[:, :-1]), hi[:, :-1],
+               out=idx_at[:, 1:])
+    a, lo, hi = _clamp_scan(
+        _ima_delta(_IMA_STEPS[idx_at], codes).astype(dtype), -32768, 32767
+    )
+    out = np.empty((n_blocks, n_codes + 1), dtype=dtype)
     out[:, 0] = pred
-    for t in range(codes.shape[1]):
-        pred, idx = _adpcm_reconstruct(pred, idx, codes[:, t])
-        out[:, t + 1] = pred
+    np.minimum(np.maximum(pred[:, None] + a, lo), hi, out=out[:, 1:])
     flat = out.reshape(-1)
     if fact is not None:
         flat = flat[:fact]

@@ -895,6 +895,11 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     A null, empty or unequal-length vector pair yields null for that
     row (as the HOF form does for null input), never a task failure.
     """
+    return _cosine_udf()(a, b)
+
+
+def _cosine_udf():
+    """The pandas UDF behind :func:`cosine_arrow`."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -926,7 +931,28 @@ def cosine_arrow(a: Column, b: Column) -> Column:
             out[idx] /= na * nb
         return pd.Series(out)
 
-    return cos(a, b)
+    return cos
+
+
+def _verified_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, va, vb) candidate pairs -> (id_a, id_b, cos) where
+    the exact cosine is >= ``threshold``, rounded to 6 places.
+
+    The cosine UDF is marked nondeterministic so that the optimizer
+    keeps the threshold filter above the one projection that evaluates
+    it: a deterministic UDF is inlined into the pushed-down filter too,
+    and the plan evaluates it twice per pair (two ArrowEvalPython
+    nodes, one below and one above the Filter). Its values are the
+    same, but the flag has a wider effect: no filter placed on this
+    function's output, on any column (``id_a`` too), is pushed below
+    the cosine projection, so a caller that narrows the pairs should
+    filter ``pairs`` before calling this."""
+    cos = _cosine_udf().asNondeterministic()(F.col("va"), F.col("vb"))
+    return (
+        pairs.withColumn("cos", cos)
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
+    )
 
 
 def embedding_near_pairs(
@@ -939,12 +965,7 @@ def embedding_near_pairs(
     full pair space."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine_arrow(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
+    return _verified_pairs(a.join(b, F.col("id_a") < F.col("id_b")), threshold)
 
 
 def embedding_near_pairs_lsh(
@@ -983,10 +1004,4 @@ def embedding_near_pairs_lsh(
     )
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", cosine_arrow(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
+    return _verified_pairs(cand.join(va, "id_a").join(vb, "id_b"), threshold)

@@ -60,10 +60,11 @@ residual is one ``np.diff`` call.
 from __future__ import annotations
 
 import hashlib
+import math
 
 import numpy as np
 
-from .codec import UnsupportedCodec
+from .codec import UnsupportedCodec, be_words
 
 _MAGIC = b"fLaC"
 _SYNC = 0b11111111111110
@@ -371,6 +372,11 @@ class _BitReader:
         self.data = data  # same stream as bytes, for CRC slices
         self.pos = 0
         self.ones = np.flatnonzero(bits.view(np.bool_))
+        # the 40-bit big-endian word at every byte offset, one past the
+        # end included (a k = 0 partition ending on the stream's last
+        # bit gathers there): any field of up to 33 bits is one gather
+        # and two shifts (Rice remainders)
+        self.words = be_words(data, 5, 5)
 
     def read(self, width: int) -> int:
         end = self.pos + width
@@ -411,26 +417,55 @@ def _rice_decode(rd: _BitReader, count: int, k: int) -> np.ndarray:
     """Vectorized Rice decode via binary lifting. Each field is
     (unary q zeros, a 1, k remainder bits), so a field's terminator is
     the first one at or after its start, and the next field starts
-    1 + k bits after that terminator. Over the stream's ones that is
-    the map g(a) = the first one at or after ones[a] + 1 + k, read off
-    a running count of ones for every candidate terminator at once.
-    Square g O(log count) times (pointer doubling) and materialize all
-    `count` terminators with O(log count) gathers — exact, no
-    speculation. Quotients, remainders, and the zigzag unmap are then
-    plain array ops."""
+    1 + k bits after that terminator. Over a window of the stream's
+    next ones that is the map g(a) = the first one at or after
+    ones[a] + 1 + k, read off a running count of ones for every
+    candidate terminator at once. Square g O(log count) times (pointer
+    doubling) and materialize all `count` terminators with O(log count)
+    gathers. Quotients, remainders (one gather from the reader's 40-bit
+    words), and the zigzag unmap are then plain array ops.
+
+    The partition consumes exactly `count` terminator ones and at most
+    count*k remainder bits, each possibly a one, so its terminators are
+    among the next count*(k+1) ones. Remainder bits are about half
+    ones, so a window of count*(1 + k/2) ones plus a margin is tried
+    first: if the path never leaves the window, every jump on it was
+    exact; if it does, the full window decides."""
     if count == 0:
         return np.zeros(0, dtype=np.int64)
     if count < 32:
         return _rice_decode_scalar(rd, count, k)
+    base = int(np.searchsorted(rd.ones, rd.pos))
+    full = count * (k + 1)
+    window = count + count * k // 2 + 2 * math.isqrt(count * k) + 32
+    t = None
+    if window < full and base + window < len(rd.ones):
+        t = _rice_terminators(rd, base, window, count, k)
+    if t is None:
+        t = _rice_terminators(rd, base, full, count, k)
+    if t is None or int(t[-1]) + 1 + k > len(rd.bits):
+        raise ValueError("flac truncated rice partition")
+    starts = np.empty(count, dtype=np.int64)
+    starts[0] = rd.pos
+    starts[1:] = t[:-1] + (1 + k)
+    rem = t + 1  # each field's first remainder bit
+    rem = (rd.words[rem >> 3] >> (40 - (rem & 7) - k)) & ((1 << k) - 1)
+    u = ((t - starts) << k) | rem
+    rd.pos = int(t[-1]) + 1 + k
+    return np.where(u & 1, -((u + 1) >> 1), u >> 1)
+
+
+def _rice_terminators(
+    rd: _BitReader, base: int, window: int, count: int, k: int
+) -> np.ndarray | None:
+    """The `count` terminator positions of the partition at rd.pos,
+    searched among the `window` ones from rd.ones[base] on; None when
+    the path runs past the window's last one."""
     bits, p0 = rd.bits, rd.pos
-    base = int(np.searchsorted(rd.ones, p0))
-    # the partition consumes exactly `count` terminator ones and at
-    # most count*k remainder bits (each possibly a one), so its
-    # terminators are among the next count*(k+1) ones of the stream
-    cand = rd.ones[base:base + count * (k + 1)]
+    cand = rd.ones[base:base + window]
     n = len(cand)
     if n == 0:
-        raise ValueError("flac truncated rice partition")
+        return None
     # g over candidate indices, from a running count of ones over the
     # window; index n (no further candidate) is absorbing
     w = min(int(cand[-1]) + 1 + k, len(bits)) - p0
@@ -448,22 +483,8 @@ def _rice_decode(rd: _BitReader, count: int, k: int) -> np.ndarray:
         jump = jump[jump]
     seq = seq[:count]
     if int(seq[-1]) >= n:
-        raise ValueError("flac truncated rice partition")
-    t = cand[seq]
-    if int(t[-1]) + 1 + k > len(bits):
-        raise ValueError("flac truncated rice partition")
-    starts = np.empty(count, dtype=np.int64)
-    starts[0] = p0
-    starts[1:] = t[:-1] + (1 + k)
-    u = (t - starts).astype(np.uint64) << np.uint64(k)
-    if k:
-        rem = bits[(t + 1)[:, None] + np.arange(k)].astype(np.int64)
-        u |= (rem @ (1 << np.arange(k - 1, -1, -1, dtype=np.int64))).astype(
-            np.uint64
-        )
-    rd.pos = int(t[-1]) + 1 + k
-    ui = u.astype(np.int64)
-    return np.where(ui & 1, -((ui + 1) >> 1), ui >> 1)
+        return None
+    return cand[seq]
 
 
 def _rice_decode_scalar(rd: _BitReader, count: int, k: int) -> np.ndarray:

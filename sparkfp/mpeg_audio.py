@@ -59,7 +59,7 @@ from typing import NamedTuple
 
 import numpy as np
 
-from .codec import UnsupportedCodec
+from .codec import UnsupportedCodec, be_words
 
 _M = 32          # subbands
 _TAPS = 512      # prototype length
@@ -133,13 +133,11 @@ def _analyze(x: np.ndarray, analysis: np.ndarray, n_granules: int) -> np.ndarray
 def _synthesize(sub: np.ndarray, synthesis: np.ndarray) -> np.ndarray:
     """(T, 32) subband samples -> PCM of length 32*T (delay included)."""
     n_granules = sub.shape[0]
-    contrib = sub @ synthesis  # (T, 512)
-    y = np.zeros(_M * n_granules + _TAPS)
+    contrib = (sub @ synthesis).reshape(n_granules, _TAPS // _M, _M)
+    y = np.zeros((n_granules + _TAPS // _M, _M))  # PCM in rows of 32
     for j in range(_TAPS // _M):  # 16 overlap-add shifts, vectorized inside
-        y[_M * j: _M * j + _M * n_granules] += (
-            contrib[:, _M * j: _M * (j + 1)].ravel()
-        )
-    return y[: _M * n_granules]
+        y[j: j + n_granules] += contrib[:, j, :]
+    return y.reshape(-1)[: _M * n_granules]
 
 
 _ANALYSIS, _SYNTHESIS, _FB_GAIN = _filterbank()
@@ -154,20 +152,19 @@ def _bits_of(vals: np.ndarray, width: int) -> np.ndarray:
     return ((vals[:, None].astype(np.uint64) >> shifts) & 1).astype(np.uint8)
 
 
-def _payload_bytes(bits: np.ndarray) -> np.ndarray:
-    """Unpacked payload bits -> its bytes as int64, zero-padded by three
-    bytes so that ``_fields`` may read a little past the last field."""
-    return np.concatenate([np.packbits(bits), np.zeros(3, np.uint8)]).astype(np.int64)
+# Zero bytes after the stream (``be_words`` pad): the widest read past a
+# payload's end (mp2's whole allocation field, read before it is known
+# to fit: at most 16 CRC + 94 allocation bits, so byte offsets up to 13
+# past the end) still gathers one full 3-byte word.
+_PAD = 16
 
 
-def _fields(data: np.ndarray, starts, widths) -> np.ndarray:
+def _fields(words: np.ndarray, starts, widths) -> np.ndarray:
     """MSB-first unsigned fields of at most 16 bits at any bit offsets
     (``starts`` and ``widths`` broadcast; width 0 reads 0) from
-    ``_payload_bytes`` output: three byte gathers per field, however
-    many fields a frame has. Callers check the fields fit the payload."""
-    b = starts >> 3
-    word = (data[b] << 16) | (data[b + 1] << 8) | data[b + 2]
-    return (word >> (24 - (starts & 7) - widths)) & ((1 << widths) - 1)
+    ``be_words(raw, 3, _PAD)`` output: one gather per field, however
+    many fields a clip has. Callers check the fields fit their payload."""
+    return (words[starts >> 3] >> (24 - (starts & 7) - widths)) & ((1 << widths) - 1)
 
 
 # ------------------------------------------------------------ encode
@@ -355,72 +352,128 @@ def _parse_header(raw: bytes, pos: int, layer: str) -> dict:
     }
 
 
-def _decode_stream(raw: bytes, layer: str, decode_frame) -> tuple[np.ndarray, int]:
-    """The frame walk both decoders share: sync each header, hold the
-    sample rate, unpack each payload into ``decode_frame(bits, hdr)``,
-    synthesize and drop the 481-sample filterbank delay."""
+class _Prefix:
+    """The frames ``[0, n)`` of a whole-clip payload parse that have no
+    fault yet. Checks run in bitstream order, each over every frame
+    still in the prefix; one that fails first at frame i ends the prefix
+    there and records ``(i, message)``. Each frame's fault is so its
+    first failing check, and the fault left at the end is the lowest
+    faulty frame's: what a frame-by-frame decode raises first."""
+
+    def __init__(self, n: int) -> None:
+        self.n, self.fault = n, None
+
+    def check(self, bad: np.ndarray, msg, *arrays: np.ndarray) -> list[np.ndarray]:
+        """``bad`` (one flag per prefix frame) -> ``arrays`` (one row
+        per prefix frame) cut to the new prefix; ``msg`` is the fault
+        text, or a function of the frame giving it."""
+        if bad.any():
+            i = int(np.argmax(bad))
+            self.n, self.fault = i, (i, msg(i) if callable(msg) else msg)
+        return [a[: self.n] for a in arrays]
+
+
+def _decode_stream(raw: bytes, layer: str) -> tuple[np.ndarray, int]:
+    """The decode both layers share. Walk the headers (sync, sample
+    rate held, body complete), then parse the payloads of all the
+    complete frames at once, each field kind in one ``_fields`` call
+    (``_parse_l1``; ``_parse_l2`` once per allocation table in use),
+    synthesize and drop the 481-sample filterbank delay.
+
+    Faults come out as a frame-by-frame decode raises them: the walk
+    stops at frame j's header, sample-rate or truncated-body fault,
+    which is raised only if no frame before j has a payload fault; of
+    those, the lowest frame's first fault in bitstream order wins."""
     if len(raw) < 4:
         raise ValueError(f"{layer} stream shorter than one frame header")
-    pos, sr = 0, None
-    frames = []
-    while pos < len(raw):
-        hdr = _parse_header(raw, pos, layer)
-        if sr is None:
-            sr = hdr["sr"]
-        elif hdr["sr"] != sr:
-            raise ValueError(f"{layer} sample rate changes mid-stream")
-        if pos + hdr["frame_bytes"] > len(raw):
-            raise ValueError(f"truncated {layer} frame body")
-        payload = np.unpackbits(
-            np.frombuffer(raw[pos + 4: pos + hdr["frame_bytes"]], dtype=np.uint8)
-        )
-        frames.append(decode_frame(payload, hdr))
-        pos += hdr["frame_bytes"]
-    sub = np.concatenate(frames, axis=0)
-    y = _synthesize(sub, _SYNTHESIS)
+    pos, sr, walk_fault = 0, None, None
+    starts, sizes, crc, kbps = [], [], [], []
+    try:
+        while pos < len(raw):
+            hdr = _parse_header(raw, pos, layer)
+            if sr is None:
+                sr = hdr["sr"]
+            elif hdr["sr"] != sr:
+                raise ValueError(f"{layer} sample rate changes mid-stream")
+            if pos + hdr["frame_bytes"] > len(raw):
+                raise ValueError(f"truncated {layer} frame body")
+            starts.append(pos)
+            sizes.append(hdr["frame_bytes"])
+            crc.append(hdr["crc"])
+            kbps.append(hdr["kbps"])
+            pos += hdr["frame_bytes"]
+    except (ValueError, UnsupportedCodec) as e:
+        walk_fault = e
+    if starts:
+        words = be_words(raw, 3, _PAD)
+        base = 8 * (np.array(starts) + 4)   # payload bit offsets
+        nbits = 8 * (np.array(sizes) - 4)
+        crc = np.array(crc)
+        # Layer II frames pick their table by bitrate; Layer I has one
+        keys = np.array(kbps) if layer == "mp2" else np.zeros(len(starts), int)
+        sub = np.empty((len(starts), _LAYERS[layer].granules, _M))
+        fault = None
+        for key in np.unique(keys):
+            idx = np.flatnonzero(keys == key)
+            args = (words, base[idx], nbits[idx], crc[idx])
+            part, f = (_parse_l1(*args) if layer == "mp1"
+                       else _parse_l2(*args, _l2_layout(sr, int(key))))
+            if f is not None and (fault is None or idx[f[0]] < fault[0]):
+                fault = (int(idx[f[0]]), f[1])
+            sub[idx[: len(part)]] = part
+        if fault is not None:
+            raise ValueError(fault[1])
+    if walk_fault is not None:
+        raise walk_fault
+    y = _synthesize(sub.reshape(-1, _M), _SYNTHESIS)
     return y[_DELAY:].astype(np.float32), int(sr)
 
 
 _ALLOC_OFFSETS_L1 = 4 * np.arange(_M)
 
 
-def _decode_frame(bits: np.ndarray, hdr: dict) -> np.ndarray:
-    """Payload bits (after the 32-bit header) -> (12, 32) subbands."""
-    data = _payload_bytes(bits)
-    pos = 16 if hdr["crc"] else 0  # CRC-16 skipped, not verified
-    if pos + 4 * _M > len(bits):
-        raise ValueError("truncated mp1 frame: no room for allocation")
-    alloc = _fields(data, pos + _ALLOC_OFFSETS_L1, 4)
-    pos += 4 * _M
-    if (alloc == 15).any():
-        raise ValueError("forbidden mp1 allocation code 15")
-    nb = np.where(alloc > 0, alloc + 1, 0)
-    active = np.flatnonzero(nb)
-    sub = np.zeros((_GRANULES, _M))
-    if not active.size:
-        return sub
-    if pos + 6 * active.size > len(bits):
-        raise ValueError("truncated mp1 frame: no room for scalefactors")
-    sf_idx = _fields(data, pos + 6 * np.arange(active.size), 6)
-    pos += 6 * active.size
-    if (sf_idx > 62).any():
-        raise ValueError("invalid mp1 scalefactor index 63")
-    nba = nb[active]
-    per_granule = int(nba.sum())
-    if pos + _GRANULES * per_granule > len(bits):
-        raise ValueError("truncated mp1 frame: no room for samples")
-    # sample-region bit offsets for every (granule, active subband):
+def _parse_l1(words, base, nbits, crc) -> tuple[np.ndarray, tuple | None]:
+    """Layer I payloads at bit offsets ``base`` (``nbits`` long, a CRC
+    word first where ``crc``) -> ((frames, 12, 32) subband samples,
+    first fault or None); see ``_Prefix``. Frames from the faulty one
+    on are not returned."""
+    pre = _Prefix(len(base))
+    pos = base + np.where(crc, 16, 0)  # CRC-16 skipped, not verified
+    end = base + nbits
+    pos, end = pre.check(pos + 4 * _M > end,
+                         "truncated mp1 frame: no room for allocation", pos, end)
+    alloc = _fields(words, pos[:, None] + _ALLOC_OFFSETS_L1, 4)
+    pos, end, alloc = pre.check((alloc == 15).any(axis=1), "forbidden mp1 allocation code 15",
+                                pos + 4 * _M, end, alloc)
+    active = alloc > 0  # a frame with no active subband passes every check below
+    nb = np.where(active, alloc + 1, 0)
+    pos, end, active, nb = pre.check(pos + 6 * active.sum(axis=1) > end,
+                                     "truncated mp1 frame: no room for scalefactors",
+                                     pos, end, active, nb)
+    sf_idx = _fields(words, pos[:, None] + 6 * (np.cumsum(active, axis=1) - active),
+                     6 * active)
+    pos, end, active, nb, sf_idx = pre.check((sf_idx > 62).any(axis=1),
+                                             "invalid mp1 scalefactor index 63",
+                                             pos + 6 * active.sum(axis=1), end, active, nb,
+                                             sf_idx)
+    per_granule = nb.sum(axis=1)
+    pos, per_granule, active, nb, sf_idx = pre.check(
+        pos + _GRANULES * per_granule > end, "truncated mp1 frame: no room for samples",
+        pos, per_granule, active, nb, sf_idx)
+    # sample-region bit offsets for every (frame, granule, subband):
     # granule-major layout, widths vary per subband -> cumsum
-    offs = (pos + np.arange(_GRANULES)[:, None] * per_granule
-            + (np.cumsum(nba) - nba)[None, :])           # (12, n_active)
-    codes = _fields(data, offs, nba[None, :])
-    levels = (1 << nba) - 1
-    if (codes == levels[None, :]).any():
-        raise ValueError("forbidden all-ones mp1 sample code")
-    s3 = codes / (1 << (nba - 1)).astype(np.float64) - 1.0
-    s2 = ((1 << nba) / levels).astype(np.float64) * (s3 + 2.0 ** (1 - nba))
-    sub[:, active] = s2 * _SCALEFACTORS[sf_idx][None, :]
-    return sub
+    offs = (pos[:, None, None] + np.arange(_GRANULES)[:, None] * per_granule[:, None, None]
+            + (np.cumsum(nb, axis=1) - nb)[:, None, :])       # (n, 12, 32)
+    codes = _fields(words, offs, nb[:, None, :])
+    levels = np.where(active, (1 << nb) - 1, -1)
+    codes, active, nb, sf_idx = pre.check((codes == levels[:, None, :]).any(axis=(1, 2)),
+                                          "forbidden all-ones mp1 sample code",
+                                          codes, active, nb, sf_idx)
+    nb = np.where(active, nb, 2)[:, None, :]  # any valid width: silent bands are zeroed
+    s3 = codes / (1 << (nb - 1)).astype(np.float64) - 1.0
+    s2 = ((1 << nb) / ((1 << nb) - 1)).astype(np.float64) * (s3 + 2.0 ** (1 - nb))
+    sub = np.where(active[:, None, :], s2 * _SCALEFACTORS[sf_idx][:, None, :], 0.0)
+    return sub, pre.fault
 
 
 def decode_mp1(raw: bytes) -> tuple[np.ndarray, int]:
@@ -431,7 +484,7 @@ def decode_mp1(raw: bytes) -> tuple[np.ndarray, int]:
     is n_frames*384 - 481 (up to 383 trailing pad samples relative to
     the original signal — real mp1 frames carry no length field).
     """
-    return _decode_stream(raw, "mp1", _decode_frame)
+    return _decode_stream(raw, "mp1")
 
 
 # ===================================================== Layer II ("mp2")
@@ -665,77 +718,89 @@ _SCFSI_SENT = np.array([3, 2, 1, 2])
 _PART_OF_SAMPLE = np.arange(_PARTS * _GRANULES_L2) // _GRANULES_L2
 
 
-def _decode_frame_l2(bits: np.ndarray, hdr: dict) -> np.ndarray:
-    """Payload bits (after the header) -> (36, 32) subband samples.
+def _parse_l2(words, base, nbits, crc, lay: _L2Layout) -> tuple[np.ndarray, tuple | None]:
+    """Layer II payloads that share allocation table ``lay`` ->
+    ((frames, 36, 32) subband samples, first fault or None); the
+    arguments and the fault rule are ``_parse_l1``'s."""
+    pre = _Prefix(len(base))
+    n_sb = len(lay.nbal)
+    pos = base + np.where(crc, 16, 0)
+    end = base + nbits
+    # the whole field is read, cut or not: a menu fault before the cut
+    # outranks the cut
+    fits = pos[:, None] + lay.alloc_start + lay.nbal <= end[:, None]
+    step = _fields(words, pos[:, None] + lay.alloc_start, lay.nbal)   # (n, n_sb)
+    over = fits & (step > lay.n_steps)
 
-    Each field kind of the frame (allocation, SCFSI, scalefactors,
-    sample codes) is read in one ``_fields`` call; where a frame has
-    several faults, the one first in bitstream order is raised."""
-    lay = _l2_layout(hdr["sr"], hdr["kbps"])
-    data = _payload_bytes(bits)
-    pos = 16 if hdr["crc"] else 0
-    ends = pos + lay.alloc_start + lay.nbal
-    n_fit = int(np.searchsorted(ends, len(bits), side="right"))
-    step = _fields(data, pos + lay.alloc_start[:n_fit], lay.nbal[:n_fit])
-    over = np.flatnonzero(step > lay.n_steps[:n_fit])
-    if over.size:  # a menu fault before the cut outranks the cut
-        sb = over[0]
-        raise ValueError(f"mp2 allocation {step[sb]} exceeds subband {sb} menu")
-    if n_fit < len(ends):
-        raise ValueError("truncated mp2 frame: no room for allocation")
-    pos = int(ends[-1])
-    active = np.flatnonzero(step)
-    sub = np.zeros((_PARTS * _GRANULES_L2, _M))
-    if not active.size:
-        return sub
-    if pos + 2 * active.size > len(bits):
-        raise ValueError("truncated mp2 frame: no room for scfsi")
-    scfsi = _fields(data, pos + 2 * np.arange(active.size), 2)
-    pos += 2 * active.size
-    n_sf = _SCFSI_SENT[scfsi]
-    if pos + 6 * int(n_sf.sum()) > len(bits):
-        raise ValueError("truncated mp2 frame: no room for scalefactors")
-    sent = _fields(data, pos + 6 * np.arange(int(n_sf.sum())), 6)
-    pos += 6 * len(sent)
-    if (sent > 62).any():
-        raise ValueError("invalid mp2 scalefactor index 63")
-    sf_part = sent[(np.cumsum(n_sf) - n_sf)[:, None] + _SCFSI_PARTS[scfsi]]
-    st = step[active]
-    lv = lay.levels[active, st]
-    widths = lay.width[active, st]
-    stride = int(widths.sum())
-    if pos + _GRANULES_L2 * stride > len(bits):
-        raise ValueError("truncated mp2 frame: no room for samples")
-    # three fields per (triplet, subband): a grouped quantizer's one
-    # base-L code (then two empty fields), or three w1-bit codes
+    def alloc_fault(i: int) -> str:
+        if not over[i].any():
+            return "truncated mp2 frame: no room for allocation"
+        sb = int(np.argmax(over[i]))
+        return f"mp2 allocation {step[i, sb]} exceeds subband {sb} menu"
+
+    pos, end, step = pre.check(over.any(axis=1) | ~fits[:, -1], alloc_fault,
+                               pos + int(lay.nbal.sum()), end, step)
+    active = step > 0  # a frame with no active subband passes every check below
+    pos, end, step, active = pre.check(pos + 2 * active.sum(axis=1) > end,
+                                       "truncated mp2 frame: no room for scfsi",
+                                       pos, end, step, active)
+    scfsi = _fields(words, pos[:, None] + 2 * (np.cumsum(active, axis=1) - active),
+                    2 * active)
+    n_sf = np.where(active, _SCFSI_SENT[scfsi], 0)
+    pos = pos + 2 * active.sum(axis=1)
+    pos, end, step, active, scfsi, n_sf = pre.check(
+        pos + 6 * n_sf.sum(axis=1) > end, "truncated mp2 frame: no room for scalefactors",
+        pos, end, step, active, scfsi, n_sf)
+    # each part's scalefactor, read where SCFSI points it among the sent
+    # ones (every sent one is some part's)
+    sf_part = _fields(words, pos[:, None, None] + 6 * (
+        (np.cumsum(n_sf, axis=1) - n_sf)[:, :, None] + _SCFSI_PARTS[scfsi]),
+        6 * active[:, :, None])                                      # (n, n_sb, 3)
+    pos, end, step, active, sf_part = pre.check(
+        (sf_part > 62).any(axis=(1, 2)), "invalid mp2 scalefactor index 63",
+        pos + 6 * n_sf.sum(axis=1), end, step, active, sf_part)
+    lv = lay.levels[np.arange(n_sb), step]     # 0 where silent
+    widths = lay.width[np.arange(n_sb), step]  # 0 where silent
+    stride = widths.sum(axis=1)
+    pos, stride, active, sf_part, lv, widths = pre.check(
+        pos + _GRANULES_L2 * stride > end, "truncated mp2 frame: no room for samples",
+        pos, stride, active, sf_part, lv, widths)
+    # three fields per (frame, triplet, subband): a grouped quantizer's
+    # one base-L code (then two empty fields), or three w1-bit codes
     grouped = (lv == 3) | (lv == 5) | (lv == 9)
     w1 = np.where(grouped, 0, widths // 3)
-    offs = w1[:, None] * np.arange(3)                       # (n_active, 3)
-    wid = np.where(grouped[:, None], np.stack([widths, w1, w1], axis=1), w1[:, None])
-    starts = (pos + np.arange(_GRANULES_L2)[:, None] * stride
-              + (np.cumsum(widths) - widths)[None, :])      # (12, n_active)
-    vals = _fields(data, starts[:, :, None] + offs, wid)    # (12, n_active, 3)
-    code = vals[:, :, 0]
-    bad = np.flatnonzero(np.where(
-        grouped, (code >= lv ** 3).any(axis=0), (vals == lv[:, None]).any(axis=(0, 2))
-    ))
-    if bad.size:
-        raise ValueError("mp2 grouped code out of range" if grouped[bad[0]]
-                         else "forbidden all-ones mp2 sample code")
+    offs = w1[:, :, None] * np.arange(3)                             # (n, n_sb, 3)
+    wid = np.where(grouped[:, :, None], np.stack([widths, w1, w1], axis=2), w1[:, :, None])
+    starts = (pos[:, None, None] + np.arange(_GRANULES_L2)[:, None] * stride[:, None, None]
+              + (np.cumsum(widths, axis=1) - widths)[:, None, :])    # (n, 12, n_sb)
+    vals = _fields(words, starts[..., None] + offs[:, None], wid[:, None])  # (n, 12, n_sb, 3)
+    bad = active & np.where(grouped, (vals[..., 0] >= (lv ** 3)[:, None, :]).any(axis=1),
+                            (vals == lv[:, None, :, None]).any(axis=(1, 3)))
+
+    def code_fault(i: int) -> str:
+        return ("mp2 grouped code out of range" if grouped[i, np.argmax(bad[i])]
+                else "forbidden all-ones mp2 sample code")
+
+    vals, active, sf_part, lv, grouped = pre.check(bad.any(axis=1), code_fault,
+                                                   vals, active, sf_part, lv, grouped)
+    code = vals[..., 0]
+    lv = np.where(active, lv, 1)[:, None, :]  # any valid level: silent bands are zeroed
     trip = np.where(
-        grouped[:, None],
-        np.stack([code % lv, (code // lv) % lv, code // (lv * lv)], axis=2),
+        grouped[:, None, :, None],
+        np.stack([code % lv, (code // lv) % lv, code // (lv * lv)], axis=3),
         vals,
     )
-    samples = trip.transpose(0, 2, 1).reshape(_PARTS * _GRANULES_L2, -1)  # (36, n_active)
+    samples = trip.transpose(0, 1, 3, 2).reshape(len(vals), _PARTS * _GRANULES_L2, n_sb)
     # closed-form Table B.4 lattice (see section comment)
     s2 = (2.0 * samples - lv + 1.0) / lv
-    sub[:, active] = s2 * _SCALEFACTORS[sf_part[:, _PART_OF_SAMPLE].T]
-    return sub
+    sf = _SCALEFACTORS[sf_part[:, :, _PART_OF_SAMPLE]].transpose(0, 2, 1)
+    sub = np.zeros((len(vals), _PARTS * _GRANULES_L2, _M))
+    sub[:, :, :n_sb] = np.where(active[:, None, :], s2 * sf, 0.0)
+    return sub, pre.fault
 
 
 def decode_mp2(raw: bytes) -> tuple[np.ndarray, int]:
     """MPEG-1 Layer II mono frames -> (float32 PCM, sample rate); the
     481-sample filterbank delay is dropped (same contract as
     decode_mp1)."""
-    return _decode_stream(raw, "mp2", _decode_frame_l2)
+    return _decode_stream(raw, "mp2")

@@ -90,8 +90,8 @@ def byte_features(media: DataFrame, id_col: str = "media_id") -> DataFrame:
 def decode_media(raw: bytes, codec: str, deterministic_fake: bool = False) -> np.ndarray:
     """Decode a media blob to a numpy array.
 
-    Audio codecs (pcm/ulaw/alaw/wav + IMA ADPCM, block-lockstep
-    vectorized, + MPEG-1 Layers I and II in sparkfp/mpeg_audio.py), library-free image codecs (bmp/ppm/png/jpeg/gif — PNG
+    Audio codecs (pcm/ulaw/alaw/wav + IMA ADPCM as prefix scans
+    across blocks, + MPEG-1 Layers I and II in sparkfp/mpeg_audio.py), library-free image codecs (bmp/ppm/png/jpeg/gif — PNG
     via stdlib zlib + numpy unfiltering, baseline+progressive JPEG via
     pure-numpy huffman + IDCT in sparkfp/jpeg.py, GIF via LZW in
     sparkfp/gif.py),

@@ -416,7 +416,7 @@ def test_adpcm_block_boundaries_and_empty():
 
 
 def test_adpcm_engine_decode_equals_oracle_scalar_loop():
-    """Across-blocks lockstep numpy decode == the oracle's literal
+    """Prefix-scan numpy decode across blocks == the oracle's literal
     per-nibble Python loop, bit for bit."""
     import tools.dsp_oracle as orc
 
@@ -425,6 +425,37 @@ def test_adpcm_engine_decode_equals_oracle_scalar_loop():
     eng = codec.decode(raw, "adpcm").astype(np.float64)
     ora = np.array(orc.decode(raw, "adpcm"))
     assert np.array_equal(eng, ora)
+
+
+@pytest.mark.parametrize("block_align", [5, 36, 256, 2048, 20000])
+def test_adpcm_clamp_edges_equal_oracle_scalar_loop(block_align):
+    """Seeded garbage blocks whose step index starts at 0 and at 88 and
+    whose predictor starts on both rails, plus runs of the largest
+    codes that saturate it: the engine's prefix scans equal the
+    oracle's per-nibble loop bit for bit. 20000-byte blocks take the
+    int64 scan (their sums can pass 2^31)."""
+    import tools.dsp_oracle as orc
+
+    rng = np.random.Generator(np.random.Philox(key=[block_align, 0]))
+    blk = rng.integers(0, 256, (6, block_align), dtype=np.uint8)
+    seeds = np.array([32767, -32768, 32767, -32768, 0, 1234], dtype="<i2")
+    blk[:, 0:2] = seeds.view(np.uint8).reshape(6, 2)
+    blk[:, 2] = [88, 88, 0, 0, 44, 1]
+    blk[0, 4:] = 0x77  # +largest delta, step index up by 8 each code
+    blk[1, 4:] = 0xFF  # -largest delta
+    blk[2, 4:] = 0x00  # smallest delta, step index down by 1 each code
+    data = blk.tobytes()
+    eng = codec._decode_adpcm_blocks(data, block_align, None).astype(np.float64)
+    ora = np.array(orc._decode_ima_scalar(data, block_align, None))
+    assert np.array_equal(eng, ora)
+    s16 = np.round(ora * 32768.0)
+    assert s16.max() == 32767 and s16.min() == -32768  # both rails reached
+    # a fact count inside the last block trims the same way
+    fact = len(ora) - 1
+    assert np.array_equal(
+        codec._decode_adpcm_blocks(data, block_align, fact).astype(np.float64),
+        np.array(orc._decode_ima_scalar(data, block_align, fact)),
+    )
 
 
 def test_adpcm_error_paths():
@@ -629,6 +660,21 @@ def _bit_field(*fields: tuple[int, int]) -> np.ndarray:
     )
 
 
+def _parse_one(layer: str, bits: np.ndarray, crc: bool = False) -> np.ndarray:
+    """One payload of ``bits`` through the layer's whole-clip parser
+    (mp2 at 32 kHz / 192 kbps); its fault is raised as the decoder does."""
+    from sparkfp import mpeg_audio as m
+    from sparkfp.codec import be_words
+
+    args = (be_words(np.packbits(bits).tobytes(), 3, m._PAD), np.array([0]),
+            np.array([len(bits)]), np.array([crc]))
+    sub, fault = (m._parse_l1(*args) if layer == "mp1"
+                  else m._parse_l2(*args, m._l2_layout(32000, 192)))
+    if fault is not None:
+        raise ValueError(fault[1])
+    return sub
+
+
 def test_mpeg_first_fault_in_bitstream_order_wins():
     """A frame with several faults raises the one the bitstream reaches
     first; the message is the quarantine reason, so the order is part
@@ -638,7 +684,6 @@ def test_mpeg_first_fault_in_bitstream_order_wins():
     # mp2 at 32 kHz / 192 kbps (Table B.2b): 3 LOW subbands (4-bit
     # allocation), 8 MID (4-bit, 14 steps), 12 HIGH (3-bit), 7 TOP (2-bit)
     hdr = _mp1_header(layer=2, br_idx=10, sr_idx=2)
-    hdr_l2 = {"sr": 32000, "kbps": 192, "crc": False}
     frame_bytes = 144 * 192000 // 32000
     # step 15 at subband 4 is outside its 14-step menu; every other
     # subband asks for more sample bits than the frame holds
@@ -652,31 +697,30 @@ def test_mpeg_first_fault_in_bitstream_order_wins():
     alloc2 = [(1, 4)] * 5 + [(15, 4)] + [(1, 4)] * 3 + [(15, 4)] + [(1, 4)]
     bits = _bit_field(*alloc2)
     with pytest.raises(ValueError, match="^mp2 allocation 15 exceeds subband 5 menu$"):
-        m._decode_frame_l2(bits, hdr_l2)
+        _parse_one("mp2", bits)
     # out-of-menu subband 4, then the payload ends inside the
     # allocation field: the menu fault comes first in the bitstream
     bits = _bit_field(*alloc[:8])
     with pytest.raises(ValueError, match="^mp2 allocation 15 exceeds subband 4 menu$"):
-        m._decode_frame_l2(bits, hdr_l2)
+        _parse_one("mp2", bits)
     # valid allocations cut short inside the field (and mid-subband)
     for n_bits in (0, 3, 4 * 11 + 3 * 5 + 1):
         bits = _bit_field(*([(1, 4)] * 11 + [(1, 3)] * 12 + [(1, 2)] * 7))[:n_bits]
         with pytest.raises(ValueError, match="^truncated mp2 frame: no room for allocation$"):
-            m._decode_frame_l2(bits, hdr_l2)
+            _parse_one("mp2", bits)
     # ... and with the CRC word in front
     with pytest.raises(ValueError, match="^truncated mp2 frame: no room for allocation$"):
-        m._decode_frame_l2(np.zeros(16 + 40, np.uint8), dict(hdr_l2, crc=True))
+        _parse_one("mp2", np.zeros(16 + 40, np.uint8), crc=True)
 
     # mp1 reads its whole 128-bit allocation field before it checks
     # any code: a cut field raises truncation even if it holds a 15
-    hdr_l1 = {"crc": False}
     alloc1 = _bit_field(*([(3, 4)] * 5 + [(15, 4)] + [(3, 4)] * 26))
     with pytest.raises(ValueError, match="^truncated mp1 frame: no room for allocation$"):
-        m._decode_frame(alloc1[:100], hdr_l1)
+        _parse_one("mp1", alloc1[:100])
     # a whole field with code 15: forbidden, although the scalefactors
     # and samples after it do not fit either
     with pytest.raises(ValueError, match="^forbidden mp1 allocation code 15$"):
-        m._decode_frame(alloc1, hdr_l1)
+        _parse_one("mp1", alloc1)
     frame1 = _mp1_header(br_idx=1, sr_idx=1)  # 32 kbps @ 48 kHz: 32-byte frame
     frame1 += np.packbits(alloc1).tobytes().ljust(28, b"\x00")
     with pytest.raises(ValueError, match="^forbidden mp1 allocation code 15$"):
@@ -686,6 +730,64 @@ def test_mpeg_first_fault_in_bitstream_order_wins():
     frame1 += np.packbits(_bit_field(*([(3, 4)] * 32))).tobytes().ljust(28, b"\x00")
     with pytest.raises(ValueError, match="^truncated mp1 frame: no room for scalefactors$"):
         m.decode_mp1(frame1)
+
+
+@pytest.mark.parametrize("layer", ["mp1", "mp2"])
+def test_mpeg_cross_frame_fault_order(layer):
+    """Across frames the first fault a frame-by-frame decode meets is
+    raised: a payload fault of frame i beats a lost sync or a cut body
+    in frame i+1 and any payload fault of a later frame; a walk fault
+    of frame j beats the payload faults of frames after j."""
+    from sparkfp import mpeg_audio as m
+
+    encode, decode = getattr(m, f"encode_{layer}"), getattr(m, f"decode_{layer}")
+    good = encode(_signal(n=4000), 32000, 192)
+    size = good.find(good[:4], 1)  # the encoders emit equal-size frames
+    assert len(good) >= 4 * size
+
+    def fault(buf: bytearray, frame: int, kind: str) -> None:
+        at = frame * size
+        if kind == "A" and layer == "mp1":
+            buf[at + 4] |= 0xF0  # subband 0 allocation code 15
+        elif kind == "A":
+            buf[at + 5] |= 0x0F  # subband 3 (14-step menu) asks for step 15
+        elif layer == "mp1":  # "B": subband 0 active, scalefactor 63
+            if buf[at + 4] < 0x10:
+                buf[at + 4] |= 0x30
+            buf[at + 4 + 16] |= 0xFC
+        else:
+            buf[at + 6] |= 0xF0  # subband 4 asks for step 15
+
+    msg = {
+        ("mp1", "A"): "^forbidden mp1 allocation code 15$",
+        ("mp1", "B"): "^invalid mp1 scalefactor index 63$",
+        ("mp2", "A"): "^mp2 allocation 15 exceeds subband 3 menu$",
+        ("mp2", "B"): "^mp2 allocation 15 exceeds subband 4 menu$",
+    }
+    for first, then in (("A", "B"), ("B", "A")):
+        buf = bytearray(good)
+        fault(buf, 2, then)
+        with pytest.raises(ValueError, match=msg[layer, then]):
+            decode(bytes(buf))
+        fault(buf, 1, first)
+        with pytest.raises(ValueError, match=msg[layer, first]):
+            decode(bytes(buf))  # frame 1 before frame 2
+        lost = bytearray(buf)
+        lost[2 * size: 2 * size + 4] = bytes(4)
+        with pytest.raises(ValueError, match=msg[layer, first]):
+            decode(bytes(lost))  # frame 1's payload before frame 2's sync
+        with pytest.raises(ValueError, match=msg[layer, first]):
+            decode(bytes(buf[: 2 * size + size // 2]))  # ... and its cut body
+    # a walk fault at frame 1 hides frame 2's payload fault
+    buf = bytearray(good)
+    fault(buf, 2, "A")
+    buf[size: size + 4] = bytes(4)
+    with pytest.raises(ValueError, match="^lost MPEG audio frame sync$"):
+        decode(bytes(buf))
+    buf = bytearray(good)
+    fault(buf, 3, "B")
+    with pytest.raises(ValueError, match=f"^truncated {layer} frame body$"):
+        decode(bytes(buf[: 2 * size + 7]))
 
 
 def test_mp1_silence_and_empty_frames():
@@ -883,6 +985,61 @@ def test_flac_vectorized_rice_equals_scalar():
         sca = flac._rice_decode_scalar(rd_s, len(res), k)
         assert np.array_equal(vec, res) and np.array_equal(sca, res)
         assert rd_v.pos == rd_s.pos
+
+
+def test_flac_rice_full_window_fallback_equals_scalar(monkeypatch):
+    """Remainders of all ones put about count*(k+1) ones in a partition,
+    past the first count*(1 + k/2) + margin window: the decode must
+    miss that window, fall back to the full one, and still agree with
+    the scalar loop."""
+    from sparkfp import flac
+
+    k, count = 14, 600
+    q = np.arange(count, dtype=np.uint64) % 3
+    u = (q << np.uint64(k)) | np.uint64((1 << k) - 1)
+    buf = flac._BitBuf()
+    flac._emit_rice_partition(buf, u, k)
+    buf.align()
+    raw = buf.tobytes()
+    bits = np.unpackbits(np.frombuffer(raw, np.uint8))
+    windows = []
+    terminators = flac._rice_terminators
+
+    def spy(rd, base, window, count, k):
+        t = terminators(rd, base, window, count, k)
+        windows.append((window, t is None))
+        return t
+
+    monkeypatch.setattr(flac, "_rice_terminators", spy)
+    rd_v = flac._BitReader(bits, raw)
+    rd_s = flac._BitReader(bits, raw)
+    vec = flac._rice_decode(rd_v, count, k)
+    sca = flac._rice_decode_scalar(rd_s, count, k)
+    assert windows == [(windows[0][0], True), (count * (k + 1), False)]
+    assert np.array_equal(vec, sca) and rd_v.pos == rd_s.pos
+
+
+def test_flac_k0_partition_ending_on_the_last_byte():
+    """A k = 0 partition whose last terminator is the stream's last bit
+    reads its (empty) remainders one byte past the end: the decode must
+    not index out of range. Cutting a near-silent stream (k = 0
+    partitions) at every byte makes that happen in mid-frame, where the
+    decode must raise ValueError like any other truncation."""
+    from sparkfp import flac
+
+    raw = b"\xff" * 4
+    rd = flac._BitReader(np.unpackbits(np.frombuffer(raw, np.uint8)), raw)
+    assert np.array_equal(flac._rice_decode(rd, 32, 0), np.zeros(32))
+    assert rd.pos == 32
+
+    n = 12288
+    pcm = (np.round(np.sin(np.arange(n) * 0.004) * 3) / 32768.0).astype(
+        np.float32
+    )
+    enc = flac.encode_flac(pcm, 8000)
+    for cut in range(len(enc)):
+        with pytest.raises(ValueError):
+            flac.decode_flac(enc[:cut])
 
 
 def test_flac_crcs_equal_oracle_bitwise_loop():
@@ -1149,6 +1306,29 @@ def test_mp2_engine_decode_equals_oracle_scalar_loop():
         ora = np.array(orc.decode(raw, "mp2"))
         assert eng.shape == ora.shape
         assert np.abs(eng - ora).max() <= 1e-6
+
+
+def test_mp2_allocation_table_switch_mid_stream():
+    """80 and 192 kbps at 32 kHz select Tables B.2a (27 subbands) and
+    B.2b (30): a stream whose frames switch between them decodes frame
+    by frame with the right table (oracle parity at the 1e-6 bound of
+    the twin above), and its PCM is pinned bit for bit."""
+    import hashlib
+
+    import tools.dsp_oracle as orc
+    from sparkfp import mpeg_audio as m
+
+    pcm = _signal(n=3000)
+    lo, hi = m.encode_mp2(pcm, 32000, 80), m.encode_mp2(pcm, 32000, 192)
+    raw = lo + hi + lo
+    y, sr = m.decode_mp2(raw)
+    assert len(lo) == 4 * 360 and len(hi) == 4 * 864  # 4 frames each
+    assert sr == 32000 and len(y) == 12 * 1152 - 481
+    ora = np.array(orc.decode(raw, "mp2"))
+    assert np.abs(y.astype(np.float64) - ora).max() <= 1e-6
+    assert hashlib.sha256(y.tobytes()).hexdigest() == (
+        "319ce9df3160f14b0cbc113a92db7e6e79a339cdd3010f2b16bb7137de0b9673"
+    )
 
 
 def test_mp2_grouped_quantizer_lattice():

@@ -294,6 +294,24 @@ def test_lsh_plans_have_no_nested_loop_join(spark, docs, path):
     assert "Cartesian" not in plan
 
 
+@pytest.mark.parametrize("path", ["embedding_near_pairs", "embedding_near_pairs_lsh"])
+def test_embedding_near_pairs_evaluate_cosine_once(spark, path):
+    """The exact-cosine check is one ArrowEvalPython node per plan: the
+    threshold filter stays above it, instead of a pushed-down copy of
+    the UDF evaluating every candidate pair a second time."""
+    rng = np.random.Generator(np.random.Philox(key=[3, 0]))
+    V = rng.standard_normal((20, 8))
+    df = spark.createDataFrame(
+        [(i, V[i].tolist()) for i in range(20)], "id long, v array<double>"
+    )
+    out = (dedup.embedding_near_pairs(df, "id", "v", threshold=0.9)
+           if path == "embedding_near_pairs"
+           else dedup.embedding_near_pairs_lsh(df, "id", "v", dim=8, threshold=0.9))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln and "cos(" in ln]
+    assert len(evals) == 1, plan
+
+
 def test_bucket_pairs_once_per_pair_with_payload(spark):
     """dedup.bucket_pairs on a hand-built table: a pair sharing two
     buckets comes out once, payload columns come back as <name>_a /

@@ -123,7 +123,7 @@ def _decode_ima_scalar(
 ) -> list[float]:
     """Literal per-sample IMA ADPCM loop: one nibble at a time, pure
     Python ints and if/else step updates — vs the engine's
-    across-blocks lockstep numpy (sparkfp/codec.py)."""
+    clamped prefix scans across blocks (sparkfp/codec.py)."""
     if block_align < 5:
         raise ValueError("oracle: bad adpcm block align")
     out = []

@@ -52,7 +52,8 @@ def op_counts(plan: str) -> dict[str, int]:
 def main():
     suffix = sys.argv[1]
     names = sys.argv[2:]
-    spark = get_spark("sparkfp-plans")
+    # no console progress bar: it would interleave with the "ok" lines
+    spark = get_spark("sparkfp-plans", extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
     os.makedirs(OUT, exist_ok=True)
     for name, fn in qs.items():
