@@ -14,9 +14,19 @@ in one frame or in every frame; mp2 also gets streams that switch
 bitrate, and so allocation table, mid-stream. flac also gets every
 byte cut of a near-silent stream whose Rice partitions have k = 0.
 
+The PCM codecs follow: bare pcm_s16le and alaw, then the wav, aiff
+and au containers. wav covers all eight ``encode_wav_variant``
+formats, plain and extensible, at one to three channels; au all five
+encodings; aiff mono and stereo. Besides the damage above, each
+container encode also gets rewritten header fields (format tag, bit
+depth, channel count, encoding, offsets and sizes, random header
+bytes) and a data chunk declared one to seven bytes short, so its
+last sample or frame is partial.
+
 Prints one ``codec NAME  cases N  sha256 HEX`` line per codec. The
 digest covers, case by case, the decoded PCM bytes plus the sample
-rate the decoder reports, or the exception type plus its message.
+rate the decoder reports, or the exception type plus its message;
+for the PCM codecs it also covers the bytes of every encode.
 Two checkouts that print equal lines decode every case to the same
 bytes and fail every failing case with the same error: the error-path
 half of bit-identity, which ``landmark_digest.py`` (decodable staged
@@ -35,7 +45,9 @@ for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ[_var] = "1"
 
 import hashlib  # noqa: E402
+import struct  # noqa: E402
 import sys  # noqa: E402
+import warnings  # noqa: E402
 
 import numpy as np  # noqa: E402
 
@@ -50,7 +62,19 @@ RATES = {
     "flac": (22050, 44100),
     "mp1": (32000, 48000),
     "mp2": (32000, 48000),
+    "pcm_s16le": (8000, 16000),
+    "alaw": (8000, 16000),
+    "wav": (8000, 44100),
+    "aiff": (22050, 44100),
+    "au": (8000, 16000),
 }
+CONTAINERS = ("wav", "aiff", "au")
+WAV_FORMATS = (
+    ("pcm", 8), ("pcm", 16), ("pcm", 24), ("pcm", 32),
+    ("float", 32), ("float", 64), ("alaw", 8), ("ulaw", 8),
+)
+AU_ENCODINGS = (1, 2, 3, 6, 27)
+N_HEADER = 6
 LENGTHS = (1, 777, 6000, 20000)
 N_CUTS, N_FLIPS = 3, 24
 
@@ -147,6 +171,88 @@ def _encodes(name: str, rng: np.random.Generator) -> list[bytes]:
     return raws
 
 
+def _container_encodes(name: str, rng: np.random.Generator) -> list[bytes]:
+    """Every sample format of the container at one to three channels;
+    every other signal is scaled past full scale so the quantizers
+    clip."""
+    if name == "wav":
+        layouts = [(f, b, e, c) for f, b in WAV_FORMATS
+                   for e in (False, True) for c in (1, 2, 3)]
+    elif name == "aiff":
+        layouts = [(c,) for c in (1, 2)]
+    else:
+        layouts = [(e, c) for e in AU_ENCODINGS for c in (1, 2)]
+    raws = []
+    for layout in layouts:
+        nch = layout[-1]
+        for sr in RATES[name]:
+            for i, n in enumerate(LENGTHS):
+                gain = 1.25 if (i + nch) % 2 else 1.0
+                x = gain * np.stack([_signal(rng, n, sr, (i + c) % 3)
+                                     for c in range(nch)], axis=1)
+                if nch == 1:
+                    x = x[:, 0]
+                if name == "wav":
+                    fmt, bits, ext, _ = layout
+                    raws.append(codec.encode_wav_variant(
+                        x, sr, bits=bits, sample_format=fmt, extensible=ext))
+                elif name == "aiff":
+                    raws.append(codec.encode_aiff(x, sr))
+                else:
+                    raws.append(codec.encode_au(x, sr, encoding=layout[0]))
+    return raws
+
+
+def _put(raw: bytes, at: int, fmt: str, value: int) -> bytes:
+    buf = bytearray(raw)
+    struct.pack_into(fmt, buf, at, value)
+    return bytes(buf)
+
+
+def _header_variants(rng: np.random.Generator, name: str, raw: bytes) -> list[bytes]:
+    """Rewritten header fields, random header bytes and a data chunk
+    declared 1-7 bytes short (its tail then holds a partial sample)."""
+    out = []
+    pick = lambda *vals: int(rng.choice(vals))  # noqa: E731
+    if name == "wav":
+        fmt_at = raw.index(b"fmt ") + 8
+        size_at = raw.index(b"data") + 4
+        head = size_at + 4
+        for _ in range(N_HEADER):
+            buf = _put(raw, fmt_at, "<H", pick(1, 2, 3, 6, 7, 0x11, 0xFFFE))
+            buf = _put(buf, fmt_at + 14, "<H", pick(4, 8, 12, 16, 24, 32, 64))
+            out.append(_put(buf, fmt_at + 2, "<H", pick(0, 1, 2, 3, 7)))
+        order = "<"
+    elif name == "aiff":
+        comm_at = raw.index(b"COMM") + 8
+        size_at = raw.index(b"SSND") + 4
+        head = size_at + 12
+        n_frames = struct.unpack_from(">I", raw, comm_at + 2)[0]
+        for _ in range(N_HEADER):
+            buf = _put(raw, comm_at, ">h", pick(-1, 0, 1, 2, 3))
+            buf = _put(buf, comm_at + 6, ">h", pick(8, 16, 16, 24))
+            buf = _put(buf, comm_at + 2, ">I", pick(0, n_frames // 2, n_frames, 2**32 - 1))
+            out.append(_put(buf, size_at + 4, ">I", pick(0, 0, 1, 2, 7, 2**20)))
+        order = ">"
+    else:
+        size_at, head = 8, 24
+        dsize = struct.unpack_from(">I", raw, 8)[0]
+        for _ in range(N_HEADER):
+            buf = _put(raw, 12, ">I", pick(*AU_ENCODINGS, 0, 4, 5, 23))
+            buf = _put(buf, 20, ">I", pick(0, 1, 2, 3))
+            buf = _put(buf, 4, ">I", pick(0, 23, 24, 24, 25, 28, len(raw) + 1))
+            out.append(_put(buf, 8, ">I", pick(0, 1, dsize - 1, dsize, dsize + 1, 2**32 - 1)))
+        order = ">"
+    for _ in range(2):
+        buf = bytearray(raw)
+        buf[int(rng.integers(0, head))] = int(rng.integers(0, 256))
+        out.append(bytes(buf))
+    declared = struct.unpack_from(order + "I", raw, size_at)[0]
+    for short in range(1, 8):
+        out.append(_put(raw, size_at, order + "I", max(declared - short, 0)))
+    return out
+
+
 def _flac_cuts() -> list[bytes]:
     """Every byte cut of a slow sine three steps high: its residuals
     code as k = 0 Rice partitions of all ones, so some cuts end right
@@ -157,21 +263,42 @@ def _flac_cuts() -> list[bytes]:
 
 
 def _cases(name: str, rng: np.random.Generator):
+    """Yield ("encode", bytes) for each PCM codec encode and
+    ("decode", bytes) for each stream to decode."""
+    if name in CONTAINERS:
+        for raw in _container_encodes(name, rng):
+            yield "encode", raw
+            for var in _variants(rng, raw) + _header_variants(rng, name, raw):
+                yield "decode", var
+        return
     for raw in _encodes(name, rng):
-        yield from _variants(rng, raw)
+        if name in ("pcm_s16le", "alaw"):
+            yield "encode", raw
+        for var in _variants(rng, raw):
+            yield "decode", var
         if name == "adpcm":
-            yield from _adpcm_variants(rng, raw)
+            for var in _adpcm_variants(rng, raw):
+                yield "decode", var
         if name in ("mp1", "mp2"):
-            yield from _mpeg_variants(rng, raw)
+            for var in _mpeg_variants(rng, raw):
+                yield "decode", var
     if name == "flac":
-        yield from _flac_cuts()
+        for var in _flac_cuts():
+            yield "decode", var
 
 
 def main() -> None:
+    # bit flips make NaN and huge float samples; their cast warnings
+    # are expected noise, the digest covers the values
+    warnings.simplefilter("ignore", RuntimeWarning)
     for seed, name in enumerate(RATES):
         rng = np.random.default_rng(1000 + seed)
         digest, cases = hashlib.sha256(), 0
-        for var in _cases(name, rng):
+        for kind, var in _cases(name, rng):
+            if kind == "encode":
+                digest.update(var)
+                cases += 1
+                continue
             try:
                 pcm, sr = _decode(name, var)
                 digest.update(np.ascontiguousarray(pcm).tobytes())
