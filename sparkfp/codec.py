@@ -267,11 +267,17 @@ def _decode_wav(raw: bytes) -> np.ndarray:
         s = np.where(s >= 1 << 23, s - (1 << 24), s)  # sign-extend
         f = s.astype(np.float64) / float(1 << 23)
     elif tag == 1 and bits == 32:
-        f = np.frombuffer(data, dtype="<i4").astype(np.float64) / float(1 << 31)
+        f = np.frombuffer(
+            data, dtype="<i4", count=len(data) // 4
+        ).astype(np.float64) / float(1 << 31)
     elif tag == 3 and bits == 32:
-        f = np.frombuffer(data, dtype="<f4").astype(np.float64)
+        f = np.frombuffer(
+            data, dtype="<f4", count=len(data) // 4
+        ).astype(np.float64)
     elif tag == 3 and bits == 64:
-        f = np.frombuffer(data, dtype="<f8").astype(np.float64)
+        f = np.frombuffer(
+            data, dtype="<f8", count=len(data) // 8
+        ).astype(np.float64)
     elif tag == 6 and bits == 8:
         f = _alaw_to_linear(np.frombuffer(data, dtype=np.uint8)).astype(
             np.float64) / 32768.0

@@ -1167,6 +1167,7 @@ def test_png_palette_roundtrip_and_oracle_parity():
 
 _WAV_VARIANTS = [
     ("pcm", 8, 35.0),     # 8-bit quantization ~43 dB on this signal
+    ("pcm", 16, 60.0),
     ("pcm", 24, 60.0),
     ("pcm", 32, 60.0),
     ("float", 32, 80.0),
@@ -1184,7 +1185,11 @@ def test_wav_variant_roundtrip_and_oracle_parity(
     """Every breadth format round-trips above its quantization floor,
     and the engine's vectorized frombuffer/bit-assembly decode equals
     the oracle's per-sample struct walk exactly (same float64 math,
-    rounded once to float32)."""
+    rounded once to float32). A data chunk that ends inside a sample
+    (declared and cut one byte short) decodes its whole samples and
+    drops the partial one, as the oracle does."""
+    import struct
+
     import tools.dsp_oracle as orc
 
     pcm = _signal(n=2001)
@@ -1196,6 +1201,16 @@ def test_wav_variant_roundtrip_and_oracle_parity(
     assert len(eng) == len(pcm)
     assert codec.snr_db(pcm, eng) >= snr_floor
     ora = np.array(orc.decode(raw, "wav"), dtype=np.float64)
+    assert np.array_equal(eng, ora.astype(np.float32))
+
+    size_at = raw.index(b"data") + 4
+    (dlen,) = struct.unpack_from("<I", raw, size_at)
+    ragged = bytearray(raw[: size_at + 4 + dlen - 1])
+    struct.pack_into("<I", ragged, size_at, dlen - 1)
+    struct.pack_into("<I", ragged, 4, len(ragged) - 8)
+    eng = codec.decode(bytes(ragged), "wav")
+    assert len(eng) == (dlen - 1) // (bits // 8) == len(pcm) - 1
+    ora = np.array(orc.decode(bytes(ragged), "wav"), dtype=np.float64)
     assert np.array_equal(eng, ora.astype(np.float32))
 
 
@@ -1247,15 +1262,6 @@ def test_wav_variant_error_paths():
     # encoder rejects variants the decoder can't read back
     with pytest.raises(ValueError, match="variant"):
         codec.encode_wav_variant(pcm, 8000, bits=12)
-    # 24-bit data with a ragged tail truncates to whole samples
-    raw24 = codec.encode_wav_variant(pcm, 8000, bits=24)
-    cut = bytearray(raw24[:-2])  # drop 2 of the last sample's 3 bytes
-    data_at = cut.index(b"data") + 4
-    (dlen,) = struct.unpack_from("<I", cut, data_at)
-    struct.pack_into("<I", cut, data_at, dlen - 2)
-    struct.pack_into("<I", cut, 4, len(cut) - 8)
-    out = codec.decode(bytes(cut), "wav")
-    assert len(out) == len(pcm) - 1
 
 
 # --------------------------------------- MPEG-1 Audio Layer II ("mp2")
