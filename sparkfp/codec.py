@@ -13,6 +13,17 @@ external decoder libs not present in this container) is stubbed
 behind :class:`UnsupportedCodec` with the Spark-side plumbing kept
 real — the decode UDF dispatches on the codec column per batch.
 
+The PCM containers share three pieces: one sample-format table
+(``u8`` ``s8`` ``s16`` ``s24`` ``s32`` ``f4`` ``f8`` ``ulaw`` ``alaw``,
+read with one ``frombuffer`` in either byte order by ``_dequantize``
+and written by its inverse ``_quantize``), one RIFF/IFF chunk reader
+and writer (``_read_chunks`` / ``_write_chunks``, byte order as an
+argument) and one channel mean. Each container keeps only its header
+fields and one dict from them to the table. A data chunk that ends
+inside a sample or frame decodes its whole samples and drops the
+partial one; only bare ``pcm_s16le``, which declares no size, raises
+on an odd byte count.
+
 Decode invariant (input_hint): decoded PCM must match the
 synthesizer's ground truth at SNR >= 30 dB; pcm_s16le and flac
 round-trip at ~90 dB (bit-exact at s16), ulaw at ~35 dB, mp1 at
@@ -20,6 +31,8 @@ round-trip at ~90 dB (bit-exact at s16), ulaw at ~35 dB, mp1 at
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 
@@ -56,14 +69,10 @@ def be_words(buf: bytes, nbytes: int, pad: int) -> np.ndarray:
 
 def encode(pcm: np.ndarray, codec: str, sr_hz: int = 8000) -> bytes:
     """float32 [-1,1] -> bytes under the named codec."""
-    if codec == "pcm_s16le":
-        return _f32_to_s16(pcm).tobytes()
-    if codec == "ulaw":
-        return _linear_to_ulaw(_f32_to_s16(pcm)).tobytes()
-    if codec == "alaw":
-        return _linear_to_alaw(_f32_to_s16(pcm)).tobytes()
+    if codec in _BARE_FORMATS:
+        return _quantize(pcm, _BARE_FORMATS[codec], "<")
     if codec == "wav":
-        return _encode_wav(_f32_to_s16(pcm), sr_hz)
+        return encode_wav_variant(pcm, sr_hz)
     if codec == "adpcm":
         return _encode_adpcm_wav(_f32_to_s16(pcm), sr_hz)
     if codec == "aiff":
@@ -87,14 +96,11 @@ def encode(pcm: np.ndarray, codec: str, sr_hz: int = 8000) -> bytes:
 
 def decode(raw: bytes, codec: str) -> np.ndarray:
     """bytes -> float32 PCM in [-1,1]. Fully vectorized numpy."""
-    if codec == "pcm_s16le":
-        return np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
-    if codec == "ulaw":
-        s16 = _ulaw_to_linear(np.frombuffer(raw, dtype=np.uint8))
-        return s16.astype(np.float32) / 32768.0
-    if codec == "alaw":
-        s16 = _alaw_to_linear(np.frombuffer(raw, dtype=np.uint8))
-        return s16.astype(np.float32) / 32768.0
+    if codec in _BARE_FORMATS:
+        if codec == "pcm_s16le" and len(raw) & 1:
+            # no header declares a size to cut a partial sample back to
+            raise ValueError("buffer size must be a multiple of element size")
+        return _dequantize(raw, _BARE_FORMATS[codec], "<").astype(np.float32)
     if codec in ("wav", "adpcm"):
         # both live in a RIFF/WAVE container; the chunk walk routes on
         # the fmt tag (1 = linear PCM, 0x11 = IMA ADPCM)
@@ -179,20 +185,121 @@ def _alaw_to_linear(a: np.ndarray) -> np.ndarray:
     return np.where(v & 0x80, mag, -mag).astype(np.int16)
 
 
-def _encode_wav(s16: np.ndarray, sr_hz: int) -> bytes:
-    """Mono 16-bit PCM RIFF/WAVE container."""
-    import struct
+# ----------------------- PCM sample formats and RIFF/IFF chunks -----
+#
+# Every PCM container reads and writes its samples through this one
+# table. Sample format -> (numpy dtype of one stored sample, the
+# stored value of full scale). ``s24`` is three bytes, read through
+# the top of an int32; ``ulaw`` / ``alaw`` store G.711 codes of s16.
+_SAMPLE_FORMATS = {
+    "u8": ("u1", 128.0),  # unsigned, 128 = silence
+    "s8": ("i1", 128.0),
+    "s16": ("i2", 32768.0),
+    "s24": ("i4", float(1 << 23)),
+    "s32": ("i4", float(1 << 31)),
+    "f4": ("f4", 1.0),
+    "f8": ("f8", 1.0),
+    "ulaw": ("u1", 32768.0),
+    "alaw": ("u1", 32768.0),
+}
+# headerless codec -> its sample format, little-endian
+_BARE_FORMATS = {"pcm_s16le": "s16", "ulaw": "ulaw", "alaw": "alaw"}
 
-    data = s16.astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sr_hz, sr_hz * 2, 2, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
+
+def _dequantize(data: bytes, fmt: str, order: str) -> np.ndarray:
+    """Stored samples of sample format ``fmt`` in byte order ``order``
+    (``"<"`` or ``">"``) -> float64 in [-1, 1]; a partial last sample
+    is dropped."""
+    dtype, scale = _SAMPLE_FORMATS[fmt]
+    if fmt == "s24":
+        n = len(data) // 3
+        b = np.zeros((n, 4), dtype=np.uint8)
+        lo = 1 if order == "<" else 0  # the int32's three high bytes
+        b[:, lo: lo + 3] = np.frombuffer(data, np.uint8, 3 * n).reshape(n, 3)
+        s = b.view(order + "i4")[:, 0] >> 8  # arithmetic: sign-extends
+    else:
+        s = np.frombuffer(data, order + dtype, len(data) // int(dtype[1]))
+    if fmt == "ulaw":
+        s = _ulaw_to_linear(s)
+    elif fmt == "alaw":
+        s = _alaw_to_linear(s)
+    f = s.astype(np.float64)
+    if fmt == "u8":
+        f -= 128.0
+    return f / scale
+
+
+def _quantize(x: np.ndarray, fmt: str, order: str) -> bytes:
+    """float [-1, 1] samples -> stored bytes of ``fmt`` (the inverse of
+    ``_dequantize``). Integer formats round and clip to their range;
+    s16 and the G.711 codes take ``_f32_to_s16``, which truncates."""
+    x = np.asarray(x, dtype=np.float64)
+    dtype, scale = _SAMPLE_FORMATS[fmt]
+    if fmt == "ulaw":
+        return _linear_to_ulaw(_f32_to_s16(x)).tobytes()
+    if fmt == "alaw":
+        return _linear_to_alaw(_f32_to_s16(x)).tobytes()
+    if fmt == "s16":
+        return _f32_to_s16(x).astype(order + dtype).tobytes()
+    if fmt in ("f4", "f8"):
+        return x.astype(order + dtype).tobytes()
+    s = np.clip(np.round(x * (scale - 1.0)), -scale, scale - 1.0)
+    if fmt == "u8":
+        s += 128.0
+    s = s.astype(order + dtype)
+    if fmt == "s24":
+        lo = 0 if order == "<" else 1  # the int32's three low bytes
+        return s.view(np.uint8).reshape(-1, 4)[:, lo: lo + 3].tobytes()
+    return s.tobytes()
+
+
+def _interleaved(pcm: np.ndarray) -> np.ndarray:
+    """``(n,)`` mono or ``(n, nch)`` float PCM -> ``(n, nch)`` float64."""
+    x = np.asarray(pcm, dtype=np.float64)
+    return x[:, None] if x.ndim == 1 else x
+
+
+def _channel_mean(f: np.ndarray, nch: int) -> np.ndarray:
+    """Interleaved float64 samples -> float32 mean of each whole frame
+    (the decode contract's single series); a partial frame is dropped."""
+    if nch > 1:
+        f = f[: len(f) - len(f) % nch].reshape(-1, nch).mean(axis=1)
+    return f.astype(np.float32)
+
+
+def _read_chunks(raw: bytes, order: str, name: str):
+    """Yield ``(id, body)`` for each chunk of a RIFF (``order="<"``) or
+    IFF (``">"``) file after its 12-byte form header. Chunks are
+    word-aligned; a body shorter than its declared size raises
+    ``ValueError("truncated <name> chunk")``."""
+    pos = 12
+    while pos + 8 <= len(raw):
+        (size,) = struct.unpack_from(order + "I", raw, pos + 4)
+        body = raw[pos + 8: pos + 8 + size]
+        if len(body) < size:
+            raise ValueError(f"truncated {name} chunk")
+        yield raw[pos: pos + 4], body
+        pos += 8 + size + (size & 1)
+
+
+def _write_chunks(form: bytes, kind: bytes, order: str, chunks) -> bytes:
+    """``form`` + size + ``kind`` + each ``(id, body)`` chunk, odd
+    bodies padded to a word: the inverse of ``_read_chunks``."""
+    body = kind + b"".join(
+        cid + struct.pack(order + "I", len(b)) + b + bytes(len(b) & 1)
+        for cid, b in chunks
     )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return form + struct.pack(order + "I", len(body)) + body
 
 
+# WAV (format tag, bits per sample) -> sample format; 8-bit PCM is
+# unsigned, per the RIFF spec
+_WAV_FORMATS = {
+    (1, 8): "u8", (1, 16): "s16", (1, 24): "s24", (1, 32): "s32",
+    (3, 32): "f4", (3, 64): "f8", (6, 8): "alaw", (7, 8): "ulaw",
+}
+# encode_wav_variant's sample_format -> format tag
+_WAV_TAGS = {"pcm": 1, "float": 3, "alaw": 6, "ulaw": 7}
 # WAVE_FORMAT_EXTENSIBLE SubFormat GUIDs are <effective tag:2 LE
 # bytes> + this fixed 14-byte suffix (Microsoft media-type namespace)
 _WAVE_EXT_GUID_SUFFIX = (
@@ -210,24 +317,11 @@ def _decode_wav(raw: bytes) -> np.ndarray:
     matching the decode contract's single-series output.
     Foreign-writer extras (LIST/fact chunks, padded sizes) are
     skipped by the chunk walk."""
-    import struct
-
     if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
-    pos, fmt, data, fact = 12, None, None, None
-    while pos + 8 <= len(raw):
-        cid = raw[pos: pos + 4]
-        (size,) = struct.unpack_from("<I", raw, pos + 4)
-        body = raw[pos + 8: pos + 8 + size]
-        if len(body) < size:
-            raise ValueError("truncated WAV chunk")
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact" and size >= 4:
-            (fact,) = struct.unpack_from("<I", body, 0)
-        pos += 8 + size + (size & 1)  # RIFF chunks are word-aligned
+    chunks = {cid: body for cid, body in _read_chunks(raw, "<", "WAV")
+              if cid != b"fact" or len(body) >= 4}
+    fmt, data = chunks.get(b"fmt "), chunks.get(b"data")
     if fmt is None or data is None:
         raise ValueError("missing WAV fmt/data chunk")
     if len(fmt) < 16:
@@ -247,48 +341,14 @@ def _decode_wav(raw: bytes) -> np.ndarray:
     if tag == 0x11 and bits == 4:
         if nch != 1:
             raise UnsupportedCodec(f"{nch}-channel IMA ADPCM")
+        fact = chunks.get(b"fact")
+        fact = None if fact is None else struct.unpack_from("<I", fact)[0]
         return _decode_adpcm_blocks(data, block, fact)
     if nch < 1:
         raise ValueError(f"bad WAV channel count {nch}")
-    if tag == 1 and bits == 16:
-        # the original path, kept byte-identical (fixtures pin it):
-        # integer channel mean first, then one normalize
-        pcm = np.frombuffer(data, dtype="<i2", count=len(data) // 2)
-        if nch > 1:
-            pcm = pcm[: len(pcm) - len(pcm) % nch].reshape(-1, nch).mean(axis=1)
-        return (pcm.astype(np.float32) / 32768.0).astype(np.float32)
-    if tag == 1 and bits == 8:
-        # 8-bit PCM is unsigned with 128 = silence, per the RIFF spec
-        f = (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    elif tag == 1 and bits == 24:
-        b = np.frombuffer(data, dtype=np.uint8, count=len(data) - len(data) % 3)
-        b = b.reshape(-1, 3).astype(np.int32)
-        s = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
-        s = np.where(s >= 1 << 23, s - (1 << 24), s)  # sign-extend
-        f = s.astype(np.float64) / float(1 << 23)
-    elif tag == 1 and bits == 32:
-        f = np.frombuffer(
-            data, dtype="<i4", count=len(data) // 4
-        ).astype(np.float64) / float(1 << 31)
-    elif tag == 3 and bits == 32:
-        f = np.frombuffer(
-            data, dtype="<f4", count=len(data) // 4
-        ).astype(np.float64)
-    elif tag == 3 and bits == 64:
-        f = np.frombuffer(
-            data, dtype="<f8", count=len(data) // 8
-        ).astype(np.float64)
-    elif tag == 6 and bits == 8:
-        f = _alaw_to_linear(np.frombuffer(data, dtype=np.uint8)).astype(
-            np.float64) / 32768.0
-    elif tag == 7 and bits == 8:
-        f = _ulaw_to_linear(np.frombuffer(data, dtype=np.uint8)).astype(
-            np.float64) / 32768.0
-    else:
+    if (tag, bits) not in _WAV_FORMATS:
         raise UnsupportedCodec(f"wav format tag {tag} / {bits}-bit")
-    if nch > 1:
-        f = f[: len(f) - len(f) % nch].reshape(-1, nch).mean(axis=1)
-    return f.astype(np.float32)
+    return _channel_mean(_dequantize(data, _WAV_FORMATS[tag, bits], "<"), nch)
 
 
 def encode_wav_variant(
@@ -306,68 +366,19 @@ def encode_wav_variant(
     ``extensible=True`` wraps the format in WAVE_FORMAT_EXTENSIBLE
     (tag 0xFFFE + SubFormat GUID), the container modern writers emit
     for >16-bit or multi-channel files."""
-    import struct
-
-    x = np.asarray(pcm, dtype=np.float64)
-    if x.ndim == 1:
-        x = x[:, None]
-    nch = x.shape[1]
-    if sample_format == "pcm" and bits == 8:
-        tag = 1
-        payload = (
-            np.clip(np.round(x * 127.0) + 128.0, 0, 255)
-            .astype(np.uint8).tobytes()
-        )
-    elif sample_format == "pcm" and bits == 16:
-        tag = 1
-        payload = _f32_to_s16(x.ravel()).tobytes()
-    elif sample_format == "pcm" and bits == 24:
-        tag = 1
-        s = np.clip(
-            np.round(x * float((1 << 23) - 1)), -(1 << 23), (1 << 23) - 1
-        ).astype(np.int32).ravel()
-        u = np.where(s < 0, s + (1 << 24), s).astype(np.uint32)
-        out = np.empty((len(u), 3), dtype=np.uint8)
-        out[:, 0] = u & 0xFF
-        out[:, 1] = (u >> 8) & 0xFF
-        out[:, 2] = (u >> 16) & 0xFF
-        payload = out.tobytes()
-    elif sample_format == "pcm" and bits == 32:
-        tag = 1
-        payload = np.clip(
-            np.round(x * float((1 << 31) - 1)), -(1 << 31), (1 << 31) - 1
-        ).astype("<i4").ravel().tobytes()
-    elif sample_format == "float" and bits == 32:
-        tag = 3
-        payload = x.astype("<f4").ravel().tobytes()
-    elif sample_format == "float" and bits == 64:
-        tag = 3
-        payload = x.astype("<f8").ravel().tobytes()
-    elif sample_format == "alaw" and bits == 8:
-        tag = 6
-        payload = _linear_to_alaw(_f32_to_s16(x.ravel())).tobytes()
-    elif sample_format == "ulaw" and bits == 8:
-        tag = 7
-        payload = _linear_to_ulaw(_f32_to_s16(x.ravel())).tobytes()
-    else:
+    x = _interleaved(pcm)
+    tag = _WAV_TAGS.get(sample_format)
+    if (tag, bits) not in _WAV_FORMATS:
         raise ValueError(f"unsupported wav variant {sample_format}/{bits}")
+    payload = _quantize(x.ravel(), _WAV_FORMATS[tag, bits], "<")
+    nch = x.shape[1]
     block = nch * bits // 8
+    fmt = struct.pack("<HHIIHH", 0xFFFE if extensible else tag, nch, sr_hz,
+                      sr_hz * block, block, bits)
     if extensible:
-        guid = struct.pack("<H", tag) + _WAVE_EXT_GUID_SUFFIX
-        fmt = struct.pack(
-            "<HHIIHHHHI", 0xFFFE, nch, sr_hz, sr_hz * block, block, bits,
-            22, bits, 0,
-        ) + guid
-    else:
-        fmt = struct.pack("<HHIIHH", tag, nch, sr_hz, sr_hz * block, block, bits)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(payload)) + payload
-    )
-    if len(payload) & 1:
-        body += b"\x00"  # RIFF word alignment pad
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+        fmt += struct.pack("<HHIH", 22, bits, 0, tag) + _WAVE_EXT_GUID_SUFFIX
+    return _write_chunks(b"RIFF", b"WAVE", "<",
+                         [(b"fmt ", fmt), (b"data", payload)])
 
 
 # ----------------------- IMA/DVI ADPCM (WAVE format tag 0x11) -------
@@ -422,8 +433,6 @@ def _adpcm_reconstruct(pred, idx, code):
 
 
 def _encode_adpcm_wav(s16: np.ndarray, sr_hz: int) -> bytes:
-    import struct
-
     spb = 1 + (_ADPCM_BLOCK - 4) * 2  # 505 samples/block
     x = s16.astype(np.int32)
     n = len(x)
@@ -471,18 +480,14 @@ def _encode_adpcm_wav(s16: np.ndarray, sr_hz: int) -> bytes:
     out[:, 1] = seed >> 8
     out[:, 2] = idx0
     out[:, 4:] = codes[:, 0::2] | (codes[:, 1::2] << 4)
-    data = out.tobytes()
     byte_rate = max(int(sr_hz * _ADPCM_BLOCK / spb), 1)
     fmt = struct.pack(
         "<HHIIHHHH", 0x11, 1, sr_hz, byte_rate, _ADPCM_BLOCK, 4, 2, spb
     )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n)
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _write_chunks(b"RIFF", b"WAVE", "<", [
+        (b"fmt ", fmt), (b"fact", struct.pack("<I", n)),
+        (b"data", out.tobytes()),
+    ])
 
 
 def _clamp_scan(a: np.ndarray, lo: int, hi: int):
@@ -594,8 +599,6 @@ def encode_image(
         rows[:, : 3 * w] = img[::-1, :, ::-1].reshape(h, 3 * w)  # bottom-up BGR
         pix = rows.tobytes()
         off = _BMP_FILE_HEADER + _BMP_INFO_HEADER
-        import struct
-
         header = struct.pack("<2sIHHI", b"BM", off + len(pix), 0, 0, off)
         info = struct.pack(
             "<IiiHHIIiiII", _BMP_INFO_HEADER, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0
@@ -634,8 +637,6 @@ def decode_image(raw: bytes, codec: str) -> np.ndarray:
 
 
 def _decode_bmp(raw: bytes) -> np.ndarray:
-    import struct
-
     if len(raw) < _BMP_FILE_HEADER + _BMP_INFO_HEADER or raw[:2] != b"BM":
         raise ValueError("not a BMP file")
     (off,) = struct.unpack_from("<I", raw, 10)
@@ -713,7 +714,6 @@ def _decode_png(raw: bytes) -> np.ndarray:
     dependence so those rows run a scalar loop — acceptable because
     filtered rows are a per-image cost inside an Arrow batch, and this
     container has no C decoder to call."""
-    import struct
     import zlib
 
     if raw[:8] != _PNG_SIG:
@@ -905,7 +905,6 @@ def _encode_png(
     filtered independently, per the spec); `palette` emits indexed
     color (type 3, PLTE chunk) for images with <= 256 distinct
     colors."""
-    import struct
     import zlib
 
     if png_filter not in (0, 1, 2, 3, 4):
@@ -959,8 +958,6 @@ def _encode_png(
 
 def _f80_from_rate(sr: int) -> bytes:
     """Integer sample rate -> 80-bit IEEE 754 extended (AIFF COMM)."""
-    import struct
-
     if sr <= 0:
         raise ValueError(f"bad sample rate {sr}")
     exp = sr.bit_length() - 1
@@ -970,8 +967,6 @@ def _f80_from_rate(sr: int) -> bytes:
 
 def _rate_from_f80(b: bytes) -> int:
     """80-bit IEEE 754 extended -> integer sample rate (rounded)."""
-    import struct
-
     se, mant = struct.unpack(">HQ", b)
     exp = (se & 0x7FFF) - 16383 - 63
     if se & 0x8000 or mant == 0:
@@ -982,45 +977,27 @@ def _rate_from_f80(b: bytes) -> int:
     return int(round(rate))
 
 
+# AIFF COMM bits per sample -> sample format (16-bit only)
+_AIFF_FORMATS = {16: "s16"}
+
+
 def encode_aiff(pcm: np.ndarray, sr_hz: int = 8000) -> bytes:
     """float PCM (``(n,)`` mono or ``(n, nch)``) -> AIFF 16-bit
     big-endian PCM."""
-    import struct
-
-    x = np.asarray(pcm, dtype=np.float64)
-    if x.ndim == 1:
-        x = x[:, None]
+    x = _interleaved(pcm)
     n, nch = x.shape
-    data = _f32_to_s16(x.ravel()).astype(">i2").tobytes()
     comm = struct.pack(">hIh", nch, n, 16) + _f80_from_rate(sr_hz)
-    ssnd = struct.pack(">II", 0, 0) + data
-    body = (
-        b"AIFF"
-        + b"COMM" + struct.pack(">I", len(comm)) + comm
-        + b"SSND" + struct.pack(">I", len(ssnd)) + ssnd
-        + (b"\x00" if len(ssnd) & 1 else b"")
-    )
-    return b"FORM" + struct.pack(">I", len(body)) + body
+    ssnd = struct.pack(">II", 0, 0) + _quantize(x.ravel(), "s16", ">")
+    return _write_chunks(b"FORM", b"AIFF", ">",
+                         [(b"COMM", comm), (b"SSND", ssnd)])
 
 
 def _decode_aiff(raw: bytes) -> np.ndarray:
     """AIFF chunk walk -> float32 mono PCM (channel mean)."""
-    import struct
-
     if len(raw) < 12 or raw[:4] != b"FORM" or raw[8:12] != b"AIFF":
         raise ValueError("not an AIFF file")
-    pos, comm, ssnd = 12, None, None
-    while pos + 8 <= len(raw):
-        cid = raw[pos: pos + 4]
-        (size,) = struct.unpack_from(">I", raw, pos + 4)
-        body = raw[pos + 8: pos + 8 + size]
-        if len(body) < size:
-            raise ValueError("truncated AIFF chunk")
-        if cid == b"COMM":
-            comm = body
-        elif cid == b"SSND":
-            ssnd = body
-        pos += 8 + size + (size & 1)  # IFF chunks are word-aligned
+    chunks = dict(_read_chunks(raw, ">", "AIFF"))
+    comm, ssnd = chunks.get(b"COMM"), chunks.get(b"SSND")
     if comm is None or ssnd is None:
         raise ValueError("missing AIFF COMM/SSND chunk")
     if len(comm) < 18:
@@ -1029,60 +1006,38 @@ def _decode_aiff(raw: bytes) -> np.ndarray:
     _rate_from_f80(comm[8:18])  # validates; rate itself rides the table
     if nch < 1:
         raise ValueError(f"bad AIFF channel count {nch}")
-    if bits != 16:
+    if bits not in _AIFF_FORMATS:
         raise UnsupportedCodec(f"AIFF {bits}-bit PCM")
     if len(ssnd) < 8:
         raise ValueError("short AIFF SSND chunk")
     (offset,) = struct.unpack_from(">I", ssnd, 0)
-    data = ssnd[8 + offset:]
-    pcm = np.frombuffer(data, dtype=">i2", count=len(data) // 2)
-    pcm = pcm[: min(len(pcm), n_frames * nch)]
-    f = pcm.astype(np.float64) / 32768.0
-    if nch > 1:
-        f = f[: len(f) - len(f) % nch].reshape(-1, nch).mean(axis=1)
-    return f.astype(np.float32)
+    f = _dequantize(ssnd[8 + offset:], _AIFF_FORMATS[bits], ">")
+    return _channel_mean(f[: n_frames * nch], nch)
 
 
 _AU_MAGIC = b".snd"
-# AU encoding ids (public Sun/NeXT header spec)
-_AU_ULAW, _AU_PCM8, _AU_PCM16, _AU_F32, _AU_ALAW = 1, 2, 3, 6, 27
+# AU encoding id (public Sun/NeXT header spec) -> sample format; 8-bit
+# PCM is SIGNED here, unlike WAV's unsigned
+_AU_FORMATS = {1: "ulaw", 2: "s8", 3: "s16", 6: "f4", 27: "alaw"}
 
 
 def encode_au(
-    pcm: np.ndarray, sr_hz: int = 8000, encoding: int = _AU_PCM16
+    pcm: np.ndarray, sr_hz: int = 8000, encoding: int = 3
 ) -> bytes:
     """float PCM (``(n,)`` or ``(n, nch)``) -> Sun AU. Encodings:
     1 = G.711 mu-law, 2 = 8-bit SIGNED PCM (unlike WAV's unsigned),
     3 = 16-bit big-endian PCM, 6 = float32 BE, 27 = G.711 A-law."""
-    import struct
-
-    x = np.asarray(pcm, dtype=np.float64)
-    if x.ndim == 1:
-        x = x[:, None]
-    nch = x.shape[1]
-    flat = x.ravel()
-    if encoding == _AU_ULAW:
-        data = _linear_to_ulaw(_f32_to_s16(flat)).tobytes()
-    elif encoding == _AU_PCM8:
-        data = np.clip(np.round(flat * 127.0), -128, 127).astype(
-            np.int8).tobytes()
-    elif encoding == _AU_PCM16:
-        data = _f32_to_s16(flat).astype(">i2").tobytes()
-    elif encoding == _AU_F32:
-        data = flat.astype(">f4").tobytes()
-    elif encoding == _AU_ALAW:
-        data = _linear_to_alaw(_f32_to_s16(flat)).tobytes()
-    else:
+    x = _interleaved(pcm)
+    if encoding not in _AU_FORMATS:
         raise ValueError(f"unsupported AU encoding {encoding}")
+    data = _quantize(x.ravel(), _AU_FORMATS[encoding], ">")
     hdr = struct.pack(">4sIIIII", _AU_MAGIC, 24, len(data), encoding,
-                      sr_hz, nch)
+                      sr_hz, x.shape[1])
     return hdr + data
 
 
 def _decode_au(raw: bytes) -> np.ndarray:
     """Sun AU header parse -> float32 mono PCM (channel mean)."""
-    import struct
-
     if len(raw) < 24 or raw[:4] != _AU_MAGIC:
         raise ValueError("not a Sun AU file")
     _, offset, dsize, enc, _sr, nch = struct.unpack_from(">4sIIIII", raw, 0)
@@ -1095,27 +1050,9 @@ def _decode_au(raw: bytes) -> np.ndarray:
         if dsize > len(data):
             raise ValueError("truncated AU data")
         data = data[:dsize]
-    if enc == _AU_ULAW:
-        f = _ulaw_to_linear(np.frombuffer(data, dtype=np.uint8)).astype(
-            np.float64) / 32768.0
-    elif enc == _AU_PCM8:
-        f = np.frombuffer(data, dtype=np.int8).astype(np.float64) / 128.0
-    elif enc == _AU_PCM16:
-        f = np.frombuffer(
-            data, dtype=">i2", count=len(data) // 2
-        ).astype(np.float64) / 32768.0
-    elif enc == _AU_F32:
-        f = np.frombuffer(
-            data, dtype=">f4", count=len(data) // 4
-        ).astype(np.float64)
-    elif enc == _AU_ALAW:
-        f = _alaw_to_linear(np.frombuffer(data, dtype=np.uint8)).astype(
-            np.float64) / 32768.0
-    else:
+    if enc not in _AU_FORMATS:
         raise UnsupportedCodec(f"AU encoding {enc}")
-    if nch > 1:
-        f = f[: len(f) - len(f) % nch].reshape(-1, nch).mean(axis=1)
-    return f.astype(np.float32)
+    return _channel_mean(_dequantize(data, _AU_FORMATS[enc], ">"), nch)
 
 
 def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
