@@ -210,15 +210,18 @@ def clip_landmarks_batch(
     surface for THAT row, never as a task failure that kills the
     batch: a row the chain cannot decode gets no landmarks and
     ``reason[i] = "<ExceptionType>: <message>"`` (``None`` when it
-    decoded). Decoders are fuzz-tested to raise exactly
-    ValueError/UnsupportedCodec, the same contract the media path pins
-    in multimodal.frame_sample_features. Arrays are typed even for an
+    decoded; ``"ValueError: null clip bytes"`` for a null blob).
+    Decoders are fuzz-tested to raise exactly ValueError/UnsupportedCodec,
+    the same contract the media path pins in
+    multimodal.frame_sample_features. Arrays are typed even for an
     empty batch (int64 offsets and hashes, int32 t_ms)."""
     hs, ts, reason = [], [], []
     for raw, cname, sr in zip(
         pdf["bytes"].tolist(), pdf["codec"].tolist(), pdf["sr_hz"].tolist()
     ):
         try:
+            if raw is None:  # a null blob is one bad row, like a corrupt one
+                raise ValueError("null clip bytes")
             h, t = extract_clip_landmarks(bytes(raw), cname, int(sr))
             reason.append(None)
         except (ValueError, codec.UnsupportedCodec) as e:

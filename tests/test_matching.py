@@ -504,9 +504,9 @@ def test_corrupt_rows_quarantined_not_fatal(spark, index):
 
 def test_clip_landmarks_batch_csr_and_reasons():
     """The one clip kernel (Spark-free): row i's CSR slice equals the
-    per-clip chain's landmarks, undecodable rows get an empty slice and
-    the quarantine reason text, and an empty batch is typed, not a
-    special case."""
+    per-clip chain's landmarks, undecodable rows (a null blob too) get
+    an empty slice and the quarantine reason text, and an empty batch
+    is typed, not a special case."""
     import pandas as pd
 
     tid = synth.default_track_ids(1)[0]
@@ -516,6 +516,7 @@ def test_clip_landmarks_batch_csr_and_reasons():
         (codec.encode(pcm, "adpcm")[:40], "adpcm", 8000),
         (codec.encode(pcm, "pcm_s16le"), "opus", 8000),
         (codec.encode(pcm, "ulaw"), "ulaw", 16000),
+        (None, "pcm_s16le", 8000),
     ]
     pdf = pd.DataFrame(rows, columns=["bytes", "codec", "sr_hz"])
     offsets, h, t, reason = dsp.clip_landmarks_batch(pdf)
@@ -524,6 +525,9 @@ def test_clip_landmarks_batch_csr_and_reasons():
     assert offsets[-1] == len(h) == len(t)
     for i, (raw, cname, sr) in enumerate(rows):
         a, b = offsets[i], offsets[i + 1]
+        if raw is None:
+            assert reason[i] == "ValueError: null clip bytes" and a == b
+            continue
         try:
             want_h, want_t = dsp.extract_clip_landmarks(raw, cname, sr)
         except (ValueError, codec.UnsupportedCodec) as e:
