@@ -969,7 +969,8 @@ def _rate_from_f80(b: bytes) -> int:
     """80-bit IEEE 754 extended -> integer sample rate (rounded)."""
     se, mant = struct.unpack(">HQ", b)
     exp = (se & 0x7FFF) - 16383 - 63
-    if se & 0x8000 or mant == 0:
+    # mant >= 1, so exp >= 31 is >= 2**31 (and 2.0 ** exp may overflow)
+    if se & 0x8000 or mant == 0 or exp >= 31:
         raise ValueError("bad AIFF sample rate")
     rate = mant * 2.0 ** exp
     if not (0 < rate < 2 ** 31):

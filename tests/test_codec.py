@@ -1455,6 +1455,10 @@ def test_aiff_f80_sample_rate_codec():
 
     for sr in (8000, 16000, 22050, 32000, 44100, 48000, 96000):
         assert _rate_from_f80(_f80_from_rate(sr)) == sr
+    # an exponent past float64's range is a bad rate, not OverflowError
+    for se in (0x443E, 0x7FFF):
+        with pytest.raises(ValueError, match="bad AIFF sample rate"):
+            _rate_from_f80(se.to_bytes(2, "big") + (1).to_bytes(8, "big"))
 
 
 @pytest.mark.parametrize("encoding,floor", [

@@ -258,6 +258,50 @@ def test_gif_decoder_contract_past_magic(raw):
         pass
 
 
+# (form id, form type, byte order, format chunk id, data chunk id)
+_FORMS = {
+    "wav": (b"RIFF", b"WAVE", "<", b"fmt ", b"data"),
+    "aiff": (b"FORM", b"AIFF", ">", b"COMM", b"SSND"),
+}
+
+
+@st.composite
+def _past_magic(draw):
+    """(codec, bytes) past a container's magic: a RIFF/WAVE or
+    FORM/AIFF header followed by random bytes or by a format chunk and
+    a data chunk with random bodies; or a ``.snd`` magic and data
+    offset 24 followed by random header fields and samples."""
+    import struct
+
+    name = draw(st.sampled_from(["wav", "aiff", "au"]))
+    head, body = draw(st.binary(max_size=48)), draw(st.binary(max_size=300))
+    if name == "au":
+        return name, b".snd" + struct.pack(">I", 24) + head + body
+    form, kind, order, fmt_id, data_id = _FORMS[name]
+    if draw(st.booleans()):
+        return name, form + bytes(4) + kind + head + body
+    chunks = b"".join(
+        cid + struct.pack(order + "I", len(b)) + b
+        for cid, b in ((fmt_id, head), (data_id, body))
+    )
+    return name, form + bytes(4) + kind + chunks
+
+
+@settings(max_examples=200, deadline=None)
+@given(_past_magic())
+def test_pcm_container_contract_past_magic(case):
+    """Plain byte fuzz almost never passes the RIFF, FORM or .snd magic,
+    so this variant starts from a valid one and fuzzes the chunk walk,
+    the header fields and the sample-format table behind them: only
+    ValueError/UnsupportedCodec may escape, and output is float32."""
+    name, raw = case
+    try:
+        out = codec.decode(raw, name)
+        assert out.dtype == np.float32
+    except (ValueError, codec.UnsupportedCodec):
+        pass
+
+
 # ---- example-based regressions for contract escapes the 300-byte ----
 # fuzz could not reach (advisor round 5): structurally-valid marker
 # walks whose segment BODIES are truncated used to leak struct.error /
