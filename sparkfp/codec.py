@@ -218,7 +218,7 @@ def _dequantize(data: bytes, fmt: str, order: str) -> np.ndarray:
         b[:, lo: lo + 3] = np.frombuffer(data, np.uint8, 3 * n).reshape(n, 3)
         s = b.view(order + "i4")[:, 0] >> 8  # arithmetic: sign-extends
     else:
-        s = np.frombuffer(data, order + dtype, len(data) // int(dtype[1]))
+        s = np.frombuffer(data, order + dtype, len(data) // np.dtype(dtype).itemsize)
     if fmt == "ulaw":
         s = _ulaw_to_linear(s)
     elif fmt == "alaw":

@@ -1214,9 +1214,29 @@ def test_wav_variant_roundtrip_and_oracle_parity(
     assert np.array_equal(eng, ora.astype(np.float32))
 
 
+@pytest.mark.parametrize("fmt", sorted(codec._SAMPLE_FORMATS))
+def test_sample_format_table_both_byte_orders(fmt):
+    """Each entry of the one sample-format table reads back what it
+    writes, to within its quantization error, in both byte orders,
+    and the big-endian bytes are the little-endian ones reversed
+    sample by sample."""
+    x = np.concatenate([_signal(n=997), [-1.0, 1.0, 0.0, -0.5, 0.5]])
+    le = codec._quantize(x, fmt, "<")
+    be = codec._quantize(x, fmt, ">")
+    width = 3 if fmt == "s24" else np.dtype(codec._SAMPLE_FORMATS[fmt][0]).itemsize
+    assert len(le) == len(be) == width * len(x)
+    assert be == np.frombuffer(le, np.uint8).reshape(-1, width)[:, ::-1].tobytes()
+    # the 8-bit writers scale by 127 and the readers by 128
+    tol = {"u8": 1.5 / 128, "s8": 1.5 / 128, "ulaw": 0.04, "alaw": 0.04}.get(fmt, 1e-4)
+    for order, raw in (("<", le), (">", be)):
+        y = codec._dequantize(raw + b"\x7f" * (width - 1), fmt, order)
+        assert len(y) == len(x)  # the partial trailing sample is dropped
+        np.testing.assert_allclose(y, x, atol=tol)
+
+
 def test_wav_stereo_channels_are_averaged():
     """Decorrelated stereo decodes to the per-frame channel mean (not
-    ch0), for both the legacy 16-bit path and a breadth format."""
+    ch0), for 16-bit PCM and two breadth formats."""
     import tools.dsp_oracle as orc
 
     x = _signal(n=1500)
