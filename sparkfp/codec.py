@@ -226,7 +226,8 @@ def _dequantize(data: bytes, fmt: str, order: str) -> np.ndarray:
     f = s.astype(np.float64)
     if fmt == "u8":
         f -= 128.0
-    return f / scale
+    f *= 1.0 / scale  # a power of two: exact, and in place (no second array)
+    return f
 
 
 def _quantize(x: np.ndarray, fmt: str, order: str) -> bytes:
