@@ -16,9 +16,14 @@ def _signal(n=8000, seed=7):
 
 def test_pcm_s16le_roundtrip_snr():
     pcm = _signal()
-    out = codec.decode(codec.encode(pcm, "pcm_s16le"), "pcm_s16le")
+    raw = codec.encode(pcm, "pcm_s16le")
+    out = codec.decode(raw, "pcm_s16le")
     assert len(out) == len(pcm)
     assert codec.snr_db(pcm, out) >= 80.0  # 16-bit quantization ~90 dB
+    # a headerless stream declares no size, so an odd byte count is an
+    # error, not a partial sample to drop
+    with pytest.raises(ValueError, match="multiple of element size"):
+        codec.decode(raw[:-1], "pcm_s16le")
 
 
 def test_ulaw_roundtrip_snr():
