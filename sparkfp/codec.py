@@ -339,14 +339,14 @@ def _decode_wav(raw: bytes) -> np.ndarray:
         if guid[2:] != _WAVE_EXT_GUID_SUFFIX:
             raise UnsupportedCodec(f"wav extensible SubFormat {guid.hex()}")
         (tag,) = struct.unpack_from("<H", guid, 0)
+    if nch < 1:
+        raise ValueError(f"bad WAV channel count {nch}")
     if tag == 0x11 and bits == 4:
         if nch != 1:
             raise UnsupportedCodec(f"{nch}-channel IMA ADPCM")
         fact = chunks.get(b"fact")
         fact = None if fact is None else struct.unpack_from("<I", fact)[0]
         return _decode_adpcm_blocks(data, block, fact)
-    if nch < 1:
-        raise ValueError(f"bad WAV channel count {nch}")
     if (tag, bits) not in _WAV_FORMATS:
         raise UnsupportedCodec(f"wav format tag {tag} / {bits}-bit")
     return _channel_mean(_dequantize(data, _WAV_FORMATS[tag, bits], "<"), nch)

@@ -1284,6 +1284,11 @@ def test_wav_variant_error_paths():
     struct.pack_into("<H", odd, odd.index(b"fmt ") + 8 + 14, 12)
     with pytest.raises(codec.UnsupportedCodec, match="tag 1 / 12-bit"):
         codec.decode(bytes(odd), "wav")
+    # a 0-channel IMA ADPCM header is corrupt, not an unsupported codec
+    adpcm = bytearray(codec.encode(pcm, "adpcm", sr_hz=8000))
+    struct.pack_into("<H", adpcm, adpcm.index(b"fmt ") + 8 + 2, 0)
+    with pytest.raises(ValueError, match="bad WAV channel count 0"):
+        codec.decode(bytes(adpcm), "adpcm")
     # encoder rejects variants the decoder can't read back
     with pytest.raises(ValueError, match="variant"):
         codec.encode_wav_variant(pcm, 8000, bits=12)
