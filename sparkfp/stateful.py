@@ -44,7 +44,6 @@ def run_state_batch(
     running_col: str,
     shutdown_window_s: int,
     transition_window_s: int,
-    step_fallback_s: float = 60.0,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Label every row RUNNING / SHUTDOWN / STARTING.
