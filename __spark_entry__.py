@@ -84,8 +84,8 @@ def q_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
     )
     # bounded input -> native-aggregate fast path; the collect_list
-    # formulation (fingerprint.windowed_stats) is the shared
-    # batch==stream plan and stays the streaming/parity path
+    # formulation (fingerprint.pipeline) is the shared batch==stream
+    # plan and stays the streaming/parity path
     stats = fingerprint.windowed_stats_fast(ev, window="1 hour")
     return stats.select(
         (F.col("start_ms") / 1000).cast("long").alias("win_start_s"),

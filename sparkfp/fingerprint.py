@@ -15,18 +15,21 @@ Reference semantics being reproduced (cited into /root/reference):
 Spark-first design notes:
 
 - The whole chain is declarative DataFrame ops: `explode` for the
-  flatMap, `window()` for the tumbling window, one shuffle at the
-  keyed aggregation (same topology as the reference's single key_by
+  flatMap, `window()` for the tumbling window, one shuffle at the one
+  keyed aggregation by (window, equip) (the reference's single key_by
   exchange), WholeStageCodegen everywhere — no Python on the hot path.
+  Under streaming that is one stateful operator, so one state store
+  per shuffle partition to commit each micro-batch.
 - Stats are computed from `collect_list` + array expressions rather
   than `median()`/`stddev_pop()` aggregates so the *identical plan*
   runs under Structured Streaming append mode (Spark's streaming
   aggregation cannot run full-dataset aggregates like median, but
   collect_list is incremental). Batch and streaming therefore share
   one code path and produce byte-identical rows.
-- Group cardinality is (n_keys x n_sensors x n_windows); each group
-  holds <= window_seconds values, so collect_list state is bounded
-  and small — safe at any scale-out since groups are independent.
+- Group cardinality is (n_keys x n_windows); each group holds
+  <= window_seconds x n_sensors (sensor_id, value) pairs, so
+  collect_list state is bounded and small — safe at any scale-out
+  since groups are independent.
 """
 
 from __future__ import annotations
@@ -90,49 +93,18 @@ def _array_stats(arr: Column) -> list[Column]:
     ]
 
 
-def windowed_stats(
-    values: DataFrame,
-    window: str = WINDOW,
-    watermark: str | None = None,
-) -> DataFrame:
-    """Long-form values -> one stats row per (window, equip, sensor).
-
-    Pass ``watermark`` to make this a streaming append-mode
-    aggregation; final rows are identical either way for the same
-    input + watermark (the north-rule equality condition).
-    """
-    ts = F.timestamp_millis(F.col("ts_ms")).alias("event_time")
-    df = values.withColumn("event_time", ts)
-    if watermark:
-        df = df.withWatermark("event_time", watermark)
-    agg = df.groupBy(
-        F.window("event_time", window).alias("win"), "equip_id", "sensor_id"
-    ).agg(F.collect_list("value").alias("vals"))
-    # keep the `win` event-time column: the fingerprint rollup is a second
-    # (chained) streaming aggregation, and Spark propagates the watermark
-    # only through the window column itself.
-    return agg.select(
-        "win",
-        F.unix_millis(F.col("win.start")).alias("start_ms"),
-        F.unix_millis(F.col("win.end")).alias("end_ms"),
-        "equip_id",
-        "sensor_id",
-        *_array_stats(F.col("vals")),
-    )
-
-
 def windowed_stats_fast(values: DataFrame, window: str = WINDOW) -> DataFrame:
-    """Batch-only fast path for :func:`windowed_stats`: native
-    min/max/median/avg/stddev_pop aggregates (map-side partial
-    aggregation, no per-group array state) — about half the runtime of
-    the collect_list formulation on bounded inputs.
+    """Batch-only per-sensor stats: one row per (window, equip, sensor)
+    from native min/max/median/avg/stddev_pop aggregates (map-side
+    partial aggregation, no per-group array state), for bounded
+    analytics such as the ``fingerprint_stats`` query.
 
     Not usable under streaming append mode (median/stddev aren't
-    incremental there) and not byte-identical to the shared plan:
-    merge-based mean/stddev accumulate in a different order than the
-    sorted-array fold, so values agree to ~1e-10 relative, not to the
-    last ulp. Use the shared plan wherever stream==batch byte equality
-    is asserted; use this for bounded analytics at scale.
+    incremental there) and not byte-identical to :func:`pipeline`'s
+    stats: merge-based mean/stddev accumulate in a different order than
+    the sorted-array fold, so values agree to ~1e-10 relative, not to
+    the last ulp. Use :func:`pipeline` wherever stream==batch byte
+    equality is asserted.
     """
     ts = F.timestamp_millis(F.col("ts_ms")).alias("event_time")
     df = values.withColumn("event_time", ts)
@@ -160,35 +132,6 @@ def windowed_stats_fast(values: DataFrame, window: str = WINDOW) -> DataFrame:
     )
 
 
-def to_fingerprints(stats: DataFrame) -> DataFrame:
-    """Roll stats rows up to one fingerprint row per (window, equip).
-
-    Map entries are sorted by sensor_id so output is canonical
-    (the reference's dict insertion order is nondeterministic across
-    runs — SURVEY.md §7.5.6).
-    """
-    entry = F.struct(
-        F.col("sensor_id").alias("key"),
-        F.struct("min", "max", "median", "mean", "std_dev").alias("value"),
-    )
-    return (
-        stats.groupBy("win", "equip_id")
-        .agg(F.map_from_entries(F.sort_array(F.collect_list(entry))).alias("data"))
-        .withColumn("start_ms", F.unix_millis(F.col("win.start")))
-        .withColumn("end_ms", F.unix_millis(F.col("win.end")))
-        .select(
-            F.sha2(
-                F.concat_ws(":", F.col("equip_id"), F.col("start_ms")), 256
-            ).alias("uuid"),
-            "equip_id",
-            F.lit("kiln").alias("type"),
-            "start_ms",
-            "end_ms",
-            "data",
-        )
-    )
-
-
 def fingerprints_json(fps: DataFrame) -> DataFrame:
     """Fingerprint rows -> the reference's JSON envelope
     (src/flink_job/serialization.py:23-38: {"fingerprint": {...}})."""
@@ -204,5 +147,37 @@ def fingerprints_json(fps: DataFrame) -> DataFrame:
 
 
 def pipeline(events: DataFrame, watermark: str | None = None) -> DataFrame:
-    """events -> fingerprint rows (the reference job end-to-end)."""
-    return to_fingerprints(windowed_stats(unnest(events), watermark=watermark))
+    """events -> one fingerprint row per (window, equip): the reference
+    job end-to-end as one keyed aggregation.
+
+    Each group collects (sensor_id, value) pairs and sorts them, so every
+    sensor's slice is contiguous and ascending; `data` maps each distinct
+    sensor_id (ascending, so the map is canonical: the reference's dict
+    order is nondeterministic across runs, SURVEY.md §7.5.6) to the
+    stats of its slice. Pass ``watermark`` to make this a streaming
+    append-mode aggregation; final rows are identical either way for
+    the same input + watermark (the north-rule equality condition).
+    """
+    values = unnest(events).withColumn("event_time", F.timestamp_millis("ts_ms"))
+    if watermark:
+        values = values.withWatermark("event_time", watermark)
+    agg = values.groupBy(F.window("event_time", WINDOW).alias("win"), "equip_id").agg(
+        F.sort_array(F.collect_list(F.struct("sensor_id", "value"))).alias("pairs")
+    )
+    sensors = F.array_distinct(F.transform("pairs", lambda p: p.sensor_id))
+
+    def stats(sensor: Column) -> Column:
+        # a null value (an unparseable string with ANSI casts off) is
+        # skipped, as collect_list skips it
+        mine = F.filter("pairs", lambda p: (p.sensor_id == sensor) & p.value.isNotNull())
+        return F.struct(*_array_stats(F.transform(mine, lambda p: p.value)))
+
+    start_ms = F.unix_millis(F.col("win.start"))
+    return agg.select(
+        F.sha2(F.concat_ws(":", "equip_id", start_ms), 256).alias("uuid"),
+        "equip_id",
+        F.lit("kiln").alias("type"),
+        start_ms.alias("start_ms"),
+        F.unix_millis(F.col("win.end")).alias("end_ms"),
+        F.map_from_arrays(sensors, F.transform(sensors, stats)).alias("data"),
+    )

@@ -12,9 +12,10 @@ single task's share to 1/k of a hot key:
   phase 2: groupBy(window, key)        — merge the k partials
 
 Both phases keep the event-time window column, so the same plan runs
-under Structured Streaming append mode (watermark propagates through
-chained stateful aggregations — see sparkfp.fingerprint for the same
-pattern).
+under Structured Streaming append mode: Spark propagates the watermark
+through chained stateful aggregations only via the window column
+itself. Each phase is its own stateful operator there, with its own
+state store per shuffle partition.
 """
 
 from __future__ import annotations

@@ -11,6 +11,7 @@ from collections import defaultdict
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from sparkfp import fingerprint, synth
 
@@ -36,6 +37,15 @@ def _oracle(events_pdf):
     return out
 
 
+def _stats_rows(events):
+    """One stats row per (window, equip, sensor): `pipeline` rows
+    exploded over their `data` map."""
+    fps = fingerprint.pipeline(events)
+    return fps.select(
+        "start_ms", "end_ms", "equip_id", F.explode("data").alias("sensor_id", "s")
+    ).select("start_ms", "end_ms", "equip_id", "sensor_id", "s.*")
+
+
 @pytest.fixture(scope="module")
 def events(spark):
     return synth.sensor_events(spark, n_seconds=180).cache()
@@ -55,7 +65,7 @@ def test_unnest_drops_nulls_and_casts_float32(spark, events):
 
 
 def test_windowed_stats_match_reference_oracle(spark, events):
-    stats = fingerprint.windowed_stats(fingerprint.unnest(events)).collect()
+    stats = _stats_rows(events).collect()
     oracle = _oracle(events.toPandas())
     assert len(stats) == len(oracle)
     for row in stats:
@@ -104,11 +114,9 @@ def test_windowed_stats_fast_path_matches_exact(spark):
     """The native-aggregate batch fast path agrees with the shared
     batch==stream collect_list plan to well past the 6-dp precision
     the engine publishes (merge-order float differences only)."""
-    from sparkfp import fingerprint, synth
-
-    ev = fingerprint.unnest(synth.sensor_events(spark, n_seconds=180))
-    exact = fingerprint.windowed_stats(ev).drop("win").toPandas()
-    fast = fingerprint.windowed_stats_fast(ev).drop("win").toPandas()
+    ev = synth.sensor_events(spark, n_seconds=180)
+    exact = _stats_rows(ev).toPandas()
+    fast = fingerprint.windowed_stats_fast(fingerprint.unnest(ev)).drop("win").toPandas()
     key = ["start_ms", "equip_id", "sensor_id"]
     exact = exact.sort_values(key).reset_index(drop=True)
     fast = fast.sort_values(key).reset_index(drop=True)

@@ -52,6 +52,11 @@ def test_stream_equals_batch_fingerprints(spark, tmpdirs):
     sink = ExactlyOnceParquetSink(tmpdirs["sink"])
     q = streaming.fingerprint_stream(src, sink, tmpdirs["ckpt"])
     q.awaitTermination(300)
+    # one keyed aggregation: one stateful operator (one state store per
+    # shuffle partition) in every data batch
+    data_batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert data_batches
+    assert [len(p.stateOperators) for p in data_batches] == [1] * len(data_batches)
 
     got = sink.read(spark).collect()
     exp = {
