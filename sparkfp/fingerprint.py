@@ -166,12 +166,17 @@ def pipeline(events: DataFrame, watermark: str | None = None) -> DataFrame:
     )
     sensors = F.array_distinct(F.transform("pairs", lambda p: p.sensor_id))
 
-    def stats(sensor: Column) -> Column:
+    def values_of(sensor: Column) -> Column:
         # a null value (an unparseable string with ANSI casts off) is
         # skipped, as collect_list skips it
         mine = F.filter("pairs", lambda p: (p.sensor_id == sensor) & p.value.isNotNull())
-        return F.struct(*_array_stats(F.transform(mine, lambda p: p.value)))
+        return F.transform(mine, lambda p: p.value)
 
+    # bind each slice to a lambda variable once: _array_stats refers to
+    # its input ~16 times, and Spark does not share common
+    # subexpressions inside a lambda (inlined, every reference re-ran
+    # the filter over the whole group: 30x slower at 20 sensors)
+    stats = F.transform(F.transform(sensors, values_of), lambda v: F.struct(*_array_stats(v)))
     start_ms = F.unix_millis(F.col("win.start"))
     return agg.select(
         F.sha2(F.concat_ws(":", "equip_id", start_ms), 256).alias("uuid"),
@@ -179,5 +184,5 @@ def pipeline(events: DataFrame, watermark: str | None = None) -> DataFrame:
         F.lit("kiln").alias("type"),
         start_ms.alias("start_ms"),
         F.unix_millis(F.col("win.end")).alias("end_ms"),
-        F.map_from_arrays(sensors, F.transform(sensors, stats)).alias("data"),
+        F.map_from_arrays(sensors, stats).alias("data"),
     )

@@ -99,6 +99,15 @@ def test_fingerprint_rollup_shape_and_deterministic_uuid(spark, events):
         assert rows2[k] == row.uuid
 
 
+def test_pipeline_filters_each_sensor_slice_once(spark, events):
+    """Each sensor's values are filtered out of the group's pairs once and
+    bound to a lambda variable: inlined into `_array_stats`, every one of
+    its references re-ran the filter over the whole group (Spark shares
+    no common subexpressions inside a lambda)."""
+    plan = fingerprint.pipeline(events)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("filter(") == 1, plan
+
+
 def test_json_envelope(spark, events):
     j = fingerprint.fingerprints_json(fingerprint.pipeline(events)).first()
     import json
