@@ -173,9 +173,9 @@ def pipeline(events: DataFrame, watermark: str | None = None) -> DataFrame:
         return F.transform(mine, lambda p: p.value)
 
     # bind each slice to a lambda variable once: _array_stats refers to
-    # its input ~16 times, and Spark does not share common
-    # subexpressions inside a lambda (inlined, every reference re-ran
-    # the filter over the whole group: 30x slower at 20 sensors)
+    # its input ~16 times, and Spark shares no common subexpressions
+    # inside a lambda, so inlined each reference would re-run the
+    # filter over the whole group
     stats = F.transform(F.transform(sensors, values_of), lambda v: F.struct(*_array_stats(v)))
     start_ms = F.unix_millis(F.col("win.start"))
     return agg.select(
