@@ -66,15 +66,16 @@ def unnest(events: DataFrame) -> DataFrame:
     )
 
 
-def _array_stats(arr: Column) -> list[Column]:
-    """Exact stats over a collected value array (streaming-safe).
+def _array_stats(sorted_arr: Column) -> list[Column]:
+    """Exact stats over an ascending, null-free value array
+    (streaming-safe). The caller sorts: `pipeline`'s slices arrive in
+    order, and a sort here would re-run at each of the ~16 references.
 
     median = mean of the two middle elements for even n (same rule as
     Python's statistics.median, reference aggregations.py:13);
     std_dev = population sigma (statistics.pstdev, aggregations.py:15),
     0.0 for n == 1 (explicit guard at aggregations.py:15).
     """
-    sorted_arr = F.sort_array(arr)
     n = F.size(sorted_arr)
     lo = F.element_at(sorted_arr, ((n + 1) / 2).cast("int"))
     hi = F.element_at(sorted_arr, (n / 2).cast("int") + 1)

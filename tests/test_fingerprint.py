@@ -108,6 +108,17 @@ def test_pipeline_filters_each_sensor_slice_once(spark, events):
     assert plan.count("filter(") == 1, plan
 
 
+def test_pipeline_sorts_each_group_once(spark, events):
+    """The group's (sensor_id, value) pairs are sorted once, in the
+    aggregation; each sensor's slice of them is already ascending, so
+    `_array_stats` folds it without a sort of its own (a re-sort at each
+    reference to the slice made 17 `sort_array` in this plan). The
+    optimized plan is read because the executed plan prints no
+    aggregate result expressions, where the one sort lives."""
+    plan = fingerprint.pipeline(events)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("sort_array(") == 1, plan
+
+
 def test_json_envelope(spark, events):
     j = fingerprint.fingerprints_json(fingerprint.pipeline(events)).first()
     import json
