@@ -164,6 +164,13 @@ def match_clips_fused(
     shared storage. Repartition upstream only if the scan yields fewer
     partitions than cores.
 
+    Per clip, the probe is one left ``searchsorted`` of its landmark
+    hashes over the index's hash runs; every hit's index position comes
+    from one ``arange`` shifted by its run's start; the offset bin is
+    Spark's ``(x / bin).cast(long)`` in float64, exactly; and
+    :func:`vote` counts (track, bin) pairs with a memory bound of the
+    hit count.
+
     Verified equal to the relational matcher in tests/test_matching.py.
     """
     sc = clips.sparkSession.sparkContext
@@ -194,13 +201,17 @@ def match_clips_fused(
                 h = hs[a:b]
                 lo = np.searchsorted(sh, h)
                 mult = np.where(sh[lo] == h, run_mult[lo], 0)
-                if not mult.any():
+                total = int(mult.sum())
+                if not total:
                     continue
-                cand = np.repeat(lo, mult) + _ranges_offsets(mult)
-                # trunc-toward-zero to match Spark's (x / bin).cast(long):
-                # int floor-div, +1 on negative non-exact quotients
+                # the index positions of every hit: landmark i's run
+                # lo[i] .. lo[i] + mult[i] - 1, in one arange shifted by
+                # each run's start less the hits before it
+                cand = np.arange(total) + np.repeat(lo - (np.cumsum(mult) - mult), mult)
                 d = t_track[cand] - np.repeat(ts[a:b].astype(np.int64), mult)
-                offset_bin = d // bin_ms + ((d < 0) & (d % bin_ms != 0))
+                # Spark's (x / bin).cast(long), exactly: a float64
+                # quotient truncated toward zero
+                offset_bin = (d / bin_ms).astype(np.int64)
                 code, off_bin, votes = vote(codes[cand], offset_bin)
                 score = votes / (int(dur) / 1000.0)
                 if votes >= min_votes and score >= min_score:
@@ -225,27 +236,27 @@ def vote(codes: np.ndarray, offset_bin: np.ndarray) -> tuple[int, int, int]:
     pair, ties broken to the smallest pair — the relational matcher's
     row_number order.
 
-    Memory is bounded by the hit count whatever the track codes and
-    offsets are: the packed (track, offset) keys are counted with a
-    sort. The key layout is lexicographic in (track, offset), so the
-    first maximum is the tie-break winner. The key fits int64 whenever
-    track codes and both millisecond times are non-negative int32."""
+    The (track, offset) pairs are packed into keys lexicographic in
+    (track, offset), so the first maximum is the tie-break winner.
+    When the box of codes × offsets the hits span has at most 8 cells
+    per hit, a dense ``bincount`` counts them; otherwise a sort
+    (``np.unique``) does. Either way memory is bounded by the hit
+    count whatever the track codes and offsets are. The key fits int64
+    whenever track codes and both millisecond times are non-negative
+    int32."""
     omin = int(offset_bin.min())
     span = int(offset_bin.max()) - omin + 1
     cmin = int(codes.min())
     key = (codes.astype(np.int64) - cmin) * span + (offset_bin - omin)
-    keys, counts = np.unique(key, return_counts=True)
-    best = int(np.argmax(counts))
-    winner = int(keys[best])
-    return winner // span + cmin, winner % span + omin, int(counts[best])
-
-
-def _ranges_offsets(counts: np.ndarray) -> np.ndarray:
-    """[3,0,2] -> [0,1,2,0,1]: per-range local offsets, vectorized."""
-    total = int(counts.sum())
-    out = np.arange(total, dtype=np.int64)
-    starts = np.repeat(np.cumsum(counts) - counts, counts)
-    return out - starts
+    if (int(codes.max()) - cmin + 1) * span <= 8 * len(key):
+        counts = np.bincount(key)
+        winner = int(np.argmax(counts))
+        n = int(counts[winner])
+    else:
+        keys, counts = np.unique(key, return_counts=True)
+        best = int(np.argmax(counts))
+        winner, n = int(keys[best]), int(counts[best])
+    return winner // span + cmin, winner % span + omin, n
 
 
 def match_pipeline(

@@ -193,24 +193,6 @@ def clip_row(
     )
 
 
-def ground_truth_for(clip_id: str, track_ids: list[str], seed: int = 42):
-    """(is_noise, track_id, offset_ms, float32 pcm before codec) for tests."""
-    rng = _id_rng(seed, clip_id)
-    dur_ms = int(rng.integers(3000, 8001))
-    n = int(SR_HZ * dur_ms / 1000)
-    is_noise = rng.random() < 0.3
-    if is_noise:
-        pcm = (0.1 * rng.standard_normal(n)).astype(np.float32)
-        return True, None, None, np.clip(pcm, -1.0, 1.0)
-    tid = track_ids[int(rng.integers(0, len(track_ids)))]
-    track = track_pcm(tid, seed=seed)
-    max_off = max(len(track) - n, 1)
-    off = int(rng.integers(0, max_off))
-    pcm = track[off : off + n].copy()
-    pcm += (0.01 * rng.standard_normal(len(pcm))).astype(np.float32)
-    return False, tid, int(off * 1000 / SR_HZ), np.clip(pcm, -1.0, 1.0)
-
-
 def default_track_ids(n_tracks: int = 8) -> list[str]:
     return [f"track_{i:04d}" for i in range(n_tracks)]
 

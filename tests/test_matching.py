@@ -26,11 +26,30 @@ def clips(spark):
     return synth.clips(spark, n_clips=N_CLIPS, n_tracks=N_TRACKS).cache()
 
 
+def ground_truth_for(clip_id: str, track_ids: list[str], seed: int = 42):
+    """(is_noise, track_id, offset_ms, float32 pcm before codec) of
+    ``synth.clip_row``'s clip, drawn from the same per-clip stream."""
+    rng = synth._id_rng(seed, clip_id)
+    dur_ms = int(rng.integers(3000, 8001))
+    n = int(synth.SR_HZ * dur_ms / 1000)
+    is_noise = rng.random() < 0.3
+    if is_noise:
+        pcm = (0.1 * rng.standard_normal(n)).astype(np.float32)
+        return True, None, None, np.clip(pcm, -1.0, 1.0)
+    tid = track_ids[int(rng.integers(0, len(track_ids)))]
+    track = synth.track_pcm(tid, seed=seed)
+    max_off = max(len(track) - n, 1)
+    off = int(rng.integers(0, max_off))
+    pcm = track[off : off + n].copy()
+    pcm += (0.01 * rng.standard_normal(len(pcm))).astype(np.float32)
+    return False, tid, int(off * 1000 / synth.SR_HZ), np.clip(pcm, -1.0, 1.0)
+
+
 @pytest.fixture(scope="module")
 def truth():
     tids = synth.default_track_ids(N_TRACKS)
     return {
-        f"clip_{i:08d}": synth.ground_truth_for(f"clip_{i:08d}", tids)
+        f"clip_{i:08d}": ground_truth_for(f"clip_{i:08d}", tids)
         for i in range(N_CLIPS)
     }
 
@@ -568,6 +587,71 @@ def test_vote_equals_counter_reference():
         assert matching.vote(codes, offset_bin) == _vote_reference(
             codes, offset_bin
         )
+
+
+@pytest.mark.parametrize(
+    "n_codes, span, n_hits, dense",
+    [(3, 160, 60, True), (13, 37, 60, False), (1, 400, 50, True), (1, 401, 50, False)],
+)
+def test_vote_dense_sort_boundary(n_codes, span, n_hits, dense, monkeypatch):
+    """At (code range x offset span) = 8 hits the vote counts with a
+    dense bincount, one cell more and it sorts; both == the Counter
+    vote, ties included (a few dozen hits over hundreds of cells)."""
+    calls = []
+    real = np.bincount
+    monkeypatch.setattr(np, "bincount", lambda *a, **k: calls.append(1) or real(*a, **k))
+    rng = np.random.default_rng(n_codes * 1000 + span)
+    for _ in range(20):
+        codes = rng.integers(0, n_codes, n_hits).astype(np.int32)
+        offset_bin = rng.integers(-span // 2, span - span // 2, n_hits).astype(np.int64)
+        # pin both corners so the box is exactly n_codes x span
+        codes[:2] = 0, n_codes - 1
+        offset_bin[:2] = -span // 2, span - span // 2 - 1
+        assert matching.vote(codes, offset_bin) == _vote_reference(codes, offset_bin)
+    assert bool(calls) == dense
+
+
+def test_fused_negative_offsets_bin_as_spark_casts(spark):
+    """Offsets of -250, -200, -150, -100, -99 and -1 ms land in the bin
+    Spark's ``(x / 100).cast("long")`` gives (toward zero, so -99 and -1
+    are bin 0), in the fused matcher and the relational one alike.
+    Clip k's landmarks are indexed as track k at t_ms + its offset."""
+    from pyspark.sql import functions as F
+
+    from sparkfp import schema
+
+    offs = [-250, -200, -150, -100, -99, -1]
+    rows = []
+    for k, tid in enumerate(synth.default_track_ids(len(offs))):
+        pcm = synth.track_pcm(tid, dur_ms=3000)
+        raw = codec.encode(pcm, "pcm_s16le")
+        rows.append((f"c{k}", raw, synth.SR_HZ, 3000, "pcm_s16le", "", 0))
+    clips = spark.createDataFrame(rows, schema.CLIP)
+    pdf = clips.toPandas()
+    offsets, h, t, _ = dsp.clip_landmarks_batch(pdf)
+    n = np.diff(offsets)
+    index = spark.createDataFrame(
+        [
+            (int(hh), f"trk{k}", int(tt) + off)
+            for k, off in enumerate(offs)
+            for hh, tt in zip(h[offsets[k] : offsets[k + 1]], t[offsets[k] : offsets[k + 1]])
+        ],
+        "hash long, track_id string, t_track_ms long",
+    )
+    assert (n > 50).all()
+    bins = (
+        spark.createDataFrame([(o,) for o in offs], "d long")
+        .select((F.col("d") / matching.OFFSET_BIN_MS).cast("long").alias("b"))
+        .collect()
+    )
+    want = {
+        f"c{k}": (f"trk{k}", r.b * matching.OFFSET_BIN_MS) for k, r in enumerate(bins)
+    }
+    assert [v[1] for v in want.values()] == [-200, -200, -100, -100, 0, 0]
+    fused = matching.match_clips_fused(clips, index, min_votes=1, min_score=0)
+    rel = matching.match(dsp.landmarks(clips), index, min_votes=1, min_score=0)
+    for got in (fused, rel):
+        assert {r.clip_id: (r.matched_track, r.offset_ms) for r in got.collect()} == want
 
 
 def test_vote_allocation_bounded_by_hits():
