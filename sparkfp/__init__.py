@@ -43,12 +43,13 @@ CPython < 3.13. PySpark's Python worker calls
 ``importlib.invalidate_caches()`` at the start of every task, and
 there each ``zipimporter`` for ``pyspark.zip`` (one per package path
 inside it, ~16) re-reads the archive's whole central directory, about
-0.25 CPU-s per task on a warm, reused worker. Here an importer re-reads
+0.15-0.25 CPU-s per task on a warm, reused worker. Here an importer re-reads
 only when its archive's ``(st_mtime_ns, st_size)`` differs from its
 last read, so a rewritten zip is still seen. CPython 3.13 made the call
 lazy itself, and there the package leaves it alone. A worker's first
-task still pays once: the package is imported while that task's UDF is
-unpickled.
+two tasks still pay: the first revalidates before the package is
+imported (while that task's UDF is unpickled), and the second stamps
+the importers made before the import.
 """
 
 import os
@@ -59,7 +60,9 @@ __version__ = "0.1.0"
 if sys.version_info < (3, 13):
     import zipimport
 
-    def _revalidate_if_changed(self, _reread=zipimport.zipimporter.invalidate_caches):
+    _reread_directory = zipimport.zipimporter.invalidate_caches
+
+    def _revalidate_if_changed(self):
         """zipimporter.invalidate_caches, re-reading the archive's
         directory only when the archive changed since the last read."""
         try:
@@ -68,7 +71,7 @@ if sys.version_info < (3, 13):
         except OSError:
             stamp = None
         if stamp is None or getattr(self, "_sparkfp_stamp", None) != stamp:
-            _reread(self)
+            _reread_directory(self)
             self._sparkfp_stamp = stamp
 
     zipimport.zipimporter.invalidate_caches = _revalidate_if_changed
