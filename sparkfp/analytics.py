@@ -93,13 +93,13 @@ def lowess(
     ts_col: str,
     frac: float = 0.3,
     it: int = 0,
-    out_col: str = "smooth",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """W3: LOWESS smoothing per key (reference lowess_smooth_df,
     helpers.py:141-190 — statsmodels is not in this environment, so
     this is a from-scratch Cleveland LOWESS over integer row positions,
-    the same x = arange(len) the reference passes).
+    the same x = arange(len) the reference passes). The smoothed value
+    is appended as a ``smooth`` column.
 
     Semantics (mirrored exactly by the SQL oracle in __spark_entry__):
       x_i = row position after sorting by order_cols, nulls last;
@@ -130,7 +130,7 @@ def lowess(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     order = list(order_cols) if order_cols else [ts_col]
-    schema = StructType(df.schema.fields + [StructField(out_col, DoubleType())])
+    schema = StructType(df.schema.fields + [StructField("smooth", DoubleType())])
     out_names = [f.name for f in schema.fields]
 
     def smooth_group(y: "np.ndarray") -> "np.ndarray":
@@ -226,7 +226,7 @@ def lowess(
         for s0, e0 in zip(starts, ends):
             out_all[s0:e0] = smooth_group(y_all[s0:e0])
         pdf = pdf.copy(deep=False)
-        pdf[out_col] = out_all
+        pdf["smooth"] = out_all
         return pdf[out_names]
 
     def run(batches):

@@ -283,13 +283,20 @@ def _read_chunks(raw: bytes, order: str, name: str):
         pos += 8 + size + (size & 1)
 
 
-def _write_chunks(form: bytes, kind: bytes, order: str, chunks) -> bytes:
-    """``form`` + size + ``kind`` + each ``(id, body)`` chunk, odd
-    bodies padded to a word: the inverse of ``_read_chunks``."""
-    body = kind + b"".join(
+def _pack_chunks(order: str, chunks) -> bytes:
+    """Each ``(id, body)`` chunk as id + size + body, odd bodies padded
+    to a word. A nested list (RIFF ``LIST``) is the chunk
+    ``(b"LIST", kind + _pack_chunks(order, sub_chunks))``."""
+    return b"".join(
         cid + struct.pack(order + "I", len(b)) + b + bytes(len(b) & 1)
         for cid, b in chunks
     )
+
+
+def _write_chunks(form: bytes, kind: bytes, order: str, chunks) -> bytes:
+    """``form`` + size + ``kind`` + :func:`_pack_chunks`: the inverse of
+    ``_read_chunks``."""
+    body = kind + _pack_chunks(order, chunks)
     return form + struct.pack(order + "I", len(body)) + body
 
 
@@ -896,6 +903,17 @@ def _png_filter_pass(img: np.ndarray, png_filter: int) -> bytes:
     return scan.tobytes()
 
 
+def _png_chunk(ctype: bytes, payload: bytes) -> bytes:
+    """One PNG chunk: big-endian length, type, payload, CRC-32 of type
+    and payload."""
+    import zlib
+
+    return (
+        struct.pack(">I", len(payload)) + ctype + payload
+        + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
+    )
+
+
 def _encode_png(
     img: np.ndarray, png_filter: int, interlace: bool = False,
     palette: bool = False,
@@ -931,19 +949,13 @@ def _encode_png(
     else:
         scan = _png_filter_pass(src, png_filter)
 
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload)) + ctype + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, int(interlace))
     return (
         _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + (chunk(b"PLTE", plte) if palette else b"")
-        + chunk(b"IDAT", zlib.compress(scan))
-        + chunk(b"IEND", b"")
+        + _png_chunk(b"IHDR", ihdr)
+        + (_png_chunk(b"PLTE", plte) if palette else b"")
+        + _png_chunk(b"IDAT", zlib.compress(scan))
+        + _png_chunk(b"IEND", b"")
     )
 
 

@@ -308,22 +308,20 @@ def banded_docs(
     id_col: str,
     text_col: str,
     ts_col: str,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    k: int = 3,
 ) -> DataFrame:
     """(id, ts, band_idx, band) rows of text documents — the banded
-    input of the batch and streaming near-dup suppressors. Batch inputs
-    fan out to session parallelism first (no-op for streams and for
+    input of the batch and streaming near-dup suppressors: 16 MinHashes
+    over word 3-shingles in 4 bands of 4. Batch inputs fan out to
+    session parallelism first (no-op for streams and for
     already-parallel scans)."""
     from .session import fan_out
 
     sig_df = fan_out(df, key=id_col).select(
         F.col(id_col),
         F.col(ts_col),
-        minhash_signature_udf(text_col, n_hashes, k).alias("_sig"),
+        minhash_signature_udf(text_col, 16, 3).alias("_sig"),
     )
-    return explode_bands(sig_df, [id_col, ts_col], n_hashes, n_bands)
+    return explode_bands(sig_df, [id_col, ts_col], 16, 4)
 
 
 def near_dup_suppress_batch(
@@ -331,9 +329,6 @@ def near_dup_suppress_batch(
     id_col: str,
     text_col: str,
     ts_col: str,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    k: int = 3,
 ) -> DataFrame:
     """Greedy online near-dup filter, batch form: a doc survives iff it
     is the FIRST doc (by event time, id tiebreak) on EVERY one of its
@@ -342,7 +337,7 @@ def near_dup_suppress_batch(
     block later docs), which is what makes the streaming twin's
     band-keyed state sufficient: no cross-key negotiation is needed.
     One shuffle on (band_idx, band) + one on id."""
-    banded = banded_docs(df, id_col, text_col, ts_col, n_hashes, n_bands, k)
+    banded = banded_docs(df, id_col, text_col, ts_col)
     return suppress_from_banded(df, banded, id_col, ts_col)
 
 
@@ -487,9 +482,10 @@ def near_dup_band_verdicts_stream(
     )
 
 
-def collapse_band_verdicts(verdicts: DataFrame, id_col: str, n_bands: int = 4) -> DataFrame:
+def collapse_band_verdicts(verdicts: DataFrame, id_col: str) -> DataFrame:
     """Per-doc survival from one micro-batch of band verdicts (use in
-    foreachBatch): a doc survives iff every one of its n_bands bands
+    foreachBatch): a doc survives iff every one of its 4 bands (the
+    banding of :func:`banded_docs` and ``matching.banded_clips``)
     marked it first."""
     return (
         verdicts.groupBy(id_col)
@@ -498,7 +494,7 @@ def collapse_band_verdicts(verdicts: DataFrame, id_col: str, n_bands: int = 4) -
             F.min(F.col("is_first").cast("int")).alias("_all_first"),
             F.min("ts_ms").alias("ts_ms"),
         )
-        .filter((F.col("_n") == n_bands) & (F.col("_all_first") == 1))
+        .filter((F.col("_n") == 4) & (F.col("_all_first") == 1))
         .select(id_col, "ts_ms")
     )
 
@@ -543,11 +539,11 @@ class NearDupEpochs:
         ep.run_epoch(banded_docs(stream2, "doc_id", "text", "ts_ms"), "e2")
         ep.survivors("e2")               # per-doc survival for epoch 2
 
-    ``n_bands`` must match the banding's (survivors needs every band's
-    verdict). Reference anchor: the reference persists cross-run dedup
-    state as a side file (alerts_state.json pattern, helpers.py:23-33);
-    this is that idea at corpus scale, with the side table doubling as
-    the state-compaction ledger."""
+    Survivors need the verdicts of all 4 bands of a doc (see
+    :func:`collapse_band_verdicts`). Reference anchor: the reference
+    persists cross-run dedup state as a side file (alerts_state.json
+    pattern, helpers.py:23-33); this is that idea at corpus scale, with
+    the side table doubling as the state-compaction ledger."""
 
     def __init__(
         self,
@@ -556,12 +552,11 @@ class NearDupEpochs:
         id_col: str,
         ts_col: str,
         watermark: str = "10 seconds",
-        n_bands: int = 4,
     ):
         self.spark = spark
         self.root = root_dir.rstrip("/")
         self.id_col, self.ts_col = id_col, ts_col
-        self.watermark, self.n_bands = watermark, n_bands
+        self.watermark = watermark
         self.claims_dir = f"{self.root}/claims"
         self.last_state_rows: list[int] | None = None
 
@@ -587,14 +582,15 @@ class NearDupEpochs:
             ["band_idx", "band"]
         )
 
-    def run_epoch(self, banded: DataFrame, name: str, timeout_s: int = 300) -> DataFrame:
+    def run_epoch(self, banded: DataFrame, name: str) -> DataFrame:
         """Run one epoch: banded stream (id, ts, band_idx, band) ->
         band verdicts (with all prior claims pre-marked) -> exactly-once
         sink; then snapshot this epoch's newly claimed bands into the
         claims ledger. Returns the epoch's verdict DataFrame.
         ``last_state_rows`` records the state-store row counts per
         micro-batch (observability: the bound that compaction
-        promises)."""
+        promises). An epoch still running after 300 s is stopped and
+        raises TimeoutError."""
         import json
 
         from .streaming import start_exactly_once
@@ -604,7 +600,7 @@ class NearDupEpochs:
         )
         sink = self._verdicts_sink(name)
         q = start_exactly_once(verdicts, sink, f"{self.root}/ckpt/{name}")
-        if not q.awaitTermination(timeout_s):
+        if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError(f"near-dup epoch {name!r} did not finish")
         self.last_state_rows = [
@@ -624,7 +620,7 @@ class NearDupEpochs:
     def survivors(self, name: str) -> DataFrame:
         """Per-doc survival for one finished epoch."""
         verdicts = self._verdicts_sink(name).read(self.spark)
-        return collapse_band_verdicts(verdicts, self.id_col, self.n_bands)
+        return collapse_band_verdicts(verdicts, self.id_col)
 
 
 # ---------------------------------------------------------------- n-gram Jaccard
@@ -713,7 +709,7 @@ def _hex_to_long(hexcol: Column) -> Column:
     return F.conv(hexcol, 16, 10).cast("long")
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-doc SimHash: each distinct token votes its md5-derived bits.
 
     token value = first 8 hex chars of md5 (32 bits); bit b adds +1 or
@@ -736,29 +732,25 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
             F.sum(
                 F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(bits)
+            for b in range(32)
         ]
     )
     fp = None
-    for b in range(bits):
+    for b in range(32):
         term = F.when(F.col(f"v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
     return votes.select(F.col(id_col), fp.cast("long").alias("simhash"))
 
 
 def simhash_near_pairs(
-    sims: DataFrame, id_col: str, max_hamming: int = 3, bits: int = 32
+    sims: DataFrame, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance, chunk-join pruned
     (hamming <= 3 over 4 chunks -> some chunk equal, pigeonhole):
     :func:`bucket_pairs` on (chunk, value) carries ``simhash`` as its
     payload (unique ids required, see there)."""
-    n_chunks = 4
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
     chunk_vals = [
-        F.shiftright(F.col("simhash"), c * chunk_bits).bitwiseAND(mask)
-        for c in range(n_chunks)
+        F.shiftright(F.col("simhash"), c * 8).bitwiseAND(0xFF) for c in range(4)
     ]
     chunks = sims.select(
         F.col(id_col).alias("id"),
@@ -780,10 +772,10 @@ def simhash_near_pairs(
 def near_dup_components(
     nodes: DataFrame,
     pairs: DataFrame,
-    id_col: str = "id",
     max_iter: int = 30,
 ) -> DataFrame:
-    """(id, component) labels over the near-dup pair graph: component =
+    """(id, component) labels over the near-dup pair graph (``nodes``
+    has an ``id`` column, ``pairs`` ``id_a`` and ``id_b``): component =
     the minimum id transitively reachable. The dedup-pipeline step after
     pair generation — a keeper per CLUSTER (pairs alone under-delete:
     A~B, B~C must collapse A,B,C together even when A~C wasn't found).
@@ -808,7 +800,7 @@ def near_dup_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    all_nodes = nodes.select(F.col(id_col).alias("id")).distinct()
+    all_nodes = nodes.select("id").distinct()
     edges = half.localCheckpoint()
     prev_sig: tuple | None = None
     for rounds in range(max_iter):

@@ -40,10 +40,7 @@ SR_REF = 8000  # canonical analysis rate: clips at any sr_hz normalize here
 RESAMPLE_HALF_TAPS = 16  # windowed-sinc kernel half-width at the wider band
 
 
-def resample(
-    pcm: np.ndarray, sr_in: int, sr_out: int,
-    half_taps: int = RESAMPLE_HALF_TAPS,
-) -> np.ndarray:
+def resample(pcm: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray:
     """Windowed-sinc fractional resampler, fully vectorized.
 
     The input-table contract carries a per-clip ``sr_hz`` column — a
@@ -53,8 +50,9 @@ def resample(
     cutoff min(1, sr_out/sr_in) (anti-aliasing when downsampling, with
     the kernel widened by 1/cutoff to keep the transition band
     proportional), edge-hold padding, per-output-sample DC
-    normalization. Output time axis is preserved (t_out = t_in), so
-    match offsets stay in source-track milliseconds.
+    normalization; the kernel's half-width is RESAMPLE_HALF_TAPS input
+    samples at the wider band. Output time axis is preserved
+    (t_out = t_in), so match offsets stay in source-track milliseconds.
 
     The kernel depends on an output sample only through its phase
     ``frac = t - floor(t)``, so each chunk evaluates it once per
@@ -74,7 +72,7 @@ def resample(
         return np.zeros(0, dtype=np.float32)
     ratio = sr_in / sr_out
     cutoff = min(1.0, sr_out / sr_in)
-    h_taps = int(np.ceil(half_taps / cutoff))
+    h_taps = int(np.ceil(RESAMPLE_HALF_TAPS / cutoff))
     k = np.arange(-h_taps + 1, h_taps + 1, dtype=np.float64)
     # row j of `windows` is x[clip(j + k, 0, n_in - 1)]: edge-hold padding
     last = int(np.floor((n_out - 1) * ratio))
@@ -105,16 +103,17 @@ def resample(
     return out.astype(np.float32)
 
 
-def stft_mag(pcm: np.ndarray, n_fft: int = N_FFT, hop: int = HOP) -> np.ndarray:
-    """Magnitude spectrogram, frames x (n_fft//2+1). Pure numpy (strided)."""
-    if len(pcm) < n_fft:
-        pcm = np.pad(pcm, (0, n_fft - len(pcm)))
-    n_frames = 1 + (len(pcm) - n_fft) // hop
-    strides = (pcm.strides[0] * hop, pcm.strides[0])
+def stft_mag(pcm: np.ndarray) -> np.ndarray:
+    """Magnitude spectrogram, frames x (N_FFT//2+1), one frame per HOP
+    samples. Pure numpy (strided)."""
+    if len(pcm) < N_FFT:
+        pcm = np.pad(pcm, (0, N_FFT - len(pcm)))
+    n_frames = 1 + (len(pcm) - N_FFT) // HOP
+    strides = (pcm.strides[0] * HOP, pcm.strides[0])
     frames = np.lib.stride_tricks.as_strided(
-        pcm, shape=(n_frames, n_fft), strides=strides
+        pcm, shape=(n_frames, N_FFT), strides=strides
     )
-    win = np.hanning(n_fft).astype(np.float32)
+    win = np.hanning(N_FFT).astype(np.float32)
     return np.abs(np.fft.rfft(frames * win, axis=1)).astype(np.float32)
 
 
@@ -239,17 +238,17 @@ def clip_landmarks_batch(
     )
 
 
-def quarantine_clips(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
+def quarantine_clips(clips: DataFrame) -> DataFrame:
     """(clip_id, reason) for every row the landmark chain cannot
     decode — the accounting side of the skip policy, so dropped rows
     are observable instead of silently vanishing from the corpus."""
     out_schema = "clip_id string, reason string"
-    cols = [id_col, "bytes", "sr_hz", "codec"]
+    cols = ["clip_id", "bytes", "sr_hz", "codec"]
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             reason = clip_landmarks_batch(pdf)[3]
-            out = pd.DataFrame({"clip_id": pdf[id_col].to_numpy(), "reason": reason})
+            out = pd.DataFrame({"clip_id": pdf["clip_id"].to_numpy(), "reason": reason})
             yield out.dropna(subset=["reason"])
 
     return clips.select(*cols).mapInPandas(scan, out_schema)
@@ -258,7 +257,7 @@ def quarantine_clips(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
 # ---------------------------------------------------------------- Spark plumbing
 
 
-def landmarks(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
+def landmarks(clips: DataFrame) -> DataFrame:
     """clips(clip_id, bytes, sr_hz, codec, event_ms) -> landmark rows.
 
     Arrow-batched mapInPandas: the stage is stateless and embarrassingly
@@ -266,7 +265,7 @@ def landmarks(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     the N-vs-4N scaling criterion leans on. Corrupt rows emit no
     landmarks (skip-with-accounting: quarantine_clips lists them).
     """
-    cols = [id_col, "bytes", "sr_hz", "codec", "event_ms"]
+    cols = ["clip_id", "bytes", "sr_hz", "codec", "event_ms"]
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -274,7 +273,7 @@ def landmarks(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
             n = np.diff(offsets)
             yield pd.DataFrame(
                 {
-                    "clip_id": np.repeat(pdf[id_col].to_numpy(object), n),
+                    "clip_id": np.repeat(pdf["clip_id"].to_numpy(object), n),
                     "hash": h,
                     "t_ms": t,
                     "event_ms": np.repeat(pdf["event_ms"].to_numpy(np.int64), n),

@@ -31,7 +31,6 @@ def interval_join(
     ts_col: str,
     start_col: str,
     end_col: str,
-    how: str = "inner",
 ) -> DataFrame:
     """Rows of `facts` matched to `intervals` where
     intervals.start <= facts.ts < intervals.end, equi on `key`.
@@ -42,7 +41,7 @@ def interval_join(
         & (F.col(f"f.{ts_col}") >= F.col(f"iv.{start_col}"))
         & (F.col(f"f.{ts_col}") < F.col(f"iv.{end_col}"))
     )
-    return f.join(iv, cond, how)
+    return f.join(iv, cond, "inner")
 
 
 def interval_join_stream(
@@ -84,11 +83,10 @@ def as_of_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    tolerance_ms: int | None = None,
 ) -> DataFrame:
     """For each left row, the latest right row with right_ts <= left_ts
     (per key). Spark lacks a native as-of join; this composes an
-    interval-bounded equi-join + row_number top-1, which keeps the
+    equi-join bounded by right_ts <= left_ts + row_number top-1, which keeps the
     single shuffle on `key`. Used for point-in-time enrichment
     (reference `value_at` lookup, helpers.py:480-497, W5).
 
@@ -102,10 +100,6 @@ def as_of_join(
     cond = (F.col(f"l.{key}") == F.col(f"r.{key}")) & (
         F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}")
     )
-    if tolerance_ms is not None:
-        cond = cond & (
-            F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}") - F.lit(tolerance_ms)
-        )
     joined = l.join(r, cond, "left")
     w = Window.partitionBy(F.col(f"l.{rid}")).orderBy(F.desc(F.col(f"r.{right_ts}")))
     return joined.withColumn("_rn", F.row_number().over(w)).filter(

@@ -409,35 +409,48 @@ def encode_jpeg(
     chunks.append(bw.flush())
     entropy = b"".join(chunks)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + bytes(qt0.ravel()[ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += seg(0xFFDB, b"\x01" + bytes(qt1.ravel()[ZIGZAG].astype(np.uint8)))
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        hs, vs = samp[ci]
-        sof += bytes([ci + 1, (hs << 4) | vs, 0 if ci == 0 else 1])
-    out += seg(0xFFC0, sof)
-    for cls, tid, (bits, vals) in (
+    huffman = (
         (0, 0, _DC_LUMA), (1, 0, _AC_LUMA), (0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)
-    )[: 2 if gray else 4]:
-        out += seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
+    )[: 2 if gray else 4]
+    out = _jfif_head(0xFFC0, h, w, gray, samp, qt0, qt1, huffman)
     if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
+        out += _seg(0xFFDD, struct.pack(">H", restart_interval))
+    ncomp = 1 if gray else 3
     sos = bytes([ncomp])
     for ci in range(ncomp):
         t = 0 if ci == 0 else 1
         sos += bytes([ci + 1, (t << 4) | t])
     sos += b"\x00\x3f\x00"
-    out += seg(0xFFDA, sos)
+    out += _seg(0xFFDA, sos)
     out += entropy
     out += b"\xff\xd9"  # EOI
     return bytes(out)
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    """One marker segment: marker, big-endian length (payload + 2), payload."""
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+
+def _jfif_head(sof_marker, h, w, gray, samp, qt0, qt1, huffman) -> bytearray:
+    """The encoder's shared stream head: SOI, APP0 (JFIF 1.1, 1:1
+    density), one DQT per table in use, the SOF segment under
+    ``sof_marker`` (0xFFC0 baseline, 0xFFC2 progressive) and one DHT
+    per ``(class, id, (bits, values))`` entry of ``huffman``."""
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _seg(0xFFDB, b"\x00" + bytes(qt0.ravel()[ZIGZAG].astype(np.uint8)))
+    if not gray:
+        out += _seg(0xFFDB, b"\x01" + bytes(qt1.ravel()[ZIGZAG].astype(np.uint8)))
+    ncomp = 1 if gray else 3
+    sof = struct.pack(">BHHB", 8, h, w, ncomp)
+    for ci in range(ncomp):
+        hs, vs = samp[ci]
+        sof += bytes([ci + 1, (hs << 4) | vs, 0 if ci == 0 else 1])
+    out += _seg(sof_marker, sof)
+    for cls, tid, (bits, vals) in huffman:
+        out += _seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
+    return out
 
 
 
@@ -627,7 +640,6 @@ def _ni_raster(zz_c, h, w, hs, vs, hmax, vmax):
 
 
 def _assemble_progressive(h, w, gray, samp, qt0, qt1, zz) -> bytes:
-    ncomp = 1 if gray else 3
     hmax = max(s[0] for s in samp)
     vmax = max(s[1] for s in samp)
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
@@ -635,23 +647,9 @@ def _assemble_progressive(h, w, gray, samp, qt0, qt1, zz) -> bytes:
     dc_codes = _canonical_codes(*_DC_FLAT)
     ac_codes = _canonical_codes(*_AC_FLAT)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + bytes(qt0.ravel()[ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += seg(0xFFDB, b"\x01" + bytes(qt1.ravel()[ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        hs, vs = samp[ci]
-        sof += bytes([ci + 1, (hs << 4) | vs, 0 if ci == 0 else 1])
-    out += seg(0xFFC2, sof)  # SOF2: progressive DCT, huffman
-    for cls, tid, (bits, vals) in (
-        (0, 0, _DC_FLAT), (1, 0, _AC_FLAT), (1, 1, _AC_FLAT)
-    )[: 2 if gray else 3]:
-        out += seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
+    huffman = ((0, 0, _DC_FLAT), (1, 0, _AC_FLAT), (1, 1, _AC_FLAT))[: 2 if gray else 3]
+    # SOF2: progressive DCT, huffman
+    out = _jfif_head(0xFFC2, h, w, gray, samp, qt0, qt1, huffman)
 
     for scan_idx, ss, se, ah, al in (_SCRIPT_GRAY if gray else _SCRIPT_COLOR):
         sos = bytes([len(scan_idx)])
@@ -659,7 +657,7 @@ def _assemble_progressive(h, w, gray, samp, qt0, qt1, zz) -> bytes:
             t = 0 if ci == 0 else 1
             sos += bytes([ci + 1, t])  # DC table 0; AC table 0/1
         sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xFFDA, sos)
+        out += _seg(0xFFDA, sos)
         bw = _BitWriter()
         if ss == 0:
             _encode_scan_dc(

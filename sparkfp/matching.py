@@ -48,9 +48,7 @@ def build_index(tracks: DataFrame) -> DataFrame:
 
     Same DSP chain as the probe side (dsp.landmarks) so hashes align.
     """
-    lm = dsp.landmarks(
-        tracks.withColumnRenamed("track_id", "clip_id"), id_col="clip_id"
-    )
+    lm = dsp.landmarks(tracks.withColumnRenamed("track_id", "clip_id"))
     return lm.select(
         "hash",
         F.col("clip_id").alias("track_id"),
@@ -61,7 +59,6 @@ def build_index(tracks: DataFrame) -> DataFrame:
 def match(
     landmarks: DataFrame,
     index: DataFrame,
-    bin_ms: int = OFFSET_BIN_MS,
     min_votes: int = MIN_VOTES,
     min_score: float = MIN_SCORE,
     broadcast_index: bool = True,
@@ -80,13 +77,13 @@ def match(
         "clip_id",
         "track_id",
         (
-            (F.col("t_track_ms") - F.col("t_ms")) / bin_ms
+            (F.col("t_track_ms") - F.col("t_ms")) / OFFSET_BIN_MS
         ).cast("long").alias("offset_bin"),
     )
     votes = joined.groupBy("clip_id", "track_id", "offset_bin").agg(
         F.count("*").alias("vote_count")
     )
-    best = _best_per_clip(votes, bin_ms, min_votes)
+    best = _best_per_clip(votes, OFFSET_BIN_MS, min_votes)
     if clip_meta is None:
         return best
     meta = clip_meta.select("clip_id", "dur_ms")
@@ -143,7 +140,6 @@ def index_arrays(index: DataFrame):
 def match_clips_fused(
     clips: DataFrame,
     index: DataFrame,
-    bin_ms: int = OFFSET_BIN_MS,
     min_votes: int = MIN_VOTES,
     min_score: float = MIN_SCORE,
 ) -> DataFrame:
@@ -167,7 +163,7 @@ def match_clips_fused(
     Per clip, the probe is one left ``searchsorted`` of its landmark
     hashes over the index's hash runs; every hit's index position comes
     from one ``arange`` shifted by its run's start; the offset bin is
-    Spark's ``(x / bin).cast(long)`` in float64, exactly; and
+    Spark's ``(x / OFFSET_BIN_MS).cast(long)`` in float64, exactly; and
     :func:`vote` counts (track, bin) pairs with a memory bound of the
     hit count.
 
@@ -211,11 +207,13 @@ def match_clips_fused(
                 d = t_track[cand] - np.repeat(ts[a:b].astype(np.int64), mult)
                 # Spark's (x / bin).cast(long), exactly: a float64
                 # quotient truncated toward zero
-                offset_bin = (d / bin_ms).astype(np.int64)
+                offset_bin = (d / OFFSET_BIN_MS).astype(np.int64)
                 code, off_bin, votes = vote(codes[cand], offset_bin)
                 score = votes / (int(dur) / 1000.0)
                 if votes >= min_votes and score >= min_score:
-                    out.append((cid, names[code], off_bin * bin_ms, votes, score))
+                    out.append(
+                        (cid, names[code], off_bin * OFFSET_BIN_MS, votes, score)
+                    )
             yield pd.DataFrame(
                 out,
                 columns=[
@@ -259,36 +257,17 @@ def vote(codes: np.ndarray, offset_bin: np.ndarray) -> tuple[int, int, int]:
     return winner // span + cmin, winner % span + omin, n
 
 
-def match_pipeline(
-    clips: DataFrame,
-    index: DataFrame,
-    bin_ms: int = OFFSET_BIN_MS,
-    min_votes: int = MIN_VOTES,
-    min_score: float = MIN_SCORE,
-    broadcast_index: bool = True,
-) -> DataFrame:
+def match_pipeline(clips: DataFrame, index: DataFrame) -> DataFrame:
     """clips -> landmarks -> match rows (one stage chain, single shuffle
-    at the vote aggregation when the index is broadcast)."""
-    return match(
-        dsp.landmarks(clips),
-        index,
-        bin_ms=bin_ms,
-        min_votes=min_votes,
-        min_score=min_score,
-        broadcast_index=broadcast_index,
-        clip_meta=clips,
-    )
+    at the vote aggregation): :func:`match` with the broadcast index and
+    the default thresholds, scored against ``clips``' own durations."""
+    return match(dsp.landmarks(clips), index, clip_meta=clips)
 
 
 # ------------------------------------------------- audio near-duplicates
 
 
-def near_dup_audio_pairs(
-    clips: DataFrame,
-    min_jaccard: float = 0.2,
-    max_hash_df: int = 64,
-    id_col: str = "clip_id",
-) -> DataFrame:
+def near_dup_audio_pairs(clips: DataFrame) -> DataFrame:
     """Fingerprint-based audio near-duplicate pairs.
 
     A training-data pipeline over 10^12 clips must drop re-encodes of
@@ -302,36 +281,32 @@ def near_dup_audio_pairs(
 
     Plan (all relational, shuffle-bounded):
       landmarks -> distinct (clip, hash)
-        -> drop hub hashes with document frequency > ``max_hash_df``
+        -> drop hub hashes with document frequency > 64
            (a hash shared by many clips carries no pair information
            but would quadratically inflate the self-join — the
            standard posting-list cap; at 10^12 clips this cap is what
            keeps the join linear in corpus size)
         -> dedup.set_jaccard_pairs, the self-join the text Jaccard
            runs: self-join on hash, per-pair shared-hash count,
-           Jaccard vs each clip's distinct-hash count, threshold.
+           Jaccard vs each clip's distinct-hash count, threshold 0.2.
 
     Returns (clip_a, clip_b, shared, jaccard), clip_a < clip_b.
     Reference parity anchor: the same landmark chain the reference
     builds its lookup index from (src/flink_job/job.py:63-75) — dedup
     is the index join turned on the corpus itself.
     """
-    lm = dsp.landmarks(clips, id_col=id_col)
-    h = lm.select(F.col(id_col).alias("id"), F.col("hash").alias("item")).distinct()
-    rare = h.groupBy("item").agg(F.count("*").alias("df")).where(
-        F.col("df") <= max_hash_df
-    )
-    pairs = dedup.set_jaccard_pairs(h.join(rare.select("item"), "item"), min_jaccard)
+    lm = dsp.landmarks(clips)
+    h = lm.select(F.col("clip_id").alias("id"), F.col("hash").alias("item")).distinct()
+    rare = h.groupBy("item").agg(F.count("*").alias("df")).where(F.col("df") <= 64)
+    pairs = dedup.set_jaccard_pairs(h.join(rare.select("item"), "item"), 0.2)
     return pairs.select(
         F.col("id_a").alias("clip_a"), F.col("id_b").alias("clip_b"), "shared",
         F.round("jaccard", 6).alias("jaccard"),
     )
 
 
-def clip_signatures(
-    clips: DataFrame, id_col: str = "clip_id", n_hashes: int = 16
-) -> DataFrame:
-    """(clip_id, event_ms, sig) — MinHash signature over each clip's
+def clip_signatures(clips: DataFrame) -> DataFrame:
+    """(clip_id, event_ms, sig) — 16-MinHash signature over each clip's
     distinct landmark-hash set, computed INSIDE the same Arrow pass as
     landmark extraction (decode -> resample -> STFT -> hashes ->
     minhash per row). No shuffle and no stateful aggregation, so the
@@ -351,10 +326,10 @@ def clip_signatures(
             T.StructField("sig", T.ArrayType(T.StringType()), False),
         ]
     )
-    cols = [id_col, "bytes", "sr_hz", "codec", "event_ms"]
+    cols = ["clip_id", "bytes", "sr_hz", "codec", "event_ms"]
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sign = dedup.minhash_signer(n_hashes)
+        sign = dedup.minhash_signer(16)
         for pdf in batches:
             offsets, h, _, _ = dsp.clip_landmarks_batch(pdf)
             keep = np.diff(offsets) > 0
@@ -364,7 +339,7 @@ def clip_signatures(
             ]
             yield pd.DataFrame(
                 {
-                    "clip_id": pdf[id_col].to_numpy(object)[keep],
+                    "clip_id": pdf["clip_id"].to_numpy(object)[keep],
                     "event_ms": pdf["event_ms"].to_numpy(np.int64)[keep],
                     "sig": pd.Series(sigs, dtype=object),
                 }
@@ -373,33 +348,24 @@ def clip_signatures(
     return clips.select(*cols).mapInPandas(extract, out_schema)
 
 
-def banded_clips(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    n_hashes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
-    """(clip_id, event_ms, band_idx, band): the audio banding for the
-    generic near-dup suppressors (dedup.suppress_from_banded and, on a
-    stream, dedup.near_dup_band_verdicts_stream). dedup.explode_bands
+def banded_clips(clips: DataFrame) -> DataFrame:
+    """(clip_id, event_ms, band_idx, band): the audio banding, 4 bands
+    of 4 MinHashes, for the generic near-dup suppressors
+    (dedup.suppress_from_banded and, on a stream,
+    dedup.near_dup_band_verdicts_stream). dedup.explode_bands
     runs over the ALREADY-materialized signature column (the Python
     eval node is a plan barrier), the same plan shape the text path
     uses to stay in whole-stage codegen through the posexplode."""
-    sig = clip_signatures(clips, id_col, n_hashes).toDF(id_col, "event_ms", "_sig")
-    return dedup.explode_bands(sig, [id_col, "event_ms"], n_hashes, n_bands)
+    sig = clip_signatures(clips).withColumnRenamed("sig", "_sig")
+    return dedup.explode_bands(sig, ["clip_id", "event_ms"], 16, 4)
 
 
-def near_dup_clips_batch(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    n_hashes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
+def near_dup_clips_batch(clips: DataFrame) -> DataFrame:
     """Greedy first-wins audio near-dup filter, batch form: a clip
     survives iff it is the earliest (event_ms, id tiebreak) on every
     one of its landmark-minhash LSH bands. Re-encodes and resampled
     copies of a recording land on the same bands (their landmark sets
     nearly coincide), so only the first-seen copy survives."""
-    banded = banded_clips(clips, id_col, n_hashes, n_bands)
-    return dedup.suppress_from_banded(clips, banded, id_col, "event_ms")
+    banded = banded_clips(clips)
+    return dedup.suppress_from_banded(clips, banded, "clip_id", "event_ms")
 

@@ -52,17 +52,18 @@ _DECODABLE = {
 }  # sparkfp.codec
 
 
-def byte_features(media: DataFrame, id_col: str = "media_id") -> DataFrame:
+def byte_features(media: DataFrame) -> DataFrame:
     """Vectorized byte-statistics extraction (real, no decoder needed).
 
     mapInPandas keeps batches columnar; numpy does the per-blob math.
+    A null blob gets the empty blob's row (``n_bytes`` 0).
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, raw in zip(pdf[id_col], pdf["bytes"]):
-                arr = np.frombuffer(bytes(raw), dtype=np.uint8)
+            for mid, raw in zip(pdf["media_id"], pdf["bytes"]):
+                arr = np.frombuffer(b"" if raw is None else bytes(raw), dtype=np.uint8)
                 if len(arr) == 0:
                     rows.append((mid, 0, 0.0, 0.0, 0.0))
                     continue
@@ -84,7 +85,7 @@ def byte_features(media: DataFrame, id_col: str = "media_id") -> DataFrame:
                 columns=["media_id", "n_bytes", "byte_mean", "byte_entropy", "zero_ratio"],
             )
 
-    return media.select(id_col, "bytes").mapInPandas(extract, BYTE_FEATURES)
+    return media.select("media_id", "bytes").mapInPandas(extract, BYTE_FEATURES)
 
 
 def decode_media(raw: bytes, codec: str, deterministic_fake: bool = False) -> np.ndarray:
@@ -126,13 +127,13 @@ def decode_media(raw: bytes, codec: str, deterministic_fake: bool = False) -> np
 
 
 def frame_sample_features(
-    media: DataFrame,
-    id_col: str = "media_id",
-    deterministic_fake: bool = True,
+    media: DataFrame, deterministic_fake: bool = True
 ) -> DataFrame:
     """Decode -> per-frame mean/std features. The decode call is the
     stubbed boundary; everything around it (Arrow batching, schema,
-    null handling for failed decodes) is the real production shape."""
+    null handling for failed decodes) is the real production shape.
+    A null, corrupt or undecodable blob is one row with
+    ``decoded=false``, never a task failure."""
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.StringType(), False),
@@ -145,8 +146,10 @@ def frame_sample_features(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, raw, cod in zip(pdf[id_col], pdf["bytes"], pdf["codec"]):
+            for mid, raw, cod in zip(pdf["media_id"], pdf["bytes"], pdf["codec"]):
                 try:
+                    if raw is None:
+                        raise ValueError("null media bytes")
                     arr = decode_media(bytes(raw), cod, deterministic_fake)
                     rows.append((mid, float(arr.mean()), float(arr.std()), True))
                 except (UnsupportedCodec, ValueError):
@@ -158,4 +161,4 @@ def frame_sample_features(
                 rows, columns=["media_id", "frame_mean", "frame_std", "decoded"]
             )
 
-    return media.select(id_col, "bytes", "codec").mapInPandas(extract, out_schema)
+    return media.select("media_id", "bytes", "codec").mapInPandas(extract, out_schema)

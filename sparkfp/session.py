@@ -29,7 +29,7 @@ def default_parallelism() -> int:
     return max(1, os.cpu_count() or 1)
 
 
-def fan_out(df, min_partitions: int | None = None, key: str | None = None):
+def fan_out(df, key: str):
     """Repartition a BATCH DataFrame up to the session's parallelism
     when its current layout has fewer partitions (guide §2.5 "input
     skew: one huge unsplittable file — repartition immediately after
@@ -44,13 +44,13 @@ def fan_out(df, min_partitions: int | None = None, key: str | None = None):
     partition count is inspected, never assumed), so no shuffle is paid
     when the layout is already parallel.
 
-    ``key`` hash-partitions on that column (deterministic, no
-    sort-before-repartition pass); otherwise round-robin.
+    The repartition hashes ``key`` (deterministic, no
+    sort-before-repartition pass).
     """
     if getattr(df, "isStreaming", False):
         return df  # micro-batch layout is the trigger's concern
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:
@@ -59,7 +59,7 @@ def fan_out(df, min_partitions: int | None = None, key: str | None = None):
         return df
     from pyspark.sql import functions as F
 
-    return df.repartition(target, F.col(key)) if key else df.repartition(target)
+    return df.repartition(target, F.col(key))
 
 
 def get_spark(

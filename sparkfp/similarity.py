@@ -26,10 +26,10 @@ def brute_force_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    query_id_col: str | None = None,
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k neighbors per query by cosine.
+    """Exact top-k neighbors per query by cosine. ``queries`` carries
+    the same ``id_col`` and ``vec_col`` columns as ``corpus``.
 
     Plan shape: broadcast(queries) x corpus scan -> cosine (JVM
     higher-order fns) -> per-query row_number top-k. The corpus is
@@ -38,10 +38,7 @@ def brute_force_topk(
     """
     from .session import fan_out
 
-    query_id_col = query_id_col or id_col
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     # fan_out: the cosine scoring runs scan-side below the top-k
     # exchange; a single-row-group corpus would score every pair on one
     # task (guide §2.5)
@@ -128,7 +125,6 @@ def lsh_candidates(
     n_planes: int = 12,
     n_tables: int = 3,
     seed: int = 42,
-    query_id_col: str | None = None,
 ) -> DataFrame:
     """Candidate (query_id, qv, neighbor_id, cv) rows sharing an LSH
     signature in >= 1 of n_tables hash tables.
@@ -139,15 +135,14 @@ def lsh_candidates(
     every corpus row to every query and defeats the bucketing. A
     pair matching in several tables is deduped by the groupBy.
 
-    Requires unique ids on each side (``id_col`` in ``corpus``,
-    ``query_id_col`` in ``queries``): vectors are re-attached to the
+    Both sides carry ``id_col`` and ``vec_col``. Requires unique ids on
+    each side: vectors are re-attached to the
     deduped id pairs by an id join, so a duplicated id yields one row
     per vector under that id, including vectors that never shared a
     signature with the other side.
     """
     from .session import fan_out
 
-    query_id_col = query_id_col or id_col
     lsh = (dim, n_planes, n_tables, seed)
     # candidate generation carries ONLY ids through the dedup shuffle:
     # the old groupBy(first(qv), first(cv)) shuffled two dim-length
@@ -159,7 +154,7 @@ def lsh_candidates(
     c = hyperplane_bands(fan_out(corpus, key=id_col), id_col, vec_col, *lsh).toDF(
         "neighbor_id", "t", "sig"
     )
-    q = hyperplane_bands(queries, query_id_col, vec_col, *lsh).toDF(
+    q = hyperplane_bands(queries, id_col, vec_col, *lsh).toDF(
         "query_id", "t", "sig"
     )
     pairs = (
@@ -169,9 +164,7 @@ def lsh_candidates(
         .distinct()
     )
     cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     return pairs.join(cv, "neighbor_id").join(F.broadcast(qv), "query_id")
 
 

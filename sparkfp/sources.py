@@ -29,17 +29,13 @@ def save_csv_ist(df: DataFrame, path: str, ts_col: str) -> None:
     shifted.write.mode("overwrite").option("header", True).csv(path)
 
 
-def load_csv_ist(
-    spark: SparkSession, path: str, ts_col: str, drop_cols: tuple[str, ...] = ("RUNNING_FLAG",)
-) -> DataFrame:
+def load_csv_ist(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
     """Reload a CSV written by save_csv_ist: subtract the offset, drop
-    the replay-only columns (reference drops RUNNING_FLAG on reload)."""
+    the replay-only RUNNING_FLAG column (as the reference does on
+    reload)."""
     df = spark.read.option("header", True).option("inferSchema", True).csv(path)
     df = df.withColumn(ts_col, F.col(ts_col) - F.expr(IST_OFFSET))
-    for c in drop_cols:
-        if c in df.columns:
-            df = df.drop(c)
-    return df
+    return df.drop("RUNNING_FLAG") if "RUNNING_FLAG" in df.columns else df
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:
@@ -54,11 +50,11 @@ def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return r.json(path)
 
 
-def load_metadata_dim(spark: SparkSession, path: str, sheet: str | None = None) -> DataFrame:
+def load_metadata_dim(spark: SparkSession, path: str) -> DataFrame:
     """Small metadata mapping -> broadcast-ready dim DataFrame.
 
-    xlsx requires openpyxl (absent here) -> import-try; csv/parquet
-    load natively. The result is meant for a broadcast join (``F.broadcast(dim)``).
+    xlsx (its first sheet) requires openpyxl (absent here) ->
+    import-try; csv/parquet load natively. The result is meant for a broadcast join (``F.broadcast(dim)``).
     """
     if path.endswith(".xlsx"):
         try:
@@ -69,7 +65,7 @@ def load_metadata_dim(spark: SparkSession, path: str, sheet: str | None = None) 
             ) from e
         import pandas as pd
 
-        pdf = pd.read_excel(path, sheet_name=sheet or 0, engine="openpyxl")
+        pdf = pd.read_excel(path, sheet_name=0, engine="openpyxl")
         return spark.createDataFrame(pdf)
     if path.endswith(".csv"):
         return spark.read.option("header", True).option("inferSchema", True).csv(path)
@@ -96,7 +92,7 @@ def group_tags(equipment_name: str, mapping: dict) -> list[dict]:
     ]
 
 
-def _default_fetch(url: str, payload: str, headers: dict) -> tuple[int, str]:
+def _post(url: str, payload: str, headers: dict) -> tuple[int, str]:
     """POST the reference's request shape; returns (status, body).
     stdlib-only so executors need no extra deps."""
     import urllib.error
@@ -105,7 +101,7 @@ def _default_fetch(url: str, payload: str, headers: dict) -> tuple[int, str]:
     req = urllib.request.Request(
         url,
         data=payload.encode(),
-        headers={"Content-Type": "application/json", **(headers or {})},
+        headers={"Content-Type": "application/json", **headers},
         method="POST",
     )
     try:
@@ -123,24 +119,21 @@ def rest_timeseries_source(
     end: int,
     url: str,
     headers: dict | None = None,
-    max_retries: int = 3,
     base_delay: float = 1.0,
-    fetch=None,
 ) -> DataFrame:
     """S5: REST time-series source (reference api.py:18-154), made
     distributed: the deduped tag groups become a small request table
     and ``mapInPandas`` fan-outs the HTTP fetches across executors —
     each task runs the reference's retry loop (HTTP 429 -> exponential
-    backoff ``base_delay * 2**attempt`` up to ``max_retries``; other
+    backoff ``base_delay * 2**attempt``, 3 attempts in all; other
     non-200 or an ``{"error": ...}`` payload -> tag skipped), parses
     dict-or-list JSON bodies, and fans each record out to every generic
     param mapped to the tag. At a real deployment the request table is
     (tag x time-slice) so a backfill parallelizes over both; the
     per-task logic is identical.
 
-    Returns (param, machine, tag, timestamp, value) rows. ``fetch``
-    is injectable for tests (signature: (url, payload, headers) ->
-    (status_code, body_text)); default is a stdlib urllib POST.
+    Returns (param, machine, tag, timestamp, value) rows. Each fetch
+    is a stdlib urllib POST carrying ``headers`` (e.g. credentials).
     """
     import json as _json
 
@@ -166,7 +159,6 @@ def rest_timeseries_source(
     requests_df = spark.createDataFrame(groups, req_schema).repartition(
         max(len(groups), 1)
     )
-    do_fetch = fetch or _default_fetch
     hdrs = dict(headers or {})
 
     def run(batches):
@@ -186,8 +178,8 @@ def rest_timeseries_source(
                     }
                 )
                 records = None
-                for attempt in range(max_retries):
-                    status, body = do_fetch(url, payload, hdrs)
+                for attempt in range(3):
+                    status, body = _post(url, payload, hdrs)
                     if status == 429:
                         _time.sleep(base_delay * (2**attempt))
                         continue

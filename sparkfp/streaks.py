@@ -43,16 +43,15 @@ def with_islands(
     key_cols: list[str],
     ts_col: str,
     flag_col: str,
-    island_col: str = "island",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Add an island id that increments whenever `flag_col` changes."""
+    """Add an ``island`` id that increments whenever `flag_col` changes."""
     w = Window.partitionBy(*key_cols).orderBy(*_order(ts_col, order_cols))
     changed = (
         F.lag(flag_col).over(w).isNull()
         | (F.lag(flag_col).over(w) != F.col(flag_col))
     ).cast("long")
-    return df.withColumn(island_col, F.sum(changed).over(w))
+    return df.withColumn("island", F.sum(changed).over(w))
 
 
 def with_streak_duration(
@@ -61,10 +60,10 @@ def with_streak_duration(
     ts_col: str,
     flag_col: str,
     step_fallback_s: float = 60.0,
-    dur_col: str = "streak_s",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Accumulated in-streak duration in seconds (0 where flag is False).
+    """Accumulated in-streak duration in seconds (0 where flag is
+    False), as a ``streak_s`` column next to ``island``.
 
     dt for the first row of a streak falls back to `step_fallback_s`
     (reference row_duration fallback — process_odr.py:279-287)."""
@@ -77,7 +76,7 @@ def with_streak_duration(
         F.lit(step_fallback_s),
     )
     return df.withColumn(
-        dur_col,
+        "streak_s",
         F.when(F.col(flag_col), F.sum(dt).over(wi)).otherwise(F.lit(0.0)),
     )
 

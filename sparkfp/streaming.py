@@ -121,17 +121,17 @@ def fingerprint_stream(
     events: DataFrame,
     sink: ExactlyOnceParquetSink,
     checkpoint_dir: str,
-    watermark: str = fingerprint.WATERMARK,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """The reference streaming job: events -> windowed stats fingerprints.
+    """The reference streaming job: events -> windowed stats fingerprints,
+    drained with the availableNow trigger.
 
     Append output mode: a window's row is emitted exactly once, after
-    the watermark passes its end — same final rows as Flink's
-    on-watermark firing for the same input + watermark (SURVEY §7.5.5).
+    the watermark (``fingerprint.WATERMARK``) passes its end — same
+    final rows as Flink's on-watermark firing for the same input +
+    watermark (SURVEY §7.5.5).
     """
-    fps = fingerprint.pipeline(events, watermark=watermark)
-    return start_exactly_once(fps, sink, checkpoint_dir, available_now)
+    fps = fingerprint.pipeline(events, watermark=fingerprint.WATERMARK)
+    return start_exactly_once(fps, sink, checkpoint_dir)
 
 
 def match_stream(
@@ -139,19 +139,18 @@ def match_stream(
     index: DataFrame,
     sink: ExactlyOnceParquetSink,
     checkpoint_dir: str,
-    watermark: str = "10 seconds",
-    session_gap: str = "30 seconds",
-    min_votes: int = matching.MIN_VOTES,
     available_now: bool = True,
 ) -> StreamingQuery:
     """The graft streaming job: clip stream -> landmarks -> stream-static
     hash join against the index -> per-session offset voting -> match rows.
 
     The session window per clip_id (north_star) closes a clip's match
-    accumulation when no further landmarks arrive within ``session_gap``
-    — the streaming analog of the reference's "emit once per streak"
-    rising-edge state (process_odr.py:1131-1145): one final match row
-    per clip session, emitted on window close (append mode).
+    accumulation when no further landmarks arrive within 30 seconds
+    (the landmarks' watermark is 10 seconds) — the streaming analog of
+    the reference's "emit once per streak" rising-edge state
+    (process_odr.py:1131-1145): one final match row per clip session
+    with ``matching.MIN_VOTES`` votes, emitted on window close (append
+    mode).
 
     The vote runs over every row that shares a ``clip_id`` within the
     gap. Each row's landmark times come from that row's own bytes and
@@ -162,11 +161,11 @@ def match_stream(
     lm = dsp.landmarks(clips).withColumn(
         "event_time", F.timestamp_millis(F.col("event_ms"))
     )
-    joined = lm.withWatermark("event_time", watermark).join(
+    joined = lm.withWatermark("event_time", "10 seconds").join(
         F.broadcast(index), "hash"
     )
     votes = joined.groupBy(
-        F.session_window("event_time", session_gap).alias("session"),
+        F.session_window("event_time", "30 seconds").alias("session"),
         "clip_id",
         "track_id",
         ((F.col("t_track_ms") - F.col("t_ms")) / matching.OFFSET_BIN_MS)
@@ -175,7 +174,9 @@ def match_stream(
     ).agg(F.count("*").alias("vote_count"))
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        best = matching._best_per_clip(batch_df, matching.OFFSET_BIN_MS, min_votes)
+        best = matching._best_per_clip(
+            batch_df, matching.OFFSET_BIN_MS, matching.MIN_VOTES
+        )
         sink(best, batch_id)
 
     return start_exactly_once(votes, emit, checkpoint_dir, available_now)
@@ -186,12 +187,10 @@ def match_stream_fused(
     index: DataFrame,
     sink: ExactlyOnceParquetSink,
     checkpoint_dir: str,
-    min_votes: int = matching.MIN_VOTES,
-    min_score: float = matching.MIN_SCORE,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """High-throughput streaming matcher: the fused per-clip operator
-    (matching.match_clips_fused) over the clip stream.
+    (matching.match_clips_fused, default thresholds) over the clip
+    stream, drained with the availableNow trigger.
 
     A clip is one input row, so its landmarks never span micro-batches
     — per-clip matching is complete within the batch and needs no
@@ -200,7 +199,5 @@ def match_stream_fused(
     rows sharing a ``clip_id`` within its session gap; neither matcher
     applies chunk start offsets.
     """
-    matches = matching.match_clips_fused(
-        clips, index, min_votes=min_votes, min_score=min_score
-    )
-    return start_exactly_once(matches, sink, checkpoint_dir, available_now)
+    matches = matching.match_clips_fused(clips, index)
+    return start_exactly_once(matches, sink, checkpoint_dir)

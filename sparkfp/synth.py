@@ -73,23 +73,19 @@ def sensor_events_pdf(
 
 def sensor_events(
     spark: SparkSession,
-    seed: int = 42,
     n_seconds: int = 600,
     start_ms: int = 1_700_000_000_000,
-    equipment: list[str] | None = None,
-    sensors: list[str] | None = None,
 ) -> DataFrame:
-    """Distributed sensor-event table: one generation task per equipment."""
-    equipment = equipment or DEFAULT_EQUIPMENT
-    sensors = sensors or DEFAULT_SENSORS
+    """Distributed sensor-event table (seed 42, DEFAULT_EQUIPMENT x
+    DEFAULT_SENSORS): one generation task per equipment."""
     seeds = spark.createDataFrame(
-        [(e,) for e in equipment], "equip_id string"
-    ).repartition(len(equipment), "equip_id")
+        [(e,) for e in DEFAULT_EQUIPMENT], "equip_id string"
+    ).repartition(len(DEFAULT_EQUIPMENT), "equip_id")
 
     def gen(batches):
         for pdf in batches:
             for equip in pdf["equip_id"]:
-                yield sensor_events_pdf(seed, equip, n_seconds, start_ms, sensors)
+                yield sensor_events_pdf(42, equip, n_seconds, start_ms, DEFAULT_SENSORS)
 
     return seeds.mapInPandas(gen, schema.SENSOR_EVENT)
 
@@ -154,28 +150,27 @@ def track_pcm(
     return pcm.astype(np.float32)
 
 
-def transcript_for(clip_id: str, seed: int = 42) -> str:
-    rng = _id_rng(seed, "tx:" + clip_id)
+def transcript_for(clip_id: str) -> str:
+    rng = _id_rng(42, "tx:" + clip_id)
     return " ".join(rng.choice(np.array(_WORDS), size=8))
 
 
 def clip_row(
     clip_id: str,
     track_ids: list[str],
-    seed: int = 42,
-    p_noise: float = 0.3,
     codec_name: str = "pcm_s16le",
 ) -> tuple:
-    """Deterministic clip: excerpt of a track (70%) or pure noise (30%)."""
-    rng = _id_rng(seed, clip_id)
+    """Deterministic clip (seed 42): excerpt of a track (70%) or pure
+    noise (30%)."""
+    rng = _id_rng(42, clip_id)
     dur_ms = int(rng.integers(3000, 8001))
     n = int(SR_HZ * dur_ms / 1000)
-    is_noise = rng.random() < p_noise
+    is_noise = rng.random() < 0.3
     if is_noise:
         pcm = (0.1 * rng.standard_normal(n)).astype(np.float32)
     else:
         tid = track_ids[int(rng.integers(0, len(track_ids)))]
-        track = track_pcm(tid, seed=seed)
+        track = track_pcm(tid)
         max_off = max(len(track) - n, 1)
         off = int(rng.integers(0, max_off))
         pcm = track[off : off + n].copy()
@@ -188,7 +183,7 @@ def clip_row(
         SR_HZ,
         dur_ms,
         codec_name,
-        transcript_for(clip_id, seed),
+        transcript_for(clip_id),
         int(event_ms),
     )
 
@@ -201,11 +196,10 @@ def clips(
     spark: SparkSession,
     n_clips: int = 64,
     n_tracks: int = 8,
-    seed: int = 42,
-    codec_name: str = "pcm_s16le",
     partitions: int | None = None,
 ) -> DataFrame:
-    """Distributed clip table: ids fan out over tasks, PCM synthesized in-task."""
+    """Distributed clip table (seed 42, pcm_s16le): ids fan out over
+    tasks, PCM synthesized in-task."""
     track_ids = default_track_ids(n_tracks)
     parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
     ids = spark.range(n_clips).repartition(parts)
@@ -213,8 +207,7 @@ def clips(
     def gen(batches):
         for pdf in batches:
             rows = [
-                clip_row(f"clip_{int(i):08d}", track_ids, seed, codec_name=codec_name)
-                for i in pdf["id"]
+                clip_row(f"clip_{int(i):08d}", track_ids) for i in pdf["id"]
             ]
             yield pd.DataFrame(
                 rows,
@@ -232,8 +225,8 @@ def clips(
     return ids.mapInPandas(gen, schema.CLIP)
 
 
-def tracks(spark: SparkSession, n_tracks: int = 8, seed: int = 42) -> DataFrame:
-    """Reference 'song' table (index build side)."""
+def tracks(spark: SparkSession, n_tracks: int = 8) -> DataFrame:
+    """Reference 'song' table (index build side), seed 42."""
     track_ids = default_track_ids(n_tracks)
     ids = spark.createDataFrame([(t,) for t in track_ids], "track_id string").repartition(
         min(n_tracks, 8)
@@ -243,7 +236,7 @@ def tracks(spark: SparkSession, n_tracks: int = 8, seed: int = 42) -> DataFrame:
         for pdf in batches:
             rows = []
             for tid in pdf["track_id"]:
-                pcm = track_pcm(tid, seed=seed)
+                pcm = track_pcm(tid)
                 rows.append(
                     (
                         tid,
@@ -293,9 +286,7 @@ def image_bytes(
     )
 
 
-def png_foreign_bytes(
-    image_id: str, kind: str, h: int = 16, w: int = 11, seed: int = 42
-) -> bytes:
+def png_foreign_bytes(image_id: str, kind: str, h: int = 16, w: int = 11) -> bytes:
     """Deterministic PNG shapes our encoder does not emit but a web
     corpus does: 16-bit grayscale (``gray16``, color type 0) and 8-bit
     gray+alpha (``ga``, color type 4). Built chunk-by-chunk with
@@ -307,7 +298,9 @@ def png_foreign_bytes(
     import struct
     import zlib
 
-    rng = _id_rng(seed, image_id)
+    from .codec import _PNG_SIG, _png_chunk
+
+    rng = _id_rng(42, image_id)
     if kind == "gray16":
         img = rng.integers(0, 65536, size=(h, w), dtype=np.uint16)
         rows = np.frombuffer(
@@ -327,47 +320,34 @@ def png_foreign_bytes(
             (r.astype(np.int16) - prev) % 256
         ).astype(np.uint8).tobytes()
 
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload)) + ctype + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
     return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(scan)))
-        + chunk(b"IEND", b"")
+        _PNG_SIG
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, 0))
+        + _png_chunk(b"IDAT", zlib.compress(bytes(scan)))
+        + _png_chunk(b"IEND", b"")
     )
 
 
-def mixed_rate_clip_rows(
-    track_ids: list[str],
-    specs: tuple = (
-        (16000, 0, 3000),
-        (22050, 1, 4500),
+def mixed_rate_clip_rows(track_ids: list[str]) -> list[tuple]:
+    """Foreign-sample-rate 5-second probe clips, synthesized
+    ANALYTICALLY at the foreign rate (same closed-form music, no
+    resampler in the input path). Input construction shared by the entry
+    query and the fixture generator — the oracle matches them through
+    its own scalar-sinc resampler, so the engine's rate normalization
+    sits behind the oracle's hash check. One clip per (sr_hz, track
+    index, offset_ms, codec_name) row below — the 32 kHz probe rides the
+    MPEG-1 Layer I codec, gating lossy decode + rate normalization +
+    match in one row (both sides decode the same mp1 bytes; the oracle
+    with its scalar frame walk + triple-loop filterbank), and the 24 kHz
+    probe rides FLAC (lossless, sparkfp/flac.py vs the oracle's scalar
+    bit-reader + binomial predictor recurrences)."""
+    rows, dur_ms = [], 5000
+    for sr, ti, off_ms, cname in (
+        (16000, 0, 3000, "pcm_s16le"),
+        (22050, 1, 4500, "pcm_s16le"),
         (32000, 2, 2000, "mp1"),
         (24000, 3, 1500, "flac"),
-    ),
-    dur_ms: int = 5000,
-) -> list[tuple]:
-    """Foreign-sample-rate probe clips, synthesized ANALYTICALLY at the
-    foreign rate (same closed-form music, no resampler in the input
-    path). Input construction shared by the entry query and the fixture
-    generator — the oracle matches them through its own scalar-sinc
-    resampler, so the engine's rate normalization sits behind the
-    driver's hash gate. Each spec is (sr_hz, track index, offset_ms)
-    or (sr_hz, track index, offset_ms, codec_name) — the 32 kHz probe
-    rides the MPEG-1 Layer I codec, gating lossy decode + rate
-    normalization + match in one row (both sides decode the same mp1
-    bytes; the oracle with its scalar frame walk + triple-loop
-    filterbank), and the 24 kHz probe rides FLAC (lossless,
-    sparkfp/flac.py vs the oracle's scalar bit-reader + binomial
-    predictor recurrences)."""
-    rows = []
-    for spec in specs:
-        sr, ti, off_ms = spec[:3]
-        cname = spec[3] if len(spec) > 3 else "pcm_s16le"
+    ):
         tid = track_ids[ti % len(track_ids)]
         track = track_pcm(tid, sr_hz=sr)
         s = int(sr * off_ms / 1000)
@@ -388,12 +368,11 @@ def mixed_rate_clip_rows(
 
 
 def paletted_pixels(
-    image_id: str, h: int = 24, w: int = 17, n_colors: int = 32,
-    seed: int = 42,
+    image_id: str, h: int = 24, w: int = 17, n_colors: int = 32
 ) -> np.ndarray:
     """Deterministic HxWx3 uint8 image drawn from a <=256-color
     palette — the input shape GIF's indexed-color model requires."""
-    rng = _id_rng(seed, image_id)
+    rng = _id_rng(42, image_id)
     palette = rng.integers(0, 256, size=(n_colors, 3), dtype=np.uint8)
     return palette[rng.integers(0, n_colors, size=(h, w))]
 

@@ -64,7 +64,7 @@ PII_PATTERNS = [
 ]
 
 
-def redact_pii(df: DataFrame, text_col: str, out_col: str = "redacted") -> DataFrame:
+def redact_pii(df: DataFrame, text_col: str) -> DataFrame:
     """Training-data PII scrub: replace emails / IPv4s / phone-shaped
     digit runs with typed placeholders and count each kind per row —
     pure Column regexes (JVM-side, one projection), no UDF.
@@ -73,7 +73,7 @@ def redact_pii(df: DataFrame, text_col: str, out_col: str = "redacted") -> DataF
     redacted (the same text its replacement then runs on), so
     n_<kind> always equals the number of [<KIND>] placeholders
     emitted — a digit-heavy email local part can't double-count as a
-    phone."""
+    phone. The scrubbed text is the ``redacted`` column."""
     cur = F.col(text_col)
     counts = []
     for kind, pat, repl in PII_PATTERNS:
@@ -83,7 +83,7 @@ def redact_pii(df: DataFrame, text_col: str, out_col: str = "redacted") -> DataF
             .alias(f"n_{kind}")
         )
         cur = F.regexp_replace(cur, pat, repl)
-    return df.select("*", *counts, cur.alias(out_col))
+    return df.select("*", *counts, cur.alias("redacted"))
 
 
 def quality_features(df: DataFrame, text_col: str) -> DataFrame:
@@ -138,9 +138,9 @@ def lang_scores(text_col: str | Column) -> dict[str, Column]:
     return out
 
 
-def lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
-    """argmax language with deterministic tiebreak (lexicographic),
-    'und' when nothing matches."""
+def lang_id(df: DataFrame, text_col: str) -> DataFrame:
+    """``lang_pred``: argmax language with deterministic tiebreak
+    (lexicographic), 'und' when nothing matches."""
     scores = lang_scores(text_col)
     # array_sort on (score, lang) structs then reverse: ties resolve to
     # the lexicographically LAST language; keep lang order stable by
@@ -154,7 +154,7 @@ def lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFra
     sorted_pairs = F.reverse(F.array_sort(pairs))
     top = F.element_at(sorted_pairs, 1)
     return df.withColumn(
-        out_col,
+        "lang_pred",
         F.when(top["score"] > 0, top["lang"]).otherwise(F.lit("und")),
     )
 

@@ -39,26 +39,16 @@ import struct
 import numpy as np
 
 from . import jpeg as _jpeg
-from .codec import UnsupportedCodec
+from .codec import UnsupportedCodec, _pack_chunks, _write_chunks
 
 _AVIH_SIZE = 56  # MainAVIHeader
 _STRH_SIZE = 56  # AVIStreamHeader
 _BMIH_SIZE = 40  # BITMAPINFOHEADER
-
-
-def _chunk(fourcc: bytes, payload: bytes) -> bytes:
-    """RIFF chunk: fourcc + little-endian size + word-aligned payload."""
-    pad = b"\x00" if len(payload) % 2 else b""
-    return fourcc + struct.pack("<I", len(payload)) + payload + pad
-
-
-def _list(list_type: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", list_type + payload)
+_FPS = 25  # the frame rate encode_mjpeg declares
 
 
 def encode_mjpeg(
     frames: np.ndarray,
-    fps: int = 25,
     quality: int = 90,
     subsample: bool = False,
     container: str = "avi",
@@ -66,15 +56,13 @@ def encode_mjpeg(
     """(T,H,W,3) uint8 frames -> MJPEG bytes.
 
     container='avi' emits a minimal spec-conformant RIFF 'AVI ' file
-    (hdrl with avih + one 'vids'/'MJPG' stream, movi with '00dc'
-    chunks, idx1); container='raw' emits the bare concatenated-JPEG
+    (hdrl with avih + one 'vids'/'MJPG' stream at 25 fps, movi with
+    '00dc' chunks, idx1); container='raw' emits the bare concatenated-JPEG
     stream some MJPEG producers use.
     """
     frames = np.asarray(frames)
     if frames.ndim != 4 or frames.shape[3] != 3 or frames.shape[0] == 0:
         raise ValueError(f"expected (T,H,W,3) frames, got {frames.shape}")
-    if fps <= 0:
-        raise ValueError(f"fps must be positive, got {fps}")
     jpegs = [
         _jpeg.encode_jpeg(f, quality=quality, subsample=subsample) for f in frames
     ]
@@ -87,8 +75,8 @@ def encode_mjpeg(
 
     avih = struct.pack(
         "<14I",
-        1_000_000 // fps,        # dwMicroSecPerFrame
-        max_frame * fps,         # dwMaxBytesPerSec
+        1_000_000 // _FPS,       # dwMicroSecPerFrame
+        max_frame * _FPS,        # dwMaxBytesPerSec
         0,                       # dwPaddingGranularity
         0x10,                    # dwFlags: AVIF_HASINDEX
         n,                       # dwTotalFrames
@@ -104,7 +92,7 @@ def encode_mjpeg(
             "<IHHIIIIIIII",
             0, 0, 0,             # dwFlags, wPriority, wLanguage
             0,                   # dwInitialFrames
-            1, fps,              # dwScale / dwRate = 1/fps per frame
+            1, _FPS,             # dwScale / dwRate = 1/fps per frame
             0, n,                # dwStart, dwLength (frames)
             max_frame,           # dwSuggestedBufferSize
             0xFFFFFFFF,          # dwQuality (driver default)
@@ -117,20 +105,17 @@ def encode_mjpeg(
         _BMIH_SIZE, w, h, 1, 24, b"MJPG",
         h * w * 3, 0, 0, 0, 0,
     )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
-    movi_payload = b"".join(_chunk(b"00dc", j) for j in jpegs)
-    movi = _list(b"movi", movi_payload)
+    strl = b"strl" + _pack_chunks("<", [(b"strh", strh), (b"strf", strf)])
+    hdrl = b"hdrl" + _pack_chunks("<", [(b"avih", avih), (b"LIST", strl)])
+    movi = b"movi" + _pack_chunks("<", [(b"00dc", j) for j in jpegs])
     # idx1 offsets are relative to the start of the movi list type word
     idx_entries, off = [], 4
     for j in jpegs:
         idx_entries.append(struct.pack("<4sIII", b"00dc", 0x10, off, len(j)))
         off += 8 + len(j) + (len(j) % 2)
-    idx1 = _chunk(b"idx1", b"".join(idx_entries))
-    return _chunk(b"RIFF", b"AVI " + hdrl + movi + idx1)
+    return _write_chunks(b"RIFF", b"AVI ", "<", [
+        (b"LIST", hdrl), (b"LIST", movi), (b"idx1", b"".join(idx_entries)),
+    ])
 
 
 def _avi_frame_chunks(raw: bytes) -> list[bytes]:

@@ -41,22 +41,18 @@ def salted_windowed_count(
     key_col: str,
     ts_col: str,
     window_size: str,
-    slide: str | None = None,
     salt_buckets: int = 8,
     salt_source: str | None = None,
     watermark: str | None = None,
-    count_col: str = "n",
 ) -> DataFrame:
-    """Windowed count per key with two-phase salted aggregation.
+    """Tumbling-window count per key with two-phase salted aggregation.
 
     ``salt_source``: a high-cardinality column to derive the salt from
     (defaults to the key itself + a uniform random-free spread via
     spark_partition_id, keeping the plan deterministic).
-    Returns (win struct, key, n) — pass ``slide`` for sliding windows.
+    Returns (win struct, key, n).
     """
-    win = (
-        F.window(ts_col, window_size, slide) if slide else F.window(ts_col, window_size)
-    ).alias("win")
+    win = F.window(ts_col, window_size).alias("win")
     if salt_source is not None:
         salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salt_buckets))
     else:
@@ -69,5 +65,5 @@ def salted_windowed_count(
         F.count("*").alias("_partial")
     )
     return partial.groupBy("win", key_col).agg(
-        F.sum("_partial").cast("long").alias(count_col)
+        F.sum("_partial").cast("long").alias("n")
     )

@@ -570,6 +570,26 @@ def test_byte_features_and_frame_stub(spark):
     assert not ff2.loc["m1", "decoded"]  # stub clearly reports undecodable
 
 
+def test_media_null_blob_is_one_bad_row(spark):
+    """A null media blob among good rows is one bad row, not a failed
+    job: byte_features gives it the empty blob's row and
+    frame_sample_features gives it decoded=false."""
+    pcm = np.arange(50, dtype="<i2").tobytes()
+    media = spark.createDataFrame(
+        [("ok", pcm, "pcm_s16le"), ("null", None, "pcm_s16le"),
+         ("empty", b"", "pcm_s16le")],
+        "media_id string, bytes binary, codec string",
+    )
+    bf = multimodal.byte_features(media).toPandas().set_index("media_id")
+    assert bf.loc["null"].tolist() == bf.loc["empty"].tolist() == [0, 0.0, 0.0, 0.0]
+    assert bf.loc["ok", "n_bytes"] == len(pcm)
+
+    ff = multimodal.frame_sample_features(media).toPandas().set_index("media_id")
+    assert ff.loc["ok", "decoded"]
+    assert not ff.loc["null", "decoded"]
+    assert pd.isna(ff.loc["null", "frame_mean"]) and pd.isna(ff.loc["null", "frame_std"])
+
+
 def test_frame_features_real_bmp_decode(spark):
     """BMP rows decode for REAL (no deterministic fake): the frame
     features must equal numpy stats of the known seeded pixel arrays."""
